@@ -13,40 +13,7 @@ object Bench {
     * windows, top-k, JSON, set ops, as-of — plus the three LLM-ops
     * representatives (minhash-LSH dedup, SRP-LSH ANN, repetition filter)
     * so an ops regression fails the gate. Names missing from the
-    * registry are reported as failed (value -1).
-    *
-    * r14→r15 DRIFT VERDICT (the r14 judge's item 5): the r15 dev bench
-    * drew a NOMINAL canary (child 0.151 s) and the headline read 6.444 s
-    * vs r14's 7.087 (r13: 6.231), core9 4.477 vs 5.101 (r13: 4.161) —
-    * the uniform r14 +14% receded with placement on byte-identical
-    * headline code, confirming host noise per the SURVEY §6 doctrine.
-    * LEDGER (r15 judge item 8): the OFFICIAL graded BENCH_r15 read
-    * 6.816 s total / core9 4.765 / q01 1.051 at the SAME nominal
-    * canary 0.151 — dev and official bracket the true value; both
-    * anchors recorded so r16's reads have the pair. q01's residual vs
-    * r13's 0.799 is +16% (dev) to +32% (official) on untouched code —
-    * r16 re-read below.
-    *
-    * r16 CLEAN-JVM RE-READS (r15 judge item 2), all at nominal canary
-    * 0.15, tools/BenchOne + S11Diag:
-    *  - q01: dedicated-JVM steady state ~1.1 s (three blocks:
-    *    1.571/1.892/1.136 medians, converging) — the official r15
-    *    1.051 REPRODUCES and is not a parked-child artifact; treat
-    *    ~1.05 as q01's current true cost. r13's 0.799 is not
-    *    reproducible today on byte-identical code — a faster host
-    *    window, not a bisectable regression. Watch, don't bisect.
-    *  - s05 ×10: clean-JVM medians 3.30 (S11Diag) / 4.27 (BenchOne)
-    *    vs the official r15 10.39 — the official read was a
-    *    parked/contended child. Candidate volume is DETERMINISTIC and
-    *    unchanged: 15,030,342 ordered pairs at ×10 vs 149,998 at
-    *    sf0.1 — exactly the n²/buckets model (20k rows over 2048
-    *    buckets), NOT a cap-tuning bug; the fixture's per-copy
-    *    embedding rotation does not move the volume. s11's scaled
-    *    bits carry 2,136,584 pairs (7× fewer) and run 1.45 vs s05's
-    *    3.30 at ×10 — the scaled config's reason to exist, measured.
-    *  - g01 ×10: clean 3.76 vs official 13.82 — parked draw; plans
-    *    unchanged (bhj=1, exchanges=4 for s05/s11; BFS frontier plan
-    *    stable). */
+    * registry are reported as failed (value -1). */
   val headline: Seq[String] = Seq(
     "q01_pricing_summary", "q02_selective_filter", "q03_bcast_join",
     "q04_multiway_join", "q07_topk_per_group", "q09_global_topk",
@@ -54,7 +21,7 @@ object Bench {
     "d03_minhash_lsh", "s02_ann_lsh", "t07_repetition_filter")
 
   /** Ops timed outside the gate (median-of-3, informational). Public so
-    * BenchGateSpec can cross-check every name against the registry —
+    * EntrySpec can cross-check every name against the registry —
     * a renamed query would otherwise report -1 and silently shrink the
     * measured surface. */
   val opNames: Seq[String] = Seq("d06_dup_clusters",
@@ -63,281 +30,44 @@ object Bench {
     "t18_decontaminate", "s08_semdedup",
     "s09_ann_ivfpq", "s11_knn_join_scaled",
     "d09_substring_dedup",
-    // streaming representatives (r9 advice item 5): the dual-watermark
-    // stream-stream join and the stateful dedup, timing full
-    // micro-batch drains (st06 rotated out r16: seven flat r9-r15
-    // baselines, and the dedicated codec block prices the same brotli
-    // encode/decode path with native interleave every round)
+    // streaming: the dual-watermark stream-stream join, timing full
+    // micro-batch drains
     "st07_stream_stream_join",
-    // r12: the composed incremental-ingest pipeline — index build +
-    // delta probe in one number; its regression baseline guards the
-    // standing-index composition, not any single op
+    // the composed incremental-ingest pipeline: index build + delta
+    // probe in one number
     "p02_incremental_ingest",
-    // late-r12 families: the binned large×large band join, the landmark
-    // audio matcher, frontier BFS, and the bounded-state stream dedup
-    // (s12 rotated out r15; p03 rotated out r16 — see the r16 ledger)
     "q76_banded_time_join", "m06_audio_fingerprint",
     "g01_graph_bfs", "st17_dedup_within_watermark",
-    // end-of-r12 family: index-persist serving
     "s14_ann_index_persist",
-    // r13 ROTATION ledger (see bench_full_last.json for last medians):
-    // OUT d07 (p02 composes it), s04/s07 (s09 carries the PQ kernel),
-    // t09/t14/t17/t20 (t08/t11/t18/t24 keep the text spread), m04.
-    // r15 ROTATION: q80_zorder_skip OUT, as the r13 ledger planned —
-    // its baseline exists (r13 48.87s, r14 2.95s after the sorted-
-    // compact-files fix, verified by the judge), the code is static,
-    // and it was the single most expensive entry (writes two full
-    // tiled layouts per run). Also OUT for line-budget: q88 (st21
-    // composes the same merge machinery per micro-batch and q93 is the
-    // SQL path of the identical rewrite — three stable baselines) and
-    // t08 (r12-r14 baselines flat; t11/t18/t24-26 keep the text
-    // spread). Their budget funds the r14 blind families below.
-    // r13 features: MERGE INTO (COW+MOR), compaction commit, BPE train.
-    // t24 note: r14 made trainer rounds INCREMENTAL (cost ∝ affected
-    // words, measured by TextOpsBpeSpec's 100-merge run) — at the
-    // testdata's toy ~61-word vocab that machinery is pure overhead,
-    // so expect t24's median to step up ~2x vs r13; the win is the
-    // 100x-merge-count path, not this corpus.
     "t24_bpe_train",
-    // r14 ROTATION (r13 verdict item 6): first baselines for the seven
-    // blind r13 families (q90/q91/q92/st21/s15/t25/t26) plus the new
-    // SQL-catalog merge (q93). Budget paid by rotating OUT eight
-    // entries with stable r12-r13 baselines and live family coverage:
-    // st10/st20 (st07+st17 keep stream joins & dedup), s13 (s15's
-    // sweep subsumes the multiprobe cost question), q81/g02/q87 (one
-    // clean r13 baseline each, static code), p04 (p02/p03 keep the
-    // pipeline family), m05 (m06 keeps multimodal matching).
-    // t25 note: its number is a COMPOSITE — t25 runs t24's full
-    // training internally before applying, so ~6s of its median IS
-    // t24; read it as the train+apply pipeline, not the apply alone.
     "s15_nprobe_sweep",
-    // r15: first baselines for the r14 blind families — the stats-
-    // pruned versioned read, the SQL table lifecycle, and the streaming
-    // change feed (all three now ride the vectorized catalog leaf I/O,
-    // so these baselines ALSO pin that path's cost)
+    // the stats-pruned versioned read, the SQL table lifecycle and the
+    // streaming change feed; all three ride the vectorized catalog leaf
+    // I/O, so they also pin that path's cost
     "q94_stats_pruned_read", "q95_sql_table_lifecycle",
     "st22_stream_change_feed",
-    // r15 NEW families benched in their OWN round (not blind): deletion
-    // vectors (MOR delete + purge through the catalog's DV-subtracting
-    // read), TIMESTAMP AS OF + restore (metadata-only — their medians
-    // pin the header/resolution overhead), and the native streaming
-    // sink (per-epoch OCC commits + txn watermark scans). Their line
-    // budget is funded by rotating OUT four entries with judged
-    // baselines and live family coverage: d01 (r5+ baselines flat;
-    // d03/d06/d09 keep dedup), s12 (r12-r14 flat; s02/s05/s09/s14/s15
-    // keep the ANN spread), t25 (its median is ~95% t24's training,
-    // which stays benched — the composite number added no signal), and
-    // q92 (r14 baseline; st22 serves the SAME pruned diff per
-    // transition, so the machinery stays pinned), and q90 (r14
-    // baseline 0.52s; the dedicated codec block measures the same
-    // brotli encode/decode path every round with native interleave).
-    // BenchMergeSpec's compact-line bound re-asserted with this set.
+    // deletion vectors (MOR delete + purge through the DV-subtracting
+    // read) and the native streaming sink (per-epoch OCC commits)
     "q96_delete_dv",
     "st23_stream_sink_table",
-    // r16 ROTATION: first baselines for the five r15-blind families
-    // (q99-q103, exactly as the r15 ledger planned) plus the new CALL-
-    // procedures gate q104 benched in its OWN round (it composes a MOR
-    // delete + CALL purge + SQL insert + CALL restore + CALL vacuum —
-    // its median prices the whole SQL maintenance surface). Budget
-    // funded by rotating OUT six entries, each with ≥2 judged
-    // baselines and surviving family coverage: st21 (r14-r15 flat at
-    // the micro-batch floor ~3.5s; st22/st23 keep streaming-lakehouse
-    // and ride the same per-epoch OCC commit machinery), q93 (r14-r15;
-    // q95 keeps the catalog-SQL path and q102 is the same MERGE
-    // rewrite in MOR mode), q91 (r14-r15; q104 runs a reference-
-    // counted vacuum through CALL every round), t26 (r14-r15 flat;
-    // t11/t18/t24 keep text), q89 (r13-r15, static code; Extras8's
-    // compactSmallFiles + q104 keep maintenance priced), p03 (r12-r15
-    // flat; p02 keeps the pipeline family). d06/s08 were considered
-    // and KEPT: their sf0.1 medians are the denominators of the sf1
-    // block's x_vs_sf factors (the r16 dev run proved it — removing
-    // them read -1 ratios at ×10). q100 is pure driver metadata;
-    // q99/q101/q102 compose q96's DV write + an append.
-    //
-    // r15→r16 DRIFT VERDICT: the r16 dev bench (canary_child 0.152,
-    // nominal) read 8.202 total / core9 5.687 vs r15 official 6.816 /
-    // 4.765 — a UNIFORM ×1.11-1.39 across every headline entry
-    // including byte-untouched ones (q02 1.34×, t07 1.38×, s02 1.39×),
-    // the r14-shaped contended-window signature, NOT a bisect target
-    // (the r16 code touches none of the headline paths; BenchOne
-    // clean-JVM q01 re-reads bracket 1.05-1.14, consistent with r15's
-    // official 1.051). First r16-dev medians for the new entries at
-    // that same window: q99 1.17, q100 0.81, q101 0.44, q102 0.64,
-    // q103 0.52, q104 1.20 — divide by ~1.2 to place them against the
-    // r15 window. q96 read 2.17 vs r15's 1.31 (+65%, vs +20% uniform):
-    // part window, residual plausibly the canon-UDF identity join in
-    // the MOR fixture build; clean-JVM BenchOne anchor for r17's
-    // re-read: steady state ~1.94 at canary 0.153 (first block 2.28,
-    // second 1.94 — so ~1.9 is q96's current true cost; compare r17's
-    // official read against THAT, not r15's 1.31 window).
+    // d06/s08 above must stay: their sf0.1 medians are the denominators
+    // of the sf1 block's x_vs_sf factors (removing them reads -1 ratios).
+    // q104 composes a MOR delete + CALL purge + SQL insert + CALL
+    // restore + CALL vacuum: its median prices the SQL maintenance
+    // surface. The set is bounded by the compact line's byte budget
+    // (BenchMergeSpec).
     "q99_merge_mor_native", "q100_table_history", "q101_sql_delete_dv",
     "q102_sql_merge_mor", "q103_rename_drop_evolution",
     "q104_maintenance_call",
-    // late-r16 family benched in its own round: type-widening evolution
-    // (two inserts + two metadata-only ALTERs + mixed-physical reads).
-    // q106 (version tags) and st24 (streaming table read) stay BLIND
-    // in the graded line this round — the compact-line byte budget is
-    // at its bound; their cost families are priced by q104 (CALL
-    // maintenance: tag CAS + vacuum + a COW delete) and st22 (the same
-    // version-transition → splits → micro-batch-drain machinery), and
-    // clean-JVM BenchOne first-reads exist for r17 to anchor against:
-    // at canary 0.157, q105 0.80, q106 1.23, st24 1.65. r17 should
-    // baseline q106/st24 under the usual rotation rules.
     "q105_type_widening",
-    // r16→r17 DRIFT VERDICT (dev bench before the graded run, canary
-    // 0.159 nominal): total 8.043 / core9 5.554 vs r16 official
-    // 8.932 / 6.202 and r16 dev 8.202 / 5.687 — a ~1.0× window, no
-    // regression direction anywhere on untouched entries (q01 1.108,
-    // q02 0.231, t07 0.352 all at or under their r16 reads). q96 read
-    // 1.95 — ON its ~1.9 clean-JVM anchor (the r16 ledger's target
-    // for the canon-UDF fix: the per-row URI parse is gone and the
-    // residual went with it; compare r18 against ~1.9 still). The
-    // r17 schema-header carry (+1 small manifest-header read per
-    // commit attempt) reads as small single-digit-% on the commit-
-    // heavy entries (q102 0.90 vs r16-dev 0.64 is the largest mover —
-    // 4 commits + 2 MOR sidecar merges; part window, watch r18),
-    // q95 0.67 / q101 0.47 / q103 0.64 / q104 1.51 / q105 0.46 all
-    // within window of their r16-dev reads. First dev medians for the
-    // newly-graded entries: q106 0.82, st24 1.31 (clean-JVM
-    // first-reads 1.23/1.65 — both bracketed). ×10 block: the dev
-    // sf1 child drew a PARKED window (s05 factor 17.4 ⇒ ~12.6 s
-    // implied); S11Diag clean-JVM re-pin same day: s05 ×10 median
-    // 4.288 s / s11 1.746, candidate volumes BYTE-STABLE at
-    // 15,030,342 / 2,136,584 ordered pairs (the n²/buckets model,
-    // unchanged since r16 — no code on that path moved this round),
-    // plans unchanged (bhj=1, exchanges=4). Read the official r17
-    // sf1 factors against these anchors, not the dev child's.
-    //
-    // r17 ROTATION: q106 (version tags) and st24 (streaming table
-    // read) get their first official baselines, exactly as the r16
-    // ledger planned (clean-JVM first-reads above are the anchors).
-    // Budget funded by rotating OUT two entries with ≥2 judged
-    // baselines and surviving family coverage: q97_timestamp_as_of
-    // (r15+r16; pure metadata resolution — q100 prices header reads
-    // and timestamp rounding rides the same q78CommitTime path every
-    // round) and q98_restore_version (r15+r16; q104 executes CALL
-    // restore inside its composed maintenance run every round). The
-    // NEW r17 families stay BLIND this round per the usual one-round
-    // lag: q107 multi-column stats (cost family priced by q94 — the
-    // same manifest-pruned vectorized read with one extra footer
-    // column tracked at write) and q108 partition transforms (priced
-    // by q95's catalog lifecycle + the fan-out cost is bounded by the
-    // clustered shuffle q83 already prices); r18 should baseline
-    // q107/q108 under the same rotation rules — clean-JVM BenchOne
-    // first-reads to anchor against: at canary 0.156,
-    // q107 2.345 (the fixture's 8-slice partitionBy write dominates;
-    // the pruned read itself is manifest metadata) and q108 1.591
-    // (CREATE + clustered insert + dynamic overwrite + two
-    // plan-introspected reads). Schema-versioning cost
-    // note for r17 reads: every catalog commit now writes/carries a
-    // `#schema` header (one extra small-header read per commit
-    // attempt) and CREATE adds one content-addressed schema file —
-    // watch q95/q101-q105 for a small uniform +, not a regression.
-    //
-    // r17→r18 DRIFT VERDICT (r18 = optimization round 1; baseline dev
-    // bench before any change, canary 0.159 nominal): total 7.759 /
-    // core9 5.096 vs r17 official 7.427 / 5.139 — a ~1.0-1.1× window
-    // (q01 1.064, q02 0.205, d03 1.750 vs 1.022/0.193/1.464). The
-    // judge's adjudications, all clean-JVM BenchOne medians same-day:
-    //  - st22 (+28% in r17): pre-change baseline read 4.90; the r18
-    //    adaptive-partitions fix lands it at 3.79 clean (canary 0.134/
-    //    0.153) — the r17 5.73 was ~half window, ~half the per-batch
-    //    32-partition classify shuffles, which are now gone. Judge's
-    //    verdict: attributed and fixed, not parked.
-    //  - ×10 block re-pins (dir = cached sf10x corpus, canary 0.149
-    //    post): q76 median 8.70 (runs 25.2→6.1, warming JVM; best
-    //    6.05) — r17's official 20.46 (×23) was a parked window; the
-    //    true ×10 factor is ~7-9× vs its 0.93 sf0.1 read, consistent
-    //    with rows × per-bin density (10× rows, denser bins). g01
-    //    4.60 (×2.1), m06 2.60 (×2.2 — the baseline child's 5.47 was
-    //    parked), s11 1.76 ON its 1.746 anchor, s05 first re-pin
-    //    noisy 3.6-11.3 (park mid-run); a later quiet-host re-pin
-    //    read s05 median 3.96 (runs settling to 3.47) at nominal
-    //    canary — ON its 4.29 r17 anchor, candidate volumes
-    //    unchanged. All five ×10 witnesses now have clean anchors.
-    //  - q96 2.61 clean at a window where q01 reads 1.21 (~1.15×):
-    //    window-adjusted ~2.3 vs the ~1.9 anchor — briefly suspect
-    //    (props-header carry; MetaReads tallies q96 at 21 manifest
-    //    reads/run, bounded). RESOLVED by the post-change official
-    //    runs: q96 1.84 / 2.08 — ON the anchor; the mid-round reads
-    //    were window.
-    //  - fresh q107/q108 anchors at canary 0.155: q107 0.85 (the r17
-    //    2.345 first-read predated the mid-build stats/zorder work),
-    //    q108 0.52. Baselining deferred: the compact line sits at
-    //    1836/1900 B and this round's contract forbids removing
-    //    entries, so the rotation that would fund them is r19's call.
-    //  - codec q6 (r17 0.72×): baseline read 188.6 vs native 222.5 =
-    //    0.85×, recovered toward r16's 0.95× with no code change —
-    //    window variance as suspected, no action.
-    // r18 OPTIMIZATION READS (clean-JVM medians, nominal canaries):
-    // st07 11.0→2.60 / st17 5.66→2.59 (scale-adaptive state
-    // partitions: state-store tasks per micro-batch now track input
-    // bytes, not the session's core count), s15 4.27→3.74 (single
-    // corpus join at the widest arm serves all four sweep arms) then
-    // →~4.0 stable with §2.6 job overlap (corpus ∥ exact, two
-    // collects ∥; official post-change read 2.87), p02 5.42→4.68
-    // (corpus-sized per-doc size agg moved into the standing index;
-    // probe DAG is delta-only) →3.45 with the index build's and
-    // probe's independent chains as concurrent jobs (official read
-    // 3.38), s14 pre-clustered fan-out write A/B'd at 4.23 vs 2.68
-    // and REJECTED (shuffle + collapsed write parallelism beats
-    // tiny-file savings locally). Post-change official-shape runs:
-    // total 6.711/core9 4.716 at canary 0.137 and 7.461/5.090 at
-    // 0.155 (the second window slower, q01 0.837 vs 0.792; its sf1
-    // child parked mid-block — s05 ×40.4, m06 ×8.3, while q76 read
-    // ×7.50 ON the clean anchor; read ×10 factors against the
-    // clean-JVM re-pins above, not parked children).
-    // r18→r19 DRIFT VERDICT (r19 = optimization round 2; baseline
-    // BenchOne clean-JVM medians before any change, canary 0.156-0.163
-    // nominal): t24 10.99 / d06 3.13 / g01 2.28 / st07 3.26 / st17
-    // 2.84 / st22 4.77 / s14 3.61 / p02 5.52 / s15 4.31 / q96 2.37.
-    // Several untouched entries read above their r18 official numbers
-    // (p02 5.52 vs 3.23, st22 4.77 vs 3.88) — the same uniform window
-    // signature as every prior round; all r19 deltas are ADJACENT
-    // A/Bs or structural job/stage/task counts (tools/JobCount), not
-    // cross-window seconds. Mid-run parks are real: one t24 profile
-    // read 19.7 s on code that measured 7.2-8.4 s in the surrounding
-    // runs (canaries nominal at both ends — the park hit between).
-    //
-    // r19 SCALING-PROBE NOTE (r18 verdict item 2, the
-    // suspect_cpus_ignored flag): $SPARK_GRAFT_CPUS is honored — all
-    // three sessions build local[$cpus] (this file) and children
-    // inherit the env — but the graded sf0.1 set is overhead-bound by
-    // design (0.15-1.3 s/entry: JVM, planning and per-job scheduling
-    // dominate), so 8-vs-32-core ratios on it read ≈1 and carry no
-    // parallelism signal; three entries even read FASTER at 8 cores in
-    // the driver's own r18 pair (t24 0.73×, s14 0.72×, d06 0.85× —
-    // task-launch-bound, which is exactly what r19 optimized). The
-    // real scaling signal lives in the ×10 sf1 block this bench
-    // already emits per run (q76 ~8.7 s, g01 ~4.6, s05 ~4.0 clean
-    // anchors — genuinely parallel): compare THOSE entries across the
-    // driver's two core counts. Adding a multi-second scale-bound
-    // entry to the graded sf0.1 line was considered and rejected: no
-    // honest sf0.1 computation is parallel-bound (the 8v32 table
-    // proves it), and the compact line sits at its byte budget.
-    //
-    // r19 OPTIMIZATION READS (adjacent A/Bs and structural counts;
-    // clean-JVM medians at nominal canary): t24 10.99 → 6.16 (runs
-    // settling 5.99; jobs 160→99, tasks 443→179 — adaptive loop
-    // partitions + AQE-off loop scope + one tagged state action per
-    // round), g01 2.79 vs 5.09 adjacent-stash A/B (edge list
-    // materialized once, and the changed run drew the WORSE window),
-    // s14 3.61 → 2.89 (small index writes ∥ the codes fan-out), st17
-    // one-pass slice prep (neutral locally, one events scan instead of
-    // three), d06 profiled (loop is 0.7 s of 3.9 — pair generation
-    // dominates; adaptive loop scope kept, neutral locally), st07
-    // statePartitions=1 CONFIRMED optimal by an in-JVM target sweep
-    // (32MiB→3.87 s vs 1MiB→6.66 s) — examined, left alone. q107 0.85
-    // / q108 0.52 anchors stand for a future build-round rotation
-    // (optimization rounds cannot remove entries).
     "q106_version_tags", "st24_stream_table_read")
 
   /** The x10 scale block's query set — ONE definition shared by the
     * sf1 child's warm-up loop and sf1Bench's measured loop, so the
     * warm-vs-warm methodology can't silently drift when entries are
-    * added (r10 review: d09/d06 were measured but not warmed). */
+    * added. */
   private val sf1Names: Seq[String] = headline ++ Seq(
-    // late-r12 at-scale claims now measured, not asserted: the band
+    // at-scale claims measured, not asserted: the band
     // join says cost tracks rows × per-bin density (not the cross
     // product), BFS says each level is one co-partitioned join, and
     // the audio matcher says the probe join shuffles only landmark
@@ -368,13 +98,12 @@ object Bench {
     }
     // the GRADED sf0.1 query loop runs in FRESH child JVMs, twice, and
     // each query reports the better child's median — the same isolation
-    // the codec block adopted in r9 and for the same measured reason:
-    // the host parks a process in a ~2.5×-slow mode for its ENTIRE
-    // lifetime (568cda3), so a long-lived parent JVM can be stuck slow
-    // for every sample (the r8→r9 headline drifted +12-48% on untouched
-    // queries exactly this way). Two fresh placements make a
-    // double-slow draw unlikely; children run BEFORE the parent opens
-    // its own SparkSession so they have the machine to themselves.
+    // as the codec block, for the same measured reason: the host parks a
+    // process in a ~2.5×-slow mode for its ENTIRE lifetime, so a
+    // long-lived parent JVM can be stuck slow for every sample. Two
+    // fresh placements make a double-slow draw unlikely; children run
+    // BEFORE the parent opens its own SparkSession so they have the
+    // machine to themselves.
     val firstRuns = (1 to 2).flatMap(_ => querySpawn(sfDir))
     // adaptive third opinion (same rule as the codec block): a >15%
     // spread between the two children's headline totals means at least
@@ -392,15 +121,7 @@ object Bench {
         } else firstRuns
       case other => other
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", cpus)
 
     val (results, opResults) =
       if (childRuns.nonEmpty) {
@@ -427,9 +148,8 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.filter(_._2 >= 0).map(_._2).sum
     val failed = results.count(_._2 < 0)
-    // the headline set grew from 9 relational queries to 12 in round 5
-    // (d03/s02/t07 moved inside the gate); report the original-9 subtotal
-    // separately so cross-round comparisons of the gate total stay valid
+    // the nine relational queries' subtotal, reported apart from the
+    // three ops entries (d03/s02/t07) that also sit in the headline
     val opsInHeadline = Set("d03_minhash_lsh", "s02_ann_lsh", "t07_repetition_filter")
     val core9 = results.filter { case (k, v) => v >= 0 && !opsInHeadline(k) }.map(_._2).sum
     val ops = opResults.map { case (k, v) =>
@@ -442,19 +162,14 @@ object Bench {
       if (v < 0) "\"" + k + "\":-1" else "\"" + k + f"\":$v%.2f"
     }.mkString("{", ",", "}")
     val codec = try codecBench(spark, sfDir) catch { case _: Throwable => "{}" }
-    // the ×10 scale block runs in its OWN JVM (fresh heap, fresh codegen
-    // caches, its own SparkSession): the r8 run held the sf1 corpus and
-    // the gate measurements in one JVM and the headline drifted +9% —
-    // isolating the block keeps the sf0.1 gate numbers clean. Falls back
-    // to in-process if the spawn fails (classpath surprises).
-    // TWO sf1 children, per-entry best (r13): the block previously ran
-    // in ONE child, and a child parked in the host's slow mode poisons
-    // every sf1 reading for the round (r12 printed s05/s11 at 4.8/4.7 s
-    // vs 3.2/1.4 clean-JVM; r13 dev runs drew s05 at 10.9 s then 19.0 s
-    // on byte-identical code that measures 3.2 s clean). The query loop
-    // and codec block already take best-of-two fresh placements for
-    // exactly this reason; x_vs_sf is recomputed from the merged secs
-    // so ratio and absolute stay consistent.
+    // the ×10 scale block runs in its OWN JVMs (fresh heap, fresh codegen
+    // caches, own SparkSession): holding the sf1 corpus and the gate
+    // measurements in one JVM drifts the headline, so isolating the
+    // block keeps the sf0.1 gate numbers clean. Falls back to in-process
+    // if the spawn fails (classpath surprises). TWO children, per-entry
+    // best, because a child parked in the host's slow mode would poison
+    // every sf1 reading; x_vs_sf is recomputed from the merged secs so
+    // ratio and absolute stay consistent.
     val sf1 = try {
       val a = sf1Spawn(sfDir, results ++ opResults)
       val b = try Some(sf1Spawn(sfDir, results ++ opResults)) catch {
@@ -491,13 +206,12 @@ object Bench {
       .map(m => "\"" + m.group(1) + "\":" + m.group(2)).mkString(",")
     println(s"""{"metric":"sf1_x_vs_sf","factors":{$sf1x}}""")
     // COMPACT gate line, printed LAST: the driver keeps only the final
-    // ~2000 bytes of output and the r8 verbose line was truncated
-    // mid-JSON — this line repeats every gate number (headline queries,
-    // totals, ops/streaming medians, full codec block) in ≤1.8 KB so
-    // the judge never has to reconstruct them. Budget (r10 verdict item
-    // 1): queries+codec+framing ≈ 1.13 KB, ops at 2dp ≈ 0.54 KB, and
-    // sbt's trailing "[success]" line ≈ 80 B — total ≤ 1.8 KB of the
-    // 2 KB window. BenchGateSpec asserts the size bound.
+    // ~2000 bytes of output, which truncates the verbose line mid-JSON —
+    // this line repeats every gate number (headline queries, totals,
+    // ops/streaming medians, full codec block) in ≤1.8 KB. Budget:
+    // queries+codec+framing ≈ 1.13 KB, ops at 2dp ≈ 0.54 KB, and sbt's
+    // trailing "[success]" line ≈ 80 B — total ≤ 1.8 KB of the 2 KB
+    // window. BenchMergeSpec asserts the size bound.
     println(compactLine(total, core9, childCanary, failed, qs, opsCompact,
       codec, sfDir))
     spark.stop()
@@ -555,9 +269,8 @@ object Bench {
     }
     // LLM-pipeline ops + streaming representatives (informational — not
     // part of the headline total/gate). Median-of-3 like the headline
-    // loop: single-shot ops timings swung ±50% round to round (s05 in
-    // r7), which made the ops numbers un-judgeable. The first of the 3
-    // runs doubles as the warm-up.
+    // loop: single-shot ops timings swing ±50% run to run. The first of
+    // the 3 runs doubles as the warm-up.
     val opResults: Seq[(String, Double)] = opNames.filter(all.contains).map { name =>
       try {
         val times = (1 to 3).map { _ =>
@@ -574,15 +287,7 @@ object Bench {
   /** Child-JVM entry for the sf0.1 query loops: own SparkSession, prints
     * one flat name→seconds JSON map on a marked stdout line. */
   private def queryChild(sfDir: String, cpus: String): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-queries")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench-queries", cpus)
     val (h, o) = runQueryLoops(spark, sfDir)
     // the canary rides the same min-across-children merge as the query
     // seconds: the reported value is the FASTEST child's placement and
@@ -611,7 +316,7 @@ object Bench {
       "graft.Bench", "--queries", sfDir)
     // one merged stream: the QUERYJSON prefix scan tolerates interleaved
     // lines and a separate un-drained stderr could deadlock on a full
-    // pipe buffer (r9 advice)
+    // pipe buffer
     pb.redirectErrorStream(true)
     val p = pb.start()
     watchdog(p, 30)
@@ -637,7 +342,7 @@ object Bench {
 
   /** (java binary, classpath) for child JVMs: the parent's own
     * classpath verbatim. Deriving the path from class code-source
-    * locations (the r9 approach) broke under launchers that repackage —
+    * locations breaks under launchers that repackage —
     * sbt's bg-jobs runner hashes EACH jar into its own directory, so a
     * star-wildcard next to the spark-sql jar silently missed
     * scala-library and every child died at class init. Whatever the
@@ -777,15 +482,7 @@ object Bench {
       .getLines().map { l =>
         val Array(k, v) = l.split("\t"); (k, v.toDouble)
       }.toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-sf1")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench-sf1", cpus)
     // this JVM is cold (the parent's sf0.1 loop warmed only itself):
     // run each sf1 query once at sf0.001 and once at the bench SF so
     // x_vs_sf compares warm-vs-warm, not JIT-vs-warm
@@ -881,22 +578,16 @@ object Bench {
     val genSec = (System.nanoTime() - t0) / 1e9
     val all = SparkEntry.queries
     val base = sf01.toMap
-    // headline plus the two ops whose 100 TB design the r7 judge pass
-    // questioned (s05's bucketed kNN self-join, s08's two-level
-    // SemDeDup): the ×10 ratio vs their sf0.1 ops median is direct
-    // evidence their candidate generation scales sub-quadratically
     // median-of-3, same methodology as the sf0.1 loop these ratios divide
     // by: a single shot here puts the corpus' first touch (file listing,
     // page-cache misses, fresh codegen for the changed stats) inside the
-    // measured number — r8/r9 single-shot runs showed q03 at 21 s cold
-    // vs 1.2 s settled, a 17× phantom in x_vs_sf. The first run doubles
-    // as that warm-up, exactly like the ops loop.
+    // measured number (q03 measured 21 s cold vs 1.2 s settled, a 17×
+    // phantom in x_vs_sf). The first run doubles as that warm-up.
     // EXECUTION order is the REVERSE of sf1Names, decoupled from the
-    // print order (r13): sf1Names ends with the most-watched entries so
-    // they survive the artifact's stdout tail window, but running them
-    // LAST also means they measure on a heap churned by everything
-    // before them — a measured gradient on s05: 3.2 s in a minimal JVM
-    // (S11Diag), 4.4 s when measured 16th in this loop, 8.2 s in-bench.
+    // print order: sf1Names ends with the most-watched entries so they
+    // survive the artifact's stdout tail window, but running them LAST
+    // would measure them on a heap churned by everything before them
+    // (s05 measured 3.2 s in a minimal JVM, 8.2 s last in-bench).
     // Reversing execution gives the watched entries the freshest heap;
     // the emitted JSON keeps sf1Names order for the tail window.
     val measured = sf1Names.filter(all.contains).reverse.map { name =>
@@ -960,9 +651,6 @@ object Bench {
         // the default-quality encode, at least one drew the host's slow
         // mode (ratios are deterministic, so only placement explains a
         // spread that size) — a third fresh placement usually escapes.
-        // Both r10 bench runs measured ours-q6 ~0.8× native while the
-        // SAME child's native subprocesses (fresh per run) held, which
-        // is the parked-child signature.
         def encQ6(j: String): Option[Double] =
           "\"enc_q6_mbps\":(-?[0-9.]+)".r.findFirstMatchIn(j)
             .map(_.group(1).toDouble)
@@ -989,7 +677,7 @@ object Bench {
       "graft.Bench", "--codec", payloadPath)
     // merge stderr into the scanned stream: an un-drained stderr pipe
     // (GC logs, a crash stack) filling its ~64 KiB buffer would deadlock
-    // the child against our stdout read (r9 advice)
+    // the child against our stdout read
     pb.redirectErrorStream(true)
     val p = pb.start()
     watchdog(p, 30)
@@ -1060,9 +748,7 @@ object Bench {
     // only exercises raw meta-blocks), then report the BEST of 5
     // measured runs — the same one-sided-noise rule as pairedEnc below:
     // a contended window only ever slows a sample, so min is the
-    // least-interfered measurement (r9's median-of-5 let one parked
-    // window report enc_brf at 16.5 MB/s for a path the judge measured
-    // at 43.8 in a clean JVM)
+    // least-interfered measurement
     def best5[A](f: => (A, Double)): (A, Double) = {
       val runs = (1 to 5).map(_ => f)
       (runs.head._1, runs.map(_._2).min)
@@ -1115,10 +801,9 @@ object Bench {
       } catch { case _: Throwable => None }
     }
     // ---- timing grid: ours/native interleave at RUN granularity (see
-    // pairedEnc) so a host-contention burst lands on both medians or
-    // neither — the graded ours-vs-native ratios survive even when
-    // Drop Spark's query-bench garbage first so a major GC doesn't
-    // land inside a measured run.
+    // pairedEnc) so a host-contention burst lands on both sides or
+    // neither. Drop Spark's query-bench garbage first so a major GC
+    // doesn't land inside a measured run.
     System.gc()
     // run-level interleave: ours-run then native-run, alternating, and
     // each side reports its BEST sample. Max, not median, because the
@@ -1173,7 +858,7 @@ object Bench {
     val rQ5 = ratioOf(Brotli.compress(rp, 5))
     val rQ6 = ratioOf(Brotli.compress(rp, 6))
     val rQ11 = ratioOf(encQ11)
-    // q12 (max-ratio rung, r10): one timed encode for the ratio grid —
+    // q12 (max-ratio rung): one timed encode for the ratio grid —
     // both halves of the q11-vs-q12 trade (99% of native ratio, ~35%
     // lower speed) stay measured per-round numbers, not README
     // assertions. One sample: informational, and the rung is ~4s/run.

@@ -19,7 +19,6 @@ final class BitWriter {
     * corrupt the stream — hence the hard check, not just this comment). */
   def writeBits(value: Long, n: Int): Unit = {
     require(n >= 0 && n <= 56, s"writeBits supports 0..56 bits, got $n")
-    total += n
     cur |= (value & ((1L << n) - 1)) << nbits
     nbits += n
     if (nbits >= 8) {
@@ -50,10 +49,6 @@ final class BitWriter {
   }
 
   def sizeBytes: Int = pos + (if (nbits > 0) 1 else 0)
-
-  private var total: Long = 0L
-  /** Cumulative bits accepted over the writer's lifetime (accounting). */
-  def bitsWritten: Long = total
 
   /** Drain completed bytes (keeps any partial byte pending). */
   def drainTo(sink: ByteArrayOutputStream): Unit = {

@@ -317,9 +317,6 @@ final class BrotliDecoder {
     val cmdTrees = Array.fill(catI.nTypes)(readPrefixCode(CommandAlphabetSize))
     val distAlphabet = numDistanceCodes(npostfix, ndirect)
     val distTrees = Array.fill(ntreesD)(readPrefixCode(distAlphabet))
-    if (DecoderStats.enabled)
-      DecoderStats.params(npostfix, ndirect, catL.nTypes, catI.nTypes,
-        catD.nTypes, ntreesL, ntreesD)
     // literal decode needs no per-byte context machinery when there is a
     // single literal block type with a single tree (mode irrelevant)
     val singleLitTree = catL.nTypes == 1 && ntreesL == 1
@@ -345,7 +342,6 @@ final class BrotliDecoder {
       val (icode, ccode, impliedDist0) = unpackCommand(cmd)
       val ilen = InsertBase(icode) + in.readBits(InsertExtra(icode))
       val clen = CopyBase(ccode) + in.readBits(CopyExtra(ccode))
-      if (DecoderStats.enabled) DecoderStats.command(ilen, clen)
       if (pos + ilen > mlen)
         throw new IOException("invalid brotli: insert overruns MLEN")
       if (singleLitTree) {
@@ -398,13 +394,9 @@ final class BrotliDecoder {
             val extra = in.readBits(ndistbits)
             val offset = ((2 + (hcode & 1)) << ndistbits) - 4
             distance = ((offset + extra) << npostfix) + lcode + ndirect + 1
-            if (DecoderStats.enabled) DecoderStats.distExtraBits += ndistbits
           }
         }
         val maxBackward = math.min(totalOut + pos, maxWindow)
-        if (DecoderStats.enabled)
-          DecoderStats.distance(impliedDist0, distance,
-            distance > maxBackward)
         if (distance > maxBackward) {
           // static dictionary reference (§8)
           if (clen < 4 || clen > 24)

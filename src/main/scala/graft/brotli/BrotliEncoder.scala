@@ -45,11 +45,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     * saved tree headers exactly cancel the lost per-MiB histogram
     * adaptation, at 4× the DP memory. Re-evaluated in r9 once §6 block
     * splitting existed to do the adapting INSIDE a meta-block.) */
-  val blockSize: Int = {
-    val dbg = Integer.getInteger("graft.blockBits", -1).intValue()
-    if (dbg > 0) 1 << dbg
-    else if (quality == 0) 1 << 16 else 1 << 20
-  }
+  val blockSize: Int = if (quality == 0) 1 << 16 else 1 << 20
 
   private val staging = new Array[Byte](blockSize)
   private var staged = 0
@@ -352,8 +348,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
   /** Zopfli DP (quality >= 10): refine-loop count; the per-block DP
     * state (cost-to-reach, arrival edge, arrival distance) is
     * declared below, sized blockSize+1 and reused across blocks. */
-  private val ZopfliIters =
-    Integer.getInteger("graft.zopfli.iters", 3).intValue()
+  private val ZopfliIters = 3
   /** Max-ratio dial: relax explicit candidates at their copy-code
     * boundaries too, not just full length — the DP then cuts copies to
     * align successor matches, converting literal runs into copies the
@@ -368,12 +363,8 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     * on natural prose) and ~10% more speed than every-sweep mode 2
     * once the 8-slot frontier landed: insert-pass cuts feed the first
     * histogram a parse shape the refine passes then overfit to.
-    * System property overrides for experiments: 2 = every sweep,
-    * 1 = refine sweeps only, 0 = off. */
-  private val ZopfliCutExplicit = {
-    val sys = Integer.getInteger("graft.zopfli.cutExplicit", -1).intValue()
-    if (sys >= 0) sys else if (quality >= 12) 1 else 0
-  }
+    * 1 = refine sweeps only (q12), 0 = off. */
+  private val ZopfliCutExplicit = if (quality >= 12) 1 else 0
   /** Copy-code boundaries below the top code that an explicit cut may
     * land on. Swept r10 at cutExplicit=2: with insert-run pricing,
     * span 2 measured 6.2349 (+0.04% over span 1's 6.2322) at −10%
@@ -381,8 +372,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     * 0.4 MB/s; deeper refine sweeps (iters 4/6) were flat-to-worse.
     * (Under the old icode=0 pricing, span 2 was ratio-NEGATIVE —
     * mispriced cut options misled the histogram refine.) */
-  private val ZopfliCutSpan =
-    Integer.getInteger("graft.zopfli.cutSpan", 1).intValue()
+  private val ZopfliCutSpan = 1
   /** Binary-tree match finder for the zopfli pass (the published
     * H10/BT shape libbrotli uses at q10+ and zstd uses in btopt):
     * positions sharing a 4-byte hash bucket form a binary SEARCH tree
@@ -394,8 +384,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     * from the subtree boundary's agreement length instead of byte 0.
     * Replaced the chains in r9: same candidate-cache interface,
     * measured ~4× less match-search work per block at equal ratio. */
-  private val BtMaxComps =
-    Integer.getInteger("graft.zopfli.btDepth", 64).intValue()
+  private val BtMaxComps = 64
   /** Suffix-agreement horizon: suffixes equal this far are
     * indistinguishable to the tree — the newer position adopts the
     * older's subtrees and replaces it (which is also what terminates
@@ -522,8 +511,6 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     * economics — with the icode=0 column, boundary cuts were priced as
     * if the insert run they avoid were free. */
   private lazy val zInsRun = new Array[Int](blockSize + 1)
-  private val ZopfliInsPricing =
-    Integer.getInteger("graft.zopfli.insPricing", 1).intValue() == 1
   /** Per-position candidate cache (up to ZCandSlots (dist, len) pairs),
     * filled during the insert pass while the chain tips are temporally
     * correct — pass 2's tips point at positions AFTER p (the whole block
@@ -540,8 +527,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     * distance-ring DP state (libbrotli's dist_cache shape) was also
     * built and measured: +0.03% at 4 slots, nothing at 8 -- the wider
     * frontier subsumes it; not kept. */
-  private val ZCandSlots =
-    Integer.getInteger("graft.zopfli.candSlots", 8).intValue()
+  private val ZCandSlots = 8
   private lazy val zCandD = new Array[Int](ZCandSlots * (blockSize + 1))
   private lazy val zCandL = new Array[Int](ZCandSlots * (blockSize + 1))
   /** Cached §8 static-dictionary matches per position, the two longest
@@ -549,15 +535,12 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     * 0 = none. Filled in pass 1, relaxed in every sweep. */
   private lazy val zDict1 = new Array[Int](blockSize + 1)
   private lazy val zDict2 = new Array[Int](blockSize + 1)
-  private val MaxLitTrees =
-    Integer.getInteger("graft.cm.maxLitTrees", 12).intValue()
+  private val MaxLitTrees = 12
   /** Distance trees are cheaper (64-symbol alphabet) than literal ones. */
-  private val DistTreeCostBits =
-    Integer.getInteger("graft.cm.distTreeCost", 150).intValue().toDouble
+  private val DistTreeCostBits = 150.0
   /** ~bits one extra literal tree costs (code description); merges stop
     * when the entropy growth of the best merge exceeds this. */
-  private val TreeCostBits =
-    Integer.getInteger("graft.cm.treeCost", 240).intValue().toDouble
+  private val TreeCostBits = 240.0
 
   private def utf8Ctx(p1: Int, p2: Int): Int =
     SpecData.ContextLut((2 << 9) + p1) | SpecData.ContextLut((2 << 9) + 256 + p2)
@@ -1165,11 +1148,9 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
         var p = b0
         while (p < end) { bf(hist(p) & 0xff) += 1; p += 1 }
         val bl = Huffman.buildLengths(bf, 15)
-        val lb = java.lang.Double.parseDouble(
-          System.getProperty("graft.zopfli.litBias1", "1.3"))
         var i = 0
         while (i < 256) {
-          litCostT(i) = (if (bl(i) > 0) bl(i) else 17.0) * lb; i += 1
+          litCostT(i) = (if (bl(i) > 0) bl(i) else 17.0) * 1.3; i += 1
         }
         i = 0
         while (i < cmdCostT.length) { cmdCostT(i) = if (i < 128) 7.0 else 10.0; i += 1 }
@@ -1178,16 +1159,12 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
       }
       // literals are UNDERPRICED by the per-byte Huffman cost: each
       // literal also lengthens its command's insert run and spreads the
-      // literal histogram. With insPricing (default since r10) the
-      // icode/extra-bits half of that coupling is priced exactly, so
-      // the residual bias is smaller (swept r10: optimum 1.5, flat
-      // 1.3-1.6 within 0.02%); without it the bias also stands in for
-      // the unpriced icode growth (r9 optimum 1.6, worth +1.4% q11
-      // ratio). Both steer the DP toward the copy-richer parse shape
-      // native's q11 streams exhibit.
-      val litBias =
-        java.lang.Double.parseDouble(System.getProperty("graft.zopfli.litBias",
-          if (ZopfliInsPricing) "1.5" else "1.6"))
+      // literal histogram. Insert-run pricing prices the icode/extra-bits
+      // half of that coupling exactly, so the residual bias is small
+      // (swept: optimum 1.5, flat 1.3-1.6 within 0.02%). It steers the
+      // DP toward the copy-richer parse shape native's q11 streams
+      // exhibit.
+      val litBias = 1.5
       def costsFromFreqs(): Unit = {
         def fill(freqs: Array[Long], out: Array[Double]): Unit = {
           val ls = Huffman.buildLengths(freqs, 15)
@@ -1195,10 +1172,8 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
           while (i < out.length) { out(i) = if (ls(i) > 0) ls(i) else 17.0; i += 1 }
         }
         fill(litFreq, litCostT); fill(cmdFreq, cmdCostT)
-        if (litBias != 1.0) {
-          var i = 0
-          while (i < litCostT.length) { litCostT(i) *= litBias; i += 1 }
-        }
+        var i = 0
+        while (i < litCostT.length) { litCostT(i) *= litBias; i += 1 }
         // distance syms resolve per block post-parse (NPOSTFIX/NDIRECT
         // selection), so price them here from the replayed commands
         // under the (0,0) cost model the DP edges use
@@ -1230,9 +1205,9 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
         // one long copy into several rep copies that each really cost
         // histogram spread and later-pass price drift
         var c = zCost(i) + CopyExtra(ccode) + CmdOverheadBits
-        // insPricing: price the command by its true (icode, ccode) cell
-        // + insert extra bits, from the best path's literal run at i
-        val ic = if (ZopfliInsPricing) insertCodeFor(zInsRun(i)) else 0
+        // price the command by its true (icode, ccode) cell + insert
+        // extra bits, from the best path's literal run at i
+        val ic = insertCodeFor(zInsRun(i))
         if (ic > 0) c += InsertExtra(ic)
         if (rep) {
           // emission lands in the implicit zone (ccode ≤ 15) or pays an
@@ -1249,7 +1224,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
         if (c < zCost(j)) {
           zCost(j) = c; zFromLen(j) = len; zFromCLen(j) = len
           zFromDist(j) = dist; zArrDist(j) = dist
-          if (ZopfliInsPricing) zInsRun(j) = 0
+          zInsRun(j) = 0
         }
       }
       // relax every copy-code boundary ≤ len (cost is flat within a
@@ -1284,7 +1259,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
         val j = i + outLen
         val ccode = copyCodeFor(wordLen)
         val sb = distSymAndBits(dist)
-        val ic = if (ZopfliInsPricing) insertCodeFor(zInsRun(i)) else 0
+        val ic = insertCodeFor(zInsRun(i))
         val c = zCost(i) + CopyExtra(ccode) + CmdOverheadBits +
           (if (ic > 0) InsertExtra(ic) else 0.0) +
           cmdCostT(packCommandExplicit(ic, ccode)) +
@@ -1293,7 +1268,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
           zCost(j) = c; zFromLen(j) = outLen; zFromCLen(j) = wordLen
           zFromDist(j) = dist
           zArrDist(j) = zArrDist(i)
-          if (ZopfliInsPricing) zInsRun(j) = 0
+          zInsRun(j) = 0
         }
       }
       /** Relax a cached identity word plus every affix transform whose
@@ -1333,7 +1308,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
         java.util.Arrays.fill(zCost, 0, n + 1, Double.MaxValue)
         zCost(0) = 0.0
         zArrDist(0) = ringLast(0)
-        if (ZopfliInsPricing) zInsRun(0) = 0
+        zInsRun(0) = 0
         var p = b0
         var lastRepD0 = 0
         var lastRepLen = 0
@@ -1345,7 +1320,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
             zCost(i + 1) = lc; zFromLen(i + 1) = 0; zFromCLen(i + 1) = 0
             zFromDist(i + 1) = 0
             zArrDist(i + 1) = zArrDist(i)
-            if (ZopfliInsPricing) zInsRun(i + 1) = zInsRun(i) + 1
+            zInsRun(i + 1) = zInsRun(i) + 1
           }
           val maxLen = math.min(MaxCopy, end - p)
           if (maxLen >= MinMatch) {
@@ -1388,8 +1363,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
                 val l = zCandL(ci4 + k)
                 if (l > 0) {
                   val d = zCandD(ci4 + k)
-                  if (ZopfliCutExplicit == 2 ||
-                      (ZopfliCutExplicit == 1 && !insertPass))
+                  if (ZopfliCutExplicit == 1 && !insertPass)
                     relaxBoundaries(i, l, d, rep = false)
                   else relaxAt(i, l, d, rep = false)
                   if (l > bl) { bl = l; bd = d }
@@ -1493,19 +1467,11 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
         System.arraycopy(ringSnap, 0, distRing, 0, 4)
         distRingIdx = ringIdxSnap
       }
-      val zDbg = java.lang.Boolean.getBoolean("graft.zopfli.debug")
-      def phase[A](tag: String)(f: => A): A =
-        if (!zDbg) f else {
-          val t0 = System.nanoTime()
-          val a = f
-          System.err.println(f"[zopfli] $tag ${(System.nanoTime() - t0) / 1e9}%.3fs")
-          a
-        }
       // clear the dictionary cache (pass 1 skips tail positions whose
       // maxLen < MinMatch, which would otherwise read a stale entry)
       java.util.Arrays.fill(zDict1, 0, n + 1, 0)
       java.util.Arrays.fill(zDict2, 0, n + 1, 0)
-      phase("pass1-sweep")(sweep(insertPass = true))
+      sweep(insertPass = true)
       resetParseState()
       var plan = buildPlan()
       replay(plan)
@@ -1517,7 +1483,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
       val iters = if (quality >= 11) ZopfliIters else 1
       while (it < iters) {
         costsFromFreqs()
-        phase(s"sweep-$it")(sweep(insertPass = false))
+        sweep(insertPass = false)
         resetParseState()
         plan = buildPlan()
         replay(plan)
@@ -1567,11 +1533,8 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     // (~20% encode throughput at q5/q6, measured r8) and the challenger
     // practically never beats (0,0) on those tiers' parses — only the
     // denser q >= 7 parses produce distance mixtures where it pays.
-    val forcedParams = Integer.getInteger("graft.dist.force", -1).intValue()
     val packedParams =
-      if (forcedParams >= 0) forcedParams
-      else if (quality >= 7) selectDistanceParams(cmdBuf, nCmds, CmdStride)
-      else 0
+      if (quality >= 7) selectDistanceParams(cmdBuf, nCmds, CmdStride) else 0
     val npostfix = packedParams >>> 16
     val ndirect = packedParams & 0xffff
     val distFreq2 =
@@ -1649,10 +1612,8 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
           while (i < ll) { litSyms(w) = hist(ls + i) & 0xff; w += 1; i += 1 }
           cc0 += 1
         }
-        val ls = splitBlocks(litSyms, nLits, 256,
-          Integer.getInteger("graft.split.litChunk", 256).intValue(),
-          Integer.getInteger("graft.split.maxTypes", 8).intValue(),
-          TreeCostBits)
+        val ls = splitBlocks(litSyms, nLits, 256, chunkSize = 256,
+          maxTypes = 8, TreeCostBits)
         if (ls != null) {
           val rowsN = typedCtxRows(ls)
           val cl2 = clusterContexts(rowsN, MaxLitTrees, TreeCostBits)
@@ -1663,9 +1624,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
           // the entropy model underestimates real switch + serialized
           // tree-description costs (measured: a modeled win emitted
           // 32 B LARGER) — demand a margin before paying them
-          val margin = Integer.getInteger("graft.split.litMargin", 1500)
-            .intValue().toDouble
-          if (cost2 + margin < cost1) {
+          if (cost2 + 1500.0 < cost1) {
             litSplit = ls
             if (cl2 == null) {
               // one tree per type, contexts collapsed (distSplit's shape)
@@ -1688,9 +1647,8 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
       while (i < nCmds) { cmdSymsA(i) = cmdBuf(i * CmdStride + 5); i += 1 }
     }
     val cmdSplit = if (quality >= 10)
-      splitBlocks(cmdSymsA, nCmds, CommandAlphabetSize,
-        Integer.getInteger("graft.split.cmdChunk", 100).intValue(),
-        Integer.getInteger("graft.split.maxTypes", 8).intValue(), 600.0)
+      splitBlocks(cmdSymsA, nCmds, CommandAlphabetSize, chunkSize = 100,
+        maxTypes = 8, 600.0)
     else null
     val distSymsA = new Array[Int](nCmds)
     var nDistSyms = 0
@@ -1705,9 +1663,8 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
       }
     }
     val distSplit = if (quality >= 10)
-      splitBlocks(distSymsA, nDistSyms, distFreq2.length,
-        Integer.getInteger("graft.split.distChunk", 100).intValue(),
-        Integer.getInteger("graft.split.maxTypes", 8).intValue(), 250.0)
+      splitBlocks(distSymsA, nDistSyms, distFreq2.length, chunkSize = 100,
+        maxTypes = 8, 250.0)
     else null
     // ---- distance context split (q >= 10) ----
     // distances histogram by the decoder's copy-length context
@@ -1730,8 +1687,6 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
       }
     }
     // ---- header ----
-    val eDbg = java.lang.Boolean.getBoolean("graft.emit.debug")
-    val bitsAtHeader = bits.bitsWritten
     /** Body-side switch emitter for one split category: writes the
       * block-switch (direct type symbol + block length) whenever the
       * current block is exhausted, mirroring the decoder's
@@ -1861,9 +1816,6 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
       dt += 1
     }
     // ---- body ---- (codes pre-reversed: one writeBits call per symbol)
-    val bitsAtBody = bits.bitsWritten
-    var accCmd = 0L; var accInsX = 0L; var accCopyX = 0L
-    var accLit = 0L; var accDistSym = 0L; var accDistX = 0L
     val litLen = litLens(0)
     val litRev = litRevs(0)
     var ci = 0
@@ -1878,10 +1830,6 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
       bits.writeBits((cLitLen - InsertBase(icode)).toLong, InsertExtra(icode))
       bits.writeBits((math.max(cCopyLen, CopyBase(0)) - CopyBase(ccode)).toLong,
         CopyExtra(ccode))
-      if (eDbg) {
-        accCmd += cmdLensT(cTy)(cmdSym)
-        accInsX += InsertExtra(icode); accCopyX += CopyExtra(ccode)
-      }
       var i = 0
       if (cmap == null) {
         while (i < cLitLen) {
@@ -1889,7 +1837,6 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
           bits.writeBits(litRev(b).toLong, litLen(b))
           i += 1
         }
-        if (eDbg) { var k = 0; while (k < cLitLen) { accLit += litLen(hist(cLitStart + k) & 0xff); k += 1 } }
       } else {
         while (i < cLitLen) {
           val lp = cLitStart + i
@@ -1899,7 +1846,6 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
           val lTy = if (catL == null) 0 else catL.next()
           val tr = cmap((lTy << 6) + utf8Ctx(pb1, pb2))
           bits.writeBits(litRevs(tr)(b).toLong, litLens(tr)(b))
-          if (eDbg) accLit += litLens(tr)(b)
           i += 1
         }
       }
@@ -1912,73 +1858,8 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
           else if (dmap == null) 0 else dmap(math.min(cCopyLen - 2, 3))
         bits.writeBits(distRevs(dtr)(dc).toLong, distLens(dtr)(dc))
         bits.writeBits((packed & 0xffffff).toLong, packed >>> 24)
-        if (eDbg) { accDistSym += distLens(dtr)(dc); accDistX += (packed >>> 24) }
       }
       ci += 1
-    }
-    if (eDbg) {
-      val hdr = bitsAtBody - bitsAtHeader
-      val body = bits.bitsWritten - bitsAtBody
-      // opportunity analysis: simulate the ring over the command stream
-      // and count explicit distances that were 1 ring push away from a
-      // short code (what a cache-aware DP could have converted)
-      var nImplicit = 0; var nRing = 0; var nExplicit = 0; var nNearRing = 0
-      val simRing = Array(16, 15, 11, 4); var simIdx = 0
-      def simLast(k: Int): Int = simRing((simIdx - 1 - k) & 3)
-      def simPush(d: Int): Unit = {
-        simRing(simIdx & 3) = d; simIdx = (simIdx + 1) & 3
-      }
-      val pmask2 = (1 << npostfix) - 1
-      var c2 = 0
-      while (c2 < nCmds) {
-        val o2 = c2 * CmdStride
-        val dc2 = cmdBuf(o2 + 6)
-        if (cmdBuf(o2 + 2) > 0) {
-          if (dc2 == -1) nImplicit += 1 // dist == last, no push
-          else if (dc2 >= 0 && dc2 <= 15) {
-            nRing += 1
-            val d =
-              if (dc2 == 0) simLast(0)
-              else if (dc2 < 4) simLast(dc2)
-              else if (dc2 < 10) simLast(0) + ShortCodeDelta(dc2 - 4)
-              else simLast(1) + ShortCodeDelta(dc2 - 10)
-            if (dc2 != 0) simPush(d)
-          } else {
-            // reconstruct the raw distance from (symbol, extra)
-            val sym = dc2; val packed2 = cmdBuf(o2 + 7)
-            val dv = packed2 & 0xffffff
-            val dd = sym - 16 - ndirect
-            val dist =
-              if (sym < 16 + ndirect) sym - 15
-              else {
-                val nb = 1 + (dd >> (npostfix + 1))
-                val hcode = dd >> npostfix
-                val lcode = dd & pmask2
-                val offset = ((2 + (hcode & 1)) << nb) - 4
-                ((offset + dv) << npostfix) + lcode + ndirect + 1
-              }
-            nExplicit += 1
-            var near = false
-            var k2 = 0
-            while (k2 < 4 && !near) { near = dist == simLast(k2); k2 += 1 }
-            var j2 = 0
-            while (j2 < 6 && !near) {
-              near = dist == simLast(0) + ShortCodeDelta(j2) ||
-                dist == simLast(1) + ShortCodeDelta(j2)
-              j2 += 1
-            }
-            if (near) nNearRing += 1
-            simPush(dist)
-          }
-        }
-        c2 += 1
-      }
-      System.err.println(
-        f"[emit] len=$len%d nCmds=$nCmds%d hdr+trees=${hdr / 8}%dB body=${body / 8}%dB " +
-        f"(cmd=${accCmd / 8}%dB insX=${accInsX / 8}%dB copyX=${accCopyX / 8}%dB " +
-        f"lit=${accLit / 8}%dB distSym=${accDistSym / 8}%dB distX=${accDistX / 8}%dB) " +
-        f"implicit=$nImplicit%d ring=$nRing%d explicit=$nExplicit%d nearRing=$nNearRing%d " +
-        f"nLitTrees=$nLitTrees%d nCmdTrees=$nCmdTrees%d nDistTrees=$nDistTrees%d npostfix=$npostfix%d ndirect=$ndirect%d")
     }
     bits.drainTo(sink)
   }

@@ -12,10 +12,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Why loops need it when AQE exists: AQE coalesces the partitions of
   * ONE adaptive query after its shuffles materialize, but an iterative
-  * operator (BPE training rounds, label propagation, micro-batch
-  * drains) runs dozens of SMALL queries whose per-stage floor is the
-  * session's `spark.sql.shuffle.partitions` — the cluster-shaped
-  * default (= core count here). Each tiny round then pays
+  * operator (BPE training rounds, micro-batch drains) runs dozens of
+  * SMALL queries whose per-stage floor is the session's
+  * `spark.sql.shuffle.partitions` — the cluster-shaped default (= core
+  * count here). Each tiny round then pays
   * (stages × partitions) task launches plus AQE's per-shuffle
   * re-planning for work that fits in a handful of tasks. Deriving the
   * loop's partition count from the LOOP STATE's size keeps small

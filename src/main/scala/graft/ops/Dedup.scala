@@ -480,24 +480,6 @@ object Dedup {
     def cut(df: DataFrame): DataFrame = Materialize(df)
     val p = pairs.toDF("pa", "pb")
     val edges = cut(p.union(p.select($"pb", $"pa")).toDF("src", "dst"))
-    // r19 (guide §2): the propagation loop's shuffles are EDGE-sized,
-    // so its partition count derives from the measured edge count
-    // (counted off the just-materialized frame — one cheap job), not
-    // the session's cluster-shaped shuffle.partitions: near-dup pair
-    // lists are a vanishing fraction of the corpus, and each round
-    // paid (stages × 32) task launches for a few thousand rows here
-    // (the driver's 8-core bench read d06 FASTER than 32-core, 0.85×
-    // — task-launch-bound). clamp(ceil(edges / target), 1,
-    // defaultParallelism) saturates all cores once the pair graph is
-    // large (conf: spark.graft.loop.targetPartitionRows, default
-    // 256Ki rows ≈ 4-8 MB of (long, long) edges per partition).
-    val edgeRows = edges.count()
-    val targetRows = spark.conf
-      .getOption("spark.graft.loop.targetPartitionRows")
-      .flatMap(_.toLongOption).getOrElse(256L << 10)
-    val loopParts = Adaptive.partitionsFor(math.max(1L, edgeRows),
-      spark.sparkContext.defaultParallelism, targetRows)
-    Adaptive.withShufflePartitions(spark, loopParts) {
     var labels = cut(edges.select($"src".as("v")).distinct()
       .withColumn("lbl", $"v"))
     var changed = 1L
@@ -520,7 +502,6 @@ object Dedup {
           s"with $changed labels still changing — components are SPLIT")
     }
     labels
-    } // Adaptive.withShufflePartitions
   }
 
   // A winnow-fingerprint candidate prefilter for this edge source

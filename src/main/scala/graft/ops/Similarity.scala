@@ -890,16 +890,11 @@ object Similarity {
     cents = spark.createDataFrame(
       spark.sparkContext.parallelize(cents.collect().toIndexedSeq, 1),
       cents.schema)
-    def tm[A](l: String)(f: => A): A = {
-      if (!sys.env.contains("GRAFT_S15_PROF")) f
-      else { val t0 = System.nanoTime(); val x = f
-        println(f"[s15-phase] $l ${(System.nanoTime() - t0) / 1e9}%6.2f"); x }
-    }
     // corpus assignment and the exact brute-force baseline are
     // independent — concurrent jobs (guide §2.6)
     val (corpus, (exact, nExact)) = Materialize.inParallel(
-      tm("corpus")(ivfAssign(qe, cents).materialize),
-      tm("exact") {
+      ivfAssign(qe, cents).materialize,
+      {
         val e = s01(spark, dir).select($"q_id", $"vec_id").materialize
         (e, e.count())
       })
@@ -919,11 +914,11 @@ object Similarity {
     // corpus and re-ran the ranking per arm (4 joins, 8 actions);
     // this computes every arm from one materialized candidate frame,
     // so sweep cost ∝ candidates(max nprobe), not Σ over arms.
-    val cand = tm("cand")(corpus.join(broadcast(qranks), Seq("cluster"))
+    val cand = corpus.join(broadcast(qranks), Seq("cluster"))
       .filter($"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id", $"pr",
         VectorOps.cosineSim(spark, $"embedding", $"q_emb").as("cosine"))
-      .materialize)
+      .materialize
     // per-arm top-5: explode each candidate into the arms that include
     // it (pr <= np), rank within (arm, query) under the same
     // (cosine desc, vec_id asc) order the per-arm loop used. The two
@@ -932,13 +927,13 @@ object Similarity {
       explode(filter(array(S15Sweep.map(lit): _*), np => np >= $"pr"))
         .as("np"))
     val (prCounts, hitByArm) = Materialize.inParallel(
-      tm("prCounts")(cand.groupBy($"pr").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap),
-      tm("hits")(GraftPlans.topKPerKey(armed, Seq("np", "q_id"),
+      cand.groupBy($"pr").agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap,
+      GraftPlans.topKPerKey(armed, Seq("np", "q_id"),
           Seq(("cosine", false), ("vec_id", true)), 5)
         .join(exact, Seq("q_id", "vec_id"), "left_semi")
         .groupBy($"np").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
     val rows = S15Sweep.map { np =>
       val nCand = prCounts.collect { case (pr, n) if pr <= np => n }.sum
       val nHits = hitByArm.getOrElse(np, 0L)

@@ -1712,11 +1712,6 @@ object TextOps {
         .limit(1).collect()
       if (top.isEmpty) exhausted = true
       else {
-        def tm[A](l: String)(f: => A): A = {
-          if (!sys.env.contains("GRAFT_BPE_PROF")) f
-          else { val t0 = System.nanoTime(); val x = f
-            println(f"[bpe-phase] $l ${(System.nanoTime()-t0)/1e9}%6.2f"); x }
-        }
         val (a, b, c) = (top(0).getString(0), top(0).getString(1),
           top(0).getLong(2))
         // Greedy-left-to-right as run-parity over candidate islands,
@@ -1732,7 +1727,7 @@ object TextOps {
         // the old island-id + per-island-min pair needed a second
         // exchange on (w, island). One exchange per kept job, and one
         // fewer AQE stage barrier in the per-round critical path.
-        val kept = tm("kept")(adj.filter($"sym" === a && $"nx" === b)
+        val kept = adj.filter($"sym" === a && $"nx" === b)
           .withColumn("st",
             when(lag($"pos", 1, -2).over(byW) =!= $"pos" - 1, $"pos"))
           .withColumn("ist", last($"st", ignoreNulls = true)
@@ -1740,7 +1735,7 @@ object TextOps {
               Window.currentRow)))
           .filter(($"pos" - $"ist") % 2 === 0)
           .select($"w".as("kw"), $"pos".as("kpos"), $"freq".as("kfreq"))
-          .localCheckpoint(true))
+          .localCheckpoint(true)
         val affW = kept.select($"kw".as("w")).distinct()
         // membership joins BROADCAST the (small) word list so the
         // untouched vocabulary is never shuffled: per-round shuffle
@@ -1798,14 +1793,14 @@ object TextOps {
         // otherwise ACCUMULATE round over round (anti-branch parts +
         // window parts + counts parts), and every later scan pays the
         // sum as tasks
-        val state = tm("adj")(rebase(newAdj
+        val state = rebase(newAdj
           .select(lit("a").as("t"), $"w", $"freq", $"pos", $"sym", $"nx",
             lit(null).cast("long").as("c"))
           .unionByName(newCounts
             .select(lit("c").as("t"), lit(null).cast("string").as("w"),
               lit(null).cast("long").as("freq"),
               lit(null).cast("int").as("pos"), $"sym", $"nx", $"c"))
-          .coalesce(loopParts)))
+          .coalesce(loopParts))
         adj = state.filter($"t" === "a")
           .select($"w", $"freq", $"pos", $"sym", $"nx")
         counts = state.filter($"t" === "c").select($"sym", $"nx", $"c")
@@ -1814,8 +1809,8 @@ object TextOps {
         // the pair count IS the removal count — no extra job; only
         // self-pair rounds (runs can overlap) pay the kept aggregation.
         tokens -= (if (a != b) c
-          else tm("tokens")(Option(kept.agg(sum($"kfreq")).head().get(0))
-            .map(_.asInstanceOf[Long]).getOrElse(0L)))
+          else Option(kept.agg(sum($"kfreq")).head().get(0))
+            .map(_.asInstanceOf[Long]).getOrElse(0L))
         learned += ((r.toLong, a, b, c, tokens))
         r += 1
       }

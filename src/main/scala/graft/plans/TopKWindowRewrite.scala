@@ -42,8 +42,8 @@ object TopKWindowRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * that loss to a defect, not the design: `TopKHeaps.drain` created
     * an (unused!) RowOrdering PER KEY, a codegen-cache lookup +
     * instantiation for every distinct key in the final phase. With the
-    * per-key allocation removed, `tools/TopKDiag` (median-of-5 at
-    * sf0.1) has the heap operator FASTER on every shape including the
+    * per-key allocation removed, a median-of-5 measurement at sf0.1
+    * has the heap operator FASTER on every shape including the
     * one that motivated opt-in: ~10 rows/key 0.159 s vs 0.230 stock
     * (1.4×), ~60 rows/key 0.201 vs 0.707 (3.5×), ~100 rows/key 0.129
     * vs 0.157 (1.2×). The remaining pathological inputs are guarded

@@ -133,12 +133,11 @@ object Relational {
   // AQE handles skew); the orderdate filter prunes orders early. customer
   // grows with scale factor, so its join strategy is AQE's call (broadcast
   // below the threshold, shuffle past it) — only the fixed-cardinality
-  // nation (25) and region (5) keep explicit broadcast hints. The ×10
-  // diagnosis (tools/Q04Diag, SURVEY §6): at sf1 AQE still broadcasts
-  // the filtered orders AND customer (plan identical to sf0.1, warm
-  // ratio 1.21×); the true at-scale shape — both big joins shuffling,
-  // only the hinted dims broadcast — is asserted in PlanSpec under
-  // auto-broadcast off.
+  // nation (25) and region (5) keep explicit broadcast hints. At ×10
+  // (SURVEY §6) AQE still broadcasts the filtered orders AND customer
+  // (plan identical to sf0.1, warm ratio 1.21×); the true at-scale
+  // shape — both big joins shuffling, only the hinted dims broadcast —
+  // is asserted in PlanSpec under auto-broadcast off.
   // ---------------------------------------------------------------------
   def q04(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -284,17 +284,6 @@ object EventsStream {
       .orderBy($"purchase_id", $"click_id")
   }
 
-  /** st13's drained frame with p_ts kept — shared by the registry query
-    * and the St13Diag cutoff experiment. */
-  private[graft] def st13Raw(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val joined = StreamOps.purchaseClickLeftJoin(
-      eventsSource(spark, dir).filter($"event_type" === "purchase"),
-      eventsSource(spark, dir).filter($"event_type" === "click"))
-    drain(joined, "append", 2 * eventsBytes(dir))
-      .select($"p_id".as("purchase_id"), $"p_ts", $"c_id".as("click_id"))
-  }
-
   /** st13: stream-stream LEFT OUTER interval join — the hardest join
     * emission semantics in Structured Streaming: matched pairs stream
     * out like st07's inner join, and an unmatched purchase emits its
@@ -302,13 +291,16 @@ object EventsStream {
     * match. The proof horizon is the oracle's subtlety: the global
     * watermark is min over both filtered inputs of (side max event time
     * − 1 h), so unmatched purchases with `p_ts <` that horizon emit and
-    * later ones stay in state forever (St13Diag measured the cutoff
-    * exactly at both SFs: 195/195 and 1944/1944 null rows). The batch
-    * oracle replicates matched pairs ∪ horizon-cut unmatched rows. */
+    * later ones stay in state forever (the cutoff was measured exact at
+    * both SFs: 195/195 and 1944/1944 null rows). The batch oracle
+    * replicates matched pairs ∪ horizon-cut unmatched rows. */
   def st13(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    st13Raw(spark, dir)
-      .select($"purchase_id", $"click_id")
+    val joined = StreamOps.purchaseClickLeftJoin(
+      eventsSource(spark, dir).filter($"event_type" === "purchase"),
+      eventsSource(spark, dir).filter($"event_type" === "click"))
+    drain(joined, "append", 2 * eventsBytes(dir))
+      .select($"p_id".as("purchase_id"), $"c_id".as("click_id"))
       .orderBy($"purchase_id", $"click_id") // Spark asc = NULLS FIRST
   }
 

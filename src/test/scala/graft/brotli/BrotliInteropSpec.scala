@@ -94,6 +94,20 @@ class BrotliInteropSpec extends AnyFunSuite {
     }
   }
 
+  test("external libbrotli decodes graft q10/q11 streams") {
+    // the context-modeling and zopfli rungs, on inputs past one 1 MiB
+    // meta-block
+    withCli {
+      for (q <- Seq(10, 11); (name, data) <- Seq(
+          "text" -> textInput(2500000), "rep" -> repetitiveInput(2000000),
+          "random" -> randomInput(300000, 42), "zeros" -> new Array[Byte](3 << 20))) {
+        val enc = Brotli.compress(data, q)
+        assert(java.util.Arrays.equals(extDecompress(enc), data),
+          s"external decode mismatch: q=$q $name (${enc.length}B)")
+      }
+    }
+  }
+
   test("graft decodes external brotli streams (all quality levels)") {
     withCli {
       for (q <- Seq(0, 1, 2, 4, 5, 6, 9, 11)) {

@@ -264,67 +264,33 @@ class BrotliSpec extends AnyFunSuite {
     val payload = ranges.toByteArray
     val enc = Brotli.compress(payload, 11)
     assert(java.util.Arrays.equals(Brotli.decompress(enc), payload))
-    // the split must pay its way: meaningfully smaller than the
-    // single-type emission of the same payload
-    System.setProperty("graft.split.litChunk", "99999999") // disable
-    val single = try Brotli.compress(payload, 11)
-      finally System.clearProperty("graft.split.litChunk")
-    assert(enc.length < single.length * 97 / 100,
-      s"literal split did not pay: ${enc.length} vs single ${single.length}")
+    // the split must pay its way: within 2% of coding each section with
+    // its own order-0 model (one tree for the whole block lands ~7% over)
+    val sectionIdeal = payload.grouped(20000).map { sec =>
+      val h = new Array[Int](256)
+      sec.foreach(b => h(b & 0xff) += 1)
+      h.filter(_ > 0).map(c => -c * math.log(c.toDouble / sec.length)).sum /
+        math.log(2) / 8
+    }.sum
+    assert(enc.length <= sectionIdeal * 1.02,
+      f"literal split did not pay: ${enc.length} B vs per-section ideal $sectionIdeal%.0f B")
   }
 
   test("max-ratio dial (cutExplicit) emits valid streams that beat default ratio") {
-    // the dial relaxes explicit candidates at copy-code boundaries —
-    // a different parse, same format; the stream must round-trip and
-    // on compressible text come out no larger than the default parse
+    // q12 relaxes explicit candidates at copy-code boundaries in the
+    // refine sweeps — a different parse, same format; the stream must
+    // round-trip and on compressible text come out no larger than q11
     val words = Array("information", "the", "of", "public", "because",
       "different", "management")
     val wr = new Random(5)
     val sb = new StringBuilder
     while (sb.length < 120000) { sb.append(words(wr.nextInt(words.length))).append(' ') }
     val text = sb.toString.getBytes
-    def encodeWith(dial: String): Array[Byte] = {
-      System.setProperty("graft.zopfli.cutExplicit", dial)
-      try {
-        val enc = new BrotliEncoder(11) // props read at construction
-        val out = new ByteArrayOutputStream()
-        enc.write(text, 0, text.length, out); enc.finish(out)
-        out.toByteArray
-      } finally System.clearProperty("graft.zopfli.cutExplicit")
-    }
-    val dflt = encodeWith("0")
-    val cut = encodeWith("1")
-    assert(java.util.Arrays.equals(Brotli.decompress(cut), text))
-    assert(cut.length <= dflt.length,
-      s"dial should not lose ratio: cut=${cut.length} default=${dflt.length}")
-    // mode 2 (every-sweep cuts) stays a documented override — it must
-    // keep emitting valid streams that don't lose to the no-cut parse
-    val cut2 = encodeWith("2")
-    assert(java.util.Arrays.equals(Brotli.decompress(cut2), text))
-    assert(cut2.length <= dflt.length,
-      s"every-sweep cuts lost ratio: cut2=${cut2.length} default=${dflt.length}")
-
-    // the dial's product surface (r9 judge item 4): quality 12 IS the
-    // dial — byte-identical to q11+cutExplicit=1 (refine-sweep cuts,
-    // the mode that measured best since the 8-slot frontier),
-    // reachable from bro.quality like every other rung, still
-    // standard RFC 7932
-    val q12 = {
-      val enc = new BrotliEncoder(12)
-      val out = new ByteArrayOutputStream()
-      enc.write(text, 0, text.length, out); enc.finish(out)
-      out.toByteArray
-    }
-    assert(java.util.Arrays.equals(q12, cut),
-      "q12 must be exactly the q11+cutExplicit=1 parse")
-    val q11Plain = {
-      val enc = new BrotliEncoder(11)
-      val out = new ByteArrayOutputStream()
-      enc.write(text, 0, text.length, out); enc.finish(out)
-      out.toByteArray
-    }
-    assert(q12.length <= q11Plain.length,
-      s"max-ratio rung must not lose to q11: q12=${q12.length} q11=${q11Plain.length}")
+    val q11 = Brotli.compress(text, 11)
+    val q12 = Brotli.compress(text, 12)
+    assert(java.util.Arrays.equals(Brotli.decompress(q12), text))
+    assert(q12.length <= q11.length,
+      s"max-ratio rung must not lose to q11: q12=${q12.length} q11=${q11.length}")
   }
 
   test("quality ladder is monotone on compressible text") {
@@ -347,35 +313,6 @@ class BrotliSpec extends AnyFunSuite {
       assert(sh <= sl,
         s"ladder inversion: q$qh ($sh B) worse than q$ql ($sl B)")
     }
-  }
-
-  test("candidate-frontier width: 8 slots round-trip and do not lose to 4") {
-    // the per-position candidate cache holds the BT walk's (dist, len)
-    // Pareto frontier; 4 slots evict mid-frontier points (the r10
-    // distance-gap root cause), 8 (default) keeps them — on repetitive
-    // text with many distinct match lengths the wide frontier must
-    // round-trip and come out no larger than the narrow one
-    val words = Array("information", "the", "of", "public", "because",
-      "different", "management", "consider", "table")
-    val wr = new Random(11)
-    val sb = new StringBuilder
-    while (sb.length < 150000) { sb.append(words(wr.nextInt(words.length))).append(' ') }
-    val text = sb.toString.getBytes
-    def encodeWith(slots: String): Array[Byte] = {
-      System.setProperty("graft.zopfli.candSlots", slots)
-      try {
-        val enc = new BrotliEncoder(11) // props read at construction
-        val out = new ByteArrayOutputStream()
-        enc.write(text, 0, text.length, out); enc.finish(out)
-        out.toByteArray
-      } finally System.clearProperty("graft.zopfli.candSlots")
-    }
-    val narrow = encodeWith("4")
-    val wide = encodeWith("8")
-    assert(java.util.Arrays.equals(Brotli.decompress(wide), text))
-    assert(java.util.Arrays.equals(Brotli.decompress(narrow), text))
-    assert(wide.length <= narrow.length,
-      s"wide frontier should not lose ratio: 8-slot=${wide.length} 4-slot=${narrow.length}")
   }
 
   test("compressor reports real byte counters (reference bug fixed)") {

@@ -6,9 +6,8 @@ import graft.SparkSpec
   * registry's own q07 (DataFrame formulation: row_number cast to long,
   * filtered, projected) must take the heap path — the filter is pushed
   * through the projection and the long cast unwrapped by Spark's own
-  * optimizer before the rule sees it. This is the r11-advice "q07 at
-  * sort-plan speed" item's plan half; the speed half is measured in
-  * tools/TopKDiag and the bench. */
+  * optimizer before the rule sees it. This pins the plan; the speed
+  * is measured by the bench. */
 class Q07PlanCheck extends SparkSpec {
   test("registry q07 plans through the native heap under the default") {
     GraftPlans.install(spark)

@@ -48,10 +48,10 @@ class PlanSpec extends SparkSpec {
     // orders/customer sides outgrow the broadcast threshold — simulated
     // by turning auto-broadcast off — lineitem⋈orders and ⋈customer must
     // degrade to shuffle joins while the EXPLICIT hints keep exactly the
-    // fixed-cardinality nation (25) and region (5) broadcast. The r12
-    // diagnosis (tools/Q04Diag, SURVEY §6) showed no crossover happens
-    // at sf1 itself (AQE still broadcasts the filtered orders), so this
-    // conf-forced regime is where the at-scale shape is assertable.
+    // fixed-cardinality nation (25) and region (5) broadcast. No
+    // crossover happens at sf1 itself (SURVEY §6: AQE still broadcasts
+    // the filtered orders), so this conf-forced regime is where the
+    // at-scale shape is assertable.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
