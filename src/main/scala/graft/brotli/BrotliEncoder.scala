@@ -2,6 +2,11 @@ package graft.brotli
 
 import java.io.ByteArrayOutputStream
 
+/** A §6 block split of one symbol stream: the type of each block, its
+  * length in symbols, and one histogram per type. */
+private final case class BlockSplit(types: Array[Int], lens: Array[Int],
+    hists: Array[Array[Long]])
+
 /** Streaming Brotli encoder (RFC 7932). The quality knob selects a rung
   * of the ladder (SURVEY.md §7.0), all emitting spec-valid streams:
   *   - q0:  uncompressed meta-blocks (store mode, ratio ~1.0 at GB/s —
@@ -9,7 +14,8 @@ import java.io.ByteArrayOutputStream
   *          compresses; callers wanting raw-speed framing get it here);
   *   - q1+: LZ77 over a persistent lgwin-wide sliding window with
   *          quality-scaled hash chains, rep-match search, and all three
-  *          alphabets Huffman-coded from block histograms (emitLzBlock).
+  *          alphabets Huffman-coded from block histograms
+  *          (emitCompressedBlock).
   *          q1 is the greedy fast tier (depth-1 chains, early skip
   *          ramp, short nice-length) matching libbrotli's fast modes;
   *          depth/niceLen/skip/hash width all scale with quality.
@@ -65,17 +71,21 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     headerWritten = true
   }
 
-  private def emitUncompressedBlock(data: Array[Byte], off: Int, len: Int,
-      sink: ByteArrayOutputStream): Unit = {
-    require(len >= 1 && len <= (1 << 24))
-    if (!headerWritten) writeStreamHeader()
+  /** §9.2 header of a non-final `len`-byte meta-block: ISLAST = 0,
+    * MNIBBLES, MLEN - 1, ISUNCOMPRESSED. */
+  private def writeMetaBlockHeader(len: Int, uncompressed: Boolean): Unit = {
     bits.writeBits(0, 1) // ISLAST = 0
     val mlenMinus1 = len - 1
     val nibbles = if (mlenMinus1 < (1 << 16)) 4
       else if (mlenMinus1 < (1 << 20)) 5 else 6
     bits.writeBits(nibbles - 4, 2) // MNIBBLES code
     bits.writeBits(mlenMinus1.toLong, nibbles * 4)
-    bits.writeBits(1, 1) // ISUNCOMPRESSED
+    bits.writeBits(if (uncompressed) 1L else 0L, 1) // ISUNCOMPRESSED
+  }
+
+  private def emitUncompressedBlock(data: Array[Byte], off: Int, len: Int,
+      sink: ByteArrayOutputStream): Unit = {
+    writeMetaBlockHeader(len, uncompressed = true)
     bits.alignToByte()
     bits.writeBytes(data, off, len)
     bits.drainTo(sink)
@@ -345,7 +355,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
   // MTF — tree indices are the symbols).
   // -------------------------------------------------------------------
   private val contextModeling = quality >= 10
-  /** Zopfli DP (quality >= 10): refine-loop count; the per-block DP
+  /** Zopfli DP (quality >= 11): refine-loop count; the per-block DP
     * state (cost-to-reach, arrival edge, arrival distance) is
     * declared below, sized blockSize+1 and reused across blocks. */
   private val ZopfliIters = 3
@@ -623,11 +633,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     }
     if (hists.length <= 1) return null
     val cmap = new Array[Int](ctxFreq.length)
-    var t = 0
-    while (t < hists.length) {
-      members(t).foreach(ctx => cmap(ctx) = t)
-      t += 1
-    }
+    for (t <- hists.indices; ctx <- members(t)) cmap(ctx) = t
     (cmap, hists.toArray)
   }
 
@@ -674,12 +680,10 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     * Adopted only when the split total (including per-tree descriptions
     * and per-boundary switch costs) beats the single-tree total.
     *
-    * Returns (blockTypes, blockLens in symbols, per-type histograms),
-    * types renumbered in first-appearance order (the decoder starts in
-    * type 0), or null when splitting doesn't pay. */
+    * Types are renumbered in first-appearance order (the decoder starts
+    * in type 0); returns null when splitting doesn't pay. */
   private def splitBlocks(syms: Array[Int], nSyms: Int, alphabet: Int,
-      chunkSize: Int, maxTypes: Int, treeDescBits: Double):
-      (Array[Int], Array[Int], Array[Array[Long]]) = {
+      chunkSize: Int, maxTypes: Int, treeDescBits: Double): BlockSplit = {
     if (nSyms < chunkSize * 8) return null
     val nChunks = (nSyms + chunkSize - 1) / chunkSize
     val chunkHist = Array.fill(nChunks)(new Array[Long](alphabet))
@@ -812,7 +816,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     splitBits += (bt.length - 1) * 14.0 + bt.length * 8.0
     splitBits += K * treeDescBits + 120.0 // type+len tree descriptions
     if (splitBits >= singleBits + treeDescBits) return null
-    (bt.toArray, bl.toArray, typeHists)
+    BlockSplit(bt.toArray, bl.toArray, typeHists)
   }
 
   // distance ring mirroring the decoder's stream-level state (§4,
@@ -828,7 +832,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
   /** Ring-relative distance code (0-15) for `dist` if one applies:
     * (dcode, pushesRing); dcode = -1 when the distance must be coded
     * explicitly (the §4 offset formula, parameterized per block at
-    * emission — see the NPOSTFIX/NDIRECT selection in emitLzBlock). */
+    * emission — see the NPOSTFIX/NDIRECT selection in planEntropy). */
   private def ringDistanceCodeFor(dist: Int): (Int, Boolean) = {
     if (dist == ringLast(0)) return (0, false)
     var k = 1
@@ -876,9 +880,8 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
 
 
   /** Choose (npostfix, ndirect) for a parsed block — see the selection
-    * comment in emitLzBlock. Returns the packed pair. */
-  private def selectDistanceParams(cmdBuf: Array[Int], nCmds: Int,
-      CmdStride: Int): Int = {
+    * comment in planEntropy. Returns the packed pair. */
+  private def selectDistanceParams(cmdBuf: Array[Int], nCmds: Int): Int = {
     var nExp = 0
     var c0 = 0
     while (c0 < nCmds) {
@@ -907,7 +910,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
       while (r < 16) { hist(r) = ringCnt(r) / stride; r += 1 }
       var extraBits = 0L
       var i = 0
-      while (i < nExp) {
+      while (i < exp.length) {
         val (sym, nb, _) = distanceCodeFor(exp(i), pf, nd)
         hist(sym) += 1
         extraBits += nb
@@ -943,7 +946,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
   /** Rewrite every explicit (-2) distance under the chosen parameters
     * and return the distance histogram. */
   private def finalizeDistances(cmdBuf: Array[Int], nCmds: Int,
-      CmdStride: Int, npostfix: Int, ndirect: Int): Array[Long] = {
+      npostfix: Int, ndirect: Int): Array[Long] = {
     val distFreq2 = new Array[Long](numDistanceCodes(npostfix, ndirect))
     var c0 = 0
     while (c0 < nCmds) {
@@ -1000,28 +1003,53 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     histTail = winSize
   }
 
-  private def emitLzBlock(data: Array[Byte], off: Int, len: Int,
-      sink: ByteArrayOutputStream): Unit = {
-    require(len >= 1 && len <= (1 << 24))
-    if (!headerWritten) writeStreamHeader()
-    // ---- append the block to the sliding history ----
-    ensureHistRoom(len)
-    val b0 = histTail // block start in history coordinates
-    System.arraycopy(data, off, hist, b0, len)
-    histTail += len
-    val end = histTail
-    // ---- parse into commands (hash-chain match search) ----
-    val MinMatch = 4
-    val MaxCopy = 16383
-    // commands land in a flat int array (stride CmdStride), histograms
-    // and ring/distance coding resolved inline — one pass, no per-command
-    // allocation: [litStart, litLen, copyLen, icode, ccode, cmdSym, dc, db<<24|dv]
+  // -------------------------------------------------------------------
+  // One entropy-coded meta-block, in three phases: parse the block into
+  // commands (greedyParse below q11, zopfliParse from q11), plan its
+  // entropy coding (planEntropy: distance parameters, block splits,
+  // context maps), then write header, prefix codes and body
+  // (writeLzMetaBlock).
+  // -------------------------------------------------------------------
+  private final val MinMatch = 4
+  private final val MaxCopy = 16383
+  /** Ints per command in [[LzBlock.cmdBuf]]. */
+  private final val CmdStride = 8
+
+  /** State of one meta-block, allocated per block. The parse appends
+    * commands to a flat int array (stride [[CmdStride]], no per-command
+    * allocation: [litStart, litLen, copyLen, icode, ccode, cmdSym, dc,
+    * db<<24|dv]) and counts the literal and command histograms; the
+    * entropy plan fills the fields below them. */
+  private final class LzBlock(val b0: Int, val end: Int) {
     val litFreq = new Array[Long](LiteralAlphabetSize)
     val cmdFreq = new Array[Long](CommandAlphabetSize)
-    val distFreq = new Array[Long](numDistanceCodes(0, 0))
     var cmdBuf = new Array[Int](8 * 1024)
     var nCmds = 0
-    val CmdStride = 8
+    /** Greedy parse's last distance (mirrors the ring's slot 0 well
+      * enough to steer the search): a match at this distance encodes as
+      * the implicit zone / dcode 0 — zero distance bits — and, crucially,
+      * one long-match discovery locks the parser onto a long repeat's
+      * period. */
+    var lastDist: Int = ringLast(0)
+    /** Highest position already in the hash chains. */
+    var maxInserted: Int = b0 - 1
+    /** Last position whose full hash window fits inside this block. */
+    val lastHashPos: Int = end - hashSpan
+
+    // entropy plan: §4 distance parameters and the distance histogram
+    // under them; §6 splits and §7.3 context maps with their tree
+    // histograms, null for a single block type / a single tree
+    var npostfix = 0
+    var ndirect = 0
+    var distFreq: Array[Long] = null
+    var litSplit: BlockSplit = null
+    var litMap: Array[Int] = null
+    var litTrees: Array[Array[Long]] = null
+    var cmdSplit: BlockSplit = null
+    var distSplit: BlockSplit = null
+    var distMap: Array[Int] = null
+    var distTrees: Array[Array[Long]] = null
+
     def addCmd(cLitStart: Int, cLitLen: Int, cCopyLen: Int, cDist: Int): Unit = {
       val icode = insertCodeFor(cLitLen)
       val ccode = if (cCopyLen > 0) copyCodeFor(cCopyLen) else 0
@@ -1060,467 +1088,506 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
       cmdBuf(o + 6) = dc; cmdBuf(o + 7) = raw
       nCmds += 1
     }
-    var pos = b0
-    var litStart = b0
-    // parse-time last distance (mirrors the ring's slot 0 well enough to
-    // steer the search): a match at this distance encodes as the implicit
-    // zone / dcode 0 — zero distance bits — and, crucially, one long-match
-    // discovery locks the parser onto a long repeat's period.
-    var lastDist = ringLast(0)
-    var maxInserted = b0 - 1 // highest position already in the hash chains
-    // last position whose full hash window fits inside this block
-    val lastHashPos = end - hashSpan
-    // search at p after inserting it: returns (len << 32) | matchStart,
-    // or 0 when no match of MinMatch+ exists.
-    def searchAndInsert(p: Int): Long = {
-      val h = hashAt(p)
-      var cand = hashTable(h)
-      if (p > maxInserted) { chain(p) = p - cand; hashTable(h) = p; maxInserted = p }
+  }
+
+  private def emitCompressedBlock(data: Array[Byte], off: Int, len: Int,
+      sink: ByteArrayOutputStream): Unit = {
+    ensureHistRoom(len)
+    val b0 = histTail // block start in history coordinates
+    System.arraycopy(data, off, hist, b0, len)
+    histTail += len
+    val blk = new LzBlock(b0, histTail)
+    if (quality >= 11) zopfliParse(blk) else greedyParse(blk)
+    planEntropy(blk)
+    writeLzMetaBlock(blk)
+    bits.drainTo(sink)
+  }
+
+  // ---- greedy parse (q1-q10): hash-chain match search ----
+
+  /** Search at p after inserting it: returns (len << 32) | matchStart,
+    * or 0 when no match of MinMatch+ exists. */
+  private def searchAndInsert(blk: LzBlock, p: Int): Long = {
+    val h = hashAt(p)
+    var cand = hashTable(h)
+    if (p > blk.maxInserted) { chain(p) = p - cand; hashTable(h) = p; blk.maxInserted = p }
+    val maxLen = math.min(MaxCopy, blk.end - p)
+    val lastDist = blk.lastDist
+    // rep-match: try the last distance first (O(1), no chain walk)
+    var repLen = 0
+    if (lastDist > 0 && p - lastDist >= 0)
+      repLen = matchLen(p - lastDist, p, maxLen)
+    // a nice-length rep match costs zero distance bits — no chain
+    // candidate can beat it by enough to pay for the walk, so skip it
+    // (this is where long-repeat corpora spend their time otherwise)
+    if (repLen >= niceLen)
+      return (repLen.toLong << 32) | (p - lastDist)
+    var bestLen = 0
+    var bestPos = -1
+    var depth = chainDepth
+    while (cand >= 0 && depth > 0 && p - cand <= maxBackward &&
+        bestLen < niceLen) {
+      // quick reject: match must beat bestLen, so check that byte first
+      if (bestLen < maxLen && cand != p &&
+          hist(cand + bestLen) == hist(p + bestLen)) {
+        val mlen = matchLen(cand, p, maxLen)
+        if (mlen > bestLen) {
+          bestLen = mlen; bestPos = cand
+          // zlib's good_match: with a decent match in hand, the rest
+          // of the walk rarely pays — spend the remaining probes faster
+          if (mlen >= 32) depth = math.min(depth, 4)
+        }
+      }
+      cand -= chain(cand)
+      depth -= 1
+    }
+    // prefer the rep match unless the chain match is clearly longer
+    // (the rep distance costs no distance bits)
+    if (repLen >= MinMatch && repLen + 8 >= bestLen) {
+      bestLen = repLen; bestPos = p - lastDist
+    }
+    if (bestLen >= MinMatch) (bestLen.toLong << 32) | bestPos else 0L
+  }
+
+  /** Hash the positions inside a `len`-byte match at `pos`: a strided
+    * insert keeps the chains useful (the rep-match path finds
+    * continuations anyway) at a fraction of the hashing cost; very long
+    * matches stride harder. */
+  private def insertMatch(blk: LzBlock, pos: Int, len: Int): Unit = {
+    val stride = if (len > 2048) 16 else if (len > 256) 4 else 1
+    val stop = math.min(pos + len, blk.lastHashPos + 1)
+    var i = blk.maxInserted + 1
+    while (i < stop) { insertHash(i); i += stride }
+    if (stop - 1 > blk.maxInserted) blk.maxInserted = stop - 1
+  }
+
+  // note: one-step lazy matching was tried here and measurably hurt —
+  // the rep-match preference already captures the long-repeat economics
+  // and deferring a match breaks the last-distance chain.
+  // On incompressible stretches the parse steps further between match
+  // attempts the longer it goes without finding one (brotli/zlib's skip
+  // heuristic): cost is a missed short match at a skipped position,
+  // bounded by the slow ramp; gain is O(1/step) work on random data.
+  private def greedyParse(blk: LzBlock): Unit = {
+    var pos = blk.b0
+    var litStart = blk.b0
+    var misses = 0
+    while (pos <= blk.lastHashPos) {
+      val m = searchAndInsert(blk, pos)
+      val bestLen = (m >>> 32).toInt
+      if (bestLen >= MinMatch) {
+        misses = 0
+        val bestPos = (m & 0xffffffffL).toInt
+        blk.addCmd(litStart, pos - litStart, bestLen, pos - bestPos)
+        blk.lastDist = pos - bestPos
+        if (insertAllPositions) insertMatch(blk, pos, bestLen)
+        pos += bestLen
+        litStart = pos
+      } else {
+        misses += 1
+        pos += 1 + (misses >> skipShift)
+      }
+    }
+    if (blk.end - litStart > 0 || blk.nCmds == 0)
+      blk.addCmd(litStart, blk.end - litStart, 0, 0) // trailing literals
+  }
+
+  // ----------------------------------------------------------------
+  // ZOPFLI-STYLE PARSE (quality >= 11): r8 bit accounting showed
+  // distance EXTRA bits are ~60% of the q11 stream on text — the
+  // greedy longest-match parse pays a fresh ~20-bit explicit distance
+  // per command where a slightly different match (a same-distance
+  // rep, or a copy cut at a code boundary to land on one) costs ~1
+  // bit. A forward shortest-path DP over the block picks the cheapest
+  // command sequence under a histogram cost model: pass 1 runs on
+  // static costs (and populates the suffix tree), its plan's
+  // histograms price pass 2, and the final plan is rebuilt through
+  // addCmd so emission stays bit-exact (DP costs are estimates;
+  // addCmd re-derives implicit/ring/short codes from the true ring).
+  // Rep economics thread the ARRIVAL distance through the DP
+  // (dist == arrival distance ⇒ near-free) — the one-deep
+  // approximation of libbrotli's distance-cache-aware ZopfliNode
+  // search (zopfli.c's BrotliZopfliComputeShortestPath shape).
+  // ----------------------------------------------------------------
+
+  /** The zopfli DP's per-symbol prices in bits, allocated per parse. */
+  private final class ZopfliCosts {
+    val lit = new Array[Double](256)
+    val cmd = new Array[Double](CommandAlphabetSize)
+    val dist = new Array[Double](numDistanceCodes(0, 0))
+  }
+
+  /** Literals are UNDERPRICED by the per-byte Huffman cost: each literal
+    * also lengthens its command's insert run and spreads the literal
+    * histogram. Insert-run pricing prices the icode/extra-bits half of
+    * that coupling exactly, so the residual bias is small (swept:
+    * optimum 1.5, flat 1.3-1.6 within 0.02%). It steers the DP toward
+    * the copy-richer parse shape native's q11 streams exhibit. */
+  private final val LitBias = 1.5
+
+  private def zopfliParse(blk: LzBlock): Unit = {
+    val n = blk.end - blk.b0
+    val costs = new ZopfliCosts
+    staticCosts(blk, costs)
+    val ringSnap = distRing.clone()
+    val ringIdxSnap = distRingIdx
+    // clear the dictionary cache (pass 1 skips tail positions whose
+    // maxLen < MinMatch, which would otherwise read a stale entry)
+    java.util.Arrays.fill(zDict1, 0, n + 1, 0)
+    java.util.Arrays.fill(zDict2, 0, n + 1, 0)
+    // the insert pass, then the refine passes: re-sweeps from the
+    // candidate cache (cheap — no tree descents) under costs priced from
+    // the current plan's actual histograms. Command positions drift
+    // between iterations, so refinement runs thrice.
+    var it = 0
+    while (it <= ZopfliIters) {
+      if (it > 0) costsFromFreqs(blk, costs)
+      sweep(blk, costs, insertPass = it == 0)
+      // replay the plan from an empty block and the block-start ring
+      java.util.Arrays.fill(blk.litFreq, 0L)
+      java.util.Arrays.fill(blk.cmdFreq, 0L)
+      blk.nCmds = 0
+      System.arraycopy(ringSnap, 0, distRing, 0, 4)
+      distRingIdx = ringIdxSnap
+      replay(blk, buildPlan(n))
+      it += 1
+    }
+  }
+
+  /** Pass-1 static model: block-byte entropy for literals, implicit-zone
+    * commands cheaper than explicit, flat distances. */
+  private def staticCosts(blk: LzBlock, costs: ZopfliCosts): Unit = {
+    val bf = new Array[Long](256)
+    var p = blk.b0
+    while (p < blk.end) { bf(hist(p) & 0xff) += 1; p += 1 }
+    val bl = Huffman.buildLengths(bf, 15)
+    var i = 0
+    while (i < 256) {
+      costs.lit(i) = (if (bl(i) > 0) bl(i) else 17.0) * 1.3; i += 1
+    }
+    i = 0
+    while (i < costs.cmd.length) { costs.cmd(i) = if (i < 128) 7.0 else 10.0; i += 1 }
+    i = 0
+    while (i < costs.dist.length) { costs.dist(i) = 7.0; i += 1 }
+  }
+
+  /** Code lengths of `freqs` as prices, 17 bits for absent symbols. */
+  private def fillCosts(freqs: Array[Long], out: Array[Double]): Unit = {
+    val ls = Huffman.buildLengths(freqs, 15)
+    var i = 0
+    while (i < out.length) { out(i) = if (ls(i) > 0) ls(i) else 17.0; i += 1 }
+  }
+
+  /** Prices from the histograms of the plan just replayed. */
+  private def costsFromFreqs(blk: LzBlock, costs: ZopfliCosts): Unit = {
+    fillCosts(blk.litFreq, costs.lit); fillCosts(blk.cmdFreq, costs.cmd)
+    var i = 0
+    while (i < costs.lit.length) { costs.lit(i) *= LitBias; i += 1 }
+    // distance syms resolve per block post-parse (NPOSTFIX/NDIRECT
+    // selection), so price them here from the replayed commands
+    // under the (0,0) cost model the DP edges use
+    val df = new Array[Long](costs.dist.length)
+    var c2 = 0
+    while (c2 < blk.nCmds) {
+      val o = c2 * CmdStride
+      val dc = blk.cmdBuf(o + 6)
+      if (dc >= 0) df(dc) += 1
+      else if (dc == -2) df(distSymAndBits(blk.cmdBuf(o + 7)) & 0xffff) += 1
+      c2 += 1
+    }
+    fillCosts(df, costs.dist)
+  }
+
+  /** Closed-form §4 distance code (NPOSTFIX=0, NDIRECT=0):
+    * (symbol | extraBits << 16) for an explicit distance. */
+  private def distSymAndBits(dist: Int): Int = {
+    val x = dist + 3
+    val nb = 30 - Integer.numberOfLeadingZeros(x)
+    (16 + ((nb - 1) << 1) + ((x >>> nb) & 1)) | (nb << 16)
+  }
+
+  private def relaxAt(costs: ZopfliCosts, i: Int, len: Int, dist: Int,
+      rep: Boolean): Unit = {
+    val j = i + len
+    val ccode = copyCodeFor(len)
+    // CmdOverheadBits counters fragmentation: even with insert-run
+    // pricing (the true (icode, ccode) cell below) the histogram
+    // cost model sees marginal command symbols as near-free once
+    // frequent, so without a fixed per-command term the DP splits
+    // one long copy into several rep copies that each really cost
+    // histogram spread and later-pass price drift
+    var c = zCost(i) + CopyExtra(ccode) + CmdOverheadBits
+    // price the command by its true (icode, ccode) cell + insert
+    // extra bits, from the best path's literal run at i
+    val ic = insertCodeFor(zInsRun(i))
+    if (ic > 0) c += InsertExtra(ic)
+    if (rep) {
+      // emission lands in the implicit zone (ccode ≤ 15) or pays an
+      // explicit command + ring dcode 0 — both distance-bit-free
+      if (ccode <= 15 && ic <= 7)
+        c += costs.cmd(64 * (if (ccode < 8) 0 else 1) +
+          ((ic & 7) << 3) + (ccode & 7))
+      else c += costs.cmd(packCommandExplicit(ic, ccode)) + costs.dist(0)
+    } else {
+      val sb = distSymAndBits(dist)
+      c += costs.cmd(packCommandExplicit(ic, ccode)) +
+        costs.dist(sb & 0xffff) + (sb >>> 16)
+    }
+    if (c < zCost(j)) {
+      zCost(j) = c; zFromLen(j) = len; zFromCLen(j) = len
+      zFromDist(j) = dist; zArrDist(j) = dist
+      zInsRun(j) = 0
+    }
+  }
+
+  /** Relax every copy-code boundary ≤ len (cost is flat within a code,
+    * so only the longest length per code matters); bounded to the top 6
+    * codes. Rep edges go down to 2-byte copies (spec-legal, and in the
+    * implicit zone a len-2 rep costs one command symbol — cheaper than
+    * two literals — letting paths bridge small gaps without breaking the
+    * distance chain); explicit edges stop at MinMatch, where a fresh
+    * distance stops paying. */
+  private def relaxBoundaries(costs: ZopfliCosts, i: Int, len: Int,
+      dist: Int, rep: Boolean): Unit = {
+    val minLen = if (rep) 2 else MinMatch
+    val cTop = copyCodeFor(len)
+    val span = if (rep) 5 else ZopfliCutSpan
+    val cMin = math.max(copyCodeFor(minLen), cTop - span)
+    var c = cTop
+    while (c >= cMin) {
+      val l = if (c == cTop) len else math.min(len, CopyBase(c + 1) - 1)
+      if (l >= minLen) relaxAt(costs, i, l, dist, rep)
+      c -= 1
+    }
+  }
+
+  /** §8 dictionary edge: the command's copy length selects the
+    * WORD-length list (words cannot be cut at code boundaries) and the
+    * output advances by the TRANSFORMED length; distance built per the
+    * decoder's address formula at this position. The ring is untouched
+    * by dictionary references, so the arrival distance carries through
+    * from i. */
+  private def relaxDictT(costs: ZopfliCosts, b0: Int, i: Int, wordLen: Int,
+      idx: Int, tid: Int, outLen: Int): Unit = {
+    val dist = (dictBoundAt(b0 + i) + 1 +
+      ((tid.toLong << SpecData.Dictionary.sizeBits(wordLen)) | idx)).toInt
+    val j = i + outLen
+    val ccode = copyCodeFor(wordLen)
+    val sb = distSymAndBits(dist)
+    val ic = insertCodeFor(zInsRun(i))
+    val c = zCost(i) + CopyExtra(ccode) + CmdOverheadBits +
+      (if (ic > 0) InsertExtra(ic) else 0.0) +
+      costs.cmd(packCommandExplicit(ic, ccode)) +
+      costs.dist(sb & 0xffff) + (sb >>> 16)
+    if (c < zCost(j)) {
+      zCost(j) = c; zFromLen(j) = outLen; zFromCLen(j) = wordLen
+      zFromDist(j) = dist
+      zArrDist(j) = zArrDist(i)
+      zInsRun(j) = 0
+    }
+  }
+
+  /** Relax a cached identity word plus every affix transform whose
+    * prefix precedes and suffix follows the word in the input
+    * (' w ', 'w, ', ' the w of ', …) — each extends coverage at the
+    * cost of a couple of address bits. Prefix edges depart from
+    * i - |prefix|, whose cost is already final in a forward sweep. */
+  private def relaxDict(blk: LzBlock, costs: ZopfliCosts, i: Int,
+      packed: Int): Unit = {
+    val ferment = (packed & 0x40000000) != 0
+    val wl = (packed >>> 16) & 0x3fff
+    val idx = packed & 0xffff
+    if (!ferment) relaxDictT(costs, blk.b0, i, wl, idx, DictIndex.identityId, wl)
+    val p = blk.b0 + i
+    val n = blk.end - blk.b0
+    val afx =
+      if (ferment) DictIndex.fermentTransforms
+      else DictIndex.affixTransforms
+    var t = 0
+    while (t < afx.length) {
+      val pre = afx(t)._2
+      val suf = afx(t)._3
+      val pl = pre.length
+      val ol = pl + wl + suf.length
+      if (i - pl >= 0 && i + wl + suf.length <= n) {
+        var k = 0
+        while (k < pl && hist(p - pl + k) == pre(k)) k += 1
+        if (k == pl) {
+          k = 0
+          while (k < suf.length && hist(p + wl + k) == suf(k)) k += 1
+          if (k == suf.length)
+            relaxDictT(costs, blk.b0, i - pl, wl, idx, afx(t)._1, ol)
+        }
+      }
+      t += 1
+    }
+  }
+
+  /** One forward DP sweep over the block. The insert pass also descends
+    * the suffix tree and probes the static dictionary, caching what it
+    * finds per position; refine passes relax from those caches. */
+  private def sweep(blk: LzBlock, costs: ZopfliCosts, insertPass: Boolean): Unit = {
+    val b0 = blk.b0
+    val end = blk.end
+    java.util.Arrays.fill(zCost, 0, end - b0 + 1, Double.MaxValue)
+    zCost(0) = 0.0
+    zArrDist(0) = ringLast(0)
+    zInsRun(0) = 0
+    var p = b0
+    var lastRepD0 = 0
+    var lastRepLen = 0
+    while (p < end) {
+      val i = p - b0
+      // literal edge (keeps every node reachable by induction)
+      val lc = zCost(i) + costs.lit(hist(p) & 0xff)
+      if (lc < zCost(i + 1)) {
+        zCost(i + 1) = lc; zFromLen(i + 1) = 0; zFromCLen(i + 1) = 0
+        zFromDist(i + 1) = 0
+        zArrDist(i + 1) = zArrDist(i)
+        zInsRun(i + 1) = zInsRun(i) + 1
+      }
       val maxLen = math.min(MaxCopy, end - p)
-      // rep-match: try the last distance first (O(1), no chain walk)
-      var repLen = 0
-      if (lastDist > 0 && p - lastDist >= 0)
-        repLen = matchLen(p - lastDist, p, maxLen)
-      // a nice-length rep match costs zero distance bits — no chain
-      // candidate can beat it by enough to pay for the walk, so skip it
-      // (this is where long-repeat corpora spend their time otherwise)
-      if (repLen >= niceLen)
-        return (repLen.toLong << 32) | (p - lastDist)
-      var bestLen = 0
-      var bestPos = -1
-      var depth = chainDepth
-      while (cand >= 0 && depth > 0 && p - cand <= maxBackward &&
-          bestLen < niceLen) {
-        // quick reject: match must beat bestLen, so check that byte first
-        if (bestLen < maxLen && cand != p &&
-            hist(cand + bestLen) == hist(p + bestLen)) {
-          val mlen = matchLen(cand, p, maxLen)
-          if (mlen > bestLen) {
-            bestLen = mlen; bestPos = cand
-            // zlib's good_match: with a decent match in hand, the rest
-            // of the walk rarely pays — spend the remaining probes faster
-            if (mlen >= 32) depth = math.min(depth, 4)
+      if (maxLen >= MinMatch) {
+        var walkBest = 0 // longest window candidate found at p
+        val d0 = zArrDist(i)
+        var repLen = 0
+        if (d0 > 0 && d0 <= maxBackward && p - d0 >= 0) {
+          // incremental: one step later at the same arrival
+          // distance, the first lastRepLen-1 bytes are matching by
+          // construction — extend from there instead of rescanning
+          // (a full rescan at every interior position of a long or
+          // MaxCopy-clipped repeat was O(L²) per repeat region)
+          repLen =
+            if (d0 == lastRepD0 && lastRepLen > 0) {
+              val base = math.min(lastRepLen - 1, maxLen)
+              base + matchLen(p - d0 + base, p + base, maxLen - base)
+            } else matchLen(p - d0, p, maxLen)
+          lastRepD0 = d0; lastRepLen = repLen
+          if (repLen >= 2) relaxBoundaries(costs, i, repLen, d0, rep = true)
+        } else { lastRepD0 = 0; lastRepLen = 0 }
+        if (p <= blk.lastHashPos) {
+          val ci4 = i * ZCandSlots
+          if (insertPass) {
+            // one BT descent: inserts p into the suffix tree and
+            // fills the candidate cache (descents inside long
+            // repeats cost ~1 node — the agreement horizon
+            // terminates them immediately; seeding the recorder
+            // with repLen was measured ratio-neutral and slower)
+            val r = btStoreAndFind(p, maxLen, ci4)
+            val nc = r >>> 16
+            walkBest = r & 0xffff
+            var z = nc
+            while (z < ZCandSlots) { zCandL(ci4 + z) = 0; z += 1 }
+          }
+          // relax from the cached candidates (identical in both passes);
+          // explicit candidates relax at full length except in q12's
+          // refine sweeps (the ZopfliCutExplicit dial above); rep cuts
+          // stay distance-free and always relax
+          var k = 0
+          while (k < ZCandSlots) {
+            val l = zCandL(ci4 + k)
+            if (l > 0) {
+              val d = zCandD(ci4 + k)
+              if (ZopfliCutExplicit == 1 && !insertPass)
+                relaxBoundaries(costs, i, l, d, rep = false)
+              else relaxAt(costs, i, l, d, rep = false)
+            }
+            k += 1
           }
         }
-        cand -= chain(cand)
-        depth -= 1
+        // §8 static-dictionary probes: one rolling FNV over the next
+        // ≤24 bytes, a table probe per length, cache the two longest
+        // identity-transform hits. Same skips as the chain walks
+        // (inside a long repeat nothing ≤24 bytes can win).
+        if (insertPass) {
+          zDict1(i) = 0; zDict2(i) = 0
+          // probe only where the window matcher came up short: a
+          // window copy ≥16 at LZ distance always beats a ≤24-byte
+          // word at a ~4M distance (measured: probing everywhere
+          // cost +12% q11 time for no ratio change)
+          if (walkBest < 16 && repLen < 16) probeDictionary(p, i, maxLen)
+        }
+        if (zDict1(i) != 0) {
+          relaxDict(blk, costs, i, zDict1(i))
+          if (zDict2(i) != 0) relaxDict(blk, costs, i, zDict2(i))
+        }
       }
-      // prefer the rep match unless the chain match is clearly longer
-      // (the rep distance costs no distance bits)
-      if (repLen >= MinMatch && repLen + 8 >= bestLen) {
-        bestLen = repLen; bestPos = p - lastDist
-      }
-      if (bestLen >= MinMatch) (bestLen.toLong << 32) | bestPos else 0L
+      p += 1
     }
-    // note: one-step lazy matching was tried here and measurably hurt —
-    // the rep-match preference already captures the long-repeat economics
-    // and deferring a match breaks the last-distance chain.
-    // on incompressible stretches, step further between match attempts
-    // the longer we go without finding one (brotli/zlib's skip
-    // heuristic): cost is a missed short match at a skipped position,
-    // bounded by the slow ramp; gain is O(1/step) work on random data
-    // ----------------------------------------------------------------
-    // ZOPFLI-STYLE PARSE (quality >= 10): r8 bit accounting showed
-    // distance EXTRA bits are ~60% of the q11 stream on text — the
-    // greedy longest-match parse pays a fresh ~20-bit explicit distance
-    // per command where a slightly different match (a same-distance
-    // rep, or a copy cut at a code boundary to land on one) costs ~1
-    // bit. A forward shortest-path DP over the block picks the cheapest
-    // command sequence under a histogram cost model: pass 1 runs on
-    // static costs (and populates the hash chains), its plan's
-    // histograms price pass 2, and the final plan is rebuilt through
-    // addCmd so emission stays bit-exact (DP costs are estimates;
-    // addCmd re-derives implicit/ring/short codes from the true ring).
-    // Rep economics thread the ARRIVAL distance through the DP
-    // (dist == arrival distance ⇒ near-free) — the one-deep
-    // approximation of libbrotli's distance-cache-aware ZopfliNode
-    // search (zopfli.c's BrotliZopfliComputeShortestPath shape).
-    // ----------------------------------------------------------------
-    def zopfliParse(): Unit = {
-      val n = end - b0
-      val litCostT = new Array[Double](256)
-      val cmdCostT = new Array[Double](CommandAlphabetSize)
-      val distCostT = new Array[Double](numDistanceCodes(0, 0))
-      // pass-1 static model: block-byte entropy for literals,
-      // implicit-zone commands cheaper than explicit, flat distances
-      locally {
-        val bf = new Array[Long](256)
-        var p = b0
-        while (p < end) { bf(hist(p) & 0xff) += 1; p += 1 }
-        val bl = Huffman.buildLengths(bf, 15)
-        var i = 0
-        while (i < 256) {
-          litCostT(i) = (if (bl(i) > 0) bl(i) else 17.0) * 1.3; i += 1
+  }
+
+  /** Cache in zDict1/zDict2(i) the two longest §8 words starting at `p`
+    * (block offset `i`), packed (len << 16 | idx), plus bit 30 for a
+    * case-folded (ferment-transform) hit. */
+  private def probeDictionary(p: Int, i: Int, maxLen: Int): Unit = {
+    val lim = math.min(DictIndex.MaxLen, maxLen)
+    val b0c = hist(p) & 0xff
+    // capitalized first byte: probe the case-folded form too
+    // (ferment-first transforms — "The" reaches "the")
+    val folded = b0c >= 'A' && b0c <= 'Z'
+    var h = 0xcbf29ce484222325L
+    var h2 = if (folded)
+      (0xcbf29ce484222325L ^ (b0c | 32)) * 0x100000001b3L else 0L
+    var l = 0
+    while (l < lim) {
+      val b = hist(p + l) & 0xff
+      h = (h ^ b) * 0x100000001b3L
+      if (folded && l > 0) h2 = (h2 ^ b) * 0x100000001b3L
+      l += 1
+      if (l >= DictIndex.MinLen) {
+        val idx = DictIndex.lookup(l, h, hist, p)
+        if (idx >= 0) {
+          zDict2(i) = zDict1(i); zDict1(i) = (l << 16) | idx
         }
-        i = 0
-        while (i < cmdCostT.length) { cmdCostT(i) = if (i < 128) 7.0 else 10.0; i += 1 }
-        i = 0
-        while (i < distCostT.length) { distCostT(i) = 7.0; i += 1 }
-      }
-      // literals are UNDERPRICED by the per-byte Huffman cost: each
-      // literal also lengthens its command's insert run and spreads the
-      // literal histogram. Insert-run pricing prices the icode/extra-bits
-      // half of that coupling exactly, so the residual bias is small
-      // (swept: optimum 1.5, flat 1.3-1.6 within 0.02%). It steers the
-      // DP toward the copy-richer parse shape native's q11 streams
-      // exhibit.
-      val litBias = 1.5
-      def costsFromFreqs(): Unit = {
-        def fill(freqs: Array[Long], out: Array[Double]): Unit = {
-          val ls = Huffman.buildLengths(freqs, 15)
-          var i = 0
-          while (i < out.length) { out(i) = if (ls(i) > 0) ls(i) else 17.0; i += 1 }
-        }
-        fill(litFreq, litCostT); fill(cmdFreq, cmdCostT)
-        var i = 0
-        while (i < litCostT.length) { litCostT(i) *= litBias; i += 1 }
-        // distance syms resolve per block post-parse (NPOSTFIX/NDIRECT
-        // selection), so price them here from the replayed commands
-        // under the (0,0) cost model the DP edges use
-        val df = new Array[Long](distCostT.length)
-        var c2 = 0
-        while (c2 < nCmds) {
-          val o = c2 * CmdStride
-          val dc = cmdBuf(o + 6)
-          if (dc >= 0) df(dc) += 1
-          else if (dc == -2) df(distSymAndBits(cmdBuf(o + 7)) & 0xffff) += 1
-          c2 += 1
-        }
-        fill(df, distCostT)
-      }
-      // closed-form §4 distance code (NPOSTFIX=0, NDIRECT=0):
-      // (symbol | extraBits << 16) for an explicit distance
-      def distSymAndBits(dist: Int): Int = {
-        val x = dist + 3
-        val nb = 30 - Integer.numberOfLeadingZeros(x)
-        (16 + ((nb - 1) << 1) + ((x >>> nb) & 1)) | (nb << 16)
-      }
-      def relaxAt(i: Int, len: Int, dist: Int, rep: Boolean): Unit = {
-        val j = i + len
-        val ccode = copyCodeFor(len)
-        // CmdOverheadBits counters fragmentation: even with insert-run
-        // pricing (the true (icode, ccode) cell below) the histogram
-        // cost model sees marginal command symbols as near-free once
-        // frequent, so without a fixed per-command term the DP splits
-        // one long copy into several rep copies that each really cost
-        // histogram spread and later-pass price drift
-        var c = zCost(i) + CopyExtra(ccode) + CmdOverheadBits
-        // price the command by its true (icode, ccode) cell + insert
-        // extra bits, from the best path's literal run at i
-        val ic = insertCodeFor(zInsRun(i))
-        if (ic > 0) c += InsertExtra(ic)
-        if (rep) {
-          // emission lands in the implicit zone (ccode ≤ 15) or pays an
-          // explicit command + ring dcode 0 — both distance-bit-free
-          if (ccode <= 15 && ic <= 7)
-            c += cmdCostT(64 * (if (ccode < 8) 0 else 1) +
-              ((ic & 7) << 3) + (ccode & 7))
-          else c += cmdCostT(packCommandExplicit(ic, ccode)) + distCostT(0)
-        } else {
-          val sb = distSymAndBits(dist)
-          c += cmdCostT(packCommandExplicit(ic, ccode)) +
-            distCostT(sb & 0xffff) + (sb >>> 16)
-        }
-        if (c < zCost(j)) {
-          zCost(j) = c; zFromLen(j) = len; zFromCLen(j) = len
-          zFromDist(j) = dist; zArrDist(j) = dist
-          zInsRun(j) = 0
-        }
-      }
-      // relax every copy-code boundary ≤ len (cost is flat within a
-      // code, so only the longest length per code matters); bounded to
-      // the top 6 codes. Rep edges go down to 2-byte copies (spec-legal,
-      // and in the implicit zone a len-2 rep costs one command symbol —
-      // cheaper than two literals — letting paths bridge small gaps
-      // without breaking the distance chain); explicit edges stop at
-      // MinMatch, where a fresh distance stops paying.
-      def relaxBoundaries(i: Int, len: Int, dist: Int, rep: Boolean): Unit = {
-        val minLen = if (rep) 2 else MinMatch
-        val cTop = copyCodeFor(len)
-        val span = if (rep) 5 else ZopfliCutSpan
-        val cMin = math.max(copyCodeFor(minLen), cTop - span)
-        var c = cTop
-        while (c >= cMin) {
-          val l = if (c == cTop) len else math.min(len, CopyBase(c + 1) - 1)
-          if (l >= minLen) relaxAt(i, l, dist, rep)
-          c -= 1
-        }
-      }
-      /** §8 dictionary edge: the command's copy length selects the
-        * WORD-length list (words cannot be cut at code boundaries) and
-        * the output advances by the TRANSFORMED length; distance built
-        * per the decoder's address formula at this position. The ring
-        * is untouched by dictionary references, so the arrival distance
-        * carries through from i. */
-      def relaxDictT(i: Int, wordLen: Int, idx: Int, tid: Int,
-          outLen: Int): Unit = {
-        val dist = (dictBoundAt(b0 + i) + 1 +
-          ((tid.toLong << SpecData.Dictionary.sizeBits(wordLen)) | idx)).toInt
-        val j = i + outLen
-        val ccode = copyCodeFor(wordLen)
-        val sb = distSymAndBits(dist)
-        val ic = insertCodeFor(zInsRun(i))
-        val c = zCost(i) + CopyExtra(ccode) + CmdOverheadBits +
-          (if (ic > 0) InsertExtra(ic) else 0.0) +
-          cmdCostT(packCommandExplicit(ic, ccode)) +
-          distCostT(sb & 0xffff) + (sb >>> 16)
-        if (c < zCost(j)) {
-          zCost(j) = c; zFromLen(j) = outLen; zFromCLen(j) = wordLen
-          zFromDist(j) = dist
-          zArrDist(j) = zArrDist(i)
-          zInsRun(j) = 0
-        }
-      }
-      /** Relax a cached identity word plus every affix transform whose
-        * prefix precedes and suffix follows the word in the input
-        * (' w ', 'w, ', ' the w of ', …) — each extends coverage at the
-        * cost of a couple of address bits. Prefix edges depart from
-        * i - |prefix|, whose cost is already final in a forward sweep. */
-      def relaxDict(i: Int, packed: Int): Unit = {
-        val ferment = (packed & 0x40000000) != 0
-        val wl = (packed >>> 16) & 0x3fff
-        val idx = packed & 0xffff
-        if (!ferment) relaxDictT(i, wl, idx, DictIndex.identityId, wl)
-        val p = b0 + i
-        val afx =
-          if (ferment) DictIndex.fermentTransforms
-          else DictIndex.affixTransforms
-        var t = 0
-        while (t < afx.length) {
-          val pre = afx(t)._2
-          val suf = afx(t)._3
-          val pl = pre.length
-          val ol = pl + wl + suf.length
-          if (i - pl >= 0 && i + wl + suf.length <= n) {
-            var k = 0
-            while (k < pl && hist(p - pl + k) == pre(k)) k += 1
-            if (k == pl) {
-              k = 0
-              while (k < suf.length && hist(p + wl + k) == suf(k)) k += 1
-              if (k == suf.length)
-                relaxDictT(i - pl, wl, idx, afx(t)._1, ol)
-            }
-          }
-          t += 1
-        }
-      }
-      def sweep(insertPass: Boolean): Unit = {
-        java.util.Arrays.fill(zCost, 0, n + 1, Double.MaxValue)
-        zCost(0) = 0.0
-        zArrDist(0) = ringLast(0)
-        zInsRun(0) = 0
-        var p = b0
-        var lastRepD0 = 0
-        var lastRepLen = 0
-        while (p < end) {
-          val i = p - b0
-          // literal edge (keeps every node reachable by induction)
-          val lc = zCost(i) + litCostT(hist(p) & 0xff)
-          if (lc < zCost(i + 1)) {
-            zCost(i + 1) = lc; zFromLen(i + 1) = 0; zFromCLen(i + 1) = 0
-            zFromDist(i + 1) = 0
-            zArrDist(i + 1) = zArrDist(i)
-            zInsRun(i + 1) = zInsRun(i) + 1
-          }
-          val maxLen = math.min(MaxCopy, end - p)
-          if (maxLen >= MinMatch) {
-            var walkBest = 0 // longest window candidate found at p
-            val d0 = zArrDist(i)
-            var repLen = 0
-            if (d0 > 0 && d0 <= maxBackward && p - d0 >= 0) {
-              // incremental: one step later at the same arrival
-              // distance, the first lastRepLen-1 bytes are matching by
-              // construction — extend from there instead of rescanning
-              // (a full rescan at every interior position of a long or
-              // MaxCopy-clipped repeat was O(L²) per repeat region)
-              repLen =
-                if (d0 == lastRepD0 && lastRepLen > 0) {
-                  val base = math.min(lastRepLen - 1, maxLen)
-                  base + matchLen(p - d0 + base, p + base, maxLen - base)
-                } else matchLen(p - d0, p, maxLen)
-              lastRepD0 = d0; lastRepLen = repLen
-              if (repLen >= 2) relaxBoundaries(i, repLen, d0, rep = true)
-            } else { lastRepD0 = 0; lastRepLen = 0 }
-            if (p <= lastHashPos) {
-              val ci4 = i * ZCandSlots
-              if (insertPass) {
-                // one BT descent: inserts p into the suffix tree and
-                // fills the candidate cache (descents inside long
-                // repeats cost ~1 node — the agreement horizon
-                // terminates them immediately; seeding the recorder
-                // with repLen was measured ratio-neutral and slower)
-                val r = btStoreAndFind(p, maxLen, ci4)
-                val nc = r >>> 16
-                walkBest = r & 0xffff
-                var z = nc
-                while (z < ZCandSlots) { zCandL(ci4 + z) = 0; z += 1 }
-              }
-              // relax from the cached candidates (identical in both passes)
-              var k = 0
-              var bl = 0
-              var bd = 0
-              while (k < ZCandSlots) {
-                val l = zCandL(ci4 + k)
-                if (l > 0) {
-                  val d = zCandD(ci4 + k)
-                  if (ZopfliCutExplicit == 1 && !insertPass)
-                    relaxBoundaries(i, l, d, rep = false)
-                  else relaxAt(i, l, d, rep = false)
-                  if (l > bl) { bl = l; bd = d }
-                }
-                k += 1
-              }
-              // explicit candidates relax at full length by default:
-              // cutting them at code boundaries buys ~+1% ratio for
-              // ~35% throughput (the ZopfliCutExplicit dial above);
-              // rep cuts stay distance-free and always relax
-            }
-            // §8 static-dictionary probes: one rolling FNV over the next
-            // ≤24 bytes, a table probe per length, cache the two longest
-            // identity-transform hits. Same skips as the chain walks
-            // (inside a long repeat nothing ≤24 bytes can win).
-            if (insertPass) {
-              zDict1(i) = 0; zDict2(i) = 0
-              // probe only where the window matcher came up short: a
-              // window copy ≥16 at LZ distance always beats a ≤24-byte
-              // word at a ~4M distance (measured: probing everywhere
-              // cost +12% q11 time for no ratio change)
-              if (walkBest < 16 && repLen < 16) {
-                val lim = math.min(DictIndex.MaxLen, maxLen)
-                val b0c = hist(p) & 0xff
-                // capitalized first byte: probe the case-folded form too
-                // (ferment-first transforms — "The" reaches "the")
-                val folded = b0c >= 'A' && b0c <= 'Z'
-                var h = 0xcbf29ce484222325L
-                var h2 = if (folded)
-                  (0xcbf29ce484222325L ^ (b0c | 32)) * 0x100000001b3L else 0L
-                var l = 0
-                while (l < lim) {
-                  val b = hist(p + l) & 0xff
-                  h = (h ^ b) * 0x100000001b3L
-                  if (folded && l > 0) h2 = (h2 ^ b) * 0x100000001b3L
-                  l += 1
-                  if (l >= DictIndex.MinLen) {
-                    val idx = DictIndex.lookup(l, h, hist, p)
-                    if (idx >= 0) {
-                      zDict2(i) = zDict1(i); zDict1(i) = (l << 16) | idx
-                    }
-                    if (folded) {
-                      val fi = DictIndex.lookupFolded(l, h2, hist, p)
-                      if (fi >= 0) {
-                        zDict2(i) = zDict1(i)
-                        zDict1(i) = 0x40000000 | (l << 16) | fi
-                      }
-                    }
-                  }
-                }
-              }
-            }
-            if (zDict1(i) != 0) {
-              relaxDict(i, zDict1(i))
-              if (zDict2(i) != 0) relaxDict(i, zDict2(i))
-            }
-          }
-          p += 1
-        }
-      }
-      /** Traceback into flat (litAfter, advance, copyLen, dist) quads,
-        * reverse order; the final quad's litAfter is the block-leading
-        * run. advance == copyLen except for suffix-transformed §8
-        * references. */
-      def buildPlan(): Array[Int] = {
-        val buf = new scala.collection.mutable.ArrayBuffer[Int]()
-        var i = n
-        var lit = 0
-        while (i > 0) {
-          val fl = zFromLen(i)
-          if (fl == 0) { lit += 1; i -= 1 }
-          else {
-            buf += lit; buf += fl; buf += zFromCLen(i); buf += zFromDist(i)
-            i -= fl; lit = 0
+        if (folded) {
+          val fi = DictIndex.lookupFolded(l, h2, hist, p)
+          if (fi >= 0) {
+            zDict2(i) = zDict1(i)
+            zDict1(i) = 0x40000000 | (l << 16) | fi
           }
         }
-        buf += lit; buf += 0; buf += 0; buf += 0
-        buf.toArray
-      }
-      def replay(plan: Array[Int]): Unit = {
-        var ls = b0
-        var pend = plan(plan.length - 4)
-        var k = plan.length - 8
-        while (k >= 0) {
-          val lit = plan(k); val adv = plan(k + 1)
-          val clen = plan(k + 2); val d = plan(k + 3)
-          addCmd(ls, pend, clen, d)
-          ls += pend + adv
-          pend = lit
-          k -= 4
-        }
-        if (pend > 0 || nCmds == 0) addCmd(ls, pend, 0, 0)
-      }
-      val ringSnap = distRing.clone()
-      val ringIdxSnap = distRingIdx
-      def resetParseState(): Unit = {
-        java.util.Arrays.fill(litFreq, 0L)
-        java.util.Arrays.fill(cmdFreq, 0L)
-        java.util.Arrays.fill(distFreq, 0L)
-        nCmds = 0
-        System.arraycopy(ringSnap, 0, distRing, 0, 4)
-        distRingIdx = ringIdxSnap
-      }
-      // clear the dictionary cache (pass 1 skips tail positions whose
-      // maxLen < MinMatch, which would otherwise read a stale entry)
-      java.util.Arrays.fill(zDict1, 0, n + 1, 0)
-      java.util.Arrays.fill(zDict2, 0, n + 1, 0)
-      sweep(insertPass = true)
-      resetParseState()
-      var plan = buildPlan()
-      replay(plan)
-      // refine: re-sweep from the candidate cache (cheap — no tree
-      // descents) under costs priced from the current plan's actual
-      // histograms. Command positions drift between iterations, so q11
-      // runs the loop thrice.
-      var it = 0
-      val iters = if (quality >= 11) ZopfliIters else 1
-      while (it < iters) {
-        costsFromFreqs()
-        sweep(insertPass = false)
-        resetParseState()
-        plan = buildPlan()
-        replay(plan)
-        it += 1
       }
     }
-    if (quality >= 11) zopfliParse()
-    else {
-      var misses = 0
-      while (pos <= lastHashPos) {
-        val m = searchAndInsert(pos)
-        val bestLen = (m >>> 32).toInt
-        if (bestLen >= MinMatch) {
-          misses = 0
-          val bestPos = (m & 0xffffffffL).toInt
-          addCmd(litStart, pos - litStart, bestLen, pos - bestPos)
-          lastDist = pos - bestPos
-          if (insertAllPositions) {
-            // inside long matches a strided insert keeps the chains useful
-            // (the rep-match path finds continuations anyway) at a fraction
-            // of the hashing cost; very long matches stride harder
-            val stride = if (bestLen > 2048) 16 else if (bestLen > 256) 4 else 1
-            val stop = math.min(pos + bestLen, lastHashPos + 1)
-            var i = maxInserted + 1
-            while (i < stop) { insertHash(i); i += stride }
-            if (stop - 1 > maxInserted) maxInserted = stop - 1
-          }
-          pos += bestLen
-          litStart = pos
-        } else {
-          misses += 1
-          pos += 1 + (misses >> skipShift)
-        }
+  }
+
+  /** Traceback of an `n`-byte block into flat (litAfter, advance,
+    * copyLen, dist) quads, reverse order; the final quad's litAfter is
+    * the block-leading run. advance == copyLen except for
+    * suffix-transformed §8 references. */
+  private def buildPlan(n: Int): Array[Int] = {
+    val buf = new scala.collection.mutable.ArrayBuffer[Int]()
+    var i = n
+    var lit = 0
+    while (i > 0) {
+      val fl = zFromLen(i)
+      if (fl == 0) { lit += 1; i -= 1 }
+      else {
+        buf += lit; buf += fl; buf += zFromCLen(i); buf += zFromDist(i)
+        i -= fl; lit = 0
       }
-      if (end - litStart > 0 || nCmds == 0)
-        addCmd(litStart, end - litStart, 0, 0) // trailing literals
     }
+    buf += lit; buf += 0; buf += 0; buf += 0
+    buf.toArray
+  }
+
+  private def replay(blk: LzBlock, plan: Array[Int]): Unit = {
+    var ls = blk.b0
+    var pend = plan(plan.length - 4)
+    var k = plan.length - 8
+    while (k >= 0) {
+      val lit = plan(k); val adv = plan(k + 1)
+      val clen = plan(k + 2); val d = plan(k + 3)
+      blk.addCmd(ls, pend, clen, d)
+      ls += pend + adv
+      pend = lit
+      k -= 4
+    }
+    if (pend > 0 || blk.nCmds == 0) blk.addCmd(ls, pend, 0, 0)
+  }
+
+  // ---- entropy planning ----
+
+  private def planEntropy(blk: LzBlock): Unit = {
     // ---- distance parameterization (§4): choose NPOSTFIX/NDIRECT ----
     // Distance EXTRA bits are raw (never entropy-coded), and at q11
     // they measured ~60% of the stream (r8 bit accounting): NPOSTFIX
@@ -1534,304 +1601,295 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
     // practically never beats (0,0) on those tiers' parses — only the
     // denser q >= 7 parses produce distance mixtures where it pays.
     val packedParams =
-      if (quality >= 7) selectDistanceParams(cmdBuf, nCmds, CmdStride) else 0
-    val npostfix = packedParams >>> 16
-    val ndirect = packedParams & 0xffff
-    val distFreq2 =
-      finalizeDistances(cmdBuf, nCmds, CmdStride, npostfix, ndirect)
-    if (litFreq.forall(_ == 0)) litFreq(0) = 1 // all-copy block: dummy literal tree
-    if (distFreq2.forall(_ == 0)) distFreq2(0) = 1 // literal-only block
-    // ---- literal block split + context split (q >= 10) ----
-    // §6 temporal literal block types (NBLTYPESL) COMPOSE with the UTF-8
-    // context map: the decoder picks the literal tree by
-    // cmap(btypeL * 64 + ctx), so the split multiplies the context rows
-    // and clusterContexts prices the whole (type × context) product.
-    // Contexts histogram by the previous two OUTPUT bytes —
-    // hist(lp-1)/hist(lp-2), exactly the decoder's p1/p2 (hist holds
-    // prior blocks and any preloaded dictionary).
-    var litSplit: (Array[Int], Array[Int], Array[Array[Long]]) = null
-    var cmap: Array[Int] = null
-    var treeHists: Array[Array[Long]] = null
+      if (quality >= 7) selectDistanceParams(blk.cmdBuf, blk.nCmds) else 0
+    blk.npostfix = packedParams >>> 16
+    blk.ndirect = packedParams & 0xffff
+    blk.distFreq =
+      finalizeDistances(blk.cmdBuf, blk.nCmds, blk.npostfix, blk.ndirect)
+    if (blk.litFreq.forall(_ == 0)) blk.litFreq(0) = 1 // all-copy block: dummy literal tree
+    if (blk.distFreq.forall(_ == 0)) blk.distFreq(0) = 1 // literal-only block
     if (contextModeling) {
-      /** Context rows under a given typing: one row per (type, ctx). */
-      def typedCtxRows(split: (Array[Int], Array[Int], Array[Array[Long]]))
-          : Array[Array[Long]] = {
-        val nbl = if (split == null) 1 else split._3.length
-        val rows = Array.fill(nbl * 64)(new Array[Long](256))
-        var runIdx = 0
-        var runLeft = if (split == null) Int.MaxValue else split._2(0)
-        var curTy = if (split == null) 0 else split._1(0)
-        var cc = 0
-        while (cc < nCmds) {
-          val o = cc * CmdStride
-          val ls = cmdBuf(o); val ll = cmdBuf(o + 1)
-          var i = 0
-          while (i < ll) {
-            if (runLeft == 0) {
-              runIdx += 1
-              curTy = split._1(runIdx); runLeft = split._2(runIdx)
-            }
-            val lp = ls + i
-            val pb1 = if (lp >= 1) hist(lp - 1) & 0xff else 0
-            val pb2 = if (lp >= 2) hist(lp - 2) & 0xff else 0
-            rows((curTy << 6) + utf8Ctx(pb1, pb2))(hist(lp) & 0xff) += 1
-            runLeft -= 1
-            i += 1
-          }
-          cc += 1
-        }
-        rows
-      }
-      def treesBits(ths: Array[Array[Long]]): Double =
-        ths.map(entropyBits).sum + ths.length * TreeCostBits
-      // baseline: context clustering with NO temporal split
-      val rows1 = typedCtxRows(null)
-      val cl1 = clusterContexts(rows1, MaxLitTrees, TreeCostBits)
-      val cost1 =
-        if (cl1 == null) treesBits(Array(litFreq)) else treesBits(cl1._2)
-      // candidate: temporal split composed with context clustering.
-      // splitBlocks' own adoption test compares against ONE tree, but
-      // the real alternative here is the context-clustered trees — so
-      // both emissions are priced on the same scale and the split is
-      // kept only when it beats context modeling alone (measured: a
-      // split the chunk model liked lost 32 B once context trees
-      // already separated the same byte classes).
-      val nLits = {
-        var t = 0; var i = 0
-        while (i < nCmds) { t += cmdBuf(i * CmdStride + 1); i += 1 }
-        t
-      }
-      if (nLits > 0) {
-        val litSyms = new Array[Int](nLits)
-        var w = 0
-        var cc0 = 0
-        while (cc0 < nCmds) {
-          val o = cc0 * CmdStride
-          val ls = cmdBuf(o); val ll = cmdBuf(o + 1)
-          var i = 0
-          while (i < ll) { litSyms(w) = hist(ls + i) & 0xff; w += 1; i += 1 }
-          cc0 += 1
-        }
-        val ls = splitBlocks(litSyms, nLits, 256, chunkSize = 256,
-          maxTypes = 8, TreeCostBits)
-        if (ls != null) {
-          val rowsN = typedCtxRows(ls)
-          val cl2 = clusterContexts(rowsN, MaxLitTrees, TreeCostBits)
-          val nBlocks = ls._1.length
-          val switchBits = (nBlocks - 1) * 14.0 + nBlocks * 8.0 + 120.0
-          val cost2 = switchBits +
-            (if (cl2 == null) treesBits(ls._3) else treesBits(cl2._2))
-          // the entropy model underestimates real switch + serialized
-          // tree-description costs (measured: a modeled win emitted
-          // 32 B LARGER) — demand a margin before paying them
-          if (cost2 + 1500.0 < cost1) {
-            litSplit = ls
-            if (cl2 == null) {
-              // one tree per type, contexts collapsed (distSplit's shape)
-              cmap = Array.tabulate(ls._3.length << 6)(i => i >> 6)
-              treeHists = ls._3
-            } else { cmap = cl2._1; treeHists = cl2._2 }
-          }
-        }
-      }
-      if (litSplit == null && cl1 != null) { cmap = cl1._1; treeHists = cl1._2 }
+      planLiterals(blk)
+      planCommandAndDistanceSplits(blk)
+      if (blk.distSplit == null) planDistanceContexts(blk)
     }
-    // ---- block splitting (§6, q >= 10): commands + distances ----
-    // per-position adaptation of the command and distance codes (the
-    // decoder's catI/catD machinery). The distance split supersedes the
-    // copy-length context split below when adopted — type-local trees
-    // capture that correlation and more.
-    val cmdSymsA = new Array[Int](nCmds)
-    locally {
+  }
+
+  /** Context rows under a given literal typing: one row per (type, ctx). */
+  private def typedCtxRows(blk: LzBlock, split: BlockSplit): Array[Array[Long]] = {
+    val nbl = if (split == null) 1 else split.hists.length
+    val rows = Array.fill(nbl * 64)(new Array[Long](256))
+    var runIdx = 0
+    var runLeft = if (split == null) Int.MaxValue else split.lens(0)
+    var curTy = if (split == null) 0 else split.types(0)
+    var cc = 0
+    while (cc < blk.nCmds) {
+      val o = cc * CmdStride
+      val ls = blk.cmdBuf(o); val ll = blk.cmdBuf(o + 1)
       var i = 0
-      while (i < nCmds) { cmdSymsA(i) = cmdBuf(i * CmdStride + 5); i += 1 }
-    }
-    val cmdSplit = if (quality >= 10)
-      splitBlocks(cmdSymsA, nCmds, CommandAlphabetSize, chunkSize = 100,
-        maxTypes = 8, 600.0)
-    else null
-    val distSymsA = new Array[Int](nCmds)
-    var nDistSyms = 0
-    locally {
-      var i = 0
-      while (i < nCmds) {
-        val o = i * CmdStride
-        if (cmdBuf(o + 2) > 0 && cmdBuf(o + 6) >= 0) {
-          distSymsA(nDistSyms) = cmdBuf(o + 6); nDistSyms += 1
+      while (i < ll) {
+        if (runLeft == 0) {
+          runIdx += 1
+          curTy = split.types(runIdx); runLeft = split.lens(runIdx)
         }
+        val lp = ls + i
+        val pb1 = if (lp >= 1) hist(lp - 1) & 0xff else 0
+        val pb2 = if (lp >= 2) hist(lp - 2) & 0xff else 0
+        rows((curTy << 6) + utf8Ctx(pb1, pb2))(hist(lp) & 0xff) += 1
+        runLeft -= 1
         i += 1
       }
+      cc += 1
     }
-    val distSplit = if (quality >= 10)
-      splitBlocks(distSymsA, nDistSyms, distFreq2.length, chunkSize = 100,
-        maxTypes = 8, 250.0)
-    else null
-    // ---- distance context split (q >= 10) ----
-    // distances histogram by the decoder's copy-length context
-    // min(clen-2, 3): short copies skew to ring/near codes, long copies
-    // to far explicit ones, so per-context trees code both tighter
-    var dmap: Array[Int] = null
-    var distTreeHists: Array[Array[Long]] = null
-    if (contextModeling && distSplit == null) {
-      val dctxFreq = Array.fill(4)(new Array[Long](distFreq2.length))
-      var cc = 0
-      while (cc < nCmds) {
-        val o = cc * CmdStride
-        val dc = cmdBuf(o + 6)
-        if (dc >= 0) dctxFreq(math.min(cmdBuf(o + 2) - 2, 3))(dc) += 1
-        cc += 1
+    rows
+  }
+
+  private def treesBits(ths: Array[Array[Long]]): Double =
+    ths.map(entropyBits).sum + ths.length * TreeCostBits
+
+  /** Literal block split + context split (q >= 10). §6 temporal literal
+    * block types (NBLTYPESL) COMPOSE with the UTF-8 context map: the
+    * decoder picks the literal tree by cmap(btypeL * 64 + ctx), so the
+    * split multiplies the context rows and clusterContexts prices the
+    * whole (type × context) product. Contexts histogram by the previous
+    * two OUTPUT bytes — hist(lp-1)/hist(lp-2), exactly the decoder's
+    * p1/p2 (hist holds prior blocks and any preloaded dictionary). */
+  private def planLiterals(blk: LzBlock): Unit = {
+    // baseline: context clustering with NO temporal split
+    val rows1 = typedCtxRows(blk, null)
+    val cl1 = clusterContexts(rows1, MaxLitTrees, TreeCostBits)
+    val cost1 =
+      if (cl1 == null) treesBits(Array(blk.litFreq)) else treesBits(cl1._2)
+    // candidate: temporal split composed with context clustering.
+    // splitBlocks' own adoption test compares against ONE tree, but
+    // the real alternative here is the context-clustered trees — so
+    // both emissions are priced on the same scale and the split is
+    // kept only when it beats context modeling alone (measured: a
+    // split the chunk model liked lost 32 B once context trees
+    // already separated the same byte classes).
+    var nLits = 0
+    var c = 0
+    while (c < blk.nCmds) { nLits += blk.cmdBuf(c * CmdStride + 1); c += 1 }
+    if (nLits > 0) {
+      val litSyms = new Array[Int](nLits)
+      var w = 0
+      c = 0
+      while (c < blk.nCmds) {
+        val o = c * CmdStride
+        val ls = blk.cmdBuf(o); val ll = blk.cmdBuf(o + 1)
+        var i = 0
+        while (i < ll) { litSyms(w) = hist(ls + i) & 0xff; w += 1; i += 1 }
+        c += 1
       }
-      clusterContexts(dctxFreq, 4, DistTreeCostBits) match {
-        case null => ()
-        case (m, th) => dmap = m; distTreeHists = th
-      }
-    }
-    // ---- header ----
-    /** Body-side switch emitter for one split category: writes the
-      * block-switch (direct type symbol + block length) whenever the
-      * current block is exhausted, mirroring the decoder's
-      * switchIfNeeded/len-- contract exactly. */
-    class CatSwitcher(bt: Array[Int], bl: Array[Int],
-        tLens: Array[Int], tCodes: Array[Int],
-        lLens: Array[Int], lCodes: Array[Int]) {
-      private var idx = 0
-      private var remaining = bl(0)
-      /** Current type for the next symbol; emits a switch first if due. */
-      def next(): Int = {
-        if (remaining == 0) {
-          idx += 1
-          val ts = bt(idx) + 2
-          bits.writeCodeBits(tCodes(ts), tLens(ts))
-          val lc = blockLenCode(bl(idx))
-          bits.writeCodeBits(lCodes(lc), lLens(lc))
-          bits.writeBits((bl(idx) - BlockLengthBase(lc)).toLong,
-            BlockLengthExtra(lc))
-          remaining = bl(idx)
+      val ls = splitBlocks(litSyms, nLits, 256, chunkSize = 256,
+        maxTypes = 8, TreeCostBits)
+      if (ls != null) {
+        val rowsN = typedCtxRows(blk, ls)
+        val cl2 = clusterContexts(rowsN, MaxLitTrees, TreeCostBits)
+        val nBlocks = ls.types.length
+        val switchBits = (nBlocks - 1) * 14.0 + nBlocks * 8.0 + 120.0
+        val cost2 = switchBits +
+          (if (cl2 == null) treesBits(ls.hists) else treesBits(cl2._2))
+        // the entropy model underestimates real switch + serialized
+        // tree-description costs (measured: a modeled win emitted
+        // 32 B LARGER) — demand a margin before paying them
+        if (cost2 + 1500.0 < cost1) {
+          blk.litSplit = ls
+          if (cl2 == null) {
+            // one tree per type, contexts collapsed (distSplit's shape)
+            blk.litMap = Array.tabulate(ls.hists.length << 6)(i => i >> 6)
+            blk.litTrees = ls.hists
+          } else { blk.litMap = cl2._1; blk.litTrees = cl2._2 }
         }
-        remaining -= 1
-        bt(idx)
       }
     }
-    /** §9.2 block-category header: NBLTYPES, type tree (direct symbols
-      * only), block-length tree, first block length. Returns the body
-      * switcher, or null for a single-type category. */
-    def writeBlockCategory(
-        split: (Array[Int], Array[Int], Array[Array[Long]])): CatSwitcher =
-      if (split == null) { bits.writeBits(0, 1); null }
-      else {
-        val (bt, bl, th) = split
-        writeVarCount(th.length)
-        val tf = new Array[Long](th.length + 2)
-        var i = 1
-        while (i < bt.length) { tf(bt(i) + 2) += 1; i += 1 }
-        val (tLens, tCodes) = writePrefixCode(tf,
-          32 - Integer.numberOfLeadingZeros(th.length + 2 - 1))
-        val lf = new Array[Long](BlockLengthBase.length)
-        bl.foreach(l => lf(blockLenCode(l)) += 1)
-        val (lLens, lCodes) = writePrefixCode(lf, 5)
-        val c0 = blockLenCode(bl(0))
-        bits.writeCodeBits(lCodes(c0), lLens(c0))
-        bits.writeBits((bl(0) - BlockLengthBase(c0)).toLong,
-          BlockLengthExtra(c0))
-        new CatSwitcher(bt, bl, tLens, tCodes, lLens, lCodes)
+    if (blk.litSplit == null && cl1 != null) {
+      blk.litMap = cl1._1; blk.litTrees = cl1._2
+    }
+  }
+
+  /** Block splitting (§6, q >= 10) of commands and distances:
+    * per-position adaptation of the command and distance codes (the
+    * decoder's catI/catD machinery). The distance split supersedes the
+    * copy-length context split (planDistanceContexts) when adopted —
+    * type-local trees capture that correlation and more. */
+  private def planCommandAndDistanceSplits(blk: LzBlock): Unit = {
+    val cmdSyms = new Array[Int](blk.nCmds)
+    val distSyms = new Array[Int](blk.nCmds)
+    var nDistSyms = 0
+    var i = 0
+    while (i < blk.nCmds) {
+      val o = i * CmdStride
+      cmdSyms(i) = blk.cmdBuf(o + 5)
+      if (blk.cmdBuf(o + 2) > 0 && blk.cmdBuf(o + 6) >= 0) {
+        distSyms(nDistSyms) = blk.cmdBuf(o + 6); nDistSyms += 1
       }
-    bits.writeBits(0, 1) // ISLAST
-    val mlenMinus1 = len - 1
-    val nibbles = if (mlenMinus1 < (1 << 16)) 4
-      else if (mlenMinus1 < (1 << 20)) 5 else 6
-    bits.writeBits(nibbles - 4, 2)
-    bits.writeBits(mlenMinus1.toLong, nibbles * 4)
-    bits.writeBits(0, 1) // ISUNCOMPRESSED
+      i += 1
+    }
+    blk.cmdSplit = splitBlocks(cmdSyms, blk.nCmds, CommandAlphabetSize,
+      chunkSize = 100, maxTypes = 8, 600.0)
+    blk.distSplit = splitBlocks(distSyms, nDistSyms, blk.distFreq.length,
+      chunkSize = 100, maxTypes = 8, 250.0)
+  }
+
+  /** Distance context split (q >= 10): distances histogram by the
+    * decoder's copy-length context min(clen-2, 3): short copies skew to
+    * ring/near codes, long copies to far explicit ones, so per-context
+    * trees code both tighter. */
+  private def planDistanceContexts(blk: LzBlock): Unit = {
+    val dctxFreq = Array.fill(4)(new Array[Long](blk.distFreq.length))
+    var cc = 0
+    while (cc < blk.nCmds) {
+      val o = cc * CmdStride
+      val dc = blk.cmdBuf(o + 6)
+      if (dc >= 0) dctxFreq(math.min(blk.cmdBuf(o + 2) - 2, 3))(dc) += 1
+      cc += 1
+    }
+    val cl = clusterContexts(dctxFreq, 4, DistTreeCostBits)
+    if (cl != null) { blk.distMap = cl._1; blk.distTrees = cl._2 }
+  }
+
+  // ---- meta-block emission ----
+
+  /** Body-side switch emitter for one split category: writes the
+    * block-switch (direct type symbol + block length) whenever the
+    * current block is exhausted, mirroring the decoder's
+    * switchIfNeeded/len-- contract exactly. */
+  private final class CatSwitcher(bt: Array[Int], bl: Array[Int],
+      tLens: Array[Int], tCodes: Array[Int],
+      lLens: Array[Int], lCodes: Array[Int]) {
+    private var idx = 0
+    private var remaining = bl(0)
+    /** Current type for the next symbol; emits a switch first if due. */
+    def next(): Int = {
+      if (remaining == 0) {
+        idx += 1
+        val ts = bt(idx) + 2
+        bits.writeCodeBits(tCodes(ts), tLens(ts))
+        val lc = blockLenCode(bl(idx))
+        bits.writeCodeBits(lCodes(lc), lLens(lc))
+        bits.writeBits((bl(idx) - BlockLengthBase(lc)).toLong,
+          BlockLengthExtra(lc))
+        remaining = bl(idx)
+      }
+      remaining -= 1
+      bt(idx)
+    }
+  }
+
+  /** §9.2 block-category header: NBLTYPES, type tree (direct symbols
+    * only), block-length tree, first block length. Returns the body
+    * switcher, or null for a single-type category. */
+  private def writeBlockCategory(split: BlockSplit): CatSwitcher =
+    if (split == null) { bits.writeBits(0, 1); null }
+    else {
+      val BlockSplit(bt, bl, th) = split
+      writeVarCount(th.length)
+      val tf = new Array[Long](th.length + 2)
+      var i = 1
+      while (i < bt.length) { tf(bt(i) + 2) += 1; i += 1 }
+      val (tLens, tCodes) = writePrefixCode(tf,
+        32 - Integer.numberOfLeadingZeros(th.length + 2 - 1))
+      val lf = new Array[Long](BlockLengthBase.length)
+      bl.foreach(l => lf(blockLenCode(l)) += 1)
+      val (lLens, lCodes) = writePrefixCode(lf, 5)
+      val c0 = blockLenCode(bl(0))
+      bits.writeCodeBits(lCodes(c0), lLens(c0))
+      bits.writeBits((bl(0) - BlockLengthBase(c0)).toLong,
+        BlockLengthExtra(c0))
+      new CatSwitcher(bt, bl, tLens, tCodes, lLens, lCodes)
+    }
+
+  /** Code lengths and bit-reversed codes of a set of trees, so the body
+    * writes each symbol with one writeBits call. */
+  private final class Codes(val lens: Array[Array[Int]], val revs: Array[Array[Int]])
+
+  /** Write one prefix code per histogram, in order. */
+  private def writeCodes(hists: Array[Array[Long]], alphabetBits: Int): Codes = {
+    val lens = new Array[Array[Int]](hists.length)
+    val revs = new Array[Array[Int]](hists.length)
+    var t = 0
+    while (t < hists.length) {
+      val (l, cd) = writePrefixCode(hists(t), alphabetBits)
+      lens(t) = l
+      revs(t) = Array.tabulate(cd.length)(s => Huffman.reverseBits(cd(s), l(s)))
+      t += 1
+    }
+    new Codes(lens, revs)
+  }
+
+  private def writeLzMetaBlock(blk: LzBlock): Unit = {
+    writeMetaBlockHeader(blk.end - blk.b0, uncompressed = false)
     // invariant the literal emission relies on: a literal split always
     // comes with a (possibly synthetic per-type) context map, so the
-    // cmap == null fast path never has to drive the switcher
-    require(litSplit == null || cmap != null)
-    val catL = writeBlockCategory(litSplit)
-    val catI = writeBlockCategory(cmdSplit)
-    val catD = writeBlockCategory(distSplit)
-    bits.writeBits(npostfix, 2) // NPOSTFIX
-    bits.writeBits(ndirect >> npostfix, 4) // NDIRECT (shifted field)
+    // litMap == null fast path never has to drive the switcher
+    require(blk.litSplit == null || blk.litMap != null)
+    val catL = writeBlockCategory(blk.litSplit)
+    val catI = writeBlockCategory(blk.cmdSplit)
+    val catD = writeBlockCategory(blk.distSplit)
+    bits.writeBits(blk.npostfix, 2) // NPOSTFIX
+    bits.writeBits(blk.ndirect >> blk.npostfix, 4) // NDIRECT (shifted field)
     // one 2-bit context mode per literal block type (UTF8 when a
     // context map exists; the per-type synthetic cmap ignores ctx, so
     // the mode value is immaterial there — UTF8 keeps one code path)
-    locally {
-      val nbl = if (litSplit == null) 1 else litSplit._3.length
-      var mi = 0
-      while (mi < nbl) {
-        bits.writeBits(if (cmap != null) 2L else 0L, 2)
-        mi += 1
-      }
+    val nbl = if (blk.litSplit == null) 1 else blk.litSplit.hists.length
+    var mi = 0
+    while (mi < nbl) {
+      bits.writeBits(if (blk.litMap != null) 2L else 0L, 2)
+      mi += 1
     }
-    if (cmap == null) bits.writeBits(0, 1) // NTREESL = 1
+    if (blk.litMap == null) bits.writeBits(0, 1) // NTREESL = 1
     else {
-      writeVarCount(treeHists.length)
-      writeContextMap(cmap, treeHists.length)
+      writeVarCount(blk.litTrees.length)
+      writeContextMap(blk.litMap, blk.litTrees.length)
     }
-    if (distSplit != null) {
+    if (blk.distSplit != null) {
       // one tree per distance block type: cmap over (type × 4 contexts)
       // maps every context of a type to that type's tree
-      val k = distSplit._3.length
+      val k = blk.distSplit.hists.length
       writeVarCount(k)
       writeContextMap(Array.tabulate(k << 2)(i => i >> 2), k)
-    } else if (dmap == null) bits.writeBits(0, 1) // NTREESD = 1
+    } else if (blk.distMap == null) bits.writeBits(0, 1) // NTREESD = 1
     else {
-      writeVarCount(distTreeHists.length)
-      writeContextMap(dmap, distTreeHists.length)
+      writeVarCount(blk.distTrees.length)
+      writeContextMap(blk.distMap, blk.distTrees.length)
     }
-    val nLitTrees = if (cmap == null) 1 else treeHists.length
-    val litLens = new Array[Array[Int]](nLitTrees)
-    val litRevs = new Array[Array[Int]](nLitTrees)
-    var lt = 0
-    while (lt < nLitTrees) {
-      val (l, cd) = writePrefixCode(if (cmap == null) litFreq else treeHists(lt), 8)
-      litLens(lt) = l
-      litRevs(lt) = Array.tabulate(256)(b => Huffman.reverseBits(cd(b), l(b)))
-      lt += 1
-    }
+    val lit = writeCodes(
+      if (blk.litMap == null) Array(blk.litFreq) else blk.litTrees, 8)
     // command trees: one per command block type (single tree otherwise)
-    val nCmdTrees = if (cmdSplit == null) 1 else cmdSplit._3.length
-    val cmdLensT = new Array[Array[Int]](nCmdTrees)
-    val cmdRevsT = new Array[Array[Int]](nCmdTrees)
-    var ct0 = 0
-    while (ct0 < nCmdTrees) {
-      val (l, cd) = writePrefixCode(
-        if (cmdSplit == null) cmdFreq else cmdSplit._3(ct0), 10)
-      cmdLensT(ct0) = l
-      cmdRevsT(ct0) = Array.tabulate(cd.length)(s => Huffman.reverseBits(cd(s), l(s)))
-      ct0 += 1
-    }
-    val nDistTrees =
-      if (distSplit != null) distSplit._3.length
-      else if (dmap == null) 1 else distTreeHists.length
-    val distLens = new Array[Array[Int]](nDistTrees)
-    val distRevs = new Array[Array[Int]](nDistTrees)
-    var dt = 0
-    while (dt < nDistTrees) {
-      val (l, cd) = writePrefixCode(
-        if (distSplit != null) distSplit._3(dt)
-        else if (dmap == null) distFreq2 else distTreeHists(dt),
-        32 - Integer.numberOfLeadingZeros(distFreq2.length - 1))
-      distLens(dt) = l
-      distRevs(dt) = Array.tabulate(cd.length)(x => Huffman.reverseBits(cd(x), l(x)))
-      dt += 1
-    }
-    // ---- body ---- (codes pre-reversed: one writeBits call per symbol)
-    val litLen = litLens(0)
-    val litRev = litRevs(0)
+    val cmd = writeCodes(
+      if (blk.cmdSplit == null) Array(blk.cmdFreq) else blk.cmdSplit.hists, 10)
+    val dist = writeCodes(
+      if (blk.distSplit != null) blk.distSplit.hists
+      else if (blk.distMap == null) Array(blk.distFreq) else blk.distTrees,
+      32 - Integer.numberOfLeadingZeros(blk.distFreq.length - 1))
+    writeCommands(blk, catL, catI, catD, lit, cmd, dist)
+  }
+
+  /** The meta-block body, codes pre-reversed: one writeBits call per
+    * symbol. */
+  private def writeCommands(blk: LzBlock, catL: CatSwitcher,
+      catI: CatSwitcher, catD: CatSwitcher, lit: Codes, cmd: Codes,
+      dist: Codes): Unit = {
+    val cmdBuf = blk.cmdBuf
+    val litMap = blk.litMap
+    val distMap = blk.distMap
+    val litLen = lit.lens(0)
+    val litRev = lit.revs(0)
     var ci = 0
-    while (ci < nCmds) {
+    while (ci < blk.nCmds) {
       val o = ci * CmdStride
       val cLitStart = cmdBuf(o); val cLitLen = cmdBuf(o + 1)
       val cCopyLen = cmdBuf(o + 2); val icode = cmdBuf(o + 3)
       val ccode = cmdBuf(o + 4); val cmdSym = cmdBuf(o + 5)
       val dc = cmdBuf(o + 6); val packed = cmdBuf(o + 7)
       val cTy = if (catI == null) 0 else catI.next()
-      bits.writeBits(cmdRevsT(cTy)(cmdSym).toLong, cmdLensT(cTy)(cmdSym))
+      bits.writeBits(cmd.revs(cTy)(cmdSym).toLong, cmd.lens(cTy)(cmdSym))
       bits.writeBits((cLitLen - InsertBase(icode)).toLong, InsertExtra(icode))
       bits.writeBits((math.max(cCopyLen, CopyBase(0)) - CopyBase(ccode)).toLong,
         CopyExtra(ccode))
       var i = 0
-      if (cmap == null) {
+      if (litMap == null) {
         while (i < cLitLen) {
           val b = hist(cLitStart + i) & 0xff
           bits.writeBits(litRev(b).toLong, litLen(b))
@@ -1844,8 +1902,8 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
           val pb1 = if (lp >= 1) hist(lp - 1) & 0xff else 0
           val pb2 = if (lp >= 2) hist(lp - 2) & 0xff else 0
           val lTy = if (catL == null) 0 else catL.next()
-          val tr = cmap((lTy << 6) + utf8Ctx(pb1, pb2))
-          bits.writeBits(litRevs(tr)(b).toLong, litLens(tr)(b))
+          val tr = litMap((lTy << 6) + utf8Ctx(pb1, pb2))
+          bits.writeBits(lit.revs(tr)(b).toLong, lit.lens(tr)(b))
           i += 1
         }
       }
@@ -1855,19 +1913,21 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
       if (cCopyLen > 0 && dc >= 0) {
         val dtr =
           if (catD != null) catD.next()
-          else if (dmap == null) 0 else dmap(math.min(cCopyLen - 2, 3))
-        bits.writeBits(distRevs(dtr)(dc).toLong, distLens(dtr)(dc))
+          else if (distMap == null) 0 else distMap(math.min(cCopyLen - 2, 3))
+        bits.writeBits(dist.revs(dtr)(dc).toLong, dist.lens(dtr)(dc))
         bits.writeBits((packed & 0xffffff).toLong, packed >>> 24)
       }
       ci += 1
     }
-    bits.drainTo(sink)
   }
 
   private def emitBlock(data: Array[Byte], off: Int, len: Int,
-      sink: ByteArrayOutputStream): Unit =
-    if (quality >= 1) emitLzBlock(data, off, len, sink)
+      sink: ByteArrayOutputStream): Unit = {
+    require(len >= 1 && len <= (1 << 24))
+    if (!headerWritten) writeStreamHeader()
+    if (quality >= 1) emitCompressedBlock(data, off, len, sink)
     else emitUncompressedBlock(data, off, len, sink)
+  }
 
   /** Stage input, emitting meta-blocks as the staging buffer fills.
     * Returns compressed bytes produced by this call. */

@@ -178,25 +178,7 @@ private[graft] object GraftFs {
       }
     }
 
-  /** Dev-only read tally (armed by GRAFT_FS_COUNT in the environment):
-    * counts readBytes calls by metadata kind, the measurement behind
-    * the r18 metadata-read audit — each of these is one GET on an
-    * object store. */
-  private[graft] val readCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-  private val countReads = sys.env.contains("GRAFT_FS_COUNT")
-  private def tally(path: String): Unit = if (countReads) {
-    val kind =
-      if (path.contains("/_schemas/")) "schema"
-      else if (path.contains("/_propsets/")) "propset"
-      else if (path.contains("/_manifests/")) "manifest"
-      else "other"
-    readCounts.computeIfAbsent(kind,
-      _ => new java.util.concurrent.atomic.LongAdder()).increment()
-  }
-
   def readBytes(path: String): Array[Byte] = {
-    tally(path)
     if (localFast(path)) java.nio.file.Files.readAllBytes(nio(path))
     else {
       val p = new HPath(path)

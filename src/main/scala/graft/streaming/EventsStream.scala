@@ -909,13 +909,17 @@ object EventsStream {
       .write.partitionBy("slice").parquet(src)
     (0 to 2).foreach { i =>
       val d = new java.io.File(s"$src/slice=$i")
-      Option(d.listFiles()).toSeq.flatten
-        .filter(_.getName.startsWith("part-")).foreach { part =>
-          val dst = java.nio.file.Paths.get(s"$src/slice_$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis((i + 1) * 1000000L))
-        }
+      val parts = Option(d.listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("part-"))
+      require(parts.size <= 1,
+        s"st17: slice=$i holds ${parts.size} part files; repartition(3, slice) " +
+          "must put each slice in one task, so one file per slice")
+      parts.foreach { part =>
+        val dst = java.nio.file.Paths.get(s"$src/slice_$i.parquet")
+        java.nio.file.Files.move(part.toPath, dst)
+        java.nio.file.Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis((i + 1) * 1000000L))
+      }
       // drop the partition dir (and stale .crc sidecars) so the file
       // source sees the same flat single-file-per-slice layout as before
       Option(d.listFiles()).toSeq.flatten

@@ -244,6 +244,24 @@ class BrotliSpec extends AnyFunSuite {
     enc11.write(text, 0, text.length, s2); enc11.finish(s2)
     assert(java.util.Arrays.equals(s2.toByteArray, s1.toByteArray))
     assert(java.util.Arrays.equals(Brotli.decompress(s2.toByteArray), text))
+    // q6 over 2.5 MiB (three 1 MiB meta-blocks): the per-block parse
+    // state and the distance ring carried between blocks must restart
+    // the same way in a reused encoder as in a fresh one
+    val multi = new StringBuilder
+    val mr = new Random(13)
+    while (multi.length < (5 << 19)) {
+      multi.append(words(mr.nextInt(words.length))).append(' ')
+      if (mr.nextInt(8) == 0) multi.append(mr.nextInt(100000)).append(",\n")
+    }
+    val big = multi.toString.getBytes
+    val enc6 = new BrotliEncoder(6)
+    val m1 = new ByteArrayOutputStream()
+    enc6.write(big, 0, big.length, m1); enc6.finish(m1)
+    enc6.reset()
+    val m2 = new ByteArrayOutputStream()
+    enc6.write(big, 0, big.length, m2); enc6.finish(m2)
+    assert(java.util.Arrays.equals(m2.toByteArray, m1.toByteArray))
+    assert(java.util.Arrays.equals(Brotli.decompress(m2.toByteArray), big))
   }
 
   test("q11 literal block splitting adopts on context-invisible shifts only") {
