@@ -17,8 +17,13 @@ private final case class BlockSplit(types: Array[Int], lens: Array[Int],
   *          alphabets Huffman-coded from block histograms
   *          (emitCompressedBlock).
   *          q1 is the greedy fast tier (depth-1 chains, early skip
-  *          ramp, short nice-length) matching libbrotli's fast modes;
-  *          depth/niceLen/skip/hash width all scale with quality.
+  *          ramp, short nice-length) matching libbrotli's fast modes.
+  *          The greedy rungs' (chain depth, nice length, skip shift,
+  *          hash width) are: q1 (1, 64, 4, 4 B); q2-q4 (1, 128, 5,
+  *          4 B); q5 (32, 128, 5, 5 B); q6-q7 (32, 128, 7, 5 B, every
+  *          position inserted; q7+ also selects distance parameters);
+  *          q8-q9 (128, 512, 9, 5 B). q3 and q4 encode exactly like
+  *          q2, and q9 like q8: the 13 quality values are 10 encoders.
   *   - q10+: literal context modeling (multi-tree coding by UTF8
   *          context with a clustered context map) when literals carry
   *          enough mass; q11 additionally swaps the greedy parse for
@@ -275,7 +280,7 @@ final class BrotliEncoder(quality: Int = 6, lgwin: Int = 22) {
   private val skipShift =
     if (quality >= 10) 30 else if (quality >= 8) 9 else if (quality >= 6) 7
     else if (quality >= 2) 5 else 4
-  // q3-4: 4-byte hash (catches minimum-length matches). q5+: 5-byte
+  // q1-4: 4-byte hash (catches minimum-length matches). q5+: 5-byte
   // hash — on low-entropy data (CSV digits, spaces) 4-gram chains are
   // pathologically collision-heavy; hashing 5 bytes thins them at the
   // cost of never finding exactly-4-byte matches via the chain (the

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lineage cut for corpus-scale intermediates that are consumed more
   * than once (LSH signature/band frames, shingle indexes, quantized
@@ -84,16 +84,40 @@ object Materialize {
     * item: rethrowing on the first failure leaked the other chain's
     * still-running jobs past the call and masked its failure) — a
     * failed pair surfaces the first exception with the second
-    * attached as suppressed. */
+    * attached as suppressed. Each chain's Spark jobs carry their own
+    * job tag, and once one chain has failed the other's jobs are
+    * cancelled (again every 100 ms, so a job it submits later is
+    * cancelled too) until it settles: the wait is bounded by how soon
+    * its tasks notice the cancellation, not by its full run. */
   def inParallel[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.duration._
+    import scala.util.Try
     implicit val ec: ExecutionContext =
       ExecutionContext.fromExecutor(chainPool)
-    val fa = Future(a)
-    val fb = Future(b)
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
+    val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val id = java.util.UUID.randomUUID()
+    val (tagA, tagB) = (s"graft-inparallel-$id-a", s"graft-inparallel-$id-b")
+    def tagged[T](tag: String, body: => T): T = sc match {
+      case Some(c) =>
+        c.addJobTag(tag)
+        try body finally c.removeJobTag(tag)
+      case None => body
+    }
+    val fa = Future(tagged(tagA, a))
+    val fb = Future(tagged(tagB, b))
+    def failed(f: Future[_]): Boolean = f.value.exists(_.isFailure)
+    def settle[T](f: Future[T], tag: String, otherFailed: => Boolean): Try[T] = {
+      while (!f.isCompleted) {
+        if (otherFailed) sc.foreach(_.cancelJobsWithTag(tag,
+          "the other inParallel chain failed"))
+        Try(Await.ready(f, 100.millis))
+      }
+      f.value.get
+    }
+    val ra = settle(fa, tagA, failed(fb))
+    val rb = settle(fb, tagB, failed(fa))
     (ra, rb) match {
       case (scala.util.Success(x), scala.util.Success(y)) => (x, y)
       case _ =>

@@ -2,6 +2,7 @@ package graft.queries
 
 import scala.collection.immutable.ListMap
 
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -740,25 +741,26 @@ object Extras5 {
     * path already paid for these stats, a commit just records them. */
   private[graft] def parquetKeyStats(files: Seq[String],
       column: String): Map[String, (Long, Long)] = {
-    val conf = new org.apache.hadoop.conf.Configuration(graft.sources.GraftFs.hadoopConf)
-    files.flatMap { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        import scala.jdk.CollectionConverters._
-        val ranges = for {
-          block <- reader.getFooter.getBlocks.asScala.toSeq
-          col <- block.getColumns.asScala
-          if col.getPath.toDotString == column
-          st = col.getStatistics
-          if st != null && !st.isEmpty
-        } yield (st.genericGetMin.asInstanceOf[Number].longValue(),
-          st.genericGetMax.asInstanceOf[Number].longValue())
-        if (ranges.isEmpty) None
-        else Some(f -> (ranges.map(_._1).min, ranges.map(_._2).max))
-      } finally reader.close()
-    }.toMap
+    val conf = graft.sources.GraftFs.hadoopConf
+    files.flatMap(f => footerKeyStats(
+      graft.sources.GraftParquet.footer(f, conf), column).map(f -> _)).toMap
+  }
+
+  /** (min, max) of an INT64 column over a footer's row-group stats;
+    * None when no row group carries stats for it. */
+  private[graft] def footerKeyStats(footer: ParquetMetadata,
+      column: String): Option[(Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val ranges = for {
+      block <- footer.getBlocks.asScala.toSeq
+      col <- block.getColumns.asScala
+      if col.getPath.toDotString == column
+      st = col.getStatistics
+      if st != null && !st.isEmpty
+    } yield (st.genericGetMin.asInstanceOf[Number].longValue(),
+      st.genericGetMax.asInstanceOf[Number].longValue())
+    if (ranges.isEmpty) None
+    else Some((ranges.map(_._1).min, ranges.map(_._2).max))
   }
 
   private def q78Parts(dir: String): Seq[String] =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.sources.GraftDv
+import graft.sources.{GraftDv, GraftParquet}
 
 /** Round-15 queries: merge-on-read DELETE via positional deletion
   * vectors, DV purge (OPTIMIZE), TIMESTAMP AS OF time travel, and
@@ -323,10 +323,14 @@ object Extras7 {
     val outputs =
       if (groups.isEmpty) parts(outDir) else outByGrp.values.flatten.toSeq
     // exact reconciliation, O(#files) footer metadata + O(deleted)
-    // sidecar reads: output rows == input rows − dead positions
-    val inputRows = dvd.map(e => GraftDv.rowGroups(e.path).map(_._3).sum).sum
+    // sidecar reads: output rows == input rows − dead positions; each
+    // output's one footer read also serves its key stats below
+    val conf = graft.sources.GraftFs.hadoopConf
+    val outFooters = outputs.map(f => f -> GraftParquet.footer(f, conf))
+    val inputRows = dvd.map(e =>
+      GraftParquet.rowCount(GraftParquet.footer(e.path, conf))).sum
     val deadRows = dvd.map(e => GraftDv.read(e.dv.get).length.toLong).sum
-    val outRows = outputs.map(f => GraftDv.rowGroups(f).map(_._3).sum).sum
+    val outRows = outFooters.map(o => GraftParquet.rowCount(o._2)).sum
     if (outRows != inputRows - deadRows) {
       Extras6.deleteRecursively(outDir)
       throw new IllegalStateException(
@@ -334,8 +338,8 @@ object Extras7 {
           s"$deadRows deleted positions — the (file, pos) identity join " +
           "missed (path normalization bug); aborted before commit")
     }
-    val stats = statsColumn.map(Extras5.parquetKeyStats(outputs, _))
-      .getOrElse(Map.empty)
+    val stats = statsColumn.toSeq.flatMap(c => outFooters.flatMap {
+      case (f, m) => Extras5.footerKeyStats(m, c).map(f -> _) }).toMap
     val tupleOf: Map[String, Map[String, String]] =
       groups.zipWithIndex.flatMap { case ((tuple, _), i) =>
         outByGrp.getOrElse(i, Seq.empty).map(_ -> tuple)

@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Type => PType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -1387,7 +1388,7 @@ private[sources] class GraftScan(table: GraftTable, required: StructType,
       case e if e.dv.isDefined => e.path -> e.dv.get
     }.toMap
     // a `_pos` projection needs every split's first-row ordinal —
-    // stamped at planning from one footer read per file
+    // stamped at planning (a footer read only for a multi-split file)
     val posRequested = required.fieldNames.contains("_pos")
     GraftParquetIO.planSplits(activeFiles,
       f => Map("_file" -> f), dvByPath.get,
@@ -2202,33 +2203,47 @@ private[sources] class GraftDataWriter(schema: StructType, dir: String,
 // Flat-schema parquet <-> Spark type plumbing
 // ---------------------------------------------------------------------------
 
-private[sources] object GraftParquet {
+private[graft] object GraftParquet {
+
+  /** The footer of one parquet file: the one place graft opens a
+    * `ParquetFileReader`. The read options are built from `conf`
+    * (default: the session's Hadoop conf); parquet-mr's option-less
+    * `open(InputFile)` builds a fresh `Configuration` instead, which
+    * re-parses the Hadoop XML defaults on every call (6-10 ms per
+    * footer against ~0.2 ms here). */
+  def footer(path: String,
+      conf: Configuration = GraftFs.hadoopConf): ParquetMetadata = {
+    val p = new HPath(path)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf),
+      HadoopReadOptions.builder(conf, p).build())
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Rows in a file, from its footer's row groups. */
+  def rowCount(footer: ParquetMetadata): Long =
+    footer.getBlocks.asScala.map(_.getRowCount).sum
 
   /** StructType from a parquet footer — flat primitives only, which is
     * all the protocol family writes (Spark encodes DECIMAL(<=18,s) as
     * annotated INT64, strings as annotated BINARY). */
   def inferSchema(samplePath: String): StructType = {
-    val in = HadoopInputFile.fromPath(new HPath(samplePath), new Configuration(GraftFs.hadoopConf))
-    val reader = ParquetFileReader.open(in)
-    try {
-      val msg = reader.getFooter.getFileMetaData.getSchema
-      StructType(msg.getFields.asScala.map { f =>
-        val p = f.asPrimitiveType()
-        val dt = (p.getPrimitiveTypeName, p.getLogicalTypeAnnotation) match {
-          case (PrimitiveTypeName.INT64,
-              d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
-            DecimalType(d.getPrecision, d.getScale)
-          case (PrimitiveTypeName.INT64, _) => LongType
-          case (PrimitiveTypeName.INT32, _) => IntegerType
-          case (PrimitiveTypeName.DOUBLE, _) => DoubleType
-          case (PrimitiveTypeName.BOOLEAN, _) => BooleanType
-          case (PrimitiveTypeName.BINARY, _) => StringType
-          case (other, _) => throw new UnsupportedOperationException(
-            s"graft catalog: unsupported parquet type $other for ${f.getName}")
-        }
-        StructField(f.getName, dt,
-          nullable = f.getRepetition != PType.Repetition.REQUIRED)
-      }.toArray)
-    } finally reader.close()
+    val msg = footer(samplePath).getFileMetaData.getSchema
+    StructType(msg.getFields.asScala.map { f =>
+      val p = f.asPrimitiveType()
+      val dt = (p.getPrimitiveTypeName, p.getLogicalTypeAnnotation) match {
+        case (PrimitiveTypeName.INT64,
+            d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
+          DecimalType(d.getPrecision, d.getScale)
+        case (PrimitiveTypeName.INT64, _) => LongType
+        case (PrimitiveTypeName.INT32, _) => IntegerType
+        case (PrimitiveTypeName.DOUBLE, _) => DoubleType
+        case (PrimitiveTypeName.BOOLEAN, _) => BooleanType
+        case (PrimitiveTypeName.BINARY, _) => StringType
+        case (other, _) => throw new UnsupportedOperationException(
+          s"graft catalog: unsupported parquet type $other for ${f.getName}")
+      }
+      StructField(f.getName, dt,
+        nullable = f.getRepetition != PType.Repetition.REQUIRED)
+    }.toArray)
   }
 }

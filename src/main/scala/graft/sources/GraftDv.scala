@@ -1,12 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.types.StructType
 
 /** DELETION VECTORS for the graft manifest protocol (merge-on-read
   * DELETE): one sidecar per data file listing the ROW POSITIONS (0-based
@@ -59,48 +54,35 @@ private[graft] object GraftDv {
     out
   }
 
-  /** Row-group layout (startingPos, compressedSize, rowCount) from ONE
-    * footer read — split planning derives every split's row range from
-    * this single read instead of each reader re-opening the footer
-    * (r15 ADVICE: under tiny maxPartitionBytes that was O(splits)
-    * redundant footer I/O). */
+  /** Row-group layout (startingPos, compressedSize, rowCount) of a
+    * file, from its footer. Split planning reads it only for a file
+    * that fans out into several splits; a whole-file split starts at
+    * row 0 without it. */
   def rowGroups(path: String): Seq[(Long, Long, Long)] = {
-    val in = HadoopInputFile.fromPath(new HPath(path), GraftFs.hadoopConf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      import scala.jdk.CollectionConverters._
-      reader.getFooter.getBlocks.asScala.toSeq
-        .map(b => (b.getStartingPos, b.getCompressedSize, b.getRowCount))
-    } finally reader.close()
+    import scala.jdk.CollectionConverters._
+    GraftParquet.footer(path).getBlocks.asScala.toSeq
+      .map(b => (b.getStartingPos, b.getCompressedSize, b.getRowCount))
   }
 
-  /** (first row index, row count) of the row groups a byte-range split
-    * covers — parquet-mr's MIDPOINT rule (a row group belongs to the
-    * split containing startingPos + compressedSize/2), so adjacent
-    * splits partition the file's rows exactly. Pure function over a
-    * footer's `rowGroups`; positions within a split are firstRowIndex
-    * + read ordinal, valid because the DV read path never
-    * row-group-filters. */
-  def splitRangeOf(groups: Seq[(Long, Long, Long)], start: Long,
-      length: Long): (Long, Long) = {
+  /** First row index of the row groups a byte-range split covers —
+    * parquet-mr's MIDPOINT rule (a row group belongs to the split
+    * containing startingPos + compressedSize/2), so adjacent splits
+    * partition the file's rows exactly. Pure function over a footer's
+    * `rowGroups`; positions within a split are firstRowIndex + read
+    * ordinal, valid because the DV read path never row-group-filters.
+    * A split that owns no row group reads no rows; it gets 0. */
+  def splitFirstRow(groups: Seq[(Long, Long, Long)], start: Long,
+      length: Long): Long = {
     var rowsBefore = 0L
-    var first = -1L
-    var n = 0L
-    groups.foreach { case (pos, size, rows) =>
+    val it = groups.iterator
+    while (it.hasNext) {
+      val (pos, size, rows) = it.next()
       val mid = pos + size / 2
-      if (mid >= start && mid < start + length) {
-        if (first < 0) first = rowsBefore
-        n += rows
-      }
+      if (mid >= start && mid < start + length) return rowsBefore
       rowsBefore += rows
     }
-    (math.max(first, 0L), n)
+    0L
   }
-
-  /** One-shot form (one footer read); readers only fall back to this
-    * when planning did not stamp the split's rowRange. */
-  def splitRowRange(path: String, start: Long, length: Long): (Long, Long) =
-    splitRangeOf(rowGroups(path), start, length)
 
   /** Executor-side sidecar cache: DV files are immutable once written
     * (every merge/commit writes a FRESH UUID path), so splits of the

@@ -45,23 +45,28 @@ private[graft] object GraftParquetIO {
     * String or a Long, matching the column's Spark type); `dv` the
     * file's deletion-vector sidecar, if the manifest carries one (the
     * split then reads row-based with deleted ordinals skipped);
-    * `rowRange` the split's (first file-global row ordinal, row count),
-    * computed ONCE at planning time for splits that need ordinal
-    * arithmetic (DV subtraction, `_pos` projection) — readers share it
-    * instead of each re-opening the parquet footer (r15 ADVICE). */
+    * `firstRow` the split's first file-global row ordinal, set at
+    * planning time for splits that need ordinal arithmetic (DV
+    * subtraction, `_pos` projection). */
   case class GraftFileSplit(path: String, start: Long, length: Long,
       constants: Map[String, Any] = Map.empty,
       dv: Option[String] = None,
-      rowRange: Option[(Long, Long)] = None) extends InputPartition
+      firstRow: Option[Long] = None) extends InputPartition {
+    /** `firstRow`, which planning sets for every split that reads
+      * ordinals. */
+    def requireFirstRow: Long = firstRow.getOrElse(throw new
+      IllegalStateException(s"split $path@$start was planned without its first row"))
+  }
 
   /** Splits `files` at byte boundaries of at most the session's
     * `spark.sql.files.maxPartitionBytes` — same sizing rule as Spark's
     * own FilePartition planning (driver-side file-length metadata
     * only). Parquet's midpoint rule makes adjacent slices read
     * disjoint, complete row-group sets. Files with a DV (or for which
-    * `needRowRange` holds — `_pos` scans) get their splits' row ranges
-    * stamped here from ONE footer read per file, shared by however
-    * many splits the file fans out into. */
+    * `needRowRange` holds — `_pos` scans) get each split's first row
+    * stamped here: 0 for a file that is one split, so no file is
+    * opened; from one footer read for a file that fans out into
+    * several splits. */
   def planSplits(files: Seq[String],
       constantsFor: String => Map[String, Any] = _ => Map.empty,
       dvFor: String => Option[String] = _ => None,
@@ -73,14 +78,17 @@ private[graft] object GraftParquetIO {
       val len = lens(f)
       val consts = constantsFor(f)
       val dv = dvFor(f)
-      val groups = if (dv.isDefined || needRowRange(f))
-        Some(GraftDv.rowGroups(f)) else None
-      def rr(off: Long, l: Long) = groups.map(GraftDv.splitRangeOf(_, off, l))
+      val needFirstRow = dv.isDefined || needRowRange(f)
       if (len <= target)
-        Seq(GraftFileSplit(f, 0L, len, consts, dv, rr(0L, len)))
-      else (0L until len by target).map { off =>
-        val l = math.min(target, len - off)
-        GraftFileSplit(f, off, l, consts, dv, rr(off, l))
+        Seq(GraftFileSplit(f, 0L, len, consts, dv,
+          if (needFirstRow) Some(0L) else None))
+      else {
+        val groups = if (needFirstRow) Some(GraftDv.rowGroups(f)) else None
+        (0L until len by target).map { off =>
+          val l = math.min(target, len - off)
+          GraftFileSplit(f, off, l, consts, dv,
+            groups.map(GraftDv.splitFirstRow(_, off, l)))
+        }
       }
     }
   }
@@ -148,12 +156,10 @@ private[sources] class GraftVectorizedReaderFactory(required: StructType,
     val split = partition.asInstanceOf[GraftFileSplit]
     split.dv match {
       case Some(dvPath) =>
-        val firstRow = split.rowRange.map(_._1).getOrElse(
-          GraftDv.splitRowRange(split.path, split.start, split.length)._1)
         new GraftDvRowReader(
           new GraftColumnarReader(split, required, dataSchema, Seq.empty,
             posColumn, physicalOf),
-          dvPath, firstRow)
+          dvPath, split.requireFirstRow)
       case None =>
         val inner = createColumnarReader(partition)
         new PartitionReader[InternalRow] {
@@ -257,9 +263,7 @@ private[sources] class GraftColumnarReader(split: GraftParquetIO.GraftFileSplit,
   /** The split's starting file-global row ordinal; advanced batch by
     * batch when a position column is requested. */
   private var nextPos: Long =
-    if (posColumn.isEmpty) 0L
-    else split.rowRange.map(_._1).getOrElse(
-      GraftDv.splitRowRange(split.path, split.start, split.length)._1)
+    if (posColumn.isEmpty) 0L else split.requireFirstRow
 
   private val posVector: Option[org.apache.spark.sql.execution.vectorized
       .OnHeapColumnVector] = posColumn.map(_ =>

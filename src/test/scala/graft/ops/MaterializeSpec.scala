@@ -86,4 +86,27 @@ class MaterializeSpec extends SparkSpec {
         gated.queryExecution.analyzed.toString)
     } finally spark.conf.set(key, prev)
   }
+
+  test("inParallel: a failing chain cancels the other chain's running jobs") {
+    val boom = new IllegalStateException("chain A failed")
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Materialize.inParallel(
+        throw boom,
+        // tasks that would run 60 s unless their job is cancelled
+        spark.sparkContext.parallelize(1 to 2, 2).map { i =>
+          val ctx = org.apache.spark.TaskContext.get()
+          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (!ctx.isInterrupted() && System.nanoTime() < deadline)
+            Thread.sleep(20)
+          i
+        }.count())
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e eq boom)
+    assert(secs < 15, f"inParallel took $secs%.1f s to settle the other chain")
+    assert(e.getSuppressed.exists(s =>
+      String.valueOf(s.getMessage).contains("cancel")),
+      s"suppressed: ${e.getSuppressed.map(_.getMessage).mkString(" | ")}")
+  }
 }

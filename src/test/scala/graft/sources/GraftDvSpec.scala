@@ -33,9 +33,7 @@ class GraftDvSpec extends SparkSpec {
     blockSize.fold(w)(b => w.option("parquet.block.size", b.toString)
         .option("parquet.page.size", (b / 4).toString))
       .parquet(s"$base/files-v1")
-    val v1 = new java.io.File(s"$base/files-v1").listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .map(_.getAbsolutePath).toSeq.sorted
+    val v1 = partFiles(s"$base/files-v1")
     val stats = Extras5.parquetKeyStats(v1, "o_orderkey")
     Extras5.q78CommitEntries(base, 1,
       v1.map(f => Extras5.ManifestEntry(f, stats.get(f))))
@@ -48,6 +46,25 @@ class GraftDvSpec extends SparkSpec {
     GraftCatalog.register(name, base)
     name
   }
+
+  /** The input partitions a plain scan of `name` plans (latest, or at
+    * `version`). */
+  private def plannedSplits(name: String,
+      version: Option[String] = None): Seq[GraftParquetIO.GraftFileSplit] = {
+    val cat = new GraftCatalog
+    cat.initialize("graft", CaseInsensitiveStringMap.empty())
+    val id = Identifier.of(Array.empty, name)
+    val t = version.fold(cat.loadTable(id))(cat.loadTable(id, _))
+      .asInstanceOf[GraftTable]
+    new GraftScanBuilder(t, None).build().asInstanceOf[GraftScan]
+      .planInputPartitions().toSeq
+      .map(_.asInstanceOf[GraftParquetIO.GraftFileSplit])
+  }
+
+  private def partFiles(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .map(_.getAbsolutePath).toSeq.sorted
 
   test("MOR delete touches no data file; sidecars carry exactly the matched ordinals") {
     val base = buildV1("immutable")
@@ -123,31 +140,15 @@ class GraftDvSpec extends SparkSpec {
     assert(spark.sql(
       s"SELECT COUNT(*), SUM(o_orderkey) FROM graft.$name").head() == before)
     // split planning: DV'd splits at v2, none at v3
-    val cat = new GraftCatalog
-    cat.initialize("graft", CaseInsensitiveStringMap.empty())
-    def splits(version: Option[String]) = {
-      val t = version.fold(cat.loadTable(Identifier.of(Array.empty, name)))(
-        v => cat.loadTable(Identifier.of(Array.empty, name), v))
-        .asInstanceOf[GraftTable]
-      new GraftScanBuilder(t, None).build().asInstanceOf[GraftScan]
-        .planInputPartitions()
-        .map(_.asInstanceOf[GraftParquetIO.GraftFileSplit])
-    }
-    assert(splits(Some("2")).exists(_.dv.isDefined))
-    assert(splits(None).forall(_.dv.isEmpty))
+    assert(plannedSplits(name, Some("2")).exists(_.dv.isDefined))
+    assert(plannedSplits(name).forall(_.dv.isEmpty))
   }
 
   test("DV reads stay exact under tiny splits over multi-row-group files") {
     val base = buildV1("splits", blockSize = Some(2048))
     val v1 = Extras5.q78ResolveEntries(base, 1)
     // the fixture really is multi-row-group (else the test proves nothing)
-    val groups = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(v1.head.path),
-        new org.apache.hadoop.conf.Configuration())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getBlocks.size() finally r.close()
-    }
+    val groups = GraftParquet.footer(v1.head.path).getBlocks.size()
     assert(groups > 1, s"fixture file has $groups row group(s); need > 1")
 
     Extras7.deleteMorOcc(spark, base, col("o_orderkey") % 5 === 0)
@@ -363,6 +364,72 @@ class GraftDvSpec extends SparkSpec {
         s"SELECT COUNT(*), SUM(o_orderkey) FROM graft.$name").head()
       assert(got == expect,
         "split-positioned DELETE must kill exactly the matched rows")
+    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", "128MB")
+  }
+
+  test("planning a whole-file split never opens the file") {
+    // not parquet: any footer read would throw
+    val path = s"${graft.Scratch.dir("dvspec_nofooter")}.parquet"
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      "not a parquet file".getBytes("UTF-8"))
+    val len = new java.io.File(path).length()
+    val splits = GraftParquetIO.planSplits(Seq(path),
+      dvFor = _ => Some(s"$path.dv"), needRowRange = _ => true)
+    assert(splits == Seq(GraftParquetIO.GraftFileSplit(path, 0L, len,
+      dv = Some(s"$path.dv"), firstRow = Some(0L))))
+  }
+
+  test("one scan over whole-file and multi-split DV'd files: DELETE positions and reads exact") {
+    GraftCatalog.install(spark)
+    val base = graft.Scratch.dir("dvspec_mixed")
+    val rows = graft.Tables.load(spark, sf, "orders")
+      .select($"o_orderkey", $"o_orderstatus",
+        $"o_totalprice".cast(D2).as("price"))
+    // one multi-row-group file (tiny block size) and three small files
+    rows.filter($"o_orderkey" % 3 === 0).repartition(1).write
+      .option("parquet.block.size", "2048").option("parquet.page.size", "512")
+      .parquet(s"$base/files-big")
+    rows.filter($"o_orderkey" % 30 === 1).repartition(3).write
+      .parquet(s"$base/files-small")
+    val big = partFiles(s"$base/files-big")
+    val small = partFiles(s"$base/files-small")
+    val files = big ++ small
+    val stats = Extras5.parquetKeyStats(files, "o_orderkey")
+    Extras5.q78CommitEntries(base, 1,
+      files.map(f => Extras5.ManifestEntry(f, stats.get(f))))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(base, "_props.json"),
+      """{"graft.delete.mode":"merge-on-read"}""".getBytes("UTF-8"))
+    val name = register(base)
+    val len = files.map(f => f -> new java.io.File(f).length()).toMap
+    // a split target between the sizes: small files stay whole, the big
+    // one fans out into several splits
+    val target = small.map(len).max
+    assert(big.size == 1 && len(big.head) > 2 * target,
+      s"fixture sizes: big ${big.map(len)}, small ${small.map(len)}")
+    val expectPos = files.map(f => f -> spark.read.parquet(f)
+      .withColumn("pos", col("_metadata.row_index"))
+      .filter($"o_orderkey" % 7 === 0)
+      .select($"pos").as[Long].collect().sorted.toSeq).toMap
+    val expect = spark.read.parquet(files: _*)
+      .filter($"o_orderkey" % 7 =!= 0)
+      .agg(count(lit(1)), sum($"o_orderkey")).head()
+    spark.conf.set("spark.sql.files.maxPartitionBytes", target.toString)
+    try {
+      // the DELETE's _pos scan mixes whole-file and multi-split files
+      spark.sql(s"DELETE FROM graft.$name WHERE o_orderkey % 7 = 0")
+      val v2 = Extras5.q78ResolveEntries(base, 2)
+      assert(v2.map(_.path).sorted == files, "no data file touched")
+      val gotPos = v2.map(e =>
+        e.path -> e.dv.map(d => GraftDv.read(d).toSeq).getOrElse(Seq.empty)).toMap
+      assert(gotPos == expectPos, "sidecars must hold exactly the matched positions")
+      // the read that follows plans DV'd splits of both kinds
+      val splits = plannedSplits(name).filter(_.dv.isDefined)
+      assert(splits.exists(s => s.length == len(s.path) && small.contains(s.path)))
+      assert(splits.count(_.path == big.head) > 1)
+      val got = spark.sql(
+        s"SELECT COUNT(*), SUM(o_orderkey) FROM graft.$name").head()
+      assert(got == expect, "the read must subtract exactly the deleted rows")
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", "128MB")
   }
 
