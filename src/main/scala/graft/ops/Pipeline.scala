@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.ops.Materialize.MaterializeOps
+import graft.sources.GraftManifest
 
 /** The end-to-end corpus-preparation pipeline, as ONE declarative DAG:
   * quality gate (t09) → exact dedup (d01's fingerprint) → sequence
@@ -513,7 +514,7 @@ object Pipeline {
     // v1: the original build (bug: counts 'P' orders in 1996)
     monthly(orders).write.partitionBy("part_month").parquet(s"$base/files-v1")
     val v1 = p04MonthDirs(s"$base/files-v1")
-    graft.queries.Extras5.q78Commit(base, 1, v1)
+    GraftManifest.commitAt(base, 1, v1.map(GraftManifest.Entry(_)))
     // v2: the backfill — corrected logic, RECOMPUTED FOR 1996 ONLY
     monthly(orders.filter(
         !(date_format($"o_orderdate", "yyyy") === "1996" &&
@@ -521,8 +522,8 @@ object Pipeline {
       .filter($"month".startsWith("1996"))
       .write.partitionBy("part_month").parquet(s"$base/files-v2")
     val untouched = v1.filterNot(_.contains("part_month=1996"))
-    graft.queries.Extras5.q78Commit(base, 2,
-      untouched ++ p04MonthDirs(s"$base/files-v2"))
+    GraftManifest.commitAt(base, 2,
+      (untouched ++ p04MonthDirs(s"$base/files-v2")).map(GraftManifest.Entry(_)))
     base
   }
 
@@ -530,7 +531,7 @@ object Pipeline {
     import spark.implicits._
     val base = p04Table(spark, dir)
     (1 to 2).map { v =>
-      spark.read.parquet(graft.queries.Extras5.q78Resolve(base, v): _*)
+      spark.read.parquet(GraftManifest.read(base, v).paths: _*)
         .groupBy(substring($"month", 1, 4).as("year"))
         .agg(count(lit(1)).as("n_months"),
           sum($"n_orders").as("n_orders"),

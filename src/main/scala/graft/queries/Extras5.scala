@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.sources.GraftManifest
 
 /** Round-12 additions: the declarative-engine capabilities a production
   * lake deployment leans on daily — data-quality constraint suites
@@ -472,7 +473,8 @@ object Extras5 {
   // q78: SNAPSHOT-ISOLATED TIME-TRAVEL READS — the MVCC core of every
   // table format (Iceberg/Delta), built from first principles on q71's
   // manifest idea: data files are IMMUTABLE; a commit writes new files
-  // plus a manifest (one text file listing the snapshot's members); a
+  // plus a manifest (one text file listing the snapshot's members —
+  // the format and commit protocol live in sources/GraftManifest); a
   // reader resolves a VERSION to its manifest and scans exactly those
   // files. Three commits: v1 = initial load (keys ≡ 0 mod 3), v2 =
   // append (adds keys ≡ 1), v3 = DELETE via copy-on-write (rewrites
@@ -486,256 +488,6 @@ object Extras5 {
   // manifests are O(#files) text, commits are atomic manifest swaps,
   // and old snapshots cost only the storage their files share.
   // ---------------------------------------------------------------------
-  /** One manifest entry: an immutable data file, its optional committed
-    * key-column (min, max), and an optional DELETION VECTOR — a sidecar
-    * of row POSITIONS within the file that are logically deleted
-    * (merge-on-read DELETE: the file is untouched, readers skip the
-    * listed ordinals). A DV change is a new logical version of the
-    * file, so commit-conflict identity is (path, dv), never path alone
-    * — two writers disagreeing about a file's live rows must conflict
-    * even though neither touched its bytes. */
-  private[graft] case class ManifestEntry(path: String,
-      stats: Option[(Long, Long)] = None, dv: Option[String] = None,
-      colStats: Map[String, (Long, Long)] = Map.empty,
-      partValues: Map[String, String] = Map.empty) {
-    /** Conflict identity for OCC checks: path + the DV generation. */
-    def identity: String = dv.fold(path)(d => path + "\u0000" + d)
-  }
-
-  /** Serialized per-column stats (the manifest line's 5th field):
-    * `name=lo:hi;...`, names URL-encoded so the `=:;` separators and
-    * tabs/newlines can never collide with a column name. Keys are
-    * PHYSICAL column names (stable across RENAME evolution), so pruning
-    * that resolves a predicate's logical name through the column
-    * mapping is structurally sound: these stats follow the bytes, not
-    * the name — the r15 rename-rebind hazard cannot arise. */
-  private def encodeColStats(cs: Map[String, (Long, Long)]): String =
-    cs.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-      s"${java.net.URLEncoder.encode(c, "UTF-8")}=$lo:$hi"
-    }.mkString(";")
-
-  /** Serialized partition values (the manifest line's 6th field):
-    * `key=value;...`, both sides URL-encoded, `key=` alone for NULL.
-    * Keys are the partition spec's transform output names
-    * (`o_orderstatus`, `days.o_orderdate`); values are the transform
-    * results rendered canonically (identity → the value's string form,
-    * date transforms → the ordinal) — what partition pruning compares
-    * literals against. */
-  private def encodePartValues(pv: Map[String, String]): String =
-    pv.toSeq.sortBy(_._1).map { case (k, v) =>
-      val ek = java.net.URLEncoder.encode(k, "UTF-8")
-      if (v == null) s"$ek=" else s"$ek=v${java.net.URLEncoder.encode(v, "UTF-8")}"
-    }.mkString(";")
-
-  private def decodePartValues(s: String): Map[String, String] =
-    if (s == "-" || s.isEmpty) Map.empty
-    else s.split(";").iterator.flatMap { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) =>
-          val key = java.net.URLDecoder.decode(k, "UTF-8")
-          if (v.isEmpty) Some(key -> null)
-          else if (v.startsWith("v"))
-            Some(key -> java.net.URLDecoder.decode(v.drop(1), "UTF-8"))
-          else None
-        case _ => None
-      }
-    }.toMap
-
-  private def decodeColStats(s: String): Map[String, (Long, Long)] =
-    if (s == "-" || s.isEmpty) Map.empty
-    else s.split(";").iterator.flatMap { kv =>
-      kv.split("=", 2) match {
-        case Array(c, v) => v.split(":", 2) match {
-          case Array(lo, hi) =>
-            Some(java.net.URLDecoder.decode(c, "UTF-8") ->
-              (lo.toLong, hi.toLong))
-          case _ => None
-        }
-        case _ => None
-      }
-    }.toMap
-
-  /** Commit `files` as manifest `v$version` — optimistic CAS on the
-    * version number. The full manifest is staged, then PUBLISHED by
-    * `GraftFs.putIfAbsent`'s per-scheme atomic no-overwrite primitive
-    * (hard link locally, rename-NONE on HDFS; see GraftFs for the
-    * object-store contract): a reader never sees a partial manifest,
-    * and of two concurrent writers racing to `v{n+1}` exactly one wins
-    * — the loser gets `false` and must rebase onto the new current
-    * version and retry (see Extras6.cowMergeCommitOcc for the COW
-    * conflict-resolution loop). */
-  private[graft] def q78TryCommit(base: String, version: Int,
-      files: Seq[String],
-      stats: Map[String, (Long, Long)] = Map.empty): Boolean =
-    q78TryCommitEntries(base, version,
-      files.map(f => ManifestEntry(f, stats.get(f))))
-
-  /** Entry-level commit: data files with stats AND deletion vectors,
-    * plus header lines. Headers are `#key\tvalue` lines at the top of
-    * the manifest (parsers skip `#`): every commit records `ts` (epoch
-    * millis — TIMESTAMP AS OF resolves against it; override for
-    * deterministic fixtures), and idempotent writers (the streaming
-    * sink) record `txn\t<appId>\t<epoch>` watermarks. Headers ride
-    * INSIDE the manifest so the atomic publish covers them — same
-    * reason per-file stats do (a sidecar could split-brain under the
-    * CAS). */
-  private[graft] def q78TryCommitEntries(base: String, version: Int,
-      entries: Seq[ManifestEntry],
-      headers: Seq[(String, String)] = Seq.empty): Boolean = {
-    val stamped = if (headers.exists(_._1 == "ts")) headers
-      else ("ts" -> System.currentTimeMillis.toString) +: headers
-    // schema AND props headers CARRY FORWARD automatically: a data
-    // commit on a versioned table keeps the previous version's
-    // `#schema`/`#props` unless the caller (ALTER TABLE, CREATE TABLE,
-    // SET TBLPROPERTIES, RTAS) supplies new ones — one small-header
-    // read per attempt, the same cost class as the resolve the commit
-    // loop already paid. Tables without these headers (API-built
-    // fixtures) carry nothing.
-    val carriedKeys =
-      Seq(graft.sources.GraftSchemas.Header, graft.sources.GraftProps.Header)
-        .filterNot(k => stamped.exists(_._1 == k))
-    val hdr =
-      if (carriedKeys.isEmpty || version <= 1) stamped
-      else stamped ++ (
-        try {
-          val prev = q78CommitHeaders(base, version - 1)
-          carriedKeys.flatMap(k => prev.get(k).map(k -> _))
-        } catch { case _: java.nio.file.NoSuchFileException => Seq.empty })
-    // entry line: path, optionally followed by the file's key-column
-    // min/max (tab-separated; `-` placeholders when a DV'd file has no
-    // stats), optionally followed by the DV path. Files without stats
-    // are always kept by pruned reads.
-    val body = (hdr.map { case (k, v) => s"#$k\t$v" } ++
-      entries.sortBy(_.path).map { e =>
-        val ks = e.stats.map { case (lo, hi) => s"$lo\t$hi" }.getOrElse("-\t-")
-        if (e.partValues.nonEmpty)
-          // 6-field form (partitioned table; `-` placeholders keep the
-          // arity-dispatched parser unambiguous)
-          s"${e.path}\t$ks\t${e.dv.getOrElse("-")}\t" +
-            s"${if (e.colStats.nonEmpty) encodeColStats(e.colStats) else "-"}\t" +
-            encodePartValues(e.partValues)
-        else if (e.colStats.nonEmpty)
-          // 5-field form (multi-column stats)
-          s"${e.path}\t$ks\t${e.dv.getOrElse("-")}\t${encodeColStats(e.colStats)}"
-        else (e.stats, e.dv) match {
-          case (None, None) => e.path
-          case (_, None) => s"${e.path}\t$ks"
-          case (_, Some(d)) => s"${e.path}\t$ks\t$d"
-        }
-      }).mkString("\n").getBytes("UTF-8")
-    graft.sources.GraftFs.putIfAbsent(s"$base/_manifests/v$version.txt", body)
-  }
-
-  /** Single-writer commit: CAS that treats losing the race as a bug.
-    * Writers that can legitimately race use q78TryCommit + rebase. */
-  private[graft] def q78Commit(base: String, version: Int,
-      files: Seq[String],
-      stats: Map[String, (Long, Long)] = Map.empty): Unit = {
-    if (!q78TryCommit(base, version, files, stats))
-      throw new IllegalStateException(
-        s"concurrent commit detected: $base v$version already exists " +
-          "(use q78TryCommit + rebase for multi-writer paths)")
-  }
-
-  /** Entry-level single-writer commit (fixture builds). */
-  private[graft] def q78CommitEntries(base: String, version: Int,
-      entries: Seq[ManifestEntry],
-      headers: Seq[(String, String)] = Seq.empty): Unit = {
-    if (!q78TryCommitEntries(base, version, entries, headers))
-      throw new IllegalStateException(
-        s"concurrent commit detected: $base v$version already exists " +
-          "(use q78TryCommitEntries + rebase for multi-writer paths)")
-  }
-
-  /** Latest committed version, from the manifest listing — O(#versions)
-    * driver metadata. */
-  private[graft] def q78Latest(base: String): Int = {
-    val vs = graft.sources.GraftFs.listNames(s"$base/_manifests")
-      .flatMap(n => "^v(\\d+)\\.txt$".r.findFirstMatchIn(n)
-        .map(_.group(1).toInt))
-    if (vs.isEmpty) 0 else vs.max
-  }
-
-  private[graft] def q78Resolve(base: String, version: Int): Seq[String] =
-    q78ResolveStats(base, version).map(_._1)
-
-  /** Manifest entries with their optional key-column (min, max). */
-  private[graft] def q78ResolveStats(base: String,
-      version: Int): Seq[(String, Option[(Long, Long)])] =
-    q78ResolveEntries(base, version).map(e => (e.path, e.stats))
-
-  /** Full manifest entries: (path, stats, deletion vector). */
-  private[graft] def q78ResolveEntries(base: String,
-      version: Int): Seq[ManifestEntry] = {
-    def stats(lo: String, hi: String): Option[(Long, Long)] =
-      if (lo == "-") None else Some((lo.toLong, hi.toLong))
-    graft.sources.GraftFs.readString(s"$base/_manifests/v$version.txt")
-      .split("\n").toSeq.filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { line =>
-        line.split("\t") match {
-          case Array(f, lo, hi) => ManifestEntry(f, stats(lo, hi))
-          case Array(f, lo, hi, d) => ManifestEntry(f, stats(lo, hi), Some(d))
-          case Array(f, lo, hi, d, cs) => ManifestEntry(f, stats(lo, hi),
-            if (d == "-") None else Some(d), decodeColStats(cs))
-          case Array(f, lo, hi, d, cs, pv) => ManifestEntry(f, stats(lo, hi),
-            if (d == "-") None else Some(d), decodeColStats(cs),
-            decodePartValues(pv))
-          case _ => ManifestEntry(line)
-        }
-      }
-  }
-
-  /** A version's header fields (`#key\tvalue` manifest lines). */
-  private[graft] def q78CommitHeaders(base: String,
-      version: Int): Map[String, String] = {
-    graft.sources.GraftFs.readString(s"$base/_manifests/v$version.txt")
-      .split("\n").toSeq.filter(_.startsWith("#"))
-      .flatMap { line =>
-        line.drop(1).split("\t", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
-        }
-      }.toMap
-  }
-
-  /** Commit timestamp (epoch millis): the `#ts` header when the commit
-    * recorded one, else the manifest file's mtime (pre-header manifests
-    * — the fallback keeps TIMESTAMP AS OF total over old tables). */
-  private[graft] def q78CommitTime(base: String, version: Int): Long =
-    q78CommitHeaders(base, version).get("ts").map(_.toLong).getOrElse(
-      graft.sources.GraftFs.mtime(s"$base/_manifests/v$version.txt"))
-
-  /** TIMESTAMP AS OF resolution: the LATEST version committed at or
-    * before `tsMillis` (Delta/Iceberg's timestamp→snapshot rule).
-    * Errors when the timestamp predates the first available commit —
-    * naming the earliest, so the caller can rephrase. O(#versions)
-    * driver metadata. */
-  private[graft] def q78VersionAt(base: String, tsMillis: Long): Int = {
-    val versions = graft.sources.GraftFs.listNames(s"$base/_manifests")
-      .flatMap(n => "^v(\\d+)\\.txt$".r.findFirstMatchIn(n)
-        .map(_.group(1).toInt)).sorted
-    if (versions.isEmpty) throw new IllegalStateException(
-      s"no commits under $base")
-    val stamped = versions.map(v => v -> q78CommitTime(base, v))
-    stamped.filter(_._2 <= tsMillis).map(_._1).maxOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"timestamp $tsMillis predates the table's history: earliest " +
-          s"commit is v${stamped.head._1} at ${stamped.head._2}"))
-  }
-
-  /** Versioned read with stats pruning: only files whose committed
-    * [min, max] intersects [lo, hi] (files committed without stats are
-    * kept — pruning must never be unsound). O(#files) driver metadata;
-    * no data file is opened to make the decision — this is q71's
-    * min/max skipping folded into the snapshot protocol, so a selective
-    * read of ANY version prunes on the stats its commit recorded. */
-  private[graft] def q78ResolvePruned(base: String, version: Int,
-      lo: Long, hi: Long): Seq[String] =
-    q78ResolveStats(base, version).collect {
-      case (f, None) => f
-      case (f, Some((mn, mx))) if mx >= lo && mn <= hi => f
-    }
-
   /** Per-file (min, max) of an INT64 column, read from parquet FOOTERS
     * driver-side — O(#files) metadata I/O, never a data scan; the write
     * path already paid for these stats, a commit just records them. */
@@ -777,16 +529,17 @@ object Extras5 {
     // v1: initial load
     orders.filter($"o_orderkey" % 3 === 0).write.parquet(s"$base/files-v1")
     val a = q78Parts(s"$base/files-v1")
-    q78Commit(base, 1, a)
+    GraftManifest.commitAt(base, 1, a.map(GraftManifest.Entry(_)))
     // v2: append-only commit — v1's files carry over by reference
     orders.filter($"o_orderkey" % 3 === 1).write.parquet(s"$base/files-v2")
     val b = q78Parts(s"$base/files-v2")
-    q78Commit(base, 2, a ++ b)
+    GraftManifest.commitAt(base, 2, (a ++ b).map(GraftManifest.Entry(_)))
     // v3: copy-on-write DELETE of 'F' rows from v1's slice — rewrites
     // only the files that contain hits; the append files are untouched
     orders.filter($"o_orderkey" % 3 === 0 && $"o_orderstatus" =!= "F")
       .write.parquet(s"$base/files-v3")
-    q78Commit(base, 3, q78Parts(s"$base/files-v3") ++ b)
+    GraftManifest.commitAt(base, 3,
+      (q78Parts(s"$base/files-v3") ++ b).map(GraftManifest.Entry(_)))
     base
   }
 
@@ -794,7 +547,7 @@ object Extras5 {
     import spark.implicits._
     val base = q78Table(spark, dir)
     (1 to 3).map { v =>
-      spark.read.parquet(q78Resolve(base, v): _*)
+      spark.read.parquet(GraftManifest.read(base, v).paths: _*)
         .agg(count(lit(1)).as("n_rows"),
           count(when($"o_orderstatus" === "F", 1)).as("n_f_status"),
           sum($"o_totalprice".cast(DecimalType(18, 2)))

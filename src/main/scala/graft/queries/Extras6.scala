@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.sources.GraftManifest
 
 /** Round-13 queries: lakehouse write paths on the q78 snapshot protocol.
   *
@@ -48,7 +49,7 @@ object Extras6 {
   // applies all three branches with one broadcast left join + filter
   // (the q55 single-pass shape), unions the not-matched inserts, and
   // writes; the commit is an atomic manifest swap listing carried ++ new
-  // files (q78TryCommit's exclusive create — under concurrency the swap
+  // files (GraftManifest's exclusive create — under concurrency the swap
   // is a CAS and losers rebase, see cowMergeCommitOcc). Merge cost is
   // proportional to the delta's file FOOTPRINT, not the table size —
   // the whole point of file-level pruning.
@@ -90,7 +91,7 @@ object Extras6 {
       .select($"o_orderkey", $"o_orderstatus", $"o_totalprice".cast(D2).as("price"))
       .write.parquet(s"$base/files-v1")
     val v1Files = parts(s"$base/files-v1")
-    Extras5.q78Commit(base, 1, v1Files)
+    GraftManifest.commitAt(base, 1, v1Files.map(GraftManifest.Entry(_)))
 
     val delta = orders
       .filter($"o_orderkey" % 30 === 0 || $"o_orderkey" % 30 === 1)
@@ -125,7 +126,8 @@ object Extras6 {
           .otherwise($"price").as("price"))
     rewritten.unionByName(inserts).write.parquet(s"$base/files-v2cow")
     val cowNew = parts(s"$base/files-v2cow")
-    Extras5.q78Commit(base, 2, carried ++ cowNew)
+    GraftManifest.commitAt(base, 2,
+      (carried ++ cowNew).map(GraftManifest.Entry(_)))
 
     // ---- MOR: deletion-vector sidecar (every matched key — deletes AND
     // updates supersede the base row) + delta file (updated rows' new
@@ -163,8 +165,8 @@ object Extras6 {
           count(when($"o_orderstatus" === "F", 1)).as("n_f_status"),
           sum($"price").cast(DoubleType).as("sum_price"))
         .withColumn("snapshot", lit(label))
-    val v1 = spark.read.parquet(Extras5.q78Resolve(st.base, 1): _*)
-    val v2cow = spark.read.parquet(Extras5.q78Resolve(st.base, 2): _*)
+    val v1 = spark.read.parquet(GraftManifest.read(st.base, 1).paths: _*)
+    val v2cow = spark.read.parquet(GraftManifest.read(st.base, 2).paths: _*)
     agg(v1, "1_v1")
       .unionByName(agg(v2cow, "2_cow"))
       .unionByName(agg(q88ReadMor(spark, st), "3_mor"))
@@ -239,7 +241,7 @@ object Extras6 {
       .repartition(16, $"o_orderkey")
       .write.parquet(s"$base/files-v1")
     val v1Files = parts(s"$base/files-v1")
-    Extras5.q78Commit(base, 1, v1Files)
+    GraftManifest.commitAt(base, 1, v1Files.map(GraftManifest.Entry(_)))
 
     // PLAN: q58's first-fit over the real listing (metadata DataFrame;
     // the constant part key stands in for the table-partition column a
@@ -277,7 +279,8 @@ object Extras6 {
           .sorted
       }
     val committed = compactionCommitOcc(base,
-      inputs = multi.flatMap(_._2), outputs = compactedFiles,
+      inputs = multi.flatMap(_._2).map(GraftManifest.Entry(_)),
+      outputs = compactedFiles.map(GraftManifest.Entry(_)),
       outDir = s"$base/compact-v2")
     assert(committed.contains(2), s"sole-writer fixture must commit v2, got $committed")
     Q89State(base, v1Files, bins, carried, compactedFiles)
@@ -287,7 +290,7 @@ object Extras6 {
     import spark.implicits._
     val st = q89Build(spark, dir)
     (1 to 2).map { v =>
-      spark.read.parquet(Extras5.q78Resolve(st.base, v): _*)
+      spark.read.parquet(GraftManifest.read(st.base, v).paths: _*)
         .agg(count(lit(1)).as("n_rows"),
           count(when($"o_orderstatus" === "F", 1)).as("n_f_status"),
           sum($"price").cast(DoubleType).as("sum_price"))
@@ -325,7 +328,8 @@ object Extras6 {
       // the sharing that makes q91's reference-counted GC non-trivial
       .repartitionByRange(16, $"o_orderkey")
       .write.parquet(s"$base/files-v1")
-    Extras5.q78Commit(base, 1, parts(s"$base/files-v1"))
+    GraftManifest.commitAt(base, 1,
+      parts(s"$base/files-v1").map(GraftManifest.Entry(_)))
     base
   }
 
@@ -352,10 +356,7 @@ object Extras6 {
     val d = delta.select($"d_key", $"d_op", $"d_status", $"d_price")
     val tProj = spark.read.parquet(cur: _*)
       .select($"o_orderkey", input_file_name().as("f"))
-    val touched = tProj
-      .join(broadcast(d), $"o_orderkey" === $"d_key", "left_semi")
-      .select($"f").distinct().as[String].collect().toSeq
-      .map(dropScheme).sorted
+    val touched = touchedFiles(spark, cur, delta)
     val touchedSet = touched.toSet
     val carried = cur.filterNot(touchedSet)
     val inserts = d.filter($"d_op" === "U")
@@ -376,12 +377,25 @@ object Extras6 {
     (touched, carried, parts(outDir))
   }
 
+  /** The files of `cur` holding a row whose key the delta touches
+    * (driver holds paths only), sorted. */
+  private def touchedFiles(spark: SparkSession, cur: Seq[String],
+      delta: DataFrame): Seq[String] = {
+    import spark.implicits._
+    spark.read.parquet(cur: _*)
+      .select($"o_orderkey", input_file_name().as("f"))
+      .join(broadcast(delta.select($"d_key")), $"o_orderkey" === $"d_key", "left_semi")
+      .select($"f").distinct().as[String].collect().toSeq
+      .map(dropScheme).sorted
+  }
+
   private[graft] def cowMergeCommit(spark: SparkSession, base: String,
       from: Int, delta: DataFrame): Unit = {
-    val cur = Extras5.q78Resolve(base, from)
+    val cur = GraftManifest.read(base, from).paths
     val (_, carried, newFiles) =
       cowApply(spark, cur, delta, s"$base/files-v${from + 1}")
-    Extras5.q78Commit(base, from + 1, carried ++ newFiles)
+    GraftManifest.commitAt(base, from + 1,
+      (carried ++ newFiles).map(GraftManifest.Entry(_)))
   }
 
   /** One optimistic COW merge: outcome of cowMergeCommitOcc for the
@@ -394,76 +408,69 @@ object Extras6 {
 
   /** MERGE with optimistic concurrency on the manifest protocol — the
     * multi-writer commit st21's streaming apply rides per micro-batch
-    * (q88's fixture build stays single-writer by construction). Loop:
-    *  1. read the CURRENT latest version and its file list;
-    *  2. run the COW merge against it (discovery + rewrite);
-    *  3. q78TryCommit(latest+1): the atomic exclusive create is the
-    *     compare-and-swap — success publishes; failure means another
-    *     writer committed first.
-    *  4. On failure, rebase: re-read the new latest, RE-DISCOVER the
-    *     touched set against it. If discovery returns the same file set
-    *     (the winner's commit touched disjoint files — the common case
-    *     for key-partitioned writers), the already-written output is
-    *     still valid: only the carried list is recomputed, and we CAS
-    *     again. If the sets differ (a true conflict: the winner
-    *     rewrote or added files our keys live in), the rewrite reruns
-    *     against the new base — the Delta/Iceberg semantics.
-    * Every attempt writes to a unique outDir, so racing writers never
+    * (q88's fixture build stays single-writer by construction). Each
+    * attempt of `GraftManifest.commit`:
+    *  1. takes the latest snapshot;
+    *  2. with no staged rewrite, runs the COW merge against it
+    *     (discovery + rewrite) and stages the output;
+    *  3. publishes carried ++ new at latest+1 — the atomic exclusive
+    *     create is the compare-and-swap.
+    * After a lost race the next attempt RE-DISCOVERS the touched set
+    * against the new snapshot. If discovery returns the same files and
+    * each still has the identity (path, DV) the rewrite read — the
+    * winner's commit touched disjoint files, the common case for
+    * key-partitioned writers — the staged output is still valid: only
+    * the carried entries (with their stats and DVs) are recomputed. If
+    * not (a true conflict: the winner rewrote, re-DV'd or added files
+    * our keys live in), the staged output is deleted and the rewrite
+    * reruns against the new snapshot — the Delta/Iceberg semantics.
+    * Every rewrite writes to a unique outDir, so racing writers never
     * collide on data files — only on the manifest CAS, by design. */
   private[graft] def cowMergeCommitOcc(spark: SparkSession, base: String,
-      delta: DataFrame, maxAttempts: Int = 10,
-      raceHook: Int => Unit = _ => ()): OccOutcome = {
-    import spark.implicits._
+      delta: DataFrame, raceHook: Int => Unit = _ => ()): OccOutcome = {
     var casLost = 0
     var rewrites = 0
     var conflicting = Seq.empty[String]
-    // one budget bounds ALL CAS attempts — rewrite attempts and salvage
-    // retries alike — so a steady stream of winners cannot spin the
-    // salvage loop forever
-    def tries = rewrites + casLost
-    while (tries < maxAttempts) {
-      val from = Extras5.q78Latest(base)
-      val cur = Extras5.q78Resolve(base, from)
-      val outDir = s"$base/files-occ-${java.util.UUID.randomUUID().toString.take(8)}"
-      val (touched, carried, newFiles) = { rewrites += 1
-        cowApply(spark, cur, delta, outDir) }
-      // test seam: lets a spec interleave a competing writer's commit
-      // inside the window between our read of `from` and our CAS — the
-      // race a real concurrent writer produces nondeterministically
-      raceHook(from)
-      if (Extras5.q78TryCommit(base, from + 1, carried ++ newFiles))
-        return OccOutcome(from + 1, casLost, rewrites, conflicting)
-      // lost the CAS — rebase onto whatever is latest now, possibly
-      // several commits ahead, and salvage the rewrite when the
-      // interleaved commits didn't touch our files
-      var salvaged = true
-      while (salvaged && tries < maxAttempts) {
-        casLost += 1
-        val now = Extras5.q78Latest(base)
-        val newCur = Extras5.q78Resolve(base, now)
-        val d = delta.select($"d_key")
-        val reTouched = spark.read.parquet(newCur: _*)
-          .select($"o_orderkey", input_file_name().as("f"))
-          .join(broadcast(d), $"o_orderkey" === $"d_key", "left_semi")
-          .select($"f").distinct().as[String].collect().toSeq
-          .map(dropScheme).sorted
-        if (reTouched == touched) {
-          val touchedSet = touched.toSet
-          val reCarried = newCur.filterNot(touchedSet)
-          if (Extras5.q78TryCommit(base, now + 1, reCarried ++ newFiles))
-            return OccOutcome(now + 1, casLost, rewrites, conflicting)
-          // raced again with a still-disjoint winner: loop the salvage
-        } else {
-          conflicting = (reTouched.toSet -- touched.toSet).toSeq.sorted
-          salvaged = false // true conflict: fall out to a full redo
+    // the staged rewrite: the files it replaces, their entries as the
+    // rewrite read them, its outDir and its output files
+    case class Rewrite(touched: Seq[String], read: Seq[GraftManifest.Entry],
+        outDir: String, files: Seq[String])
+    var staged: Option[Rewrite] = None
+    // an abandoned rewrite's output is deleted, so lost races never
+    // orphan data files
+    def discard(): Unit = { staged.foreach(st => deleteRecursively(st.outDir)); staged = None }
+    val done = GraftManifest.commit(base, gaveUp = {
+      discard()
+      throw new IllegalStateException(s"cowMergeCommitOcc: gave up after " +
+        s"${GraftManifest.MaxAttempts} attempts on $base")
+    }) { snap =>
+      staged.foreach { st =>
+        val reTouched = touchedFiles(spark, snap.paths, delta)
+        val live = snap.entries.map(_.identity).toSet
+        val changed = st.read.filterNot(e => live(e.identity)).map(_.path)
+        if (reTouched != st.touched || changed.nonEmpty) {
+          conflicting = ((reTouched.toSet -- st.touched) ++ changed).toSeq.sorted
+          discard()
         }
       }
-      // the staged output is abandoned (redo, or budget exhausted):
-      // delete it so lost races never orphan data files
-      deleteRecursively(outDir)
+      if (staged.isEmpty) {
+        val outDir = s"$base/files-occ-${java.util.UUID.randomUUID().toString.take(8)}"
+        rewrites += 1
+        val (touched, _, files) = cowApply(spark, snap.paths, delta, outDir)
+        staged = Some(Rewrite(touched,
+          snap.entries.filter(e => touched.contains(e.path)), outDir, files))
+        // test seam: lets a spec interleave a competing writer's commit
+        // inside the window between our snapshot and our CAS — the race
+        // a real concurrent writer produces nondeterministically
+        raceHook(snap.version)
+      }
+      val st = staged.get
+      val replaced = st.touched.toSet
+      Some(GraftManifest.Publish(
+        snap.entries.filterNot(e => replaced(e.path)) ++ st.files.map(GraftManifest.Entry(_)),
+        onLost = () => casLost += 1))
     }
-    throw new IllegalStateException(
-      s"cowMergeCommitOcc: gave up after $maxAttempts attempts on $base")
+    OccOutcome(done.version, casLost, rewrites, conflicting)
   }
 
   private[graft] def deleteRecursively(dir: String): Unit =
@@ -471,34 +478,26 @@ object Extras6 {
 
   /** Compaction commit with optimistic concurrency (q89's layout
     * rewrite racing real writers): CAS at latest+1; on a lost race, if
-    * every INPUT file is still live in the new latest the compaction is
-    * still valid — rebase the carried list and retry; if any input was
-    * rewritten away by the winner, ABANDON the compaction (delete its
-    * output, commit nothing) — layout maintenance is optional work, so
-    * on conflict it yields to the data writer instead of fighting it
+    * every INPUT entry is still live with the identity (path, DV) the
+    * compaction read, the compaction is still valid — rebase the
+    * carried entries (stats, DVs and tuples intact) and retry; if a
+    * winner rewrote or re-DV'd an input, ABANDON the compaction (delete
+    * its output, commit nothing) — layout maintenance is optional work,
+    * so on conflict it yields to the data writer instead of fighting it
     * (Delta/Iceberg OPTIMIZE semantics). Returns the committed version,
     * or None if abandoned. */
-  private[graft] def compactionCommitOcc(base: String, inputs: Seq[String],
-      outputs: Seq[String], outDir: String,
-      maxAttempts: Int = 10): Option[Int] = {
-    val inputSet = inputs.toSet
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val latest = Extras5.q78Latest(base)
-      val cur = Extras5.q78Resolve(base, latest)
-      if (!inputSet.subsetOf(cur.toSet)) {
-        // a data writer rewrote one of our inputs: the compacted output
-        // is stale — yield
-        deleteRecursively(outDir)
-        return None
-      }
-      val carried = cur.filterNot(inputSet)
-      if (Extras5.q78TryCommit(base, latest + 1, carried ++ outputs))
-        return Some(latest + 1)
+  private[graft] def compactionCommitOcc(base: String,
+      inputs: Seq[GraftManifest.Entry], outputs: Seq[GraftManifest.Entry],
+      outDir: String, headers: Seq[(String, String)] = Seq.empty): Option[Int] = {
+    val inputIds = inputs.map(_.identity).toSet
+    val inputPaths = inputs.map(_.path).toSet
+    val done = GraftManifest.commit(base, gaveUp = deleteRecursively(outDir)) { snap =>
+      if (inputIds.subsetOf(snap.entries.map(_.identity).toSet))
+        Some(GraftManifest.Publish(
+          snap.entries.filterNot(e => inputPaths(e.path)) ++ outputs, headers))
+      else { deleteRecursively(outDir); None }
     }
-    deleteRecursively(outDir)
-    None
+    Some(done.version).filter(_ => done.published)
   }
 
   /** The standard snapshot aggregate used by q88/q89/st21 results. */
@@ -601,12 +600,12 @@ object Extras6 {
     // include deletion-vector sidecars — a DV referenced by a retained
     // manifest is as live as the data file it filters.
     def livePaths(v: Int): Seq[String] =
-      Extras5.q78ResolveEntries(base, v).flatMap(e => e.path +: e.dv.toList)
+      GraftManifest.read(base, v).entries.flatMap(e => e.path +: e.dv.toList)
     val retained = (2 to 3).flatMap(livePaths).toSet
     val expired = livePaths(1)
     val (shared, toDelete) = expired.partition(retained.contains)
     toDelete.foreach(graft.sources.GraftFs.deleteIfExists)
-    graft.sources.GraftFs.deleteIfExists(s"$base/_manifests/v1.txt")
+    GraftManifest.expire(base, 1)
     Q91State(base, toDelete, shared)
   }
 
@@ -619,10 +618,10 @@ object Extras6 {
       // resolve that "succeeds" with nothing is equally unreadable) —
       // so a future failure mode surfaces here as v1Gone=false with the
       // real cause visible, not a confusing hash mismatch downstream
-      try { Extras5.q78Resolve(st.base, 1).isEmpty }
+      try { GraftManifest.read(st.base, 1).paths.isEmpty }
       catch { case scala.util.control.NonFatal(_) => true }
     (2 to 3).map { v =>
-      snapshotAgg(spark, Extras5.q78Resolve(st.base, v), s"v$v")
+      snapshotAgg(spark, GraftManifest.read(st.base, v).paths, s"v$v")
     }.reduce(_ unionByName _)
       .withColumn("expired_unreadable", lit(v1Gone))
       .select($"snapshot", $"n_rows", $"n_f_status", $"sum_price",
@@ -701,8 +700,8 @@ object Extras6 {
   private[queries] def q92Diff(spark: SparkSession, base: String,
       i: Int, j: Int, pruned: Boolean = true): DataFrame = {
     import spark.implicits._
-    val fi = Extras5.q78Resolve(base, i)
-    val fj = Extras5.q78Resolve(base, j)
+    val fi = GraftManifest.read(base, i).paths
+    val fj = GraftManifest.read(base, j).paths
     val (ri, rj) =
       if (pruned) (fi.filterNot(fj.toSet), fj.filterNot(fi.toSet))
       else (fi, fj)
@@ -769,7 +768,7 @@ object Extras6 {
   // publish, no sidecar split-brain), harvested from the parquet
   // FOOTERS the write already paid for — O(#files) metadata I/O, no
   // data scan. A selective read resolves the version THROUGH the stats
-  // (q78ResolvePruned): only files whose [min,max] intersects the
+  // (Snapshot.pruned): only files whose [min,max] intersects the
   // predicate range are opened; files committed without stats are
   // always kept, so pruning is never unsound.
   //
@@ -809,7 +808,8 @@ object Extras6 {
       .sortBy(_._1)
       .flatMap { case (_, p, _) => parts(p) }
     val stats = Extras5.parquetKeyStats(files, "o_orderkey")
-    Extras5.q78Commit(base, 1, files, stats)
+    GraftManifest.commitAt(base, 1,
+      files.map(f => GraftManifest.Entry(f, stats.get(f))))
     val (lo, hi) = (mn + span * 3 / 16, mn + span * 5 / 16)
     Q94State(base, lo, hi, files.size)
   }
@@ -817,7 +817,7 @@ object Extras6 {
   def q94(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val st = q94Build(spark, dir)
-    val pruned = Extras5.q78ResolvePruned(st.base, 1, st.lo, st.hi)
+    val pruned = GraftManifest.read(st.base, 1).pruned(st.lo, st.hi)
     spark.read.parquet(pruned: _*)
       .filter($"o_orderkey".between(st.lo, st.hi))
       .agg(count(lit(1)).as("n_rows"),
@@ -874,7 +874,8 @@ object Extras6 {
       .repartitionByRange(8, $"o_orderkey")
       .write.parquet(s"$base/files-v1")
     val v1 = parts(s"$base/files-v1")
-    Extras5.q78Commit(base, 1, v1, Extras5.parquetKeyStats(v1, "o_orderkey"))
+    val stats = Extras5.parquetKeyStats(v1, "o_orderkey")
+    GraftManifest.commitAt(base, 1, v1.map(f => GraftManifest.Entry(f, stats.get(f))))
     base
   }
 

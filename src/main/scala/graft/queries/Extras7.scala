@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.sources.{GraftDv, GraftParquet}
+import graft.sources.{GraftDv, GraftManifest, GraftParquet}
 
 /** Round-15 queries: merge-on-read DELETE via positional deletion
   * vectors, DV purge (OPTIMIZE), TIMESTAMP AS OF time travel, and
@@ -80,7 +80,7 @@ object Extras7 {
     * GraftDvRowReader skips by), and old DVs explode to (file, pos)
     * executor-side. */
   private[queries] def liveRowsWithPos(spark: SparkSession,
-      entries: Seq[Extras5.ManifestEntry]): DataFrame = {
+      entries: Seq[GraftManifest.Entry]): DataFrame = {
     import spark.implicits._
     // `file` is the RAW metadata column (constant per split, zero
     // per-row cost, whole-stage codegen'd); the manifest side joins in
@@ -107,7 +107,7 @@ object Extras7 {
     * the merged DV. Returns metadata-form file → new sidecar path,
     * O(#touched files) driver metadata. */
   private def writeDvSidecars(spark: SparkSession, base: String,
-      entries: Seq[Extras5.ManifestEntry],
+      entries: Seq[GraftManifest.Entry],
       positions: DataFrame): Map[String, String] = {
     import spark.implicits._
     val oldDvByPath = entries.collect {
@@ -138,49 +138,63 @@ object Extras7 {
     * new snapshot. Returns the committed version (or the current one if
     * nothing matched — an empty delete is a no-op, not a commit). */
   private[graft] def deleteMorOcc(spark: SparkSession, base: String,
-      predicate: Column, tsMillis: Option[Long] = None,
-      maxAttempts: Int = 10): Int = {
-    import spark.implicits._
-    val headers = tsMillis.map(t => "ts" -> t.toString).toSeq
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val from = Extras5.q78Latest(base)
-      val entries = Extras5.q78ResolveEntries(base, from)
-      if (entries.isEmpty) return from // empty table: nothing to delete
-      val newDvs = writeDvSidecars(spark, base, entries,
-        liveRowsWithPos(spark, entries).filter(predicate))
-      if (newDvs.isEmpty) return from
-      // every sidecar must attach to a manifest entry — a normalization
-      // regression would otherwise commit a version with the DELETE
-      // silently dropped (orphan sidecars, no rows removed)
-      val entryPaths = entries.map(e => metadataPathOf(e.path)).toSet
-      require(newDvs.keySet.subsetOf(entryPaths),
-        s"deleteMorOcc: computed DVs for unknown files " +
-          s"${newDvs.keySet -- entryPaths} — path normalization bug")
-      val touched = entries.filter(e => newDvs.contains(metadataPathOf(e.path)))
-      // CAS loop: rebase while every touched identity is stable
-      var stable = true
-      while (stable && attempts < maxAttempts) {
-        val now = Extras5.q78Latest(base)
-        val cur = Extras5.q78ResolveEntries(base, now)
-        val curByPath = cur.map(e => e.path -> e).toMap
-        stable = touched.forall(e =>
-          curByPath.get(e.path).exists(_.identity == e.identity))
-        if (stable) {
-          val updated = cur.map(e =>
-            newDvs.get(metadataPathOf(e.path)).fold(e)(d => e.copy(dv = Some(d))))
-          if (Extras5.q78TryCommitEntries(base, now + 1, updated, headers))
-            return now + 1
-          attempts += 1 // lost the CAS: re-check identities and retry
+      predicate: Column, tsMillis: Option[Long] = None): Int =
+    morCommitOcc(base, "deleteMorOcc", tsMillis) { entries =>
+      if (entries.isEmpty) None // empty table: nothing to delete
+      else {
+        val newDvs = writeDvSidecars(spark, base, entries,
+          liveRowsWithPos(spark, entries).filter(predicate))
+        if (newDvs.isEmpty) None else Some(MorStage(newDvs, Seq.empty, None))
+      }
+    }
+
+  /** A merge-on-read commit's staged work: fresh DV sidecars
+    * (metadata-form file → sidecar), appended entries, and their dir. */
+  private case class MorStage(newDvs: Map[String, String],
+      appended: Seq[GraftManifest.Entry], outDir: Option[String]) {
+    def discard(): Unit = {
+      newDvs.values.foreach(graft.sources.GraftFs.deleteIfExists)
+      outDir.foreach(Extras6.deleteRecursively)
+    }
+  }
+
+  /** The commit loop deleteMorOcc and mergeMorOcc share: `stage`
+    * computes the DVs (and appends) against a snapshot's entries (None:
+    * nothing to commit — returns that snapshot's version). A lost race
+    * rebases while every touched file keeps the (path, dv) identity the
+    * positions were computed against; otherwise the stale stage is
+    * deleted and recomputed against the new snapshot. */
+  private def morCommitOcc(base: String, what: String, tsMillis: Option[Long])(
+      stage: Seq[GraftManifest.Entry] => Option[MorStage]): Int = {
+    var staged: Option[(Seq[GraftManifest.Entry], MorStage)] = None
+    GraftManifest.commit(base, gaveUp = {
+      staged.foreach(_._2.discard())
+      throw new IllegalStateException(
+        s"$what: gave up after ${GraftManifest.MaxAttempts} attempts on $base")
+    }) { snap =>
+      val byPath = snap.entries.map(e => e.path -> e).toMap
+      val stable = staged.exists(_._1.forall(e =>
+        byPath.get(e.path).exists(_.identity == e.identity)))
+      if (!stable) {
+        staged.foreach(_._2.discard())
+        staged = stage(snap.entries).map { st =>
+          // every sidecar must attach to a manifest entry — a
+          // normalization regression would otherwise commit a version
+          // with the DELETE silently dropped (orphan sidecars, no rows
+          // removed)
+          val entryPaths = snap.entries.map(e => metadataPathOf(e.path)).toSet
+          require(st.newDvs.keySet.subsetOf(entryPaths),
+            s"$what: computed DVs for unknown files " +
+              s"${st.newDvs.keySet -- entryPaths} — path normalization bug")
+          (snap.entries.filter(e => st.newDvs.contains(metadataPathOf(e.path))), st)
         }
       }
-      // a touched file was rewritten or re-DV'd: the computed positions
-      // are stale — drop the written sidecars and redo from scratch
-      newDvs.values.foreach(graft.sources.GraftFs.deleteIfExists)
-    }
-    throw new IllegalStateException(
-      s"deleteMorOcc: gave up after $maxAttempts attempts on $base")
+      staged.map { case (_, st) =>
+        GraftManifest.Publish(snap.entries.map(e =>
+          st.newDvs.get(metadataPathOf(e.path)).fold(e)(d => e.copy(dv = Some(d)))) ++
+          st.appended, tsMillis.map(t => "ts" -> t.toString).toSeq)
+      }
+    }.version
   }
 
   /** MERGE-ON-READ UPSERT, protocol-native: ONE commit carries (a)
@@ -205,63 +219,27 @@ object Extras7 {
   private[graft] def mergeMorOcc(spark: SparkSession, base: String,
       delta: DataFrame,
       keyColumn: String = graft.sources.GraftCatalog.StatsColumn,
-      opColumn: String = "d_op", tsMillis: Option[Long] = None,
-      maxAttempts: Int = 10): Int = {
-    import spark.implicits._
+      opColumn: String = "d_op", tsMillis: Option[Long] = None): Int = {
     require(delta.columns.contains(keyColumn),
       s"mergeMorOcc: delta lacks the merge key column '$keyColumn'")
     require(delta.columns.contains(opColumn),
       s"mergeMorOcc: delta lacks the op column '$opColumn'")
-    val headers = tsMillis.map(t => "ts" -> t.toString).toSeq
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val from = Extras5.q78Latest(base)
-      val entries = Extras5.q78ResolveEntries(base, from)
-      val live = if (entries.isEmpty) null
-        else liveRowsWithPos(spark, entries)
+    morCommitOcc(base, "mergeMorOcc", tsMillis) { entries =>
       // DV every live row the delta's keys touch (updates AND deletes
       // supersede the base row)
-      val newDvs = if (live == null) Map.empty[String, String]
-        else writeDvSidecars(spark, base, entries, live
+      val newDvs = if (entries.isEmpty) Map.empty[String, String]
+        else writeDvSidecars(spark, base, entries, liveRowsWithPos(spark, entries)
           .join(delta.select(col(keyColumn)), Seq(keyColumn), "left_semi"))
       // appended rows = every non-delete delta row (matched → the
       // update's new values; unmatched → the insert). Delete rows of
       // unmatched keys are no-ops by the same arithmetic.
       val outDir = s"$base/files-mor-${java.util.UUID.randomUUID().toString.take(8)}"
-      val appended = delta.filter(col(opColumn) =!= "D").drop(opColumn)
-      appended.write.parquet(outDir)
+      delta.filter(col(opColumn) =!= "D").drop(opColumn).write.parquet(outDir)
       val newFiles = parts(outDir)
       val stats = Extras5.parquetKeyStats(newFiles, keyColumn)
-      val newEntries = newFiles.map(f => Extras5.ManifestEntry(f, stats.get(f)))
-      // same loud guard as deleteMorOcc: a prediction/normalization
-      // regression must abort, never silently drop superseding DVs
-      val entryPaths = entries.map(e => metadataPathOf(e.path)).toSet
-      require(newDvs.keySet.subsetOf(entryPaths),
-        s"mergeMorOcc: computed DVs for unknown files " +
-          s"${newDvs.keySet -- entryPaths} — path normalization bug")
-      val touched = entries.filter(e => newDvs.contains(metadataPathOf(e.path)))
-      var stable = true
-      while (stable && attempts < maxAttempts) {
-        val now = Extras5.q78Latest(base)
-        val cur = Extras5.q78ResolveEntries(base, now)
-        val curByPath = cur.map(e => e.path -> e).toMap
-        stable = touched.forall(e =>
-          curByPath.get(e.path).exists(_.identity == e.identity))
-        if (stable) {
-          val updated = cur.map(e =>
-            newDvs.get(metadataPathOf(e.path)).fold(e)(d => e.copy(dv = Some(d))))
-          if (Extras5.q78TryCommitEntries(base, now + 1,
-              updated ++ newEntries, headers))
-            return now + 1
-          attempts += 1
-        }
-      }
-      newDvs.values.foreach(graft.sources.GraftFs.deleteIfExists)
-      Extras6.deleteRecursively(outDir)
+      Some(MorStage(newDvs, newFiles.map(f => GraftManifest.Entry(f, stats.get(f))),
+        Some(outDir)))
     }
-    throw new IllegalStateException(
-      s"mergeMorOcc: gave up after $maxAttempts attempts on $base")
   }
 
   /** PURGE (OPTIMIZE on DV'd files): rewrites every file carrying a
@@ -272,14 +250,12 @@ object Extras7 {
     * rather than fight. Returns the committed version, or Some(current)
     * when there was nothing to purge. */
   private[graft] def purgeDv(spark: SparkSession, base: String,
-      statsColumn: Option[String] = None, tsMillis: Option[Long] = None,
-      maxAttempts: Int = 10): Option[Int] = {
+      statsColumn: Option[String] = None,
+      tsMillis: Option[Long] = None): Option[Int] = {
     import spark.implicits._
-    val headers = tsMillis.map(t => "ts" -> t.toString).toSeq
-    val from = Extras5.q78Latest(base)
-    val entries = Extras5.q78ResolveEntries(base, from)
-    val dvd = entries.filter(_.dv.isDefined)
-    if (dvd.isEmpty) return Some(from)
+    val current = GraftManifest.resolve(base)
+    val dvd = current.entries.filter(_.dv.isDefined)
+    if (dvd.isEmpty) return Some(current.version)
     val outDir = s"$base/files-purge-${java.util.UUID.randomUUID().toString.take(8)}"
     val dvPairs = spark.createDataset(
         dvd.map(e => (metadataPathOf(e.path), e.dv.get)))
@@ -299,7 +275,7 @@ object Extras7 {
       .withColumn("file", col("_metadata.file_path"))
       .withColumn("pos", col("_metadata.row_index"))
       .join(dvPairs, Seq("file", "pos"), "left_anti")
-    val groups: Seq[(Map[String, String], Seq[Extras5.ManifestEntry])] =
+    val groups: Seq[(Map[String, String], Seq[GraftManifest.Entry])] =
       if (dvd.forall(_.partValues.isEmpty)) Seq.empty
       else dvd.groupBy(_.partValues).toSeq
         .sortBy(_._1.toSeq.sorted.mkString(" "))
@@ -344,27 +320,12 @@ object Extras7 {
       groups.zipWithIndex.flatMap { case ((tuple, _), i) =>
         outByGrp.getOrElse(i, Seq.empty).map(_ -> tuple)
       }.toMap
-    val newEntries = outputs.map(f => Extras5.ManifestEntry(f, stats.get(f),
+    val newEntries = outputs.map(f => GraftManifest.Entry(f, stats.get(f),
       partValues = tupleOf.getOrElse(f, Map.empty)))
-    val dvdIds = dvd.map(_.identity).toSet
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val now = Extras5.q78Latest(base)
-      val cur = Extras5.q78ResolveEntries(base, now)
-      if (!dvdIds.subsetOf(cur.map(_.identity).toSet)) {
-        // a data writer touched an input (rewrite or new DV): yield
-        Extras6.deleteRecursively(outDir)
-        return None
-      }
-      val dvdPaths = dvd.map(_.path).toSet
-      val carried = cur.filterNot(e => dvdPaths(e.path))
-      if (Extras5.q78TryCommitEntries(base, now + 1,
-          carried ++ newEntries, headers))
-        return Some(now + 1)
-    }
-    Extras6.deleteRecursively(outDir)
-    None
+    // a data writer that touched an input (rewrite or new DV) wins:
+    // the purge yields exactly like a compaction
+    Extras6.compactionCommitOcc(base, dvd, newEntries, outDir,
+      tsMillis.map(t => "ts" -> t.toString).toSeq)
   }
 
   /** RESTORE to `toVersion`: one more commit whose entry list is the
@@ -372,19 +333,14 @@ object Extras7 {
     * (including those being rolled back over) stays readable. Appends
     * never conflict; the CAS just rebases the version number. */
   private[graft] def restoreVersion(base: String, toVersion: Int,
-      tsMillis: Option[Long] = None, maxAttempts: Int = 10): Int = {
-    val entries = Extras5.q78ResolveEntries(base, toVersion)
+      tsMillis: Option[Long] = None): Int = {
+    val entries = GraftManifest.read(base, toVersion).entries
     val headers = tsMillis.map(t => "ts" -> t.toString).toSeq ++
       Seq("restore" -> toVersion.toString)
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val now = Extras5.q78Latest(base)
-      if (Extras5.q78TryCommitEntries(base, now + 1, entries, headers))
-        return now + 1
-    }
-    throw new IllegalStateException(
-      s"restoreVersion: gave up after $maxAttempts attempts on $base")
+    GraftManifest.commit(base, gaveUp = throw new IllegalStateException(
+        s"restoreVersion: gave up after ${GraftManifest.MaxAttempts} attempts on $base")) {
+      _ => Some(GraftManifest.Publish(entries, headers))
+    }.version
   }
 
   // ---------------------------------------------------------------------
@@ -414,8 +370,8 @@ object Extras7 {
       .write.parquet(s"$base/files-v1")
     val v1 = parts(s"$base/files-v1")
     val v1Stats = Extras5.parquetKeyStats(v1, "o_orderkey")
-    Extras5.q78CommitEntries(base, 1,
-      v1.map(f => Extras5.ManifestEntry(f, v1Stats.get(f))))
+    GraftManifest.commitAt(base, 1,
+      v1.map(f => GraftManifest.Entry(f, v1Stats.get(f))))
     deleteMorOcc(spark, base,
       col("o_orderstatus") === "F" && col("o_orderkey") % 2 === 0)
     deleteMorOcc(spark, base,
@@ -499,14 +455,14 @@ object Extras7 {
       parts(s"$base/$out")
     }
     val f1 = slice(0, "files-v1")
-    Extras5.q78TryCommitEntries(base, 1, f1.map(Extras5.ManifestEntry(_)),
+    GraftManifest.publish(base, 1, f1.map(GraftManifest.Entry(_)),
       Seq("ts" -> q97Ts(0).toString))
     val f2 = slice(1, "files-v2")
-    Extras5.q78TryCommitEntries(base, 2, (f1 ++ f2).map(Extras5.ManifestEntry(_)),
+    GraftManifest.publish(base, 2, (f1 ++ f2).map(GraftManifest.Entry(_)),
       Seq("ts" -> q97Ts(2).toString))
     val f3 = slice(2, "files-v3")
-    Extras5.q78TryCommitEntries(base, 3,
-      (f1 ++ f2 ++ f3).map(Extras5.ManifestEntry(_)),
+    GraftManifest.publish(base, 3,
+      (f1 ++ f2 ++ f3).map(GraftManifest.Entry(_)),
       Seq("ts" -> q97Ts(4).toString))
     base
   }
@@ -562,9 +518,10 @@ object Extras7 {
       .select($"o_orderkey", $"o_orderstatus", $"o_totalprice".cast(D2).as("price"))
     orders.filter($"o_orderkey" % 3 === 0).write.parquet(s"$base/files-v1")
     val f1 = parts(s"$base/files-v1")
-    Extras5.q78Commit(base, 1, f1)
+    GraftManifest.commitAt(base, 1, f1.map(GraftManifest.Entry(_)))
     orders.filter($"o_orderkey" % 3 === 1).write.parquet(s"$base/files-v2")
-    Extras5.q78Commit(base, 2, f1 ++ parts(s"$base/files-v2"))
+    GraftManifest.commitAt(base, 2,
+      (f1 ++ parts(s"$base/files-v2")).map(GraftManifest.Entry(_)))
     // v3 = restore THROUGH THE SQL BOUNDARY (CALL graft.system.restore —
     // the r16 procedure surface; it delegates to restoreVersion, so the
     // commit is byte-identical to the API path the spec pins)
@@ -632,8 +589,8 @@ object Extras7 {
       .write.parquet(s"$base/files-v1")
     val v1 = parts(s"$base/files-v1")
     val stats = Extras5.parquetKeyStats(v1, "o_orderkey")
-    Extras5.q78CommitEntries(base, 1,
-      v1.map(f => Extras5.ManifestEntry(f, stats.get(f))))
+    GraftManifest.commitAt(base, 1,
+      v1.map(f => GraftManifest.Entry(f, stats.get(f))))
     // generic delta: the table's own columns + a d_op verb column
     val delta = orders
       .filter($"o_orderkey" % 15 <= 1)
@@ -709,11 +666,11 @@ object Extras7 {
       parts(s"$base/$out")
     }
     val f1 = slice(0, "files-v1")
-    Extras5.q78TryCommitEntries(base, 1, f1.map(Extras5.ManifestEntry(_)),
+    GraftManifest.publish(base, 1, f1.map(GraftManifest.Entry(_)),
       Seq("ts" -> q97Ts(0).toString))
     val f2 = slice(1, "files-v2")
-    Extras5.q78TryCommitEntries(base, 2,
-      (f1 ++ f2).map(Extras5.ManifestEntry(_)),
+    GraftManifest.publish(base, 2,
+      (f1 ++ f2).map(GraftManifest.Entry(_)),
       Seq("ts" -> q97Ts(2).toString))
     deleteMorOcc(spark, base,
       col("o_orderkey") % 6 === 0, tsMillis = Some(q97Ts(4)))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.sources.GraftFs
+import graft.sources.{GraftFs, GraftManifest}
 
 /** Round-16 queries: the MAINTENANCE verbs surfaced at the SQL
   * boundary as DSv2 stored procedures (the r15 judge's item 4 — a user
@@ -75,7 +75,7 @@ object Extras8 {
     require(validTagName(name),
       s"tag name must be non-numeric and match [A-Za-z0-9._-]+ " +
         s"(got '$name')")
-    Extras5.q78ResolveEntries(base, version) // throws if unresolvable
+    GraftManifest.read(base, version) // throws if unresolvable
     if (!GraftFs.putIfAbsent(s"$base/_refs/$name.txt",
         version.toString.getBytes("UTF-8")))
       throw new IllegalStateException(
@@ -116,9 +116,7 @@ object Extras8 {
     * what HISTORY resolves, not what the table currently is. */
   private[graft] def vacuumRetain(base: String,
       retainFrom: Int): (Long, Long) = {
-    val versions = GraftFs.listNames(s"$base/_manifests")
-      .flatMap(n => "^v(\\d+)\\.txt$".r.findFirstMatchIn(n)
-        .map(_.group(1).toInt)).sorted
+    val versions = GraftManifest.versions(base)
     val tagged = tags(base).values.toSet
     // a floor above the CURRENT version is refused outright (r16
     // ADVICE: previously a tagged older version satisfied the
@@ -139,22 +137,22 @@ object Extras8 {
     // schema file AND its propset file (content-addressed — several
     // versions usually share one): all reference-counted identically
     def refs(v: Int): Seq[String] = {
-      val headers = Extras5.q78CommitHeaders(base, v)
-      Extras5.q78ResolveEntries(base, v).flatMap(e => e.path +: e.dv.toList) ++
-        graft.sources.GraftSchemas.refOf(base, headers).toList ++
-        graft.sources.GraftProps.refOf(base, headers).toList
+      val snap = GraftManifest.read(base, v)
+      snap.entries.flatMap(e => e.path +: e.dv.toList) ++
+        graft.sources.GraftSchemas.refOf(base, snap.headers).toList ++
+        graft.sources.GraftProps.refOf(base, snap.headers).toList
     }
     val live = retained.flatMap(refs).toSet
     val dead = expired.flatMap(refs).distinct.filterNot(live)
     dead.foreach(GraftFs.deleteIfExists)
-    expired.foreach(v => GraftFs.deleteIfExists(s"$base/_manifests/v$v.txt"))
+    expired.foreach(GraftManifest.expire(base, _))
     (dead.size.toLong, expired.size.toLong)
   }
 
   /** TIME-BASED vacuum (r18 — the r17 judge's item 6; Delta's `VACUUM
     * ... RETAIN n HOURS` shape): keeps every version needed to serve
     * any TIMESTAMP AS OF within the last `hours` — the floor is the
-    * snapshot current AT the cutoff instant (q78VersionAt over the
+    * snapshot current AT the cutoff instant (GraftManifest.versionAt over the
     * `#ts` headers), everything strictly older expires through the
     * same reference-counted, tag-protected vacuumRetain. `nowMillis`
     * is injectable for deterministic specs. A cutoff predating the
@@ -164,7 +162,7 @@ object Extras8 {
     require(hours >= 0, s"retain_hours must be non-negative, got $hours")
     val cutoff = nowMillis - hours * 3600000L
     val floor =
-      try Extras5.q78VersionAt(base, cutoff)
+      try GraftManifest.versionAt(base, cutoff)
       catch { case _: IllegalArgumentException => return (0L, 0L) }
     vacuumRetain(base, floor)
   }
@@ -189,10 +187,10 @@ object Extras8 {
     * reconciliation (footer metadata) makes a silently-missed bin tag
     * impossible to commit. */
   private[graft] def compactSmallFiles(spark: SparkSession, base: String,
-      targetBytes: Long, maxAttempts: Int = 10): Option[Int] = {
+      targetBytes: Long): Option[Int] = {
     import spark.implicits._
-    val from = Extras5.q78Latest(base)
-    val entries = Extras5.q78ResolveEntries(base, from)
+    val current = GraftManifest.resolve(base)
+    val entries = current.entries
     val lens = GraftFs.lengths(entries.map(_.path))
     val candidates = entries.filter(e =>
       e.dv.isEmpty && lens(e.path) < targetBytes).sortBy(_.path)
@@ -202,10 +200,10 @@ object Extras8 {
     // tuple (unpartitioned tables are one all-of-it group), first-fit
     // within each group, and each output carries its group's tuple
     val groups = candidates.groupBy(_.partValues).toSeq
-      .sortBy(_._1.toSeq.sorted.mkString(" "))
+      .sortBy(_._1.toSeq.sorted.mkString("\u0000"))
     val bins = scala.collection.mutable.ArrayBuffer[
       (Map[String, String],
-        scala.collection.mutable.ArrayBuffer[Extras5.ManifestEntry])]()
+        scala.collection.mutable.ArrayBuffer[GraftManifest.Entry])]()
     groups.foreach { case (tuple, es) =>
       var binBytes = 0L
       var open = false
@@ -220,7 +218,7 @@ object Extras8 {
     }
     val multi = bins.filter(_._2.size > 1)
       .map { case (t, es) => (t, es.toSeq) }.toSeq
-    if (multi.isEmpty) return Some(from)
+    if (multi.isEmpty) return Some(current.version)
     val outDir = s"$base/compact-${java.util.UUID.randomUUID().toString.take(8)}"
     // ONE job: broadcast (metadata-form path → bin id), tag, shuffle by
     // bin, one file per bin directory
@@ -271,28 +269,12 @@ object Extras8 {
       }.toMap
       // the bin's tuple rides onto the output: compaction never breaks
       // partition attribution
-      Extras5.ManifestEntry(outByBin(i), stats, colStats = colStats,
+      GraftManifest.Entry(outByBin(i), stats, colStats = colStats,
         partValues = tuple)
     }
-    val inputPaths = multi.flatMap(_._2).map(_.path).toSet
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val latest = Extras5.q78Latest(base)
-      val cur = Extras5.q78ResolveEntries(base, latest)
-      if (!inputPaths.subsetOf(cur.map(_.path).toSet) ||
-          cur.exists(e => inputPaths(e.path) && e.dv.isDefined)) {
-        // an input was rewritten away or DV'd since planning: the
-        // compacted output is stale — yield to the data writer
-        Extras6.deleteRecursively(outDir)
-        return None
-      }
-      val carried = cur.filterNot(e => inputPaths(e.path))
-      if (Extras5.q78TryCommitEntries(base, latest + 1, carried ++ outputs))
-        return Some(latest + 1)
-    }
-    Extras6.deleteRecursively(outDir)
-    None
+    // an input rewritten away or DV'd since planning makes the
+    // compacted output stale — the commit yields to the data writer
+    Extras6.compactionCommitOcc(base, multi.flatMap(_._2), outputs, outDir)
   }
 
   /** OPTIMIZE ZORDER (r18 — the r17 judge's item 8): rewrites the live
@@ -317,15 +299,14 @@ object Extras8 {
     * can run incrementally, exactly Iceberg's rewrite-file-groups
     * contract. */
   private[graft] def zorderRewrite(spark: SparkSession, base: String,
-      zcols: Seq[String], statsCols: Seq[String], targetBytes: Long,
-      maxAttempts: Int = 10): Option[Int] = {
+      zcols: Seq[String], statsCols: Seq[String],
+      targetBytes: Long): Option[Int] = {
     import spark.implicits._
     require(zcols.nonEmpty && zcols.size <= 4,
       s"zorder takes 1-4 columns, got ${zcols.mkString(", ")}")
-    val from = Extras5.q78Latest(base)
-    val entries = Extras5.q78ResolveEntries(base, from)
-    val candidates = entries.filter(_.dv.isEmpty)
-    if (candidates.isEmpty) return Some(from)
+    val current = GraftManifest.resolve(base)
+    val candidates = current.entries.filter(_.dv.isEmpty)
+    if (candidates.isEmpty) return Some(current.version)
     val lens = GraftFs.lengths(candidates.map(_.path))
     val groups = candidates.groupBy(_.partValues).toSeq
       .sortBy(_._1.toSeq.sorted.mkString(" "))
@@ -372,7 +353,7 @@ object Extras8 {
       val byCol: Map[String, Map[String, (Long, Long)]] =
         statsCols.map(c => c -> Extras5.parquetKeyStats(outs, c)).toMap
       outs.map { f =>
-        Extras5.ManifestEntry(f,
+        GraftManifest.Entry(f,
           statsCols.headOption.flatMap(byCol(_).get(f)),
           colStats = statsCols.flatMap(c => byCol(c).get(f).map(c -> _)).toMap,
           partValues = tuple)
@@ -389,23 +370,7 @@ object Extras8 {
         s"zorderRewrite: $outRows output rows from $inRows input rows — " +
           "aborted before commit")
     }
-    val inputPaths = candidates.map(_.path).toSet
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val latest = Extras5.q78Latest(base)
-      val cur = Extras5.q78ResolveEntries(base, latest)
-      if (!inputPaths.subsetOf(cur.map(_.path).toSet) ||
-          cur.exists(e => inputPaths(e.path) && e.dv.isDefined)) {
-        Extras6.deleteRecursively(outDir)
-        return None
-      }
-      val carried = cur.filterNot(e => inputPaths(e.path))
-      if (Extras5.q78TryCommitEntries(base, latest + 1, carried ++ outputs))
-        return Some(latest + 1)
-    }
-    Extras6.deleteRecursively(outDir)
-    None
+    Extras6.compactionCommitOcc(base, candidates, outputs, outDir)
   }
 
   // ---------------------------------------------------------------------
@@ -436,8 +401,8 @@ object Extras8 {
       .write.parquet(s"$base/files-v1")
     val v1 = parts(s"$base/files-v1")
     val stats = Extras5.parquetKeyStats(v1, "o_orderkey")
-    Extras5.q78CommitEntries(base, 1,
-      v1.map(f => Extras5.ManifestEntry(f, stats.get(f))))
+    GraftManifest.commitAt(base, 1,
+      v1.map(f => GraftManifest.Entry(f, stats.get(f))))
     val name = s"mx_${java.util.UUID.randomUUID().toString.take(8)}"
     graft.sources.GraftCatalog.register(name, base)
     // v2: deletion vectors
@@ -461,7 +426,7 @@ object Extras8 {
     import spark.implicits._
     val (name, base) = q104Build(spark, dir)
     val expiredUnreadable =
-      try { Extras5.q78Resolve(base, 2).isEmpty }
+      try { GraftManifest.read(base, 2).paths.isEmpty }
       catch { case scala.util.control.NonFatal(_) => true }
     def agg(fromClause: String, label: String): DataFrame =
       spark.sql(s"SELECT * FROM graft.$name $fromClause")
@@ -599,8 +564,8 @@ object Extras8 {
       .write.parquet(s"$base/files-v1")
     val v1 = parts(s"$base/files-v1")
     val stats = Extras5.parquetKeyStats(v1, "o_orderkey")
-    Extras5.q78CommitEntries(base, 1,
-      v1.map(f => Extras5.ManifestEntry(f, stats.get(f))))
+    GraftManifest.commitAt(base, 1,
+      v1.map(f => GraftManifest.Entry(f, stats.get(f))))
     val name = s"tg_${java.util.UUID.randomUUID().toString.take(8)}"
     graft.sources.GraftCatalog.register(name, base)
     spark.sql(s"CALL graft.system.create_tag('$name', 'initial', 1)")
@@ -618,7 +583,7 @@ object Extras8 {
     import spark.implicits._
     val (name, base) = q106Build(spark, dir)
     val v2Gone =
-      try { Extras5.q78Resolve(base, 2).isEmpty }
+      try { GraftManifest.read(base, 2).paths.isEmpty }
       catch { case scala.util.control.NonFatal(_) => true }
     def agg(fromClause: String, label: String): DataFrame =
       spark.sql(s"SELECT * FROM graft.$name $fromClause")
@@ -694,8 +659,8 @@ object Extras8 {
       .flatMap { case (_, p, _) => parts(p) }
     val keyStats = Extras5.parquetKeyStats(files, "o_orderkey")
     val custStats = Extras5.parquetKeyStats(files, "o_custkey")
-    Extras5.q78CommitEntries(base, 1, files.map { f =>
-      Extras5.ManifestEntry(f, keyStats.get(f),
+    GraftManifest.commitAt(base, 1, files.map { f =>
+      GraftManifest.Entry(f, keyStats.get(f),
         colStats = (keyStats.get(f).map("o_orderkey" -> _) ++
           custStats.get(f).map("o_custkey" -> _)).toMap)
     })
@@ -796,7 +761,7 @@ object Extras8 {
     import spark.implicits._
     val (name, base) = q108Build(spark, dir)
     val nFiles =
-      Extras5.q78ResolveEntries(base, Extras5.q78Latest(base)).size.toLong
+      GraftManifest.resolve(base).entries.size.toLong
     def agg(df: DataFrame, label: String): DataFrame = {
       val opened = graft.sources.GraftCatalog.scannedFileCount(df)
         .getOrElse(-1).toLong
@@ -921,7 +886,7 @@ object Extras8 {
   def q110(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (name, base) = q110Build(spark, dir)
-    val nVersions = Extras5.q78Latest(base).toLong
+    val nVersions = GraftManifest.latest(base).toLong
     def cnt(v: Int): Long =
       spark.sql(s"SELECT COUNT(*) FROM graft.$name VERSION AS OF $v")
         .head().getLong(0)
@@ -984,8 +949,8 @@ object Extras8 {
       .flatMap { case (_, p, _) => parts(p) }
     val pkStats = Extras5.parquetKeyStats(files, "pk")
     val skStats = Extras5.parquetKeyStats(files, "sk")
-    Extras5.q78CommitEntries(base, 1, files.map { f =>
-      Extras5.ManifestEntry(f, pkStats.get(f),
+    GraftManifest.commitAt(base, 1, files.map { f =>
+      GraftManifest.Entry(f, pkStats.get(f),
         colStats = (pkStats.get(f).map("pk" -> _) ++
           skStats.get(f).map("sk" -> _)).toMap)
     })
@@ -1017,7 +982,7 @@ object Extras8 {
     // total bytes / 64 → the rewrite re-bins into ~the same file count,
     // so the comparison is clustering, not compaction
     val total = graft.sources.GraftFs.lengths(
-      Extras5.q78ResolveEntries(base_(name), 1).map(_.path)).values.sum
+      GraftManifest.read(base_(name), 1).paths).values.sum
     val committed = spark.sql(
       s"CALL graft.system.optimize('$name', 'zorder', " +
         s"${math.max(1L, total / 64)}, 'pk,sk')").head()
@@ -1032,7 +997,7 @@ object Extras8 {
       s"${rowsZ == rows1d && sumZ.compareTo(sum1d) == 0} AS content_ok")
   }
 
-  /** q78ResolveEntries by registered NAME → paths (q111 helper). */
+  /** A registered table's version-`v` paths, by NAME (q111 helper). */
   private def base_(name: String): String =
     graft.sources.GraftCatalog.baseFor(name).get
 
@@ -1094,7 +1059,7 @@ object Extras8 {
     spark.sql(s"INSERT INTO graft.$name SELECT o_orderkey, o_orderstatus, " +
       s"CAST(o_totalprice AS DECIMAL(18,2)) FROM src_$name " +
       "WHERE o_orderkey % 3 = 1") // v4: one file per occupied bucket
-    val entries = Extras5.q78ResolveEntries(base, 4)
+    val entries = GraftManifest.read(base, 4).entries
     val newGen = entries.filter(_.partValues.keySet == Set("bucket.4.o_orderkey"))
     // the oracle's constants assume full bucket occupancy (certain with
     // hundreds of keys over 4 buckets) — fail LOUDLY, never drift
@@ -1121,7 +1086,7 @@ object Extras8 {
     def opened(sql: String): Long =
       graft.sources.GraftCatalog.scannedFileCount(spark.sql(sql))
         .getOrElse(-1).toLong
-    val total = Extras5.q78ResolveEntries(base_(name), 4).size.toLong
+    val total = GraftManifest.read(base_(name), 4).entries.size.toLong
     val oStatus = opened(s"SELECT * FROM graft.$name WHERE o_orderstatus = 'F'")
     val oRange = opened(s"SELECT * FROM graft.$name " +
       s"WHERE o_orderkey BETWEEN $rLo AND $rHi")

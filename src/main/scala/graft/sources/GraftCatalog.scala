@@ -26,11 +26,10 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.queries.Extras5
 
-/** SQL front-end for the q78 snapshot protocol: a DataSource V2 catalog
-  * whose tables resolve manifest versions, so the whole lakehouse-write
-  * family is reachable from plain SQL —
+/** SQL front-end for the graft table log (GraftManifest): a DataSource
+  * V2 catalog whose tables resolve manifest versions, so the whole
+  * lakehouse-write family is reachable from plain SQL —
   *
   *   SELECT ... FROM graft.t VERSION AS OF 1       (time travel)
   *   MERGE INTO graft.t USING src ON ... WHEN ...  (copy-on-write)
@@ -38,8 +37,8 @@ import graft.queries.Extras5
   *
   * Spark-first design, the Iceberg/Delta shape on our own protocol:
   *  - reads are a DSv2 Batch over the version's manifest file list,
-  *    with file skipping from the per-file key stats the commit
-  *    recorded (q78ResolvePruned) pushed down via V2 predicates; the
+  *    with file skipping from the per-file stats and partition tuples
+  *    the commit recorded, pushed down via V2 predicates; the
   *    leaf I/O is Spark's VECTORIZED parquet machinery (columnar
   *    batches, projection pushed into the decode, row-group splits and
   *    footer-stat skipping — see GraftParquetIO);
@@ -49,11 +48,12 @@ import graft.queries.Extras5
   *    scan, RowLevelOperationRuntimeGroupFiltering narrows that scan to
   *    the files whose rows actually match (an In(_file, <subquery>)
   *    runtime filter against our `_file` metadata column), and the
-  *    operation's Write commits carried ++ rewritten through the
-  *    optimistic q78TryCommit CAS — losing a race to a writer that
-  *    touched disjoint files rebases the carried list and retries;
-  *    overlap aborts (the merged rows were computed from a stale
-  *    snapshot and must be recomputed by re-running the statement).
+  *    operation's Write commits carried ++ rewritten through
+  *    GraftManifest.commit, the one optimistic CAS loop — losing a race
+  *    to a writer that touched disjoint files rebases the carried list
+  *    and retries; overlap aborts (the merged rows were computed from a
+  *    stale snapshot and must be recomputed by re-running the
+  *    statement).
   *  - new files are committed WITH footer-equivalent key stats tracked
   *    during the write itself (min/max per writer task — the O(#files)
   *    metadata q94 reads prune on).
@@ -191,7 +191,7 @@ object GraftCatalog {
       var dropped = false
       loaded.forEach { (k, v) =>
         val live =
-          try GraftFs.isDirectory(s"$v/_manifests")
+          try GraftManifest.exists(v)
           catch {
             // the base's scheme is not resolvable in THIS session
             // (missing fs.<scheme>.impl or credentials): keep the
@@ -367,7 +367,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     travelBaseFor(ident) match {
       case Some(b) =>
-        make(ident, Some(Extras5.q78VersionAt(b, timestamp / 1000L)))
+        make(ident, Some(GraftManifest.versionAt(b, timestamp / 1000L)))
       case None => throw new NoSuchTableException(ident)
     }
   }
@@ -378,7 +378,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
   private def liveBaseFor(name: String): Option[String] =
     GraftCatalog.baseFor(name).flatMap { base =>
       val live =
-        try GraftFs.isDirectory(s"$base/_manifests")
+        try GraftManifest.exists(base)
         catch { case _: Exception => true } // unreachable store: let the
           // table's own I/O surface the real error, never NoSuchTable
       if (live) Some(base)
@@ -399,7 +399,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
           SparkSession.getActiveSession
             .flatMap(_.conf.getOption(GraftSchemas.TimeTravelConf))
             .contains("latest")
-        new GraftTable(s"$catalogName.${ident.name}", base, version,
+        GraftTable.load(s"$catalogName.${ident.name}", base, version,
           latestSchema)
       case None =>
         // `graft.<t>.changes` / `.history` / `.tags` / `.files` — the
@@ -482,7 +482,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     // fallback)
     val schemaId = GraftSchemas.write(base, schema)
     val propsId = GraftProps.write(base, userProps)
-    if (!Extras5.q78TryCommitEntries(base, 1, Seq.empty,
+    if (!GraftManifest.publish(base, 1, Seq.empty,
         Seq(GraftSchemas.Header -> schemaId, GraftProps.Header -> propsId)))
       throw new IllegalStateException(
         s"concurrent CREATE TABLE detected at $base (v1 already exists)")
@@ -495,7 +495,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(Seq(ident.name))
     }
-    new GraftTable(s"$catalogName.${ident.name}", base, None)
+    GraftTable.load(s"$catalogName.${ident.name}", base, None)
   }
 
   /** ALTER TABLE graft.t ADD / RENAME / DROP COLUMN — schema evolution
@@ -532,12 +532,13 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
       case _: TableChange.SetProperty | _: TableChange.RemoveProperty => true
       case _ => false
     }
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val latest = Extras5.q78Latest(base)
-      val table = new GraftTable(s"$catalogName.${ident.name}", base,
-        Some(latest))
+    // the latest-mirror writes for the attempt that wins (after the
+    // CAS, so a failed ALTER mutates nothing)
+    var writeMirrors: () => Unit = () => ()
+    val done = GraftManifest.commit(base, gaveUp = throw new IllegalStateException(
+        s"gave up committing ALTER to ${ident.name} after " +
+          s"${GraftManifest.MaxAttempts} CAS attempts")) { snap =>
+      val table = new GraftTable(s"$catalogName.${ident.name}", base, snap)
       val current = table.schema
       // partition columns key a spec (current OR historical — old
       // tuples still prune under theirs) and every committed tuple:
@@ -614,41 +615,42 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         (if (propChanges.nonEmpty || updatedProps != prevProps)
           Seq(GraftProps.Header -> GraftProps.write(base, updatedProps))
         else Seq.empty)
-      if (headers.isEmpty) // no-op ALTER
-        return new GraftTable(s"$catalogName.${ident.name}", base, None)
-      // reset BEFORE firing: the hook may itself run a competing ALTER
-      val hook = GraftCatalog.alterRaceHook
-      GraftCatalog.alterRaceHook = () => ()
-      hook()
-      val entries = Extras5.q78ResolveEntries(base, latest)
-      if (Extras5.q78TryCommitEntries(base, latest + 1, entries, headers)) {
-        // latest mirrors (change-feed serving schema + pre-versioning
-        // fallback) follow the committed change — AFTER the CAS, so a
-        // failed ALTER mutates nothing
-        if (colChanges.nonEmpty)
-          GraftFs.writeAtomicReplace(s"$base/_schema.json",
-            evolved.json.getBytes("UTF-8"))
-        if (headers.exists(_._1 == GraftProps.Header))
-          GraftProps.writeMirror(base, updatedProps)
-        return new GraftTable(s"$catalogName.${ident.name}", base, None)
+      if (headers.isEmpty) None // no-op ALTER
+      else {
+        writeMirrors = () => {
+          // latest mirrors (change-feed serving schema + pre-versioning
+          // fallback) follow the committed change
+          if (colChanges.nonEmpty)
+            GraftFs.writeAtomicReplace(s"$base/_schema.json",
+              evolved.json.getBytes("UTF-8"))
+          if (headers.exists(_._1 == GraftProps.Header))
+            GraftProps.writeMirror(base, updatedProps)
+        }
+        // reset BEFORE firing: the hook may itself run a competing ALTER
+        val hook = GraftCatalog.alterRaceHook
+        GraftCatalog.alterRaceHook = () => ()
+        hook()
+        // CAS lost: a winner that changed the SCHEMA or the PROPERTIES
+        // conflicts (this ALTER was computed against stale table
+        // metadata); a data commit (headers carried unchanged) rebases
+        // via the loop
+        Some(GraftManifest.Publish(snap.entries, headers, onLost = () => {
+          val winner = snap.version + 1
+          val what =
+            if (!GraftSchemas.schemaAt(base, winner).forall(_ == current))
+              Some("schema")
+            else if (!GraftProps.propsAt(base, winner).forall(_ == prevProps))
+              Some("property")
+            else None
+          what.foreach(w => throw new IllegalStateException(
+            s"concurrent $w change on ${ident.name}: another ALTER " +
+              s"committed v$winner while this one was computed " +
+              s"against v${snap.version}; re-run the statement"))
+        }))
       }
-      // CAS lost: a winner that changed the SCHEMA or the PROPERTIES
-      // conflicts (this ALTER was computed against stale table
-      // metadata); a data commit (headers carried unchanged) rebases
-      // via the loop
-      val winnerSchema = GraftSchemas.schemaAt(base, latest + 1)
-      val winnerProps = GraftProps.propsAt(base, latest + 1)
-      val what =
-        if (!winnerSchema.forall(_ == current)) Some("schema")
-        else if (!winnerProps.forall(_ == prevProps)) Some("property")
-        else None
-      what.foreach(w => throw new IllegalStateException(
-        s"concurrent $w change on ${ident.name}: another ALTER " +
-          s"committed v${latest + 1} while this one was computed " +
-          s"against v$latest; re-run the statement"))
     }
-    throw new IllegalStateException(
-      s"gave up committing ALTER to ${ident.name} after $attempts CAS attempts")
+    if (done.published) writeMirrors()
+    GraftTable.load(s"$catalogName.${ident.name}", base, None)
   }
 
   /** Applies the supported TableChanges to `current` (pure). */
@@ -716,14 +718,23 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     throw new UnsupportedOperationException("RENAME TABLE not supported")
 }
 
-/** One resolved snapshot of a registered table. `pinned` = VERSION AS
-  * OF; otherwise the latest version AT LOAD TIME (a query sees one
+private[sources] object GraftTable {
+  /** Loads `pinned` (VERSION AS OF), else the latest version AT LOAD
+    * TIME — one manifest read serves the entries, schema and properties. */
+  def load(tableName: String, base: String, pinned: Option[Int],
+      latestSchema: Boolean = false): GraftTable =
+    new GraftTable(tableName, base,
+      GraftManifest.read(base, pinned.getOrElse(GraftManifest.latest(base))),
+      latestSchema)
+}
+
+/** One resolved snapshot of a registered table (a query sees one
   * consistent snapshot even if writers commit while it runs).
   * `latestSchema` selects latest-schema projection over a pinned
   * version's data (spark.graft.timetravel.schema=latest); the default
   * resolves the schema AS OF the snapshot (see GraftSchemas). */
 private[sources] class GraftTable(tableName: String, val base: String,
-    pinned: Option[Int], latestSchema: Boolean = false)
+    val snapshot: GraftManifest.Snapshot, latestSchema: Boolean = false)
     extends Table with SupportsRead with SupportsWrite
     with SupportsRowLevelOperations with SupportsMetadataColumns
     with TruncatableTable {
@@ -732,26 +743,25 @@ private[sources] class GraftTable(tableName: String, val base: String,
     * size, history stays time-travelable (truncation is a version,
     * not file deletion; vacuum reclaims the bytes later). */
   override def truncateTable(): Boolean = {
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val latest = Extras5.q78Latest(base)
-      if (Extras5.q78TryCommitEntries(base, latest + 1, Seq.empty))
-        return true
-    }
-    throw new IllegalStateException(
-      s"gave up truncating $tableName after $attempts CAS attempts")
+    GraftManifest.commit(base, gaveUp = throw new IllegalStateException(
+      s"gave up truncating $tableName after ${GraftManifest.MaxAttempts} " +
+        "CAS attempts"))(_ => Some(GraftManifest.Publish(Seq.empty)))
+    true
   }
 
   /** Snapshot version (shadows Table.version()'s String default —
     * callers wanting the trait's form use versionString). */
-  val snapshotVersion: Int = pinned.getOrElse(Extras5.q78Latest(base))
+  val snapshotVersion: Int = snapshot.version
   override def version(): String = snapshotVersion.toString
 
   /** Full manifest entries (path, committed key stats, deletion
     * vector) for this snapshot. */
-  val manifest: Seq[Extras5.ManifestEntry] =
-    Extras5.q78ResolveEntries(base, snapshotVersion)
+  val manifest: Seq[GraftManifest.Entry] = snapshot.entries
+
+  /** The headers that resolve this table's schema and properties: the
+    * snapshot's own, or the latest version's in latest-schema mode. */
+  private lazy val metadataHeaders: Map[String, String] =
+    if (latestSchema) GraftManifest.resolve(base).headers else snapshot.headers
 
   override def name(): String = tableName
 
@@ -764,16 +774,13 @@ private[sources] class GraftTable(tableName: String, val base: String,
     * (API-built fixture tables). `latestSchema` swaps the first rung
     * for the CURRENT version's schema — old data projected under the
     * evolved schema, the backfill shape. */
-  override lazy val schema: StructType = {
-    val schemaVersion =
-      if (latestSchema) Extras5.q78Latest(base) else snapshotVersion
-    GraftSchemas.schemaAt(base, schemaVersion).getOrElse {
+  override lazy val schema: StructType =
+    GraftSchemas.schemaOf(base, metadataHeaders).getOrElse {
       val sj = s"$base/_schema.json"
       if (GraftFs.exists(sj))
         DataType.fromJson(GraftFs.readString(sj)).asInstanceOf[StructType]
       else GraftParquet.inferSchema(manifest.head.path)
     }
-  }
 
   /** logical → physical column names (column-mapping evolution). */
   lazy val physicalOf: Map[String, String] = GraftCatalog.physicalMap(schema)
@@ -835,10 +842,8 @@ private[sources] class GraftTable(tableName: String, val base: String,
     * `latestSchema` mode follows the latest version's props, matching
     * its schema resolution. */
   lazy val persistedProps: Map[String, String] = {
-    val propsVersion =
-      if (latestSchema) Extras5.q78Latest(base) else snapshotVersion
     val versioned =
-      try GraftProps.propsAt(base, propsVersion)
+      try GraftProps.propsOf(base, metadataHeaders)
       catch { case _: Exception => None }
     versioned.getOrElse {
       val pj = s"$base/_props.json"
@@ -1233,7 +1238,7 @@ private[sources] class GraftScanBuilder(table: GraftTable,
 }
 
 private[sources] class GraftScan(table: GraftTable, required: StructType,
-    initialEntries: Seq[Extras5.ManifestEntry],
+    initialEntries: Seq[GraftManifest.Entry],
     private[sources] val keyLo: Long = Long.MinValue,
     private[sources] val keyHi: Long = Long.MaxValue,
     colWindows: Map[String, (Long, Long)] = Map.empty,
@@ -1260,7 +1265,7 @@ private[sources] class GraftScan(table: GraftTable, required: StructType,
           // an instant predating the table's history replays from the
           // start (v1 = full-content batch); a vacuumed head can only
           // replay appends after its earliest surviving version
-          case v if Extras5.q78CommitTime(table.base, v) > ts =>
+          case v if GraftManifest.commitTime(table.base, v) > ts =>
             if (v == 1) 0 else v
           case v => v
         }
@@ -1280,7 +1285,7 @@ private[sources] class GraftScan(table: GraftTable, required: StructType,
     * then at runtime by the group-filtering In(_file) subquery. After
     * execution this IS the replaced-files set a COW commit carries
     * against. */
-  @volatile private[sources] var activeEntries: Seq[Extras5.ManifestEntry] =
+  @volatile private[sources] var activeEntries: Seq[GraftManifest.Entry] =
     initialEntries
 
   private[sources] def activeFiles: Seq[String] = activeEntries.map(_.path)
@@ -1476,15 +1481,20 @@ private[sources] object GraftCommits {
       case _ => Seq.empty
     }.filter(_.rows > 0)
 
-  def entriesOf(commits: Seq[GraftSqlCommit]): Seq[graft.queries.Extras5.ManifestEntry] =
+  def entriesOf(commits: Seq[GraftSqlCommit]): Seq[GraftManifest.Entry] =
     commits.sortBy(_.path).map { m =>
-      graft.queries.Extras5.ManifestEntry(m.path,
+      GraftManifest.Entry(m.path,
         if (m.hasKey) Some((m.keyLo, m.keyHi)) else None,
         colStats = m.colStats, partValues = m.partValues)
     }
 
   def deleteAll(messages: Array[WriterCommitMessage]): Unit =
     flatIncludingEmpty(messages).foreach(m => GraftFs.deleteIfExists(m.path))
+
+  /** A table write's answer to `GraftManifest.commit` running out of
+    * attempts. */
+  def gaveUp(table: String): Nothing = throw new IllegalStateException(
+    s"gave up committing to $table after ${GraftManifest.MaxAttempts} CAS attempts")
 
   private def flatIncludingEmpty(
       messages: Array[WriterCommitMessage]): Seq[GraftSqlCommit] =
@@ -1549,11 +1559,11 @@ private[sources] class GraftCowWrite(table: GraftTable,
       .map(s => (s.keyLo, s.keyHi)).getOrElse((Long.MinValue, Long.MaxValue))
     GraftCatalog.commitRaceHook()
     GraftCatalog.commitRaceHook = () => ()
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val latest = Extras5.q78Latest(table.base)
-      val cur = Extras5.q78ResolveEntries(table.base, latest)
+    // a lost CAS re-resolves and, if the conflict checks still pass
+    // there, rebases the carry
+    GraftManifest.commit(table.base, gaveUp = GraftCommits.gaveUp(table.name),
+        known = Some(table.snapshot)) { snap =>
+      val cur = snap.entries
       val curIds = cur.map(_.identity).toSet
       if (!replacedIds.subsetOf(curIds))
         throw new IllegalStateException(
@@ -1575,14 +1585,8 @@ private[sources] class GraftCowWrite(table: GraftTable,
             "inside this statement's key window, so rows computed from the " +
             "stale snapshot could contradict them; re-run the statement")
       val carried = cur.filterNot(e => replacedPaths(e.path))
-      if (Extras5.q78TryCommitEntries(table.base, latest + 1,
-          carried ++ newEntries))
-        return
-      // lost the CAS to a concurrent commit — loop re-resolves and,
-      // if the conflict checks still pass there, rebases the carry
+      Some(GraftManifest.Publish(carried ++ newEntries))
     }
-    throw new IllegalStateException(
-      s"gave up committing to ${table.name} after $attempts CAS attempts")
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -1678,7 +1682,7 @@ private[sources] class GraftMorWrite(table: GraftTable,
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     val newEntries = commits.flatMap(_.appended).filter(_.rows > 0)
       .sortBy(_.path).map { m =>
-        Extras5.ManifestEntry(m.path,
+        GraftManifest.Entry(m.path,
           if (m.hasKey) Some((m.keyLo, m.keyHi)) else None,
           colStats = m.colStats, partValues = m.partValues)
       }.toSeq
@@ -1689,11 +1693,9 @@ private[sources] class GraftMorWrite(table: GraftTable,
     GraftCatalog.commitRaceHook()
     GraftCatalog.commitRaceHook = () => ()
     try {
-      var attempts = 0
-      while (attempts < 10) {
-        attempts += 1
-        val latest = Extras5.q78Latest(table.base)
-        val cur = Extras5.q78ResolveEntries(table.base, latest)
+      GraftManifest.commit(table.base, gaveUp = GraftCommits.gaveUp(table.name),
+          known = Some(table.snapshot)) { snap =>
+        val cur = snap.entries
         val curByPath = cur.map(e => e.path -> e).toMap
         val stable = byFile.keys.forall(f =>
           curByPath.get(f).exists(e =>
@@ -1713,15 +1715,11 @@ private[sources] class GraftMorWrite(table: GraftTable,
         }
         val updated = cur.map(e =>
           newDvs.get(e.path).fold(e)(d => e.copy(dv = Some(d))))
-        if (Extras5.q78TryCommitEntries(table.base, latest + 1,
-            updated ++ newEntries))
-          return
         // lost the CAS: drop this attempt's merged sidecars, re-check
         // identities against the winner, and retry
-        newDvs.values.foreach(GraftFs.deleteIfExists)
+        Some(GraftManifest.Publish(updated ++ newEntries,
+          onLost = () => newDvs.values.foreach(GraftFs.deleteIfExists)))
       }
-      throw new IllegalStateException(
-        s"gave up committing to ${table.name} after 10 CAS attempts")
     } finally {
       // partials are staging, never referenced by a manifest
       byFile.values.flatten.foreach(GraftFs.deleteIfExists)
@@ -1870,7 +1868,7 @@ private[sources] class GraftAppendWrite(table: GraftTable,
     // partitions, or — dynamic mode — exactly the tuples this job wrote
     val writtenTuples = newEntries.map(_.partValues).filter(_.nonEmpty).toSet
     val specKeys = table.partitionSpec.map(_.outName).toSet
-    def replaced(e: Extras5.ManifestEntry): Boolean =
+    def replaced(e: GraftManifest.Entry): Boolean =
       replaceAll ||
         (staticParts.nonEmpty && staticParts.forall { case (k, v) =>
           e.partValues.get(k).contains(v) }) ||
@@ -1881,17 +1879,15 @@ private[sources] class GraftAppendWrite(table: GraftTable,
     // written before partitioning, under a retired spec, or by an API
     // merge — would silently SURVIVE next to the overwrite, leaving
     // stale rows). Refuse loudly instead.
-    def unattributable(e: Extras5.ManifestEntry): Boolean =
+    def unattributable(e: GraftManifest.Entry): Boolean =
       (staticParts.nonEmpty && !staticParts.keys.forall(e.partValues.contains)) ||
         (dynamicParts && e.partValues.keySet != specKeys)
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val latest = Extras5.q78Latest(table.base)
+    GraftManifest.commit(table.base, gaveUp = GraftCommits.gaveUp(table.name),
+        known = Some(table.snapshot)) { snap =>
       val cur =
         if (replaceAll) Seq.empty
         else {
-          val resolved = Extras5.q78ResolveEntries(table.base, latest)
+          val resolved = snap.entries
           if (staticParts.nonEmpty || dynamicParts) {
             val bad = resolved.filter(unattributable)
             if (bad.nonEmpty) throw new UnsupportedOperationException(
@@ -1904,11 +1900,8 @@ private[sources] class GraftAppendWrite(table: GraftTable,
           }
           resolved.filterNot(replaced)
         }
-      if (Extras5.q78TryCommitEntries(table.base, latest + 1,
-          cur ++ newEntries)) return
+      Some(GraftManifest.Publish(cur ++ newEntries))
     }
-    throw new IllegalStateException(
-      s"gave up committing to ${table.name} after $attempts CAS attempts")
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -1936,7 +1929,7 @@ private[sources] class GraftStreamingWrite(table: GraftTable,
       messages: Array[WriterCommitMessage]): Unit = {
     val commits = messages.collect { case m: GraftSqlCommit if m.rows > 0 => m }
     val newEntries = commits.sortBy(_.path).map { m =>
-      Extras5.ManifestEntry(m.path,
+      GraftManifest.Entry(m.path,
         if (m.hasKey) Some((m.keyLo, m.keyHi)) else None,
         colStats = m.colStats)
     }.toSeq
@@ -1966,8 +1959,9 @@ private[graft] object GraftStreamingCommit {
   private val watermarks = new java.util.concurrent.ConcurrentHashMap[
     (String, String), (Int, Option[Long])]()
 
-  /** Test seams: header-read counter (the spec pins boundedness under
-    * an interleaved foreign writer) and a hook fired between the
+  /** Test seams: header-look counter, one per version whose `txn`
+    * header the watermark scan inspects (the spec pins boundedness under
+    * an interleaved foreign writer), and a hook fired between the
     * replay re-check and the CAS attempt (lets a spec interleave a
     * zombie twin deterministically). */
   private[graft] val headerReads = new java.util.concurrent.atomic.AtomicLong()
@@ -1978,24 +1972,28 @@ private[graft] object GraftStreamingCommit {
     * header for `appId` records at or below the CURRENT latest
     * version. Incremental: scans backward only until the cached
     * high-water version (expired manifests are skipped). */
-  def lastEpoch(base: String, appId: String): Option[Long] =
-    lastEpochUpTo(base, appId, Extras5.q78Latest(base))
+  def lastEpoch(base: String, appId: String): Option[Long] = {
+    val latest = GraftManifest.latest(base)
+    lastEpochUpTo(base, appId, latest, GraftManifest.read(base, latest).headers)
+  }
 
-  /** Watermark considering only versions ≤ `latest` — the commit loop
-    * passes the exact version its CAS will target +1, so the check and
-    * the publish serialize through the version number (no window for a
-    * zombie twin to slip a commit between check and CAS unseen: if it
-    * commits at latest+1, our CAS loses and the next iteration's
-    * re-check covers it). */
-  private def lastEpochUpTo(base: String, appId: String,
-      latest: Int): Option[Long] = {
+  /** Watermark considering only versions ≤ `latest` (whose headers are
+    * `latestHeaders`) — the commit loop passes the snapshot its CAS
+    * builds on, so the check and the publish serialize through the
+    * version number (no window for a zombie twin to slip a commit
+    * between check and CAS unseen: if it commits at latest+1, our CAS
+    * loses and the next attempt's re-check covers it). */
+  private def lastEpochUpTo(base: String, appId: String, latest: Int,
+      latestHeaders: => Map[String, String]): Option[Long] = {
     val key = (base, appId)
     val (scannedTo, cached) = Option(watermarks.get(key)).getOrElse((0, None))
     var v = latest
     var found: Option[Long] = None
     while (v > scannedTo && found.isEmpty) {
+      headerReads.incrementAndGet()
       val headers =
-        try { headerReads.incrementAndGet(); Extras5.q78CommitHeaders(base, v) }
+        if (v == latest) latestHeaders
+        else try GraftManifest.read(base, v).headers
         catch { case _: java.nio.file.NoSuchFileException => Map.empty[String, String] }
       found = headers.get("txn").flatMap { t =>
         t.split("\t") match {
@@ -2023,23 +2021,22 @@ private[graft] object GraftStreamingCommit {
     * re-check sees the winner's txn header — the epoch's rows can
     * never land twice (r15 ADVICE). */
   def commitEpoch(base: String, appId: String, epochId: Long,
-      newEntries: Seq[Extras5.ManifestEntry], maxAttempts: Int = 10): Boolean = {
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val latest = Extras5.q78Latest(base)
-      if (lastEpochUpTo(base, appId, latest).exists(_ >= epochId)) return false
-      val cur = Extras5.q78ResolveEntries(base, latest)
-      casRaceHook()
-      if (Extras5.q78TryCommitEntries(base, latest + 1, cur ++ newEntries,
-          Seq("txn" -> s"$appId\t$epochId"))) {
-        watermarks.merge((base, appId), (latest + 1, Some(epochId)),
-          (old, neu) => if (old._1 >= neu._1) old else neu)
-        return true
+      newEntries: Seq[GraftManifest.Entry]): Boolean = {
+    val done = GraftManifest.commit(base, gaveUp = throw new IllegalStateException(
+        s"gave up committing epoch $epochId to $base after " +
+          s"${GraftManifest.MaxAttempts} CAS attempts")) { snap =>
+      if (lastEpochUpTo(base, appId, snap.version, snap.headers)
+          .exists(_ >= epochId)) None
+      else {
+        casRaceHook()
+        Some(GraftManifest.Publish(snap.entries ++ newEntries,
+          Seq("txn" -> s"$appId\t$epochId")))
       }
     }
-    throw new IllegalStateException(
-      s"gave up committing epoch $epochId to $base after $attempts CAS attempts")
+    if (done.published)
+      watermarks.merge((base, appId), (done.version, Some(epochId)),
+        (old, neu) => if (old._1 >= neu._1) old else neu)
+    done.published
   }
 }
 

@@ -7,9 +7,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.queries.Extras5
-
-/** Streaming CHANGE DATA FEED over the q78 manifest protocol — the
+/** Streaming CHANGE DATA FEED over the graft manifest protocol — the
   * r13 judge's gap #4 ("change feed is batch-only"): q92 diffs two
   * snapshots on demand; this source serves the SAME pruned diff
   * incrementally, as a DSv2 MicroBatchStream whose offsets ARE manifest
@@ -94,7 +92,7 @@ private[sources] class GraftChangeFeedTable(tableName: String, base: String,
     // tighter endingVersion narrows further, a looser one is clamped
     // (the pinned snapshot cannot leak post-v commits or columns)
     val endingVersion = (ev.map(_.toInt)
-      .orElse(et.map(s => Extras5.q78VersionAt(
+      .orElse(et.map(s => GraftManifest.versionAt(
         base, GraftChangeFeed.tsOptionMillis(s)))) match {
         case Some(e) => Some(asOf.fold(e)(math.min(e, _)))
         case None => asOf
@@ -130,7 +128,7 @@ private[graft] object GraftChangeFeed {
       if (GraftFs.exists(sj))
         DataType.fromJson(GraftFs.readString(sj)).asInstanceOf[StructType]
       else GraftParquet.inferSchema(
-        Extras5.q78ResolveStats(base, Extras5.q78Latest(base)).head._1)
+        GraftManifest.resolve(base).entries.head.path)
     }
 
   private def versionedSchema(base: String,
@@ -172,24 +170,17 @@ private[graft] object GraftChangeFeed {
     * an instant predating the first available commit starts from the
     * earliest version — i.e. the entire available feed. */
   private[sources] def startVersionAt(base: String, tsMillis: Long): Int =
-    try Extras5.q78VersionAt(base, tsMillis)
+    try GraftManifest.versionAt(base, tsMillis)
     catch {
       case _: IllegalArgumentException =>
-        availableVersions(base).headOption.getOrElse(1)
+        GraftManifest.versions(base).headOption.getOrElse(1)
     }
-
-  /** Still-resolvable manifest versions, from the `_manifests` listing
-    * — O(#versions) driver metadata. */
-  private def availableVersions(base: String): Seq[Int] =
-    GraftFs.listNames(s"$base/_manifests")
-      .flatMap(n => "^v(\\d+)\\.txt$".r.findFirstMatchIn(n)
-        .map(_.group(1).toInt)).sorted
 
   /** Fails fast with a clear retention message when `version` does not
     * resolve — the Delta startingVersion-out-of-retention contract
     * (instead of a raw NoSuchFileException from manifest resolution). */
   def requireResolvable(base: String, version: Int): Unit = {
-    val avail = availableVersions(base)
+    val avail = GraftManifest.versions(base)
     if (version < 1 || !avail.contains(version)) {
       val earliest = avail.headOption.getOrElse(0)
       throw new IllegalArgumentException(
@@ -205,11 +196,11 @@ private[graft] object GraftChangeFeed {
   /** Resolves a transition endpoint, converting an expired manifest
     * into the retention error (a VACUUM can race a slow consumer). */
   def resolveOrRetentionError(base: String,
-      version: Int): Seq[Extras5.ManifestEntry] =
-    try Extras5.q78ResolveEntries(base, version)
+      version: Int): Seq[GraftManifest.Entry] =
+    try GraftManifest.read(base, version).entries
     catch {
       case e: java.nio.file.NoSuchFileException =>
-        val avail = availableVersions(base)
+        val avail = GraftManifest.versions(base)
         throw new IllegalStateException(
           s"change feed transition needs manifest v$version of $base, " +
             s"which was expired by VACUUM (earliest available: " +
@@ -248,7 +239,7 @@ private[sources] class GraftChangeFeedScan(base: String, schema: StructType,
     new GraftChangeFeedStream(base, schema, startingVersion, physical)
   override def planInputPartitions(): Array[InputPartition] =
     inner.planInputPartitions(GraftVersionOffset(startingVersion),
-      GraftVersionOffset(endingVersion.getOrElse(Extras5.q78Latest(base))))
+      GraftVersionOffset(endingVersion.getOrElse(GraftManifest.latest(base))))
   override def createReaderFactory(): PartitionReaderFactory =
     inner.createReaderFactory()
   override def description(): String = s"GraftChangeFeedScan($base)"
@@ -279,7 +270,7 @@ private[graft] class GraftChangeFeedStream(base: String,
   @volatile private var availableNowCap: Option[Int] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(Extras5.q78Latest(base))
+    availableNowCap = Some(GraftManifest.latest(base))
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
@@ -289,7 +280,7 @@ private[graft] class GraftChangeFeedStream(base: String,
     * resumes at a committed version, never mid-transition. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[GraftVersionOffset].v
-    val ceiling = availableNowCap.getOrElse(Extras5.q78Latest(base))
+    val ceiling = availableNowCap.getOrElse(GraftManifest.latest(base))
     GraftVersionOffset(math.max(s, math.min(s + 1, ceiling)))
   }
 
@@ -320,7 +311,7 @@ private[graft] class GraftChangeFeedStream(base: String,
       val post = GraftChangeFeed.resolveOrRetentionError(base, v)
       val shared = pre.map(_.identity).toSet intersect
         post.map(_.identity).toSet
-      def side(entries: Seq[graft.queries.Extras5.ManifestEntry], tag: String) = {
+      def side(entries: Seq[GraftManifest.Entry], tag: String) = {
         val changed = entries.filterNot(e2 => shared(e2.identity)).sortBy(_.path)
         val dvByPath = changed.collect {
           case en if en.dv.isDefined => en.path -> en.dv.get

@@ -8,8 +8,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.queries.Extras5
-
 /** Commit-history metadata table, addressed `graft.<t>.history` (the
   * Iceberg metadata-table convention; Delta's DESCRIBE HISTORY): one
   * row per still-resolvable manifest version with its `#ts` commit
@@ -46,19 +44,15 @@ private[graft] object GraftHistory {
 
   /** One row per resolvable version, ascending. */
   def rows(base: String): Seq[InternalRow] = {
-    val versions = GraftFs.listNames(s"$base/_manifests")
-      .flatMap(n => "^v(\\d+)\\.txt$".r.findFirstMatchIn(n)
-        .map(_.group(1).toInt)).sorted
-    versions.map { v =>
-      val entries = Extras5.q78ResolveEntries(base, v)
-      val headers = Extras5.q78CommitHeaders(base, v)
-      val txn = headers.get("txn").map(_.split("\t", 2))
+    GraftManifest.versions(base).map { v =>
+      val snap = GraftManifest.read(base, v)
+      val txn = snap.headers.get("txn").map(_.split("\t", 2))
       InternalRow(
         v.toLong,
-        Extras5.q78CommitTime(base, v),
-        entries.size.toLong,
-        entries.count(_.dv.isDefined).toLong,
-        headers.get("restore").map(r => java.lang.Long.valueOf(r.toLong)).orNull,
+        GraftManifest.commitTime(base, snap),
+        snap.entries.size.toLong,
+        snap.entries.count(_.dv.isDefined).toLong,
+        snap.headers.get("restore").map(r => java.lang.Long.valueOf(r.toLong)).orNull,
         txn.map(t => UTF8String.fromString(t(0))).orNull,
         txn.flatMap(t => t.lift(1)).map(e =>
           java.lang.Long.valueOf(e.toLong)).orNull)
@@ -146,7 +140,7 @@ private[sources] class GraftTagsScan(base: String) extends Scan with Batch {
   override def planInputPartitions(): Array[InputPartition] = {
     val rows = graft.queries.Extras8.tags(base).toSeq.sortBy(_._1).map {
       case (name, v) => Seq[Any](UTF8String.fromString(name), v.toLong,
-        Extras5.q78CommitTime(base, v))
+        GraftManifest.commitTime(base, v))
     }
     Array(HistoryPartition(rows))
   }
@@ -210,7 +204,7 @@ private[sources] class GraftFilesScan(base: String) extends Scan with Batch {
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val entries = Extras5.q78ResolveEntries(base, Extras5.q78Latest(base))
+    val entries = GraftManifest.resolve(base).entries
     val sizes = GraftFs.lengths(entries.map(_.path))
     val rows = entries.sortBy(_.path).map { e =>
       val part =

@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.queries.{Extras5, Extras7, Extras8}
+import graft.queries.{Extras7, Extras8}
 
 /** SQL-surfaced MAINTENANCE (the r15 judge's item 4): Spark 4's native
   * DSv2 stored procedures (ProcedureCatalog + CALL — SPARK-44167, the
@@ -51,7 +51,7 @@ private[graft] object GraftProcedures {
 
   private def baseOf(table: String): String =
     GraftCatalog.baseFor(table)
-      .filter(b => GraftFs.isDirectory(s"$b/_manifests"))
+      .filter(GraftManifest.exists)
       .getOrElse(throw new IllegalArgumentException(
         s"procedure target table not found in graft catalog: '$table'"))
 
@@ -110,19 +110,16 @@ private[graft] object GraftProcedures {
           // stats survive under the TABLE's configured stats column
           // (graft.stats.column, physical form), and only when the
           // current manifest actually carries stats to preserve
-          val statsCol = Some(new GraftTable(
-              s"graft.$tableName", base, None).physicalStatsColumn).filter { _ =>
-            try Extras5.q78ResolveEntries(base, Extras5.q78Latest(base))
-              .exists(_.stats.isDefined)
-            catch { case scala.util.control.NonFatal(_) => false }
-          }
+          val table = GraftTable.load(s"graft.$tableName", base, None)
+          val statsCol = Some(table.physicalStatsColumn)
+            .filter(_ => table.manifest.exists(_.stats.isDefined))
           Extras7.purgeDv(spark, base, statsColumn = statsCol)
         case "compact" =>
           Extras8.compactSmallFiles(spark, base, input.getLong(2))
         case "zorder" =>
           require(!input.isNullAt(3),
             "optimize mode 'zorder' needs zorder_by => 'col1,col2'")
-          val table = new GraftTable(s"graft.$tableName", base, None)
+          val table = GraftTable.load(s"graft.$tableName", base, None)
           // logical → physical: the rewrite reads raw files, whose
           // columns carry physical names under column-mapping evolution
           val zcols = input.getUTF8String(3).toString.split(",")
@@ -218,39 +215,36 @@ private[graft] object GraftProcedures {
       else GraftPartitions.parseSpec(Some(specStr))
     require(newSpec.nonEmpty || specStr.trim.equalsIgnoreCase("none"),
       s"empty partition spec '$specStr' (use 'none' to unpartition)")
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val latest = Extras5.q78Latest(base)
-      val table = new GraftTable(s"graft.$name", base, Some(latest))
+    var specs = ("", "")
+    var newProps = Map.empty[String, String]
+    val done = GraftManifest.commit(base, gaveUp = throw new IllegalStateException(
+        s"gave up evolving the partition spec of $name after " +
+          s"${GraftManifest.MaxAttempts} CAS attempts")) { snap =>
+      val table = new GraftTable(s"graft.$name", base, snap)
       GraftPartitions.validate(newSpec, table.schema)
       val prevProps = table.persistedProps
       val oldSpecStr = prevProps.getOrElse(GraftPartitions.SpecKey, "")
       val newSpecStr = GraftPartitions.renderSpec(newSpec)
-      if (newSpecStr == oldSpecStr) return (oldSpecStr, newSpecStr, latest)
+      specs = (oldSpecStr, newSpecStr)
       val hist = (prevProps.get(GraftPartitions.SpecHistoryKey).toSeq ++
         Some(oldSpecStr).filter(_.nonEmpty)).mkString("|")
-      val newProps = (prevProps - GraftPartitions.SpecKey -
+      newProps = (prevProps - GraftPartitions.SpecKey -
         GraftPartitions.SpecHistoryKey) ++
         (if (newSpecStr.nonEmpty)
           Map(GraftPartitions.SpecKey -> newSpecStr) else Map.empty) ++
         (if (hist.nonEmpty)
           Map(GraftPartitions.SpecHistoryKey -> hist) else Map.empty)
-      val propsId = GraftProps.write(base, newProps)
-      val entries = Extras5.q78ResolveEntries(base, latest)
-      if (Extras5.q78TryCommitEntries(base, latest + 1, entries,
-          Seq(GraftProps.Header -> propsId))) {
-        GraftProps.writeMirror(base, newProps)
-        return (oldSpecStr, newSpecStr, latest + 1)
-      }
-      val winnerProps = GraftProps.propsAt(base, latest + 1)
-      if (!winnerProps.forall(_ == prevProps))
-        throw new IllegalStateException(
-          s"concurrent table change on $name: another metadata commit " +
-            s"landed v${latest + 1}; re-run the statement")
+      if (newSpecStr == oldSpecStr) None
+      else Some(GraftManifest.Publish(snap.entries,
+        Seq(GraftProps.Header -> GraftProps.write(base, newProps)),
+        onLost = () =>
+          if (!GraftProps.propsAt(base, snap.version + 1).forall(_ == prevProps))
+            throw new IllegalStateException(
+              s"concurrent table change on $name: another metadata commit " +
+                s"landed v${snap.version + 1}; re-run the statement")))
     }
-    throw new IllegalStateException(
-      s"gave up evolving the partition spec of $name after 10 CAS attempts")
+    if (done.published) GraftProps.writeMirror(base, newProps)
+    (specs._1, specs._2, done.version)
   }
 
   /** CREATE TAG: an immutable named ref to a version (`VERSION AS OF

@@ -23,7 +23,7 @@ package graft.sources
   *    stats columns, composing with per-version schemas.
   *
   * Data commits CARRY the header forward automatically (see
-  * q78TryCommitEntries), `_props.json` remains as an
+  * GraftManifest), `_props.json` remains as an
   * atomically-replaced MIRROR of the latest properties (the fallback
   * for manifests committed before props versioning and for API-built
   * fixture tables that write it directly), and vacuum reference-counts
@@ -73,12 +73,16 @@ private[graft] object GraftProps {
   def refOf(base: String, headers: Map[String, String]): Option[String] =
     headers.get(Header).map(fileOf(base, _))
 
-  /** Properties AS OF `version`: the manifest's `#props` header
+  /** The properties a manifest's headers name: the `#props` header
     * resolved through `_propsets/` — None for pre-versioning manifests
     * (callers fall back to the `_props.json` mirror). */
+  def propsOf(base: String,
+      headers: Map[String, String]): Option[Map[String, String]] =
+    headers.get(Header).flatMap(read(base, _))
+
+  /** Properties AS OF `version` (None when the version does not resolve). */
   def propsAt(base: String, version: Int): Option[Map[String, String]] =
-    try graft.queries.Extras5.q78CommitHeaders(base, version)
-      .get(Header).flatMap(read(base, _))
+    try propsOf(base, GraftManifest.read(base, version).headers)
     catch { case _: java.nio.file.NoSuchFileException => None }
 
   /** Writes the latest-props MIRROR (`_props.json`) — serving fallback

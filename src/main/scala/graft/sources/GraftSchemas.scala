@@ -14,9 +14,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    wins and the loser gets an explicit concurrent-schema-change
   *    error — never last-writer-wins (see GraftCatalog.alterTable);
   *  - data commits CARRY the schema forward automatically
-  *    (q78TryCommitEntries copies the previous version's header when
-  *    the caller supplies none), so every version of a catalog table
-  *    is self-describing;
+  *    (GraftManifest copies the previous version's header when the
+  *    caller supplies none), so every version of a catalog table is
+  *    self-describing;
   *  - `VERSION AS OF` / `TIMESTAMP AS OF` resolve the schema AS OF
   *    that version (the Delta semantics): a pre-DROP snapshot reads
   *    back WITH the dropped column, a pre-widening snapshot reads
@@ -71,11 +71,15 @@ private[graft] object GraftSchemas {
   def refOf(base: String, headers: Map[String, String]): Option[String] =
     headers.get(Header).map(fileOf(base, _))
 
-  /** Schema AS OF `version`: the manifest's `#schema` header resolved
-    * through `_schemas/` — None for pre-versioning manifests (callers
-    * fall back to the `_schema.json` mirror, then footer inference). */
+  /** The schema a manifest's headers name: the `#schema` header
+    * resolved through `_schemas/` — None for pre-versioning manifests
+    * (callers fall back to the `_schema.json` mirror, then footer
+    * inference). */
+  def schemaOf(base: String, headers: Map[String, String]): Option[StructType] =
+    headers.get(Header).flatMap(read(base, _))
+
+  /** Schema AS OF `version` (None when the version does not resolve). */
   def schemaAt(base: String, version: Int): Option[StructType] =
-    try graft.queries.Extras5.q78CommitHeaders(base, version)
-      .get(Header).flatMap(read(base, _))
+    try schemaOf(base, GraftManifest.read(base, version).headers)
     catch { case _: java.nio.file.NoSuchFileException => None }
 }

@@ -7,8 +7,6 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
-import graft.queries.Extras5
-
 /** ATOMIC CTAS / RTAS (r17): the staged-table half of
   * `StagingTableCatalog`. Spark's AtomicCreate/ReplaceTableAsSelect
   * writes THROUGH this table and only then calls
@@ -46,7 +44,7 @@ private[sources] class GraftStagedTable(tableName: String, base: String,
 
   GraftFs.mkdirs(base)
 
-  @volatile private var stagedEntries: Seq[Extras5.ManifestEntry] = Seq.empty
+  @volatile private var stagedEntries: Seq[GraftManifest.Entry] = Seq.empty
   @volatile private var stagedDirs: List[String] = Nil
 
   private val statsCols: Seq[String] =
@@ -124,7 +122,7 @@ private[sources] class GraftStagedTable(tableName: String, base: String,
       GraftSchemas.Header -> GraftSchemas.write(base, stagedSchema),
       GraftProps.Header -> GraftProps.write(base, allProps))
     if (!replaceExisting) {
-      if (!Extras5.q78TryCommitEntries(base, 1, stagedEntries, headers))
+      if (!GraftManifest.publish(base, 1, stagedEntries, headers))
         throw new IllegalStateException(
           s"concurrent CREATE detected at $base (v1 already exists)")
       if (!GraftCatalog.registerNew(registryName, base)) {
@@ -133,20 +131,15 @@ private[sources] class GraftStagedTable(tableName: String, base: String,
           .TableAlreadyExistsException(Seq(registryName))
       }
     } else {
-      var attempts = 0
-      var done = false
-      while (!done && attempts < 10) {
-        attempts += 1
-        val latest = Extras5.q78Latest(base)
+      GraftManifest.commit(base, gaveUp = throw new IllegalStateException(
+          s"gave up committing REPLACE to $tableName after " +
+            s"${GraftManifest.MaxAttempts} CAS attempts")) { _ =>
         // test seam: lets a spec interleave a competing commit between
         // the resolve and the CAS on EVERY attempt (pins that a REPLACE
         // losing all its attempts mutates nothing)
         GraftStagedTable.replaceRaceHook()
-        done = Extras5.q78TryCommitEntries(base, latest + 1, stagedEntries,
-          headers)
+        Some(GraftManifest.Publish(stagedEntries, headers))
       }
-      if (!done) throw new IllegalStateException(
-        s"gave up committing REPLACE to $tableName after 10 CAS attempts")
     }
     // latest MIRRORS (change-feed serving schema, pre-versioning
     // fallback) — only after the commit succeeded

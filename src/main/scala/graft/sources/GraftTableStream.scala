@@ -66,14 +66,14 @@ private[graft] class GraftTableStream(base: String, schema: StructType,
   @volatile private var availableNowCap: Option[Int] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(Extras5.q78Latest(base))
+    availableNowCap = Some(GraftManifest.latest(base))
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
   /** Commit `v`'s ADDED entries (path-sorted), empty for a skipped
     * change commit, throwing the data-update error otherwise. */
-  private def addedEntries(v: Int): Seq[Extras5.ManifestEntry] = {
-    val pre = if (v <= 1) Seq.empty[Extras5.ManifestEntry]
+  private def addedEntries(v: Int): Seq[GraftManifest.Entry] = {
+    val pre = if (v <= 1) Seq.empty[GraftManifest.Entry]
       else GraftChangeFeed.resolveOrRetentionError(base, v - 1)
     val post = GraftChangeFeed.resolveOrRetentionError(base, v)
     val prePaths = pre.map(_.path).toSet
@@ -101,7 +101,7 @@ private[graft] class GraftTableStream(base: String, schema: StructType,
     * never re-emitting. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val st = start.asInstanceOf[GraftTableOffset]
-    val ceiling = availableNowCap.getOrElse(Extras5.q78Latest(base))
+    val ceiling = availableNowCap.getOrElse(GraftManifest.latest(base))
     if (st.served >= 0) {
       // mid-commit: serve the next window (or the remainder)
       val n = addedEntries(st.v).size

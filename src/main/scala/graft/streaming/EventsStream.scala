@@ -1036,8 +1036,8 @@ object EventsStream {
   def st21(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (base, nCommits, feedFiles) = st21Run(spark, dir)
-    val v1 = graft.queries.Extras5.q78Resolve(base, 1)
-    val fin = graft.queries.Extras5.q78Resolve(base, (1 + nCommits).toInt)
+    val v1 = graft.sources.GraftManifest.read(base, 1).paths
+    val fin = graft.sources.GraftManifest.read(base, (1 + nCommits).toInt).paths
     graft.queries.Extras6.snapshotAgg(spark, v1, "1_base")
       .unionByName(graft.queries.Extras6.snapshotAgg(spark, fin, "2_final"))
       // one commit per feed file, derived from the ACTUAL feed listing
@@ -1175,15 +1175,15 @@ object EventsStream {
     try q.awaitTermination() finally q.stop()
     val feedFiles = new java.io.File(src).listFiles()
       .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    val latest = graft.queries.Extras5.q78Latest(base)
+    val latest = graft.sources.GraftManifest.latest(base)
     // one commit per feed file on top of CREATE's empty v1
     val versionsOk = latest == 1 + feedFiles
     // mechanical replay: re-offer an already-committed epoch — the
     // watermark must reject it and the version must not advance
     val replayNoop =
       !graft.sources.GraftStreamingCommit.commitEpoch(base, appId, 0L,
-        Seq(graft.queries.Extras5.ManifestEntry("replayed-file.parquet"))) &&
-        graft.queries.Extras5.q78Latest(base) == latest
+        Seq(graft.sources.GraftManifest.Entry("replayed-file.parquet"))) &&
+        graft.sources.GraftManifest.latest(base) == latest
     spark.sql(s"SELECT * FROM graft.$name")
       .agg(count(lit(1)).as("n_rows"),
         count(when($"o_orderstatus" === "F", 1)).as("n_f_status"),

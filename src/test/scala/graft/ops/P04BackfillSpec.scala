@@ -3,13 +3,14 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.GraftManifest
 
 class P04BackfillSpec extends SparkSpec {
 
   test("p04: backfill rewrites only the blast radius; v1 stays auditable") {
     val base = Pipeline.p04Table(spark, sf)
-    val v1 = graft.queries.Extras5.q78Resolve(base, 1)
-    val v2 = graft.queries.Extras5.q78Resolve(base, 2)
+    val v1 = GraftManifest.read(base, 1).paths
+    val v2 = GraftManifest.read(base, 2).paths
     def is96(p: String) = p.contains("part_month=1996")
     // every untouched month is carried BY REFERENCE (identical paths)
     assert(v1.filterNot(is96).toSet == v2.filterNot(is96).toSet,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.sources.GraftManifest
 
 class Extras5Spec extends SparkSpec {
 
@@ -56,8 +57,8 @@ class Extras5Spec extends SparkSpec {
     // files after the v3 delete, and re-reading them returns the
     // pre-delete rows (including the deleted 'F' rows)
     val base = Extras5.q78Table(spark, sf)
-    val v1 = Extras5.q78Resolve(base, 1)
-    val v3 = Extras5.q78Resolve(base, 3)
+    val v1 = GraftManifest.read(base, 1).paths
+    val v3 = GraftManifest.read(base, 3).paths
     assert(v1.intersect(v3).isEmpty,
       "copy-on-write delete must rewrite, not share, the touched files")
     val v1F = spark.read.parquet(v1: _*)
@@ -67,33 +68,33 @@ class Extras5Spec extends SparkSpec {
       .filter(col("o_orderstatus") === "F" && col("o_orderkey") % 3 === 0).count()
     assert(v3F == 0, "v3 must not see the deleted slice")
     // append files are shared by reference between v2 and v3
-    val v2 = Extras5.q78Resolve(base, 2)
+    val v2 = GraftManifest.read(base, 2).paths
     assert(v2.intersect(v3).nonEmpty, "untouched files must carry over")
   }
 
   test("manifest entries round-trip all field arities incl. adversarial names/values") {
     val base = graft.Scratch.dir("manifest_rt")
     val entries = Seq(
-      Extras5.ManifestEntry("/p/plain.parquet"),
-      Extras5.ManifestEntry("/p/stats.parquet", Some((-5L, 10L))),
-      Extras5.ManifestEntry("/p/dv.parquet", Some((1L, 2L)), Some("/p/d.gdv")),
-      Extras5.ManifestEntry("/p/dvnostats.parquet", None, Some("/p/e.gdv")),
+      GraftManifest.Entry("/p/plain.parquet"),
+      GraftManifest.Entry("/p/stats.parquet", Some((-5L, 10L))),
+      GraftManifest.Entry("/p/dv.parquet", Some((1L, 2L)), Some("/p/d.gdv")),
+      GraftManifest.Entry("/p/dvnostats.parquet", None, Some("/p/e.gdv")),
       // 5-field: per-column stats under names holding every separator
-      Extras5.ManifestEntry("/p/cols.parquet", Some((0L, 9L)), None,
+      GraftManifest.Entry("/p/cols.parquet", Some((0L, 9L)), None,
         Map("a=b" -> (1L, 2L), "c;d" -> (3L, 4L), "e:f" -> (5L, 6L),
           "naïve col" -> (-1L, 1L))),
       // 6-field: partition tuples with nasty keys/values and a NULL
-      Extras5.ManifestEntry("/p/parts.parquet", None, Some("/p/f.gdv"),
+      GraftManifest.Entry("/p/parts.parquet", None, Some("/p/f.gdv"),
         Map("k" -> (7L, 8L)),
         Map("days.ts" -> "20100", "src=x;y" -> "a b=c;d", "nullv" -> null)),
-      Extras5.ManifestEntry("/p/partsonly.parquet",
+      GraftManifest.Entry("/p/partsonly.parquet",
         partValues = Map("s" -> "-")))
-    Extras5.q78CommitEntries(base, 1, entries)
-    val back = Extras5.q78ResolveEntries(base, 1)
+    GraftManifest.commitAt(base, 1, entries)
+    val back = GraftManifest.read(base, 1).entries
     assert(back.toSet == entries.toSet,
       s"round-trip mismatch:\n${back.mkString("\n")}")
     // headers coexist with every arity
-    assert(Extras5.q78CommitHeaders(base, 1).contains("ts"))
+    assert(GraftManifest.read(base, 1).headers.contains("ts"))
   }
 
   test("g01: BFS levels are disjoint and the frontier stays within the graph") {

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.sources.GraftManifest
 import org.apache.spark.sql.functions._
 
 /** Pins q88's MERGE file-level contract — the parts the oracle hash
@@ -35,7 +36,7 @@ class Extras6Spec extends SparkSpec {
   }
 
   test("q88 snapshot isolation: v1 still resolves post-merge") {
-    val v1 = Extras5.q78Resolve(st.base, 1)
+    val v1 = GraftManifest.read(st.base, 1).paths
     assert(v1.sorted == st.v1Files.sorted)
     // and every listed file still exists (COW never deletes)
     assert(v1.forall(p => new java.io.File(p).isFile))
@@ -45,13 +46,13 @@ class Extras6Spec extends SparkSpec {
   }
 
   test("q88 COW and MOR produce identical row sets") {
-    val cow = spark.read.parquet(Extras5.q78Resolve(st.base, 2): _*)
+    val cow = spark.read.parquet(GraftManifest.read(st.base, 2).paths: _*)
     val mor = Extras6.q88ReadMor(spark, st)
     val key = Seq("o_orderkey", "o_orderstatus", "price")
     assert(cow.count() == mor.count())
     assert(cow.exceptAll(mor).isEmpty && mor.exceptAll(cow).isEmpty)
     // the merge actually did something: v2 differs from v1
-    val v1 = spark.read.parquet(Extras5.q78Resolve(st.base, 1): _*)
+    val v1 = spark.read.parquet(GraftManifest.read(st.base, 1).paths: _*)
     assert(v1.exceptAll(cow).count() > 0)
     assert(key.forall(cow.columns.contains))
   }
@@ -73,18 +74,18 @@ class Extras6Spec extends SparkSpec {
     // carried = exactly the singleton bins' files, untouched paths
     assert(cst.carried.sorted == cst.bins.filter(_._2.length == 1).flatMap(_._2).sorted)
     // v2 file count = bin count
-    assert(Extras5.q78Resolve(cst.base, 2).length == cst.bins.length)
+    assert(GraftManifest.read(cst.base, 2).paths.length == cst.bins.length)
   }
 
   test("q89 compaction preserves contents and v1 stays resolvable") {
-    val v1 = spark.read.parquet(Extras5.q78Resolve(cst.base, 1): _*)
-    val v2 = spark.read.parquet(Extras5.q78Resolve(cst.base, 2): _*)
+    val v1 = spark.read.parquet(GraftManifest.read(cst.base, 1).paths: _*)
+    val v2 = spark.read.parquet(GraftManifest.read(cst.base, 2).paths: _*)
     assert(v2.columns.sorted.toSeq == v1.columns.sorted.toSeq)
     assert(v1.exceptAll(v2).isEmpty && v2.exceptAll(v1).isEmpty)
-    assert(Extras5.q78Resolve(cst.base, 1).sorted == cst.v1Files.sorted)
+    assert(GraftManifest.read(cst.base, 1).paths.sorted == cst.v1Files.sorted)
     assert(cst.v1Files.forall(p => new java.io.File(p).isFile))
     // compaction reduced the file count (the op's reason to exist)
-    assert(Extras5.q78Resolve(cst.base, 2).length < cst.v1Files.length)
+    assert(GraftManifest.read(cst.base, 2).paths.length < cst.v1Files.length)
   }
 
   // --- q91: vacuum / snapshot expiration ----------------------------
@@ -100,11 +101,11 @@ class Extras6Spec extends SparkSpec {
     vst.sharedSurvivors.foreach(p =>
       assert(new java.io.File(p).isFile, s"shared $p was wrongly deleted"))
     // deleted ∩ retained = ∅ (no retained version lost a file)
-    val retained = (2 to 3).flatMap(Extras5.q78Resolve(vst.base, _)).toSet
+    val retained = (2 to 3).flatMap(GraftManifest.read(vst.base, _).paths).toSet
     assert(vst.deleted.toSet.intersect(retained).isEmpty)
     // retained versions still read completely
     for (v <- 2 to 3) {
-      val files = Extras5.q78Resolve(vst.base, v)
+      val files = GraftManifest.read(vst.base, v).paths
       assert(files.forall(p => new java.io.File(p).isFile))
       assert(spark.read.parquet(files: _*).count() > 0)
     }
@@ -123,8 +124,8 @@ class Extras6Spec extends SparkSpec {
         s"transition $i->$j: pruned and naive diffs disagree")
       // pruning is real: the symmetric difference is smaller than both
       // full manifests together (shared carried files are skipped)
-      val fi = Extras5.q78Resolve(base, i)
-      val fj = Extras5.q78Resolve(base, j)
+      val fi = GraftManifest.read(base, i).paths
+      val fj = GraftManifest.read(base, j).paths
       val prunedFiles = fi.filterNot(fj.toSet).length + fj.filterNot(fi.toSet).length
       assert(prunedFiles < fi.length + fj.length,
         s"transition $i->$j: no file was shared, pruning is vacuous")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.sources.GraftManifest
 import org.apache.spark.sql.functions._
 
 /** Pins the q97/q98 lifecycle contracts the oracle hash cannot see:
@@ -16,14 +17,14 @@ class Extras7Spec extends SparkSpec {
     def at(h: Double): Long =
       java.time.Instant.parse("2026-03-01T00:00:00Z")
         .plusMillis((h * 3600 * 1000).toLong).toEpochMilli
-    assert(Extras5.q78VersionAt(base, at(0)) == 1)   // exactly at commit 1
-    assert(Extras5.q78VersionAt(base, at(1.5)) == 1) // between 1 and 2
-    assert(Extras5.q78VersionAt(base, at(2)) == 2)
-    assert(Extras5.q78VersionAt(base, at(3.9)) == 2)
-    assert(Extras5.q78VersionAt(base, at(4)) == 3)
-    assert(Extras5.q78VersionAt(base, at(1000)) == 3) // far future -> latest
+    assert(GraftManifest.versionAt(base, at(0)) == 1)   // exactly at commit 1
+    assert(GraftManifest.versionAt(base, at(1.5)) == 1) // between 1 and 2
+    assert(GraftManifest.versionAt(base, at(2)) == 2)
+    assert(GraftManifest.versionAt(base, at(3.9)) == 2)
+    assert(GraftManifest.versionAt(base, at(4)) == 3)
+    assert(GraftManifest.versionAt(base, at(1000)) == 3) // far future -> latest
     val e = intercept[IllegalArgumentException] {
-      Extras5.q78VersionAt(base, at(-1))
+      GraftManifest.versionAt(base, at(-1))
     }
     assert(e.getMessage.contains("predates"))
   }
@@ -46,12 +47,12 @@ class Extras7Spec extends SparkSpec {
 
   test("restore is one metadata commit; rolled-over versions stay readable") {
     val base = Extras7.q98Build(spark, sf) // v1, v2 append, v3 = restore(1)
-    val v1 = Extras5.q78ResolveEntries(base, 1)
-    val v3 = Extras5.q78ResolveEntries(base, 3)
+    val v1 = GraftManifest.read(base, 1).entries
+    val v3 = GraftManifest.read(base, 3).entries
     assert(v3.map(_.path) == v1.map(_.path), "restore re-lists v1's files")
-    assert(Extras5.q78CommitHeaders(base, 3).get("restore").contains("1"))
+    assert(GraftManifest.read(base, 3).headers.get("restore").contains("1"))
     // v2's extra files still exist on disk and resolve (nothing deleted)
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     assert(v2.size > v1.size)
     v2.foreach(e => assert(new java.io.File(e.path).exists()))
     assert(spark.read.parquet(v2.map(_.path): _*).count() >
@@ -60,9 +61,9 @@ class Extras7Spec extends SparkSpec {
 
   test("MOR merge is ONE commit: base files untouched, DVs on matched files, stats on appends") {
     val base = Extras7.q99Build(spark, sf)
-    assert(Extras5.q78Latest(base) == 2, "build + merge = exactly two commits")
-    val v1 = Extras5.q78ResolveEntries(base, 1)
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    assert(GraftManifest.latest(base) == 2, "build + merge = exactly two commits")
+    val v1 = GraftManifest.read(base, 1).entries
+    val v2 = GraftManifest.read(base, 2).entries
     val v1Paths = v1.map(_.path).toSet
     // every base file carries into v2 (never rewritten), byte-identical
     assert(v1Paths.subsetOf(v2.map(_.path).toSet))
@@ -92,7 +93,7 @@ class Extras7Spec extends SparkSpec {
     // every live row; now the manifest side is pre-rendered driver-side
     // (metadataPathOf) and the scan side is the raw metadata column
     val base = Extras7.q96Build(spark, sf) // v3 holds DV'd entries
-    val entries = Extras5.q78ResolveEntries(base, 3)
+    val entries = GraftManifest.read(base, 3).entries
     assert(entries.exists(_.dv.isDefined), "fixture must carry DVs")
     val live = Extras7.liveRowsWithPos(spark, entries)
     val plan = live.queryExecution.optimizedPlan
@@ -110,10 +111,10 @@ class Extras7Spec extends SparkSpec {
 
   test("a MOR delete matching nothing is a no-op, not a commit") {
     val base = Extras7.q98Build(spark, sf)
-    val before = Extras5.q78Latest(base)
+    val before = GraftManifest.latest(base)
     val v = Extras7.deleteMorOcc(spark, base, col("o_orderkey") < 0)
     assert(v == before, "no matches: no new version")
-    assert(Extras5.q78Latest(base) == before)
+    assert(GraftManifest.latest(base) == before)
   }
 
   test("mergeMorOcc is generic: a part-keyed table with its own delta shape") {
@@ -127,8 +128,8 @@ class Extras7Spec extends SparkSpec {
       .filter { case (n, _, _) => n.startsWith("part-") && n.endsWith(".parquet") }
       .map(_._2).sorted
     val stats = Extras5.parquetKeyStats(v1, "p_partkey")
-    Extras5.q78CommitEntries(base, 1,
-      v1.map(f => Extras5.ManifestEntry(f, stats.get(f))))
+    GraftManifest.commitAt(base, 1,
+      v1.map(f => GraftManifest.Entry(f, stats.get(f))))
     // delta keyed by p_partkey with its own op column name: delete
     // keys ≡ 0 (mod 10), upsert keys ≡ 1 (mod 10) at price + 7
     val delta = part
@@ -139,7 +140,7 @@ class Extras7Spec extends SparkSpec {
     val v = Extras7.mergeMorOcc(spark, base, delta,
       keyColumn = "p_partkey", opColumn = "verb")
     assert(v == 2)
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     val v1Set = v1.toSet
     val (carried, appended) = v2.partition(e => v1Set(e.path))
     assert(carried.map(_.path).toSet == v1Set, "no base file rewritten")

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkSpec
 import graft.sources.{GraftCatalog, GraftFs}
+import graft.sources.GraftManifest
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -26,8 +27,8 @@ class Extras8Spec extends SparkSpec {
       .filter { case (n, _, _) => n.startsWith("part-") && n.endsWith(".parquet") }
       .map(_._2).sorted
     val stats = Extras5.parquetKeyStats(v1, "o_orderkey")
-    Extras5.q78CommitEntries(base, 1,
-      v1.map(f => Extras5.ManifestEntry(f, stats.get(f))))
+    GraftManifest.commitAt(base, 1,
+      v1.map(f => GraftManifest.Entry(f, stats.get(f))))
     val name = s"x8${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
     GraftCatalog.register(name, base)
     (name, base)
@@ -38,19 +39,19 @@ class Extras8Spec extends SparkSpec {
     spark.sql(s"INSERT INTO graft.$name SELECT o_orderkey + 1000000, " +
       "o_orderstatus, price FROM graft.${name} VERSION AS OF 1".replace(
         "${name}", name))
-    assert(Extras5.q78Latest(base) == 2)
+    assert(GraftManifest.latest(base) == 2)
     val r = spark.sql(s"CALL graft.system.restore('$name', 1)").head()
     assert(r.getLong(0) == 1L && r.getLong(1) == 3L)
-    assert(Extras5.q78ResolveEntries(base, 3).map(_.path) ==
-      Extras5.q78ResolveEntries(base, 1).map(_.path))
+    assert(GraftManifest.read(base, 3).entries.map(_.path) ==
+      GraftManifest.read(base, 1).entries.map(_.path))
   }
 
   test("CALL vacuum deletes only unreferenced files; restore-listed files survive") {
     val (name, base) = freshTable("vac")
     // v2: COW delete rewrites the touched files (v1 originals die with v1)
     spark.sql(s"DELETE FROM graft.$name WHERE o_orderstatus = 'F'")
-    val v1Only = Extras5.q78Resolve(base, 1).toSet --
-      Extras5.q78Resolve(base, 2).toSet
+    val v1Only = GraftManifest.read(base, 1).paths.toSet --
+      GraftManifest.read(base, 2).paths.toSet
     assert(v1Only.nonEmpty, "the COW delete must rewrite some files")
     val rowsV2 = spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0)
     val r = spark.sql(s"CALL graft.system.vacuum('$name', 2)").head()
@@ -60,7 +61,7 @@ class Extras8Spec extends SparkSpec {
     v1Only.foreach(p => assert(!GraftFs.exists(p), s"$p must be deleted"))
     // the current snapshot is untouched
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == rowsV2)
-    intercept[Exception] { Extras5.q78ResolveEntries(base, 1) }
+    intercept[Exception] { GraftManifest.read(base, 1).entries }
     // refusing to expire everything
     val e = intercept[Exception] {
       spark.sql(s"CALL graft.system.vacuum('$name', 99)").collect()
@@ -82,14 +83,14 @@ class Extras8Spec extends SparkSpec {
     Thread.sleep(5) // distinct #ts millis between v2 and v3
     spark.sql(s"INSERT INTO graft.$name VALUES (222222222, 'O', " +
       "CAST(2 AS DECIMAL(18,2)))") // v3
-    val ts1 = Extras5.q78CommitTime(base, 1)
-    val ts2 = Extras5.q78CommitTime(base, 2)
-    assert(ts2 < Extras5.q78CommitTime(base, 3))
+    val ts1 = GraftManifest.commitTime(base, 1)
+    val ts2 = GraftManifest.commitTime(base, 2)
+    assert(ts2 < GraftManifest.commitTime(base, 3))
     val hour = 3600000L
     // cutoff predating the whole history: nothing is old enough
     assert(Extras8.vacuumRetainHours(base, 1L,
       nowMillis = ts1 - 10 + hour) == (0L, 0L))
-    assert(Extras5.q78Latest(base) == 3)
+    assert(GraftManifest.latest(base) == 3)
     // SQL surface: a huge window is the same no-op; omitting both
     // (or giving both) floors is refused
     val r = spark.sql(
@@ -106,9 +107,9 @@ class Extras8Spec extends SparkSpec {
     val (_, expired) =
       Extras8.vacuumRetainHours(base, 1L, nowMillis = ts2 + hour)
     assert(expired == 1L)
-    intercept[Exception] { Extras5.q78ResolveEntries(base, 1) }
-    assert(Extras5.q78VersionAt(base, ts2) == 2)
-    Extras5.q78ResolveEntries(base, 2).foreach(e =>
+    intercept[Exception] { GraftManifest.read(base, 1).entries }
+    assert(GraftManifest.versionAt(base, ts2) == 2)
+    GraftManifest.read(base, 2).entries.foreach(e =>
       assert(GraftFs.exists(e.path), s"${e.path} is inside the window"))
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name VERSION AS OF 2")
       .head().getLong(0) > 0)
@@ -130,8 +131,8 @@ class Extras8Spec extends SparkSpec {
     assert(files.size == 64)
     val aS = Extras5.parquetKeyStats(files, "a")
     val bS = Extras5.parquetKeyStats(files, "b")
-    Extras5.q78CommitEntries(base, 1, files.map { f =>
-      Extras5.ManifestEntry(f, aS.get(f),
+    GraftManifest.commitAt(base, 1, files.map { f =>
+      GraftManifest.Entry(f, aS.get(f),
         colStats = (aS.get(f).map("a" -> _) ++ bS.get(f).map("b" -> _)).toMap)
     })
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -142,7 +143,7 @@ class Extras8Spec extends SparkSpec {
     GraftCatalog.register(name, base)
     // one MOR delete → one DV'd file (zorder must carry it untouched)
     Extras7.deleteMorOcc(spark, base, col("v") === 0)
-    val dvPath = Extras5.q78ResolveEntries(base, 2)
+    val dvPath = GraftManifest.read(base, 2).entries
       .filter(_.dv.isDefined).map(_.path)
     assert(dvPath.size == 1)
     def boxOpened: Int = GraftCatalog.scannedFileCount(spark.sql(
@@ -154,7 +155,7 @@ class Extras8Spec extends SparkSpec {
     val r = spark.sql(s"CALL graft.system.optimize('$name', 'zorder', " +
       s"${math.max(1L, total / 64)}, 'a,b')").head()
     assert(r.getString(0) == "zorder" && r.getLong(1) == 3L)
-    val v3 = Extras5.q78ResolveEntries(base, 3)
+    val v3 = GraftManifest.read(base, 3).entries
     // the DV'd file carried with its DV; every rewritten file is new
     assert(v3.filter(_.dv.isDefined).map(_.path) == dvPath)
     val rewritten = v3.filter(_.dv.isEmpty)
@@ -183,7 +184,7 @@ class Extras8Spec extends SparkSpec {
     val r = spark.sql(s"CALL graft.system.optimize('$name', 'zorder', " +
       s"${64L * 1024 * 1024}, 'k,x')").head()
     assert(!r.isNullAt(1))
-    val entries = Extras5.q78ResolveEntries(base, r.getLong(1).toInt)
+    val entries = GraftManifest.read(base, r.getLong(1).toInt).entries
     assert(entries.nonEmpty)
     // every output keeps its partition tuple — a later INSERT OVERWRITE
     // PARTITION still attributes the rewritten files
@@ -200,14 +201,14 @@ class Extras8Spec extends SparkSpec {
     Extras7.deleteMorOcc(spark, base,
       col("o_orderkey") === spark.sql(
         s"SELECT MIN(o_orderkey) FROM graft.$name").head().getLong(0))
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     val dvd = v2.filter(_.dv.isDefined).map(_.path)
     assert(dvd.size == 1)
     val rows = spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0)
     val r = spark.sql(
       s"CALL graft.system.optimize('$name', 'compact', ${64L * 1024 * 1024})").head()
     assert(r.getString(0) == "compact" && r.getLong(1) == 3L)
-    val v3 = Extras5.q78ResolveEntries(base, 3)
+    val v3 = GraftManifest.read(base, 3).entries
     // the 7 small DV-less files packed into one; the DV'd file carried
     assert(v3.size == 2, s"expected DV'd + 1 compacted, got ${v3.size}")
     assert(v3.exists(e => dvd.contains(e.path) && e.dv.isDefined))
@@ -235,8 +236,8 @@ class Extras8Spec extends SparkSpec {
       .filter { case (n, _, _) => n.startsWith("part-") && n.endsWith(".parquet") }
       .map(_._2).sorted
     val stats = Extras5.parquetKeyStats(v1, "o_orderkey")
-    Extras5.q78CommitEntries(base, 1,
-      v1.map(f => Extras5.ManifestEntry(f, stats.get(f))))
+    GraftManifest.commitAt(base, 1,
+      v1.map(f => GraftManifest.Entry(f, stats.get(f))))
     val rows = spark.read.parquet(v1: _*).count()
     // target ≈ 3 files per bin → ~4 multi-file bins
     val target = GraftFs.lengths(v1).values.max * 3 + 1
@@ -245,7 +246,7 @@ class Extras8Spec extends SparkSpec {
       try Extras8.compactSmallFiles(spark, base, target)
       finally spark.sparkContext.clearJobGroup()
     assert(committed.contains(2))
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     val nBins = v2.size
     assert(nBins >= 6 && nBins < v1.size,
       s"expected a multi-bin layout, got $nBins bins from ${v1.size} files")
@@ -264,11 +265,11 @@ class Extras8Spec extends SparkSpec {
   test("CALL optimize purge (default mode) folds DVs; bad mode/table error clearly") {
     val (name, base) = freshTable("pg")
     Extras7.deleteMorOcc(spark, base, col("o_orderstatus") === "F")
-    assert(Extras5.q78ResolveEntries(base, 2).exists(_.dv.isDefined))
+    assert(GraftManifest.read(base, 2).entries.exists(_.dv.isDefined))
     val rows = spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0)
     val r = spark.sql(s"CALL graft.system.optimize('$name')").head()
     assert(r.getString(0) == "purge" && r.getLong(1) == 3L)
-    assert(Extras5.q78ResolveEntries(base, 3).forall(_.dv.isEmpty))
+    assert(GraftManifest.read(base, 3).entries.forall(_.dv.isEmpty))
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == rows)
     def msgs(t: Throwable): String =
       if (t == null) "" else Option(t.getMessage).getOrElse("") + msgs(t.getCause)
@@ -291,15 +292,15 @@ class Extras8Spec extends SparkSpec {
     // the ALTERs are metadata-only COMMITS (r17 — schema rides the
     // protocol): v3/v4 re-list v2's entries verbatim, rewrite no file,
     // and the final insert lands at v5
-    val v2 = Extras5.q78ResolveEntries(base, 2)
-    assert(Extras5.q78Latest(base) == 5)
-    assert(Extras5.q78ResolveEntries(base, 3).map(_.path) == v2.map(_.path))
-    assert(Extras5.q78ResolveEntries(base, 4).map(_.path) == v2.map(_.path))
-    assert(Extras5.q78ResolveEntries(base, 5).map(_.path)
+    val v2 = GraftManifest.read(base, 2).entries
+    assert(GraftManifest.latest(base) == 5)
+    assert(GraftManifest.read(base, 3).entries.map(_.path) == v2.map(_.path))
+    assert(GraftManifest.read(base, 4).entries.map(_.path) == v2.map(_.path))
+    assert(GraftManifest.read(base, 5).entries.map(_.path)
       .toSet.intersect(v2.map(_.path).toSet) == v2.map(_.path).toSet,
       "widening must not rewrite existing files")
     // both physical generations carry key stats (int widened at track)
-    assert(Extras5.q78ResolveEntries(base, 5).forall(_.stats.isDefined))
+    assert(GraftManifest.read(base, 5).entries.forall(_.stats.isDefined))
     // the pre-widening snapshot reads NARROW (its own schema)
     import org.apache.spark.sql.types.{IntegerType, DecimalType}
     val preWiden = spark.sql(s"SELECT * FROM graft.$name VERSION AS OF 2")
@@ -345,9 +346,9 @@ class Extras8Spec extends SparkSpec {
       if (t == null) "" else Option(t.getMessage).getOrElse("") + msgs(t.getCause)
     // the vacuum expired exactly the untagged v2 and deleted only its
     // superseded originals (v1's files survive via the tag AND via v3)
-    intercept[Exception] { Extras5.q78ResolveEntries(base, 2) }
-    assert(Extras5.q78ResolveEntries(base, 1).nonEmpty, "tagged v1 resolves")
-    Extras5.q78ResolveEntries(base, 1).foreach(e =>
+    intercept[Exception] { GraftManifest.read(base, 2).entries }
+    assert(GraftManifest.read(base, 1).entries.nonEmpty, "tagged v1 resolves")
+    GraftManifest.read(base, 1).entries.foreach(e =>
       assert(GraftFs.exists(e.path), s"tag-protected file deleted: ${e.path}"))
     // tag-addressed read == version-addressed read
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name VERSION AS OF 'initial'")
@@ -360,7 +361,7 @@ class Extras8Spec extends SparkSpec {
       s"SELECT tag, version, ts_millis FROM graft.$name.tags").collect()
     assert(tagRows.length == 1 && tagRows.head.getString(0) == "initial" &&
       tagRows.head.getLong(1) == 1L &&
-      tagRows.head.getLong(2) == Extras5.q78CommitTime(base, 1))
+      tagRows.head.getLong(2) == GraftManifest.commitTime(base, 1))
     // tags are immutable: duplicate create fails with one winner
     val dup = intercept[Exception] {
       spark.sql(s"CALL graft.system.create_tag('$name', 'initial', 3)").collect()
@@ -380,9 +381,9 @@ class Extras8Spec extends SparkSpec {
     assert(spark.sql(s"CALL graft.system.drop_tag('$name', 'initial')")
       .head().getBoolean(0))
     spark.sql(s"CALL graft.system.vacuum('$name', 3)")
-    intercept[Exception] { Extras5.q78ResolveEntries(base, 1) }
+    intercept[Exception] { GraftManifest.read(base, 1).entries }
     // but files v3 still references survive the expiry (refcount)
-    Extras5.q78ResolveEntries(base, 3).foreach(e =>
+    GraftManifest.read(base, 3).entries.foreach(e =>
       assert(GraftFs.exists(e.path)))
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) > 0)
   }
@@ -404,7 +405,7 @@ class Extras8Spec extends SparkSpec {
     }
     assert(msgs(e).contains("every version"))
     // HEAD untouched: v2 still the current version with all its rows
-    assert(Extras5.q78Latest(base) == 2)
+    assert(GraftManifest.latest(base) == 2)
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name")
       .head().getLong(0) == headRows)
   }

@@ -1,11 +1,12 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.sources.GraftManifest
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Pins the optimistic-concurrency commit protocol (q78TryCommit CAS +
+/** Pins the optimistic-concurrency commit protocol (GraftManifest CAS +
   * cowMergeCommitOcc rebase loop) — the multi-writer behavior the
   * oracle hash cannot see:
   *  - the CAS primitive: exactly one of two commits to the same version
@@ -33,16 +34,16 @@ class OccCommitSpec extends SparkSpec {
         lit(tag).as("d_status"), ($"price" + bump).cast(D2).as("d_price"))
   }
 
-  test("q78TryCommit: exactly one writer wins a version; loser is told") {
+  test("GraftManifest.publish: exactly one writer wins a version; loser is told") {
     val base = graft.Scratch.dir("occ_cas")
-    assert(Extras5.q78TryCommit(base, 1, Seq("/a.parquet")))
-    assert(!Extras5.q78TryCommit(base, 1, Seq("/b.parquet")))
+    assert(GraftManifest.publish(base, 1, Seq("/a.parquet").map(GraftManifest.Entry(_))))
+    assert(!GraftManifest.publish(base, 1, Seq("/b.parquet").map(GraftManifest.Entry(_))))
     // the winner's manifest is intact — the loser did not clobber it
-    assert(Extras5.q78Resolve(base, 1) == Seq("/a.parquet"))
-    assert(Extras5.q78Latest(base) == 1)
+    assert(GraftManifest.read(base, 1).paths == Seq("/a.parquet"))
+    assert(GraftManifest.latest(base) == 1)
     // the single-writer wrapper refuses instead of overwriting
     intercept[IllegalStateException] {
-      Extras5.q78Commit(base, 1, Seq("/c.parquet"))
+      GraftManifest.commitAt(base, 1, Seq("/c.parquet").map(GraftManifest.Entry(_)))
     }
   }
 
@@ -57,7 +58,7 @@ class OccCommitSpec extends SparkSpec {
 
   test("OCC disjoint interleave: loser rebases without re-rewriting; both deltas land") {
     val base = Extras6.cdcBase(spark, sf)
-    val v1 = Extras5.q78Resolve(base, 1)
+    val v1 = GraftManifest.read(base, 1).paths
     val (loKey, hiKey) = extremeKeys(v1)
     val deltaA = updDelta(Seq(loKey), "A", 1)
     val deltaB = updDelta(Seq(hiKey), "B", 2)
@@ -70,11 +71,11 @@ class OccCommitSpec extends SparkSpec {
     assert(out.casLost == 1)
     assert(out.rewrites == 1, "disjoint loss must salvage the rewrite")
     // both deltas are in v3; v2 holds only B's
-    val v3 = spark.read.parquet(Extras5.q78Resolve(base, 3): _*)
+    val v3 = spark.read.parquet(GraftManifest.read(base, 3).paths: _*)
     assert(v3.filter($"o_orderkey" === loKey && $"o_orderstatus" === "A").count() == 1)
     assert(v3.filter($"o_orderkey" === hiKey && $"o_orderstatus" === "B").count() == 1)
     assert(v3.count() == spark.read.parquet(v1: _*).count())
-    val v2 = spark.read.parquet(Extras5.q78Resolve(base, 2): _*)
+    val v2 = spark.read.parquet(GraftManifest.read(base, 2).paths: _*)
     assert(v2.filter($"o_orderstatus" === "A").count() == 0)
     assert(v2.filter($"o_orderstatus" === "B").count() == 1)
   }
@@ -86,7 +87,7 @@ class OccCommitSpec extends SparkSpec {
     // interleaving the scheduler produces, the protocol must serialize
     // them into versions 2..5 with every delta applied exactly once.
     val base = Extras6.cdcBase(spark, sf)
-    val v1 = Extras5.q78Resolve(base, 1)
+    val v1 = GraftManifest.read(base, 1).paths
     val keys = spark.read.parquet(v1: _*)
       .select($"o_orderkey").orderBy($"o_orderkey")
       .as[Long].collect()
@@ -101,17 +102,17 @@ class OccCommitSpec extends SparkSpec {
         Extras6.cowMergeCommitOcc(spark, base, updDelta(Seq(k), s"T$i", i + 1))
       }
     }), 5.minutes)
-    assert(Extras5.q78Latest(base) == 5, "4 commits on top of v1")
+    assert(GraftManifest.latest(base) == 5, "4 commits on top of v1")
     assert(outcomes.map(_.version).sorted == Seq(2, 3, 4, 5),
       "each writer landed exactly one distinct version")
-    val fin = spark.read.parquet(Extras5.q78Resolve(base, 5): _*)
+    val fin = spark.read.parquet(GraftManifest.read(base, 5).paths: _*)
     picks.zipWithIndex.foreach { case (k, i) =>
       assert(fin.filter($"o_orderkey" === k && $"o_orderstatus" === s"T$i")
         .count() == 1, s"delta T$i must land")
     }
     assert(fin.count() == spark.read.parquet(v1: _*).count())
     // every intermediate version still resolves (history intact)
-    (1 to 5).foreach(v => assert(Extras5.q78Resolve(base, v).nonEmpty))
+    (1 to 5).foreach(v => assert(GraftManifest.read(base, v).paths.nonEmpty))
   }
 
   test("concurrent SQL INSERT INTO appends never conflict") {
@@ -135,7 +136,7 @@ class OccCommitSpec extends SparkSpec {
 
   test("OCC true conflict: loser re-runs the merge against the winner's table") {
     val base = Extras6.cdcBase(spark, sf)
-    val v1 = Extras5.q78Resolve(base, 1)
+    val v1 = GraftManifest.read(base, 1).paths
     val (loKey, _) = extremeKeys(v1)
     // SAME key on both sides: the winner rewrites the loser's touched
     // file, so the loser's staged output is built on stale rows
@@ -149,7 +150,7 @@ class OccCommitSpec extends SparkSpec {
     assert(out.rewrites == 2, "overlapping loss must re-run the rewrite")
     assert(out.conflicting.nonEmpty, "the conflicting files are reported")
     // last-writer-wins composition: A (applied second) sets the value
-    val v3row = spark.read.parquet(Extras5.q78Resolve(base, 3): _*)
+    val v3row = spark.read.parquet(GraftManifest.read(base, 3).paths: _*)
       .filter($"o_orderkey" === loKey).head()
     assert(v3row.getAs[String]("o_orderstatus") == "A")
     // A's delta was built from the BASE row (price+10 over v1, not over
@@ -162,7 +163,7 @@ class OccCommitSpec extends SparkSpec {
     // the abandoned first rewrite's outDir was deleted on redo: every
     // surviving files-occ-* directory holds only manifest-referenced
     // files — lost races never orphan data files (r14 advice)
-    val referenced = (1 to 3).flatMap(Extras5.q78Resolve(base, _)).toSet
+    val referenced = (1 to 3).flatMap(GraftManifest.read(base, _).paths).toSet
     val occDirs = new java.io.File(base).listFiles()
       .filter(d => d.isDirectory && d.getName.startsWith("files-occ-"))
     assert(occDirs.nonEmpty, "the winning rewrite's dir survives")

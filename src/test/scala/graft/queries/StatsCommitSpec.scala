@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.sources.GraftManifest
 import org.apache.spark.sql.functions._
 
 /** Pins the stats-in-commit contract (q94 family) — the parts the
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
   *    (soundness + usefulness in one assertion);
   *  - files committed without stats are never pruned (unsoundness
   *    guard);
-  *  - stats survive the CAS path: a q78TryCommit with stats resolves
+  *  - stats survive the CAS path: a GraftManifest.publish with stats resolves
   *    them back.
   */
 class StatsCommitSpec extends SparkSpec {
@@ -21,8 +22,8 @@ class StatsCommitSpec extends SparkSpec {
   private lazy val st = Extras6.q94Build(spark, sf)
 
   test("q94 pruned resolve opens strictly fewer files, identical rows") {
-    val all = Extras5.q78Resolve(st.base, 1)
-    val pruned = Extras5.q78ResolvePruned(st.base, 1, st.lo, st.hi)
+    val all = GraftManifest.read(st.base, 1).paths
+    val pruned = GraftManifest.read(st.base, 1).pruned(st.lo, st.hi)
     assert(pruned.nonEmpty)
     assert(pruned.size < all.size,
       s"pruning must bite: ${pruned.size} vs ${all.size}")
@@ -34,7 +35,7 @@ class StatsCommitSpec extends SparkSpec {
   }
 
   test("manifest stats round-trip the footer values exactly") {
-    val resolved = Extras5.q78ResolveStats(st.base, 1)
+    val resolved = GraftManifest.read(st.base, 1).entries.map(e => (e.path, e.stats))
     assert(resolved.forall(_._2.isDefined), "every committed file has stats")
     val fresh = Extras5.parquetKeyStats(resolved.map(_._1), "o_orderkey")
     resolved.foreach { case (f, s) => assert(s.contains(fresh(f))) }
@@ -45,11 +46,12 @@ class StatsCommitSpec extends SparkSpec {
 
   test("files committed without stats are never pruned") {
     val base = graft.Scratch.dir("stats_mixed")
-    val withStats = Extras5.q78Resolve(st.base, 1).head
+    val withStats = GraftManifest.read(st.base, 1).paths.head
     val stats = Extras5.parquetKeyStats(Seq(withStats), "o_orderkey")
     // second file committed stat-less (e.g. written by an older writer)
-    assert(Extras5.q78TryCommit(base, 1, Seq(withStats, "/no-stats.parquet"), stats))
-    val pruned = Extras5.q78ResolvePruned(base, 1, Long.MaxValue - 1, Long.MaxValue)
+    assert(GraftManifest.publish(base, 1,
+      (Seq(withStats, "/no-stats.parquet")).map(f => GraftManifest.Entry(f, stats.get(f)))))
+    val pruned = GraftManifest.read(base, 1).pruned(Long.MaxValue - 1, Long.MaxValue)
     assert(pruned == Seq("/no-stats.parquet"),
       "a stat-less file must survive any predicate; a stats'd file outside the range must not")
   }

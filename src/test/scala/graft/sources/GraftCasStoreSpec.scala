@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.queries.Extras5
 
 /** In-memory conditional-PUT store: what an S3 If-None-Match (or GCS
   * generation-match) implementation looks like behind the `CasStore`
@@ -90,7 +89,7 @@ class GraftCasStoreSpec extends SparkSpec {
     // three commits (create, insert, delete) = three CAS publishes,
     // all through the store
     assert(GraftMemCasStore.calls.get() - before >= 3L)
-    assert(Extras5.q78Latest(base) == 3)
+    assert(GraftManifest.latest(base) == 3)
   }
 }
 

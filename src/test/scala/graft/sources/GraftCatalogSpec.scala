@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.queries.{Extras5, Extras6}
+import graft.queries.Extras6
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -32,7 +32,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("MERGE touching one key carries every other file (runtime group filtering)") {
     val (name, base) = freshTable()
-    val v1 = Extras5.q78Resolve(base, 1)
+    val v1 = GraftManifest.read(base, 1).paths
     val (loKey, _) = keyRange(name)
     spark.sql(s"SELECT $loKey AS d_key, 'X' AS d_status, CAST(1 AS DECIMAL(18,2)) AS d_price")
       .createOrReplaceTempView("one_key_delta")
@@ -40,7 +40,7 @@ class GraftCatalogSpec extends SparkSpec {
       s"""MERGE INTO graft.$name t USING one_key_delta d
          |ON t.o_orderkey = d.d_key
          |WHEN MATCHED THEN UPDATE SET o_orderstatus = d.d_status""".stripMargin)
-    val v2 = Extras5.q78Resolve(base, 2)
+    val v2 = GraftManifest.read(base, 2).paths
     val sharedWithV1 = v2.toSet.intersect(v1.toSet)
     assert(sharedWithV1.size == v1.size - 1,
       s"exactly one of ${v1.size} files should be rewritten; carried ${sharedWithV1.size}")
@@ -60,11 +60,11 @@ class GraftCatalogSpec extends SparkSpec {
     val (loKey, _) = keyRange(name)
     spark.sql(s"UPDATE graft.$name SET price = CAST(price + 1 AS DECIMAL(18,2)) " +
       s"WHERE o_orderkey = $loKey")
-    val v2 = Extras5.q78ResolveStats(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries.map(e => (e.path, e.stats))
     assert(v2.forall(_._2.isDefined),
       "every file in the post-write manifest must carry stats")
     // and the new file's range actually contains the key it rewrote
-    val newFiles = v2.filterNot(f => Extras5.q78Resolve(base, 1).contains(f._1))
+    val newFiles = v2.filterNot(f => GraftManifest.read(base, 1).paths.contains(f._1))
     assert(newFiles.nonEmpty)
     assert(newFiles.exists { case (_, Some((mn, mx))) => mn <= loKey && loKey <= mx
       case _ => false })
@@ -83,7 +83,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.sql(
       s"SELECT COUNT(*) FROM graft.$name WHERE o_orderstatus = 'Z'").head().getLong(0) ==
       before - fBefore)
-    assert(Extras5.q78Latest(base) == 3)
+    assert(GraftManifest.latest(base) == 3)
     // v1 remains byte-identical history
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name VERSION AS OF 1")
       .head().getLong(0) == before)
@@ -107,14 +107,15 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 3)
     // append carries prior files by reference
     val base = GraftCatalog.baseFor(name).get
-    val v2 = Extras5.q78Resolve(base, 2)
-    val v3 = Extras5.q78Resolve(base, 3)
+    val v2 = GraftManifest.read(base, 2).paths
+    val v3 = GraftManifest.read(base, 3).paths
     assert(v2.toSet.subsetOf(v3.toSet), "append must carry v2's files")
     // appended files landed with key stats (writer-tracked, no footer pass)
-    assert(Extras5.q78ResolveStats(base, 3).forall(_._2.isDefined))
+    assert(GraftManifest.read(base, 3).entries.map(e => (e.path, e.stats))
+      .forall(_._2.isDefined))
     // overwrite replaces the file set; history stays readable
     spark.sql(s"INSERT OVERWRITE graft.$name VALUES (99, 'X', CAST(9.99 AS DECIMAL(18,2)))")
-    val v4 = Extras5.q78Resolve(base, 4)
+    val v4 = GraftManifest.read(base, 4).paths
     assert(v4.toSet.intersect(v3.toSet).isEmpty, "overwrite starts fresh")
     assert(spark.sql(s"SELECT o_orderkey FROM graft.$name").head().getLong(0) == 99)
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name VERSION AS OF 3")
@@ -135,13 +136,13 @@ class GraftCatalogSpec extends SparkSpec {
       "(o_orderkey BIGINT, o_orderstatus STRING, price DECIMAL(18,2))")
     spark.sql(s"INSERT INTO graft.$name VALUES (1, 'O', CAST(1 AS DECIMAL(18,2)))")
     val base = GraftCatalog.baseFor(name).get
-    val filesBefore = Extras5.q78Resolve(base, 2)
+    val filesBefore = GraftManifest.read(base, 2).paths
     spark.sql(s"ALTER TABLE graft.$name ADD COLUMN note STRING")
     // the ALTER is a metadata-only COMMIT (r17): v3 re-lists v2's
     // files verbatim — nothing on disk rewritten
-    assert(Extras5.q78Latest(base) == 3)
-    assert(Extras5.q78Resolve(base, 3) == filesBefore)
-    assert(Extras5.q78Resolve(base, 2) == filesBefore)
+    assert(GraftManifest.latest(base) == 3)
+    assert(GraftManifest.read(base, 3).paths == filesBefore)
+    assert(GraftManifest.read(base, 2).paths == filesBefore)
     spark.sql(s"INSERT INTO graft.$name VALUES " +
       "(2, 'F', CAST(2 AS DECIMAL(18,2)), 'new-era')")
     val rows = spark.sql(
@@ -170,7 +171,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("big files split into multiple partitions; every row read exactly once") {
     val (name, base) = freshTable()
-    val nFiles = Extras5.q78Resolve(base, 1).size
+    val nFiles = GraftManifest.read(base, 1).paths.size
     val expect = spark.sql(
       s"SELECT COUNT(*), SUM(o_orderkey) FROM graft.$name").head()
     // tiny split target: each (small) fixture file spans several splits;
@@ -275,7 +276,7 @@ class GraftCatalogSpec extends SparkSpec {
         s"SELECT id % 100, ${b * 1000} + id, CAST(1 AS DECIMAL(18,2)) " +
         "FROM range(0, 1000, 1, 1)")
     }
-    val entries = Extras5.q78ResolveEntries(base, 5)
+    val entries = GraftManifest.read(base, 5).entries
     assert(entries.size == 4)
     assert(entries.forall(e => e.colStats.keySet == Set("o_orderkey", "o_custkey")),
       s"both columns tracked, got ${entries.map(_.colStats.keySet)}")
@@ -322,9 +323,9 @@ class GraftCatalogSpec extends SparkSpec {
     // last-writer-wins), and the next delete writes sidecars
     spark.sql(s"ALTER TABLE graft.$name SET TBLPROPERTIES " +
       "('graft.delete.mode' = 'merge-on-read')")
-    assert(Extras5.q78Latest(base) == 3, "SET TBLPROPERTIES is a commit")
-    assert(Extras5.q78ResolveEntries(base, 3).map(_.path) ==
-      Extras5.q78ResolveEntries(base, 2).map(_.path),
+    assert(GraftManifest.latest(base) == 3, "SET TBLPROPERTIES is a commit")
+    assert(GraftManifest.read(base, 3).entries.map(_.path) ==
+      GraftManifest.read(base, 2).entries.map(_.path),
       "a props commit re-lists the same entries")
     // time travel resolves props AS OF the version: the pre-SET
     // snapshot still reads copy-on-write props
@@ -333,23 +334,23 @@ class GraftCatalogSpec extends SparkSpec {
     assert(GraftProps.propsAt(base, 3)
       .exists(_.get("graft.delete.mode").contains("merge-on-read")))
     spark.sql(s"DELETE FROM graft.$name WHERE k < 10")
-    val v4 = Extras5.q78ResolveEntries(base, 4)
+    val v4 = GraftManifest.read(base, 4).entries
     assert(v4.exists(_.dv.isDefined), "post-SET delete must be MOR")
-    assert(v4.map(_.path) == Extras5.q78ResolveEntries(base, 2).map(_.path),
+    assert(v4.map(_.path) == GraftManifest.read(base, 2).entries.map(_.path),
       "no data file rewritten")
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 40L)
     // switch stats columns post-create: the next insert tracks both
     spark.sql(s"ALTER TABLE graft.$name SET TBLPROPERTIES " +
       "('graft.stats.columns' = 'k,v')") // v5
     spark.sql(s"INSERT INTO graft.$name SELECT id, 'y', id FROM range(100, 150, 1, 1)") // v6
-    val newest = Extras5.q78ResolveEntries(base, 6)
+    val newest = GraftManifest.read(base, 6).entries
       .filterNot(v4.map(_.path).toSet contains _.path)
     assert(newest.nonEmpty && newest.forall(_.colStats.keySet == Set("k", "v")))
     // UNSET restores copy-on-write
     spark.sql(s"ALTER TABLE graft.$name UNSET TBLPROPERTIES ('graft.delete.mode')") // v7
     spark.sql(s"DELETE FROM graft.$name WHERE k = 100") // v8
-    assert(Extras5.q78ResolveEntries(base, 8)
-      .filterNot(e => Extras5.q78ResolveEntries(base, 7).map(_.identity)
+    assert(GraftManifest.read(base, 8).entries
+      .filterNot(e => GraftManifest.read(base, 7).entries.map(_.identity)
         .contains(e.identity)).forall(_.dv.isEmpty),
       "post-UNSET delete rewrites (COW) — no new DVs")
     // engine-managed and unknown-column properties refuse loudly
@@ -366,7 +367,7 @@ class GraftCatalogSpec extends SparkSpec {
     }
     assert(msgs(unk).contains("unknown column"))
     // a failed SET committed nothing — v8 is still the head
-    assert(Extras5.q78Latest(base) == 8)
+    assert(GraftManifest.latest(base) == 8)
   }
 
   test("racing SETs serialize through the CAS: exactly one winner (r18)") {
@@ -390,7 +391,7 @@ class GraftCatalogSpec extends SparkSpec {
     }
     assert(msgs(e).contains("concurrent property change"),
       s"racing SET must conflict explicitly, got: ${msgs(e)}")
-    val props = GraftProps.propsAt(base, Extras5.q78Latest(base)).get
+    val props = GraftProps.propsAt(base, GraftManifest.latest(base)).get
     assert(props.get("graft.update.mode").contains("merge-on-read"),
       "the inner SET won")
     assert(!props.contains("graft.delete.mode"),
@@ -400,7 +401,7 @@ class GraftCatalogSpec extends SparkSpec {
       spark.sql(s"INSERT INTO graft.$name VALUES (1, 'x')")
     spark.sql(s"ALTER TABLE graft.$name SET TBLPROPERTIES " +
       "('graft.delete.mode' = 'merge-on-read')")
-    val after = GraftProps.propsAt(base, Extras5.q78Latest(base)).get
+    val after = GraftProps.propsAt(base, GraftManifest.latest(base)).get
     assert(after.get("graft.delete.mode").contains("merge-on-read") &&
       after.get("graft.update.mode").contains("merge-on-read"))
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 1,
@@ -417,7 +418,7 @@ class GraftCatalogSpec extends SparkSpec {
       s"INSERT INTO graft.$name SELECT id AS k, CAST(id AS STRING) AS v " +
         s"FROM range(${b * 1000}, ${b * 1000 + 1000})"))
     // every committed file carries k-stats (no o_orderkey in sight)
-    assert(Extras5.q78ResolveEntries(base, 5).forall(_.stats.isDefined),
+    assert(GraftManifest.read(base, 5).entries.forall(_.stats.isDefined),
       "writers must track the configured stats column")
     val cat = new GraftCatalog()
     cat.initialize("graft", CaseInsensitiveStringMap.empty())

@@ -35,8 +35,8 @@ class GraftDvSpec extends SparkSpec {
       .parquet(s"$base/files-v1")
     val v1 = partFiles(s"$base/files-v1")
     val stats = Extras5.parquetKeyStats(v1, "o_orderkey")
-    Extras5.q78CommitEntries(base, 1,
-      v1.map(f => Extras5.ManifestEntry(f, stats.get(f))))
+    GraftManifest.commitAt(base, 1,
+      v1.map(f => GraftManifest.Entry(f, stats.get(f))))
     base
   }
 
@@ -68,7 +68,7 @@ class GraftDvSpec extends SparkSpec {
 
   test("MOR delete touches no data file; sidecars carry exactly the matched ordinals") {
     val base = buildV1("immutable")
-    val v1 = Extras5.q78ResolveEntries(base, 1)
+    val v1 = GraftManifest.read(base, 1).entries
     val sizesBefore = v1.map(e => e.path -> new java.io.File(e.path).length()).toMap
     val expectDeleted = spark.read.parquet(v1.map(_.path): _*)
       .filter($"o_orderstatus" === "F" && $"o_orderkey" % 2 === 0).count()
@@ -77,7 +77,7 @@ class GraftDvSpec extends SparkSpec {
     val v = Extras7.deleteMorOcc(spark, base,
       col("o_orderstatus") === "F" && col("o_orderkey") % 2 === 0)
     assert(v == 2)
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     // same data files, byte-identical
     assert(v2.map(_.path) == v1.map(_.path))
     v2.foreach(e => assert(new java.io.File(e.path).length() == sizesBefore(e.path)))
@@ -97,10 +97,10 @@ class GraftDvSpec extends SparkSpec {
   test("second delete merges positions into existing sidecars") {
     val base = buildV1("merge")
     Extras7.deleteMorOcc(spark, base, col("o_orderstatus") === "F")
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     val d1 = v2.flatMap(_.dv).map(d => GraftDv.read(d).length.toLong).sum
     Extras7.deleteMorOcc(spark, base, col("o_orderstatus") === "O")
-    val v3 = Extras5.q78ResolveEntries(base, 3)
+    val v3 = GraftManifest.read(base, 3).entries
     val d2Expected = spark.read.parquet(v2.map(_.path): _*)
       .filter($"o_orderstatus" === "O").count()
     val d3 = v3.flatMap(_.dv).map(d => GraftDv.read(d).length.toLong).sum
@@ -123,7 +123,7 @@ class GraftDvSpec extends SparkSpec {
     val base = buildV1("purge")
     Extras7.deleteMorOcc(spark, base,
       col("o_orderstatus") === "F" && col("o_orderkey") % 4 === 0)
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     val untouched = v2.filter(_.dv.isEmpty).map(_.path).toSet
     val name = register(base)
     val before = spark.sql(
@@ -131,7 +131,7 @@ class GraftDvSpec extends SparkSpec {
 
     val v = Extras7.purgeDv(spark, base, statsColumn = Some("o_orderkey"))
     assert(v.contains(3))
-    val v3 = Extras5.q78ResolveEntries(base, 3)
+    val v3 = GraftManifest.read(base, 3).entries
     assert(v3.forall(_.dv.isEmpty), "purge must drop every DV")
     assert(v3.forall(_.stats.isDefined), "purge recommits key stats")
     assert(untouched.subsetOf(v3.map(_.path).toSet),
@@ -146,7 +146,7 @@ class GraftDvSpec extends SparkSpec {
 
   test("DV reads stay exact under tiny splits over multi-row-group files") {
     val base = buildV1("splits", blockSize = Some(2048))
-    val v1 = Extras5.q78ResolveEntries(base, 1)
+    val v1 = GraftManifest.read(base, 1).entries
     // the fixture really is multi-row-group (else the test proves nothing)
     val groups = GraftParquet.footer(v1.head.path).getBlocks.size()
     assert(groups > 1, s"fixture file has $groups row group(s); need > 1")
@@ -167,7 +167,7 @@ class GraftDvSpec extends SparkSpec {
 
   test("change feed serves a DV-only commit: same file both sides, ordinals applied") {
     val base = buildV1("cdf")
-    val v1 = Extras5.q78ResolveEntries(base, 1)
+    val v1 = GraftManifest.read(base, 1).entries
     val deleted = spark.read.parquet(v1.map(_.path): _*)
       .filter($"o_orderstatus" === "F" && $"o_orderkey" % 2 === 0)
       .select($"o_orderkey").as[Long].collect().toSet
@@ -217,7 +217,7 @@ class GraftDvSpec extends SparkSpec {
         $"o_totalprice".cast(D2).as("price"))
       .createOrReplaceTempView(s"src_$name")
     spark.sql(s"INSERT INTO graft.$name SELECT * FROM src_$name")
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     val sizes = v2.map(e => e.path -> new java.io.File(e.path).length()).toMap
     val total = spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0)
     val expectDel = spark.sql(s"SELECT COUNT(*) FROM graft.$name " +
@@ -225,7 +225,7 @@ class GraftDvSpec extends SparkSpec {
     assert(expectDel > 0)
 
     spark.sql(s"DELETE FROM graft.$name WHERE o_orderstatus = 'F'")
-    val v3 = Extras5.q78ResolveEntries(base, 3)
+    val v3 = GraftManifest.read(base, 3).entries
     // no data file touched: same paths, same bytes, sidecars only
     assert(v3.map(_.path) == v2.map(_.path))
     v3.foreach(e => assert(new java.io.File(e.path).length() == sizes(e.path)))
@@ -237,7 +237,7 @@ class GraftDvSpec extends SparkSpec {
     val expectDel2 = spark.sql(s"SELECT COUNT(*) FROM graft.$name " +
       "WHERE o_orderkey % 10 = 0").head().getLong(0)
     spark.sql(s"DELETE FROM graft.$name WHERE o_orderkey % 10 = 0")
-    val v4 = Extras5.q78ResolveEntries(base, 4)
+    val v4 = GraftManifest.read(base, 4).entries
     val dvTotal2 = v4.flatMap(_.dv).map(d => GraftDv.read(d).length.toLong).sum
     assert(dvTotal2 == expectDel + expectDel2)
     // a COW UPDATE composes on top: it reads DV-subtracted rows,
@@ -265,7 +265,7 @@ class GraftDvSpec extends SparkSpec {
         $"o_totalprice".cast(D2).as("price"))
       .createOrReplaceTempView(s"src_$name")
     spark.sql(s"INSERT INTO graft.$name SELECT * FROM src_$name")
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     val sizes = v2.map(e => e.path -> new java.io.File(e.path).length()).toMap
     graft.Tables.load(spark, sf, "orders")
       .filter($"o_orderkey" % 30 <= 1)
@@ -280,8 +280,8 @@ class GraftDvSpec extends SparkSpec {
          |  VALUES (d.d_key, d.d_status, d.d_price)""".stripMargin)
     // exactly ONE commit: v3 = v2's files (byte-identical) with DVs on
     // matched files, plus stats-carrying appended delta files
-    assert(Extras5.q78Latest(base) == 3)
-    val v3 = Extras5.q78ResolveEntries(base, 3)
+    assert(GraftManifest.latest(base) == 3)
+    val v3 = GraftManifest.read(base, 3).entries
     val v2Paths = v2.map(_.path).toSet
     val (carried, appended) = v3.partition(e => v2Paths(e.path))
     assert(carried.map(_.path) == v2.map(_.path), "no base file rewritten")
@@ -344,7 +344,7 @@ class GraftDvSpec extends SparkSpec {
       java.nio.file.Paths.get(base, "_props.json"),
       """{"graft.delete.mode":"merge-on-read"}""".getBytes("UTF-8"))
     val name = register(base)
-    val v1 = Extras5.q78ResolveEntries(base, 1)
+    val v1 = GraftManifest.read(base, 1).entries
     val expect = spark.read.parquet(v1.map(_.path): _*)
       .filter($"o_orderkey" % 7 =!= 0)
       .agg(count(lit(1)), sum($"o_orderkey")).head()
@@ -356,7 +356,7 @@ class GraftDvSpec extends SparkSpec {
     spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
     try {
       spark.sql(s"DELETE FROM graft.$name WHERE o_orderkey % 7 = 0")
-      val v2 = Extras5.q78ResolveEntries(base, 2)
+      val v2 = GraftManifest.read(base, 2).entries
       assert(v2.map(_.path) == v1.map(_.path), "no data file touched")
       assert(v2.flatMap(_.dv).map(d => GraftDv.read(d).length.toLong).sum
         == toDelete)
@@ -395,8 +395,8 @@ class GraftDvSpec extends SparkSpec {
     val small = partFiles(s"$base/files-small")
     val files = big ++ small
     val stats = Extras5.parquetKeyStats(files, "o_orderkey")
-    Extras5.q78CommitEntries(base, 1,
-      files.map(f => Extras5.ManifestEntry(f, stats.get(f))))
+    GraftManifest.commitAt(base, 1,
+      files.map(f => GraftManifest.Entry(f, stats.get(f))))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(base, "_props.json"),
       """{"graft.delete.mode":"merge-on-read"}""".getBytes("UTF-8"))
@@ -418,7 +418,7 @@ class GraftDvSpec extends SparkSpec {
     try {
       // the DELETE's _pos scan mixes whole-file and multi-split files
       spark.sql(s"DELETE FROM graft.$name WHERE o_orderkey % 7 = 0")
-      val v2 = Extras5.q78ResolveEntries(base, 2)
+      val v2 = GraftManifest.read(base, 2).entries
       assert(v2.map(_.path).sorted == files, "no data file touched")
       val gotPos = v2.map(e =>
         e.path -> e.dv.map(d => GraftDv.read(d).toSeq).getOrElse(Seq.empty)).toMap
@@ -436,12 +436,12 @@ class GraftDvSpec extends SparkSpec {
   test("vacuum-style reference counting treats live DV sidecars as retained") {
     val base = buildV1("vacuum")
     Extras7.deleteMorOcc(spark, base, col("o_orderstatus") === "F")
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     val liveDvs = v2.flatMap(_.dv)
     assert(liveDvs.nonEmpty)
     // expire v1 the way q91 does: its paths minus v2's live set
     val retained = v2.flatMap(e => e.path +: e.dv.toList).toSet
-    val expired = Extras5.q78ResolveEntries(base, 1)
+    val expired = GraftManifest.read(base, 1).entries
       .flatMap(e => e.path +: e.dv.toList)
     assert(expired.filterNot(retained).isEmpty,
       "v1's data files all carry into v2 (DV delete rewrites nothing)")

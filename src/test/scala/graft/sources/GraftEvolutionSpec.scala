@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.queries.Extras5
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -37,13 +36,13 @@ class GraftEvolutionSpec extends SparkSpec {
         $"o_totalprice".cast(DecimalType(18, 2)).as("price"))
       .createOrReplaceTempView(s"src_$name")
     spark.sql(s"INSERT INTO graft.$name SELECT * FROM src_$name")
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     val sumBefore = spark.sql(
       s"SELECT CAST(SUM(price) AS DOUBLE) FROM graft.$name").head().getDouble(0)
 
     spark.sql(s"ALTER TABLE graft.$name RENAME COLUMN price TO amount")
     // nothing on disk changed: same files, physical column still 'price'
-    assert(Extras5.q78ResolveEntries(base, 2).map(_.path) == v2.map(_.path))
+    assert(GraftManifest.read(base, 2).entries.map(_.path) == v2.map(_.path))
     assert(footerFields(v2.head.path).contains("price"))
     // the renamed column serves the old bytes
     assert(spark.sql(s"SELECT CAST(SUM(amount) AS DOUBLE) FROM graft.$name")
@@ -64,7 +63,7 @@ class GraftEvolutionSpec extends SparkSpec {
     spark.sql(s"INSERT INTO graft.$name " +
       "SELECT o_orderkey + 1000000, CAST(price AS DECIMAL(18,2)), 'Z' " +
       s"FROM src_$name LIMIT 5")
-    val v5 = Extras5.q78ResolveEntries(base, Extras5.q78Latest(base))
+    val v5 = GraftManifest.read(base, GraftManifest.latest(base)).entries
     val newFile = v5.map(_.path).filterNot(v2.map(_.path).toSet).head
     val fields = footerFields(newFile)
     assert(!fields.contains("o_orderstatus"),
@@ -117,7 +116,7 @@ class GraftEvolutionSpec extends SparkSpec {
     } finally spark.conf.unset(GraftSchemas.TimeTravelConf)
     // TIMESTAMP AS OF resolves the same way: the v2 commit's instant
     // reads v2's schema
-    val ts = Extras5.q78CommitTime(base, 2)
+    val ts = GraftManifest.commitTime(base, 2)
     val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
     val lit = java.time.Instant.ofEpochMilli(ts).atZone(zone).toLocalDateTime
       .format(java.time.format.DateTimeFormatter
@@ -211,7 +210,7 @@ class GraftEvolutionSpec extends SparkSpec {
     assert(clamped.filter($"commit_version" === 4).count() > 0)
     // TIMESTAMP AS OF composes with metadata addressing (r18): pin by
     // v2's commit instant, same serving rules
-    val ts2 = graft.queries.Extras5.q78CommitTime(base, 2)
+    val ts2 = GraftManifest.commitTime(base, 2)
     val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
     val lit = java.time.LocalDateTime.ofInstant(
       java.time.Instant.ofEpochMilli(ts2), zone).format(
@@ -237,7 +236,7 @@ class GraftEvolutionSpec extends SparkSpec {
         s"3999 - id AS other_key FROM range(${b * 1000}, ${b * 1000 + 1000})")
     }
     // manifest carries o_orderkey stats; a key predicate prunes (sanity)
-    assert(Extras5.q78ResolveEntries(base, 5).forall(_.stats.isDefined))
+    assert(GraftManifest.read(base, 5).entries.forall(_.stats.isDefined))
     assert(spark.sql(
       s"SELECT COUNT(*) FROM graft.$name WHERE o_orderkey < 1000")
       .head().getLong(0) == 1000L)

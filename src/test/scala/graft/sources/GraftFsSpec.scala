@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.queries.{Extras5, Extras7}
+import graft.queries.Extras7
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -33,7 +33,7 @@ class GraftFsSpec extends SparkSpec {
     val base = s"file://$localBase"
     GraftFs.mkdirs(base)
     GraftFs.writeBytes(s"$base/_schema.json", schema.json.getBytes("UTF-8"))
-    Extras5.q78Commit(base, 1, Seq.empty)
+    GraftManifest.commitAt(base, 1, Seq.empty)
     val name = s"fs_${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
     GraftCatalog.register(name, base)
     (name, base)
@@ -117,8 +117,8 @@ class GraftFsSpec extends SparkSpec {
         .mkString(", "))
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 30L)
     // the manifest itself lives behind the URI and resolves through GraftFs
-    assert(Extras5.q78Latest(base) == 2)
-    assert(Extras5.q78Resolve(base, 2).forall(_.startsWith("file://")),
+    assert(GraftManifest.latest(base) == 2)
+    assert(GraftManifest.read(base, 2).paths.forall(_.startsWith("file://")),
       "URI-based table commits URI-form data paths")
     spark.sql(s"DELETE FROM graft.$name WHERE o_orderstatus = 'F'")
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 20L)
@@ -136,14 +136,14 @@ class GraftFsSpec extends SparkSpec {
     // Hadoop LocalFileSystem, manifest republished by the URI CAS
     val v = Extras7.deleteMorOcc(spark, base, col("o_orderstatus") === "F")
     assert(v == 3)
-    val withDv = Extras5.q78ResolveEntries(base, 3).filter(_.dv.isDefined)
+    val withDv = GraftManifest.read(base, 3).entries.filter(_.dv.isDefined)
     assert(withDv.nonEmpty, "MOR delete must attach DVs on the URI base")
     assert(withDv.forall(_.dv.get.startsWith("file://")))
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 20L)
     // purge rewrites DV'd files and drops the sidecars
     val purged = Extras7.purgeDv(spark, base, statsColumn = Some("o_orderkey"))
     assert(purged.contains(4))
-    assert(Extras5.q78ResolveEntries(base, 4).forall(_.dv.isEmpty))
+    assert(GraftManifest.read(base, 4).entries.forall(_.dv.isEmpty))
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 20L)
     // history metadata table over the URI base
     val hist = spark.sql(s"SELECT version, n_dv_files FROM graft.$name.history")
@@ -155,12 +155,12 @@ class GraftFsSpec extends SparkSpec {
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 40L)
     // vacuum: expire v1..v3 (retain v4+), reference-counted incl DVs
     val retained = (4 to 5).flatMap(v2 =>
-      Extras5.q78ResolveEntries(base, v2).flatMap(e => e.path +: e.dv.toList)).toSet
+      GraftManifest.read(base, v2).entries.flatMap(e => e.path +: e.dv.toList)).toSet
     val expired = (1 to 3).flatMap(v2 =>
-      Extras5.q78ResolveEntries(base, v2).flatMap(e => e.path +: e.dv.toList))
+      GraftManifest.read(base, v2).entries.flatMap(e => e.path +: e.dv.toList))
     expired.filterNot(retained).foreach(GraftFs.deleteIfExists)
     (1 to 3).foreach(v2 => GraftFs.deleteIfExists(s"$base/_manifests/v$v2.txt"))
-    intercept[Exception] { Extras5.q78ResolveEntries(base, 3) }
+    intercept[Exception] { GraftManifest.read(base, 3).entries }
     // v5's entries ARE v2's files — retained by the reference count, so
     // the restored snapshot stays fully readable after the vacuum
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 40L)
@@ -171,7 +171,7 @@ class GraftFsSpec extends SparkSpec {
     val base = graft.Scratch.dir("fs sp") + " dir" // embedded spaces
     GraftFs.mkdirs(base)
     GraftFs.writeBytes(s"$base/_schema.json", schema.json.getBytes("UTF-8"))
-    Extras5.q78Commit(base, 1, Seq.empty)
+    GraftManifest.commitAt(base, 1, Seq.empty)
     val name = s"fssp_${java.util.UUID.randomUUID().toString.take(8)}"
     GraftCatalog.register(name, base)
     spark.sql(s"INSERT INTO graft.$name VALUES " +
@@ -181,7 +181,7 @@ class GraftFsSpec extends SparkSpec {
     // manifest path: deleteMorOcc committed NO DVs (silently lost
     // delete). Post-fix it must actually delete.
     val v = Extras7.deleteMorOcc(spark, base, col("o_orderstatus") === "F")
-    assert(Extras5.q78ResolveEntries(base, v).exists(_.dv.isDefined),
+    assert(GraftManifest.read(base, v).entries.exists(_.dv.isDefined),
       "DVs must attach under a space-containing location")
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 10L)
     // pre-fix, purge's anti-join removed nothing and DROPPED the DVs —

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.queries.{Extras5, Extras7}
+import graft.queries.Extras7
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -88,13 +88,13 @@ class GraftMockFsSpec extends SparkSpec {
       StructField("o_orderstatus", StringType, nullable = true),
       StructField("price", DecimalType(18, 2), nullable = true)))
     GraftFs.writeBytes(s"$base/_schema.json", schema.json.getBytes("UTF-8"))
-    Extras5.q78Commit(base, 1, Seq.empty)
+    GraftManifest.commitAt(base, 1, Seq.empty)
     val name = s"mock_${java.util.UUID.randomUUID().toString.take(8)}"
     GraftCatalog.register(name, base)
     spark.sql(s"INSERT INTO graft.$name VALUES " +
       (1 to 30).map(k => s"($k, '${if (k % 3 == 0) "F" else "O"}', CAST($k AS DECIMAL(18,2)))")
         .mkString(", "))
-    assert(Extras5.q78Resolve(base, 2).forall(_.startsWith("graftmock:")),
+    assert(GraftManifest.read(base, 2).paths.forall(_.startsWith("graftmock:")),
       "manifest entries keep the foreign-scheme form")
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 30L)
     // COW delete (runtime group filtering, rewrite, CAS) on the scheme
@@ -105,7 +105,7 @@ class GraftMockFsSpec extends SparkSpec {
     // MOR delete: _metadata.file_path identity must hold under the
     // foreign scheme (sidecars land behind the scheme too)
     val v = Extras7.deleteMorOcc(spark, base, col("o_orderstatus") === "F")
-    val dvd = Extras5.q78ResolveEntries(base, v).filter(_.dv.isDefined)
+    val dvd = GraftManifest.read(base, v).entries.filter(_.dv.isDefined)
     assert(dvd.nonEmpty && dvd.forall(_.dv.get.startsWith("graftmock:")))
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 16L)
     // history + CALL restore through the SQL boundary

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.queries.Extras5
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,7 +34,7 @@ class GraftPartitionSpec extends SparkSpec {
     spark.sql(s"INSERT INTO graft.$name SELECT * FROM src_$name")
     val statuses = spark.sql(s"SELECT DISTINCT o_orderstatus FROM src_$name")
       .as[String].collect().toSet
-    val entries = Extras5.q78ResolveEntries(base, 2)
+    val entries = GraftManifest.read(base, 2).entries
     // ONE file per tuple for the whole job, not per task
     assert(entries.size == statuses.size,
       s"expected ${statuses.size} files (one per partition), got " +
@@ -77,12 +76,12 @@ class GraftPartitionSpec extends SparkSpec {
       s"v BIGINT) PARTITIONED BY (s) LOCATION '$base'")
     spark.sql(s"INSERT INTO graft.$name VALUES " +
       "(1, 'a', 10), (2, 'b', 20), (3, 'c', 30)")
-    val v2 = Extras5.q78ResolveEntries(base, 2)
+    val v2 = GraftManifest.read(base, 2).entries
     assert(v2.size == 3)
     // STATIC: INSERT OVERWRITE ... PARTITION (s='a') replaces only a
     spark.sql(s"INSERT OVERWRITE graft.$name PARTITION (s = 'a') " +
       "VALUES (9, 99)")
-    val v3 = Extras5.q78ResolveEntries(base, 3)
+    val v3 = GraftManifest.read(base, 3).entries
     assert(v3.size == 3)
     val untouched = v2.filter(_.partValues("s") != "a").map(_.path).toSet
     assert(untouched.subsetOf(v3.map(_.path).toSet),
@@ -95,7 +94,7 @@ class GraftPartitionSpec extends SparkSpec {
       spark.sql(s"INSERT OVERWRITE graft.$name VALUES (7, 'b', 70)")
     finally
       spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    val v4 = Extras5.q78ResolveEntries(base, 4)
+    val v4 = GraftManifest.read(base, 4).entries
     assert(v4.size == 3)
     val rows = spark.sql(s"SELECT s, SUM(v) FROM graft.$name GROUP BY s " +
       "ORDER BY s").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -115,7 +114,7 @@ class GraftPartitionSpec extends SparkSpec {
     spark.sql(s"INSERT INTO graft.$name VALUES " +
       "(1, DATE'2026-01-01', 1), (2, DATE'2026-01-02', 2), " +
       "(3, DATE'2026-01-03', 3), (4, DATE'2026-01-01', 4)")
-    val entries = Extras5.q78ResolveEntries(base, 2)
+    val entries = GraftManifest.read(base, 2).entries
     assert(entries.size == 3, "one file per day")
     assert(entries.forall(_.partValues.keySet == Set("days.d")))
     // range pruning on the source column: two of three days
@@ -142,7 +141,7 @@ class GraftPartitionSpec extends SparkSpec {
     spark.sql(s"INSERT INTO graft.$name SELECT id, " +
       "CASE CAST(id % 4 AS INT) WHEN 0 THEN 'a' WHEN 1 THEN 'b' " +
       "WHEN 2 THEN 'c' ELSE 'd' END, id FROM range(0, 400)")
-    assert(Extras5.q78ResolveEntries(base, 2).size == 4)
+    assert(GraftManifest.read(base, 2).entries.size == 4)
     // a dim whose filter selects ONE partition value at runtime
     Seq(("a", 1), ("b", 0), ("c", 0), ("d", 0)).toDF("s", "flag")
       .write.mode("overwrite").parquet(s"$base/dim")
@@ -172,7 +171,7 @@ class GraftPartitionSpec extends SparkSpec {
     // string order) but 9 < 20 numerically (the rendered-ordinal order
     // the pruner would compare under)
     spark.sql(s"INSERT INTO graft.$name VALUES (1, '9'), (2, '20')")
-    assert(Extras5.q78ResolveEntries(base, 2).size == 2)
+    assert(GraftManifest.read(base, 2).entries.size == 2)
     // s > '20' matches the '9' row; numeric pruning would have dropped
     // its file (9 >= 20 is false) — the type gate keeps BOTH files
     val q = spark.sql(s"SELECT k FROM graft.$name WHERE s > '20'")
@@ -199,7 +198,7 @@ class GraftPartitionSpec extends SparkSpec {
       s"PARTITIONED BY (bucket(4, k)) LOCATION '$base'")
     spark.sql(s"INSERT INTO graft.$name SELECT id, CAST(id AS STRING), id " +
       "FROM range(0, 400)")
-    val entries = Extras5.q78ResolveEntries(base, 2)
+    val entries = GraftManifest.read(base, 2).entries
     assert(entries.size <= 4 && entries.size >= 2,
       s"one file per non-empty bucket, got ${entries.size}")
     assert(entries.forall(_.partValues.keySet.head.startsWith("bucket.4.")))
@@ -232,8 +231,8 @@ class GraftPartitionSpec extends SparkSpec {
       "(TIMESTAMP'2026-01-01 00:10:00', 1), " +
       "(TIMESTAMP'2026-01-01 01:10:00', 2), " +
       "(TIMESTAMP'2026-01-01 02:10:00', 3)")
-    assert(Extras5.q78ResolveEntries(
-      GraftCatalog.baseFor(hname).get, 2).size == 3, "one file per hour")
+    assert(GraftManifest.read(
+      GraftCatalog.baseFor(hname).get, 2).entries.size == 3, "one file per hour")
     assert(opened(s"SELECT v FROM graft.$hname " +
       "WHERE ts >= TIMESTAMP'2026-01-01 01:00:00'").contains(2))
   }
@@ -253,7 +252,7 @@ class GraftPartitionSpec extends SparkSpec {
       res.getLong(2) == 3L)
     spark.sql(s"INSERT INTO graft.$name VALUES " +
       "(3, 'a', DATE'2026-01-03'), (4, 'b', DATE'2026-01-04')") // v4: 2 files
-    val v4 = Extras5.q78ResolveEntries(base, 4)
+    val v4 = GraftManifest.read(base, 4).entries
     assert(v4.size == 4)
     val oldGen = v4.filter(_.partValues.keySet == Set("s"))
     val newGen = v4.filter(_.partValues.keySet == Set("days.d"))
@@ -314,7 +313,7 @@ class GraftPartitionSpec extends SparkSpec {
          |WHEN MATCHED THEN UPDATE SET v = d.dv
          |WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (dk, ds, dv)"""
         .stripMargin)
-    val v3 = Extras5.q78ResolveEntries(base, 3)
+    val v3 = GraftManifest.read(base, 3).entries
     // r18 (r17 ADVICE): the delta-append half of a MOR merge fans out
     // per tuple exactly like an INSERT — no tuple-less file is born, so
     // the delta prunes under its partition and a later partition
@@ -366,8 +365,8 @@ class GraftPartitionSpec extends SparkSpec {
     val bare = GraftFs.list(s"$base/bare").collect {
       case (n, p, _) if n.startsWith("part-") && n.endsWith(".parquet") => p
     }.head
-    val cur = Extras5.q78ResolveEntries(base, 2)
-    Extras5.q78CommitEntries(base, 3, cur :+ Extras5.ManifestEntry(bare))
+    val cur = GraftManifest.read(base, 2).entries
+    GraftManifest.commitAt(base, 3, cur :+ GraftManifest.Entry(bare))
     def msgs(t: Throwable): String =
       if (t == null) "" else Option(t.getMessage).getOrElse("") + msgs(t.getCause)
     // static slice overwrite: refused (the bare file might hold 'a' rows)

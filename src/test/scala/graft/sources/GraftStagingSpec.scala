@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.queries.Extras5
 import org.apache.spark.sql.functions._
 
 /** Pins the atomic CTAS/RTAS contract (StagingTableCatalog) and SQL
@@ -19,8 +18,8 @@ class GraftStagingSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE graft.$name AS " +
       "SELECT id AS k, id * 2 AS v FROM range(0, 100)")
     val base = GraftCatalog.baseFor(name).get
-    assert(Extras5.q78Latest(base) == 1, "data and existence are ONE commit")
-    assert(Extras5.q78ResolveEntries(base, 1).nonEmpty)
+    assert(GraftManifest.latest(base) == 1, "data and existence are ONE commit")
+    assert(GraftManifest.read(base, 1).entries.nonEmpty)
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 100L)
     // schema rode the commit protocol from birth
     assert(GraftSchemas.schemaAt(base, 1).isDefined)
@@ -46,7 +45,7 @@ class GraftStagingSpec extends SparkSpec {
     val base = GraftCatalog.baseFor(name).get
     spark.sql(s"REPLACE TABLE graft.$name AS " +
       "SELECT id AS a, id * 10 AS b, id * 100 AS c FROM range(0, 5)")
-    assert(Extras5.q78Latest(base) == 2, "REPLACE = exactly one more commit")
+    assert(GraftManifest.latest(base) == 2, "REPLACE = exactly one more commit")
     assert(spark.table(s"graft.$name").columns.toSeq == Seq("a", "b", "c"))
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 5L)
     // time travel across the replace: old data under the OLD schema
@@ -70,7 +69,7 @@ class GraftStagingSpec extends SparkSpec {
       "SELECT id AS k, CASE CAST(id % 3 AS INT) WHEN 0 THEN 'a' " +
       "WHEN 1 THEN 'b' ELSE 'c' END AS s FROM range(0, 90)")
     val base = GraftCatalog.baseFor(name).get
-    val entries = Extras5.q78ResolveEntries(base, 1)
+    val entries = GraftManifest.read(base, 1).entries
     assert(entries.size == 3, s"one file per tuple, got ${entries.size}")
     assert(entries.map(_.partValues("s")).toSet == Set("a", "b", "c"))
     assert(GraftCatalog.scannedFileCount(
@@ -90,9 +89,9 @@ class GraftStagingSpec extends SparkSpec {
     // a competitor wins EVERY CAS attempt: the REPLACE must exhaust
     // and throw without touching properties, spec, or mirrors
     GraftStagedTable.replaceRaceHook = () => {
-      val latest = Extras5.q78Latest(base)
-      Extras5.q78TryCommitEntries(base, latest + 1,
-        Extras5.q78ResolveEntries(base, latest))
+      val latest = GraftManifest.latest(base)
+      GraftManifest.publish(base, latest + 1,
+        GraftManifest.read(base, latest).entries)
       ()
     }
     try {
@@ -106,7 +105,7 @@ class GraftStagingSpec extends SparkSpec {
       "the schema mirror must be byte-identical after a failed REPLACE")
     assert(GraftFs.readString(s"$base/_props.json") == propsBefore,
       "the props mirror must be byte-identical after a failed REPLACE")
-    val head = Extras5.q78Latest(base)
+    val head = GraftManifest.latest(base)
     assert(GraftProps.propsAt(base, head) == propsAtBefore,
       "the serving properties must be unchanged")
     assert(spark.table(s"graft.$name").columns.toSeq == Seq("k", "v"))
@@ -117,7 +116,7 @@ class GraftStagingSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.stats.column' = 'a') AS " +
       "SELECT id AS a, id AS b FROM range(0, 3)")
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 3L)
-    assert(GraftProps.propsAt(base, Extras5.q78Latest(base))
+    assert(GraftProps.propsAt(base, GraftManifest.latest(base))
       .exists(_.get("graft.stats.column").contains("a")))
   }
 
@@ -128,7 +127,7 @@ class GraftStagingSpec extends SparkSpec {
     val base = GraftCatalog.baseFor(name).get
     spark.sql(s"TRUNCATE TABLE graft.$name")
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 0L)
-    assert(Extras5.q78Latest(base) == 2)
+    assert(GraftManifest.latest(base) == 2)
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name VERSION AS OF 1")
       .head().getLong(0) == 30L, "truncation is a version, not deletion")
     // and the table accepts inserts again

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.queries.Extras5
 import graft.sources.{GraftCatalog, GraftStreamingCommit}
+import graft.sources.GraftManifest
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
@@ -36,9 +36,9 @@ class GraftStreamSinkSpec extends SparkSpec {
       .toTable(s"graft.$name")
     try q.awaitTermination() finally q.stop()
 
-    val latest = Extras5.q78Latest(base)
+    val latest = GraftManifest.latest(base)
     assert(latest == 4, s"CREATE v1 + 3 file-batches, got v$latest")
-    val entries = Extras5.q78ResolveEntries(base, latest)
+    val entries = GraftManifest.read(base, latest).entries
     // every committed file has writer-tracked key stats and lives in
     // its epoch's own staging dir
     assert(entries.nonEmpty)
@@ -47,7 +47,7 @@ class GraftStreamSinkSpec extends SparkSpec {
       s"expected per-epoch staging dirs, got ${entries.map(_.path)}")
     // each data commit carries this app's txn watermark, epochs ascending
     val epochs = (2 to latest).map(v =>
-      Extras5.q78CommitHeaders(base, v)("txn").split("\t") match {
+      GraftManifest.read(base, v).headers("txn").split("\t") match {
         case Array(a, e) => assert(a == s"app_$name"); e.toLong
       })
     assert(epochs == epochs.sorted)
@@ -66,25 +66,25 @@ class GraftStreamSinkSpec extends SparkSpec {
 
   test("a replayed epoch is a no-op; other writers' watermarks don't mask it") {
     val base = graft.Scratch.dir("sinkspec_replay")
-    Extras5.q78Commit(base, 1, Seq.empty)
+    GraftManifest.commitAt(base, 1, Seq.empty)
     assert(GraftStreamingCommit.commitEpoch(base, "appA", 0L,
-      Seq(Extras5.ManifestEntry("a0.parquet"))))
+      Seq(GraftManifest.Entry("a0.parquet"))))
     assert(GraftStreamingCommit.commitEpoch(base, "appA", 1L,
-      Seq(Extras5.ManifestEntry("a1.parquet"))))
+      Seq(GraftManifest.Entry("a1.parquet"))))
     // an unrelated writer's txn header lands in between
     assert(GraftStreamingCommit.commitEpoch(base, "appB", 7L,
-      Seq(Extras5.ManifestEntry("b7.parquet"))))
-    val before = Extras5.q78Latest(base)
+      Seq(GraftManifest.Entry("b7.parquet"))))
+    val before = GraftManifest.latest(base)
     // replays of BOTH committed epochs are rejected at the watermark
     assert(!GraftStreamingCommit.commitEpoch(base, "appA", 0L,
-      Seq(Extras5.ManifestEntry("a0-replay.parquet"))))
+      Seq(GraftManifest.Entry("a0-replay.parquet"))))
     assert(!GraftStreamingCommit.commitEpoch(base, "appA", 1L,
-      Seq(Extras5.ManifestEntry("a1-replay.parquet"))))
-    assert(Extras5.q78Latest(base) == before, "replays must not commit")
+      Seq(GraftManifest.Entry("a1-replay.parquet"))))
+    assert(GraftManifest.latest(base) == before, "replays must not commit")
     // the next epoch still lands, and carries everything committed so far
     assert(GraftStreamingCommit.commitEpoch(base, "appA", 2L,
-      Seq(Extras5.ManifestEntry("a2.parquet"))))
-    val files = Extras5.q78ResolveEntries(base, before + 1).map(_.path).toSet
+      Seq(GraftManifest.Entry("a2.parquet"))))
+    val files = GraftManifest.read(base, before + 1).entries.map(_.path).toSet
     assert(files == Set("a0.parquet", "a1.parquet", "b7.parquet", "a2.parquet"))
     assert(GraftStreamingCommit.lastEpoch(base, "appA").contains(2L))
     assert(GraftStreamingCommit.lastEpoch(base, "appB").contains(7L))
@@ -93,23 +93,23 @@ class GraftStreamSinkSpec extends SparkSpec {
 
   /** Appends a foreign (txn-less) commit carrying the current files. */
   private def foreignCommit(base: String): Unit = {
-    val latest = Extras5.q78Latest(base)
-    assert(Extras5.q78TryCommitEntries(base, latest + 1,
-      Extras5.q78ResolveEntries(base, latest) :+
-        Extras5.ManifestEntry(s"foreign-$latest.parquet")))
+    val latest = GraftManifest.latest(base)
+    assert(GraftManifest.publish(base, latest + 1,
+      GraftManifest.read(base, latest).entries :+
+        GraftManifest.Entry(s"foreign-$latest.parquet")))
   }
 
   test("watermark lookup is incremental: foreign interleave costs O(new), steady state O(1)") {
     val base = graft.Scratch.dir("sinkspec_incr")
-    Extras5.q78Commit(base, 1, Seq.empty)
+    GraftManifest.commitAt(base, 1, Seq.empty)
     GraftStreamingCommit.resetCacheForTest()
     assert(GraftStreamingCommit.commitEpoch(base, "appI", 0L,
-      Seq(Extras5.ManifestEntry("e0.parquet"))))
+      Seq(GraftManifest.Entry("e0.parquet"))))
     // a busy foreign writer lands 30 commits between our epochs
     (1 to 30).foreach(_ => foreignCommit(base))
     val r0 = GraftStreamingCommit.headerReads.get()
     assert(GraftStreamingCommit.commitEpoch(base, "appI", 1L,
-      Seq(Extras5.ManifestEntry("e1.parquet"))))
+      Seq(GraftManifest.Entry("e1.parquet"))))
     val interleaved = GraftStreamingCommit.headerReads.get() - r0
     assert(interleaved <= 32,
       s"must scan only the 30 new versions once, read $interleaved headers")
@@ -117,23 +117,23 @@ class GraftStreamSinkSpec extends SparkSpec {
     // committed version — zero header reads for the next epoch
     val r1 = GraftStreamingCommit.headerReads.get()
     assert(GraftStreamingCommit.commitEpoch(base, "appI", 2L,
-      Seq(Extras5.ManifestEntry("e2.parquet"))))
+      Seq(GraftManifest.Entry("e2.parquet"))))
     val steady = GraftStreamingCommit.headerReads.get() - r1
     assert(steady == 0, s"steady-state epoch commit read $steady headers")
     // a second interleave wave costs its own delta, not the history
     (1 to 30).foreach(_ => foreignCommit(base))
     val r2 = GraftStreamingCommit.headerReads.get()
     assert(GraftStreamingCommit.commitEpoch(base, "appI", 3L,
-      Seq(Extras5.ManifestEntry("e3.parquet"))))
+      Seq(GraftManifest.Entry("e3.parquet"))))
     val wave2 = GraftStreamingCommit.headerReads.get() - r2
     assert(wave2 <= 32, s"second wave must not rescan history, read $wave2")
   }
 
   test("a zombie twin replaying the same epoch cannot double-commit (CAS re-check)") {
     val base = graft.Scratch.dir("sinkspec_zombie")
-    Extras5.q78Commit(base, 1, Seq.empty)
+    GraftManifest.commitAt(base, 1, Seq.empty)
     assert(GraftStreamingCommit.commitEpoch(base, "appZ", 0L,
-      Seq(Extras5.ManifestEntry("z0.parquet"))))
+      Seq(GraftManifest.Entry("z0.parquet"))))
     // the r15 ADVICE race: both drivers of the same app pass the
     // initial replay check for epoch 1; the twin commits fully between
     // our check and our CAS attempt. Clearing the cache afterwards
@@ -144,20 +144,20 @@ class GraftStreamSinkSpec extends SparkSpec {
       if (!fired) {
         fired = true
         assert(GraftStreamingCommit.commitEpoch(base, "appZ", 1L,
-          Seq(Extras5.ManifestEntry("z1-twin.parquet"))))
+          Seq(GraftManifest.Entry("z1-twin.parquet"))))
         GraftStreamingCommit.resetCacheForTest()
       }
     }
     try {
       assert(!GraftStreamingCommit.commitEpoch(base, "appZ", 1L,
-        Seq(Extras5.ManifestEntry("z1-ours.parquet"))),
+        Seq(GraftManifest.Entry("z1-ours.parquet"))),
         "the CAS loser must see the twin's watermark and drop the epoch")
     } finally GraftStreamingCommit.casRaceHook = () => ()
-    val latest = Extras5.q78Latest(base)
+    val latest = GraftManifest.latest(base)
     val epoch1Commits = (1 to latest).flatMap(v =>
-      Extras5.q78CommitHeaders(base, v).get("txn")).count(_ == "appZ\t1")
+      GraftManifest.read(base, v).headers.get("txn")).count(_ == "appZ\t1")
     assert(epoch1Commits == 1, s"epoch 1 committed $epoch1Commits times")
-    assert(Extras5.q78ResolveEntries(base, latest).map(_.path)
+    assert(GraftManifest.read(base, latest).entries.map(_.path)
       .count(_.startsWith("z1")) == 1, "exactly one epoch-1 file set lands")
   }
 }

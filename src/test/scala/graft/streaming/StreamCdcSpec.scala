@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.queries.{Extras5, Extras6}
+import graft.queries.Extras6
+import graft.sources.GraftManifest
 import org.apache.spark.sql.functions._
 
 /** Pins st21's CDC-apply contract:
@@ -31,23 +32,23 @@ class StreamCdcSpec extends SparkSpec {
     val (base, nCommits, feedFiles) = EventsStream.st21Run(spark, sf)
     assert(nCommits == feedFiles, "one commit per feed file")
     val streamed = spark.read.parquet(
-      Extras5.q78Resolve(base, (1 + nCommits).toInt): _*)
+      GraftManifest.read(base, (1 + nCommits).toInt).paths: _*)
 
     val oneBase = Extras6.cdcBase(spark, sf)
     Extras6.cowMergeCommit(spark, oneBase, 1, feed)
-    val oneShot = spark.read.parquet(Extras5.q78Resolve(oneBase, 2): _*)
+    val oneShot = spark.read.parquet(GraftManifest.read(oneBase, 2).paths: _*)
 
     assert(streamed.count() == oneShot.count())
     assert(streamed.exceptAll(oneShot).isEmpty && oneShot.exceptAll(streamed).isEmpty)
 
     // every intermediate version resolves and reads completely
     for (v <- 1 to (1 + nCommits).toInt) {
-      val files = Extras5.q78Resolve(base, v)
+      val files = GraftManifest.read(base, v).paths
       assert(files.nonEmpty)
       assert(spark.read.parquet(files: _*).count() > 0)
     }
     // v1 unchanged: only keys ≡ 0 (mod 3), original prices
-    val v1 = spark.read.parquet(Extras5.q78Resolve(base, 1): _*)
+    val v1 = spark.read.parquet(GraftManifest.read(base, 1).paths: _*)
     assert(v1.filter($"o_orderkey" % 3 =!= 0).count() == 0)
     // the stream actually changed the table
     assert(v1.exceptAll(streamed).count() > 0)
@@ -74,17 +75,17 @@ class StreamCdcSpec extends SparkSpec {
         if (fired.compareAndSet(false, true))
           Extras6.cowMergeCommit(spark, tableBase, from, competing))
     assert(nCommits == feedFiles, "every micro-batch still committed")
-    val finalV = Extras5.q78Latest(base)
+    val finalV = GraftManifest.latest(base)
     assert(finalV == (1 + nCommits + 1).toInt,
       s"stream commits + the competitor must all land, latest=$finalV")
-    val fin = spark.read.parquet(Extras5.q78Resolve(base, finalV): _*)
+    val fin = spark.read.parquet(GraftManifest.read(base, finalV).paths: _*)
     // the competitor's delta survived the interleaved stream commits
     assert(fin.filter($"o_orderkey" === competingKey &&
       $"o_orderstatus" === "RACER").count() == 1)
     // and the streamed CDC result equals the one-shot truth everywhere else
     val oneBase = Extras6.cdcBase(spark, sf)
     Extras6.cowMergeCommit(spark, oneBase, 1, feed)
-    val oneShot = spark.read.parquet(Extras5.q78Resolve(oneBase, 2): _*)
+    val oneShot = spark.read.parquet(GraftManifest.read(oneBase, 2).paths: _*)
       .filter($"o_orderkey" =!= competingKey)
     val streamed = fin.filter($"o_orderkey" =!= competingKey)
     assert(streamed.exceptAll(oneShot).isEmpty && oneShot.exceptAll(streamed).isEmpty)

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.queries.{Extras5, Extras6}
+import graft.queries.Extras6
 import graft.sources.{GraftCatalog, GraftChangeFeed, GraftChangeFeedStream, GraftVersionOffset}
+import graft.sources.GraftManifest
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -100,8 +101,8 @@ class StreamChangeFeedSpec extends SparkSpec {
     val name = s"cdfvac_${java.util.UUID.randomUUID().toString.take(8)}"
     GraftCatalog.register(name, base)
     // VACUUM away v1 (the q91 shape: retained versions keep their files)
-    val retained = (2 to 4).flatMap(Extras5.q78Resolve(base, _)).toSet
-    Extras5.q78Resolve(base, 1).filterNot(retained)
+    val retained = (2 to 4).flatMap(GraftManifest.read(base, _).paths).toSet
+    GraftManifest.read(base, 1).paths.filterNot(retained)
       .foreach(p => java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(p)))
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(base, "_manifests", "v1.txt"))
@@ -146,8 +147,8 @@ class StreamChangeFeedSpec extends SparkSpec {
     val parts = stream.planInputPartitions(
       GraftVersionOffset(1), GraftVersionOffset(2))
       .map(_.asInstanceOf[graft.sources.GraftParquetIO.GraftFileSplit])
-    val pre = Extras5.q78Resolve(base, 1).toSet
-    val post = Extras5.q78Resolve(base, 2).toSet
+    val pre = GraftManifest.read(base, 1).paths.toSet
+    val post = GraftManifest.read(base, 2).paths.toSet
     val shared = pre.intersect(post)
     assert(shared.nonEmpty, "fixture must carry files for pruning to matter")
     assert(parts.forall(p => !shared.contains(p.path)),

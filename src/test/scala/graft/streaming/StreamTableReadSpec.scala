@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.queries.{Extras5, Extras7}
+import graft.queries.Extras7
 import graft.sources.GraftCatalog
+import graft.sources.GraftManifest
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -98,7 +99,7 @@ class StreamTableReadSpec extends SparkSpec {
       .repartition(5)
       .createOrReplaceTempView(s"src_${name}_big")
     spark.sql(s"INSERT INTO graft.$name SELECT * FROM src_${name}_big")
-    assert(Extras5.q78ResolveEntries(base, 2).size == 5,
+    assert(GraftManifest.read(base, 2).entries.size == 5,
       "fixture must land 5 files in one commit")
     val total = spark.sql(s"SELECT COUNT(*) FROM graft.$name")
       .head().getLong(0)
@@ -139,7 +140,7 @@ class StreamTableReadSpec extends SparkSpec {
     assert(drain(name, ckpt, Map("skipChangeCommits" -> "true")).size == 1)
     // a MOR delete republished a file's DV — a data change, no path removed
     Extras7.deleteMorOcc(spark, base, col("o_orderstatus") === "F")
-    assert(Extras5.q78ResolveEntries(base, Extras5.q78Latest(base))
+    assert(GraftManifest.read(base, GraftManifest.latest(base)).entries
       .exists(_.dv.isDefined), "fixture must DV a file")
     insertSlice(name, 3)
     val after = drain(name, ckpt, Map("skipChangeCommits" -> "true"))
@@ -152,7 +153,7 @@ class StreamTableReadSpec extends SparkSpec {
   test("startingVersion bounds the replay (exclusive)") {
     val (name, base) = freshTable("sv")
     insertSlice(name, 0); insertSlice(name, 1) // v2, v3
-    assert(Extras5.q78Latest(base) == 3)
+    assert(GraftManifest.latest(base) == 3)
     val got = drain(name, graft.Scratch.dir("str_ckpt_v"),
       Map("startingVersion" -> "2"))
     assert(got.size == 1, s"only v2→v3 should be served, got $got")
@@ -163,7 +164,7 @@ class StreamTableReadSpec extends SparkSpec {
   test("startingTimestamp addresses the stream like its version twin") {
     val (name, base) = freshTable("ts")
     insertSlice(name, 0); insertSlice(name, 1) // v2, v3
-    val t2 = Extras5.q78CommitTime(base, 2)
+    val t2 = GraftManifest.commitTime(base, 2)
     // at v2's commit instant: appends AFTER it → only v3's rows
     val after2 = drain(name, graft.Scratch.dir("str_ckpt_t1"),
       Map("startingTimestamp" -> t2.toString))
