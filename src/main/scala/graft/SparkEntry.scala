@@ -1,7 +1,5 @@
 package graft
 
-import scala.collection.immutable.ListMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.

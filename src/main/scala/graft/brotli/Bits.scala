@@ -118,19 +118,23 @@ final class ByteQueue(initialCapacity: Int = 1 << 16) {
 
   def append(b: Array[Byte], off: Int, len: Int): Unit = {
     if (tail + len > buf.length) {
-      // rebase cached bits into the byte position before compacting
-      unwindToBytePosition()
-      val live = tail - head
-      if (live + len <= buf.length && head >= buf.length / 2) {
-        System.arraycopy(buf, head, buf, 0, live)
+      // keep from the byte holding the next unread bit: cached bits of
+      // a partly consumed byte lie BEFORE `head`, so copying from `head`
+      // would strand them outside the buffer (a later restore then
+      // indexes byte -1)
+      val (from, bit) = snapshot()
+      val live = tail - from
+      if (live + len <= buf.length && from >= buf.length / 2) {
+        System.arraycopy(buf, from, buf, 0, live)
       } else {
         val bigger = new Array[Byte](math.max(buf.length * 2, live + len))
-        System.arraycopy(buf, head, bigger, 0, live)
+        System.arraycopy(buf, from, bigger, 0, live)
         buf = bigger
         bb = java.nio.ByteBuffer.wrap(buf)
           .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       }
-      tail = live; head = 0
+      tail = live
+      restore((0, bit))
     }
     System.arraycopy(b, off, buf, tail, len)
     tail += len

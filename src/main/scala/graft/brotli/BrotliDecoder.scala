@@ -509,8 +509,17 @@ final class BrotliDecoder {
   }
 
   /** Decode up to len bytes into dst. Returns bytes produced; 0 means
-    * finished, or more input needed (check needsInput/isFinished). */
-  def decode(dst: Array[Byte], off: Int, len: Int): Int = {
+    * finished, or more input needed (check needsInput/isFinished). A
+    * stream the decoder cannot follow fails as an IOException, never as
+    * a runtime exception from inside the decoder. */
+  def decode(dst: Array[Byte], off: Int, len: Int): Int =
+    try decodeSome(dst, off, len)
+    catch {
+      case e: RuntimeException =>
+        throw new IOException(s"invalid brotli stream: $e", e)
+    }
+
+  private def decodeSome(dst: Array[Byte], off: Int, len: Int): Int = {
     var produced = 0
     var progress = true
     while (progress && produced < len) {

@@ -12,7 +12,6 @@ object Huffman {
   /** Huffman code lengths from frequencies, limited to maxLen via the
     * classic frequency-flattening retry. freqs.length = alphabet size. */
   def buildLengths(freqs: Array[Long], maxLen: Int): Array[Int] = {
-    val n = freqs.length
     var f = freqs.clone()
     while (true) {
       val lengths = buildUnlimited(f)

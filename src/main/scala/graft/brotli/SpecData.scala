@@ -1,6 +1,6 @@
 package graft.brotli
 
-import java.io.{DataInputStream, IOException}
+import java.io.IOException
 
 /** RFC 7932 specification data embedded as resources: the static
   * dictionary (Appendix A), the word transforms (Appendix B), and the

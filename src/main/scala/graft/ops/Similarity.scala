@@ -192,7 +192,6 @@ object Similarity {
   }
 
   private def s03Sql: String = {
-    val dim = 64
     rankedSql(
       s"""WITH $ivfIndexCtes,
          |probes AS (SELECT q_id, q_emb, cluster FROM qranks
@@ -764,7 +763,6 @@ object Similarity {
   }
 
   def s14(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val idx = s14Build(spark, dir)
     s14Serve(spark, idx, queriesSubset(spark, dir))
   }

@@ -531,7 +531,6 @@ object Extras2 {
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   def q47(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     // Optimizer confs only affect plans *created* while they are set, so
     // the plan is materialized eagerly inside the conf scope (q44's
     // pattern) — the driver's later write of the returned frame must not

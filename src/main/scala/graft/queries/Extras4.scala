@@ -3,7 +3,6 @@ package graft.queries
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

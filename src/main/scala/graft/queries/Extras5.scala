@@ -2,7 +2,6 @@ package graft.queries
 
 import scala.collection.immutable.ListMap
 
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -490,29 +489,25 @@ object Extras5 {
   // ---------------------------------------------------------------------
   /** Per-file (min, max) of an INT64 column, read from parquet FOOTERS
     * driver-side — O(#files) metadata I/O, never a data scan; the write
-    * path already paid for these stats, a commit just records them. */
+    * path already paid for these stats, a commit just records them. A
+    * file none of whose row groups carries stats for the column is
+    * left out. */
   private[graft] def parquetKeyStats(files: Seq[String],
       column: String): Map[String, (Long, Long)] = {
-    val conf = graft.sources.GraftFs.hadoopConf
-    files.flatMap(f => footerKeyStats(
-      graft.sources.GraftParquet.footer(f, conf), column).map(f -> _)).toMap
-  }
-
-  /** (min, max) of an INT64 column over a footer's row-group stats;
-    * None when no row group carries stats for it. */
-  private[graft] def footerKeyStats(footer: ParquetMetadata,
-      column: String): Option[(Long, Long)] = {
     import scala.jdk.CollectionConverters._
-    val ranges = for {
-      block <- footer.getBlocks.asScala.toSeq
-      col <- block.getColumns.asScala
-      if col.getPath.toDotString == column
-      st = col.getStatistics
-      if st != null && !st.isEmpty
-    } yield (st.genericGetMin.asInstanceOf[Number].longValue(),
-      st.genericGetMax.asInstanceOf[Number].longValue())
-    if (ranges.isEmpty) None
-    else Some((ranges.map(_._1).min, ranges.map(_._2).max))
+    val conf = graft.sources.GraftFs.hadoopConf
+    files.flatMap { f =>
+      val ranges = for {
+        block <- graft.sources.GraftParquet.footer(f, conf).getBlocks.asScala.toSeq
+        col <- block.getColumns.asScala
+        if col.getPath.toDotString == column
+        st = col.getStatistics
+        if st != null && !st.isEmpty
+      } yield (st.genericGetMin.asInstanceOf[Number].longValue(),
+        st.genericGetMax.asInstanceOf[Number].longValue())
+      if (ranges.isEmpty) None
+      else Some(f -> ((ranges.map(_._1).min, ranges.map(_._2).max)))
+    }.toMap
   }
 
   private def q78Parts(dir: String): Seq[String] =

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.sources.{GraftDv, GraftManifest, GraftParquet}
+import graft.sources.{GraftDv, GraftManifest, GraftRewrite}
 
 /** Round-15 queries: merge-on-read DELETE via positional deletion
   * vectors, DV purge (OPTIMIZE), TIMESTAMP AS OF time travel, and
@@ -58,8 +58,7 @@ object Extras7 {
     * the protocol stores local paths plain), authority kept only when
     * non-empty (`hdfs://nn:8020/...`), encoding = java.net.URI's. A
     * wrong prediction can never pass silently: deleteMorOcc/mergeMorOcc
-    * require every computed sidecar to attach to a manifest entry, and
-    * purgeDv reconciles output row counts exactly. */
+    * require every computed sidecar to attach to a manifest entry. */
   private[queries] def metadataPathOf(p: String): String = {
     val u = new org.apache.hadoop.fs.Path(p).toUri
     val scheme = if (u.getScheme != null) u.getScheme else "file"
@@ -244,84 +243,26 @@ object Extras7 {
 
   /** PURGE (OPTIMIZE on DV'd files): rewrites every file carrying a
     * deletion vector without its dead rows, drops the DVs, and commits
-    * — restoring the fully columnar read path for those files. Like
-    * compaction (q89), purge is optional maintenance: on conflict with
-    * a data writer it ABANDONS (deletes its output, returns None)
-    * rather than fight. Returns the committed version, or Some(current)
-    * when there was nothing to purge. */
+    * — restoring the fully columnar read path for those files. The DV'd
+    * files are packed as Spark packs a parquet read of them (so the
+    * output count is what a plain read-and-write would produce), never
+    * across a partition tuple, and rewritten by `GraftRewrite` in one
+    * job that skips the dead ordinals by position and checks every
+    * output's row count. Outputs carry stats for `statsColumn` (the key)
+    * and the table's stats columns. Like compaction (q89), purge is
+    * optional maintenance: on conflict with a data writer it ABANDONS
+    * (deletes its output, returns None) rather than fight. Returns the
+    * committed version, or Some(current) when there was nothing to
+    * purge. */
   private[graft] def purgeDv(spark: SparkSession, base: String,
       statsColumn: Option[String] = None,
       tsMillis: Option[Long] = None): Option[Int] = {
-    import spark.implicits._
     val current = GraftManifest.resolve(base)
     val dvd = current.entries.filter(_.dv.isDefined)
     if (dvd.isEmpty) return Some(current.version)
     val outDir = s"$base/files-purge-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dvPairs = spark.createDataset(
-        dvd.map(e => (metadataPathOf(e.path), e.dv.get)))
-      .flatMap { case (f, d) => GraftDv.read(d).map(p => (f, p)) }
-      .toDF("file", "pos")
-    // live rows = DV'd files minus their dead ordinals. The (file, pos)
-    // identity joins the RAW metadata column against metadata-form
-    // manifest paths (UDF-free scan); the row-count reconciliation
-    // below makes a silently-missed anti-join (which would resurrect
-    // deleted rows) impossible to commit. PARTITIONED tables (any input
-    // carrying a tuple, r17 ADVICE) rewrite per tuple GROUP — one
-    // output per partition, tagged via a broadcast path→group map and
-    // written partitionBy in ONE job — so the purged file stays
-    // attributable to its partition; unpartitioned tables keep the
-    // shuffle-free coalesce (one output per input).
-    val live = spark.read.parquet(dvd.map(_.path): _*)
-      .withColumn("file", col("_metadata.file_path"))
-      .withColumn("pos", col("_metadata.row_index"))
-      .join(dvPairs, Seq("file", "pos"), "left_anti")
-    val groups: Seq[(Map[String, String], Seq[GraftManifest.Entry])] =
-      if (dvd.forall(_.partValues.isEmpty)) Seq.empty
-      else dvd.groupBy(_.partValues).toSeq
-        .sortBy(_._1.toSeq.sorted.mkString(" "))
-    if (groups.isEmpty)
-      live.drop("file", "pos").coalesce(dvd.size).write.parquet(outDir)
-    else {
-      val pathToGrp = groups.zipWithIndex.flatMap { case ((_, es), i) =>
-        es.map(e => (metadataPathOf(e.path), i))
-      }.toDF("file", "grp")
-      live.join(broadcast(pathToGrp), Seq("file"))
-        .drop("file", "pos")
-        .repartition(groups.size, $"grp")
-        .write.partitionBy("grp").parquet(outDir)
-    }
-    val outByGrp: Map[Int, Seq[String]] =
-      if (groups.isEmpty) Map.empty
-      else graft.sources.GraftFs.list(outDir)
-        .collect { case (n, p, true) if n.startsWith("grp=") =>
-          n.stripPrefix("grp=").toInt -> parts(p) }
-        .toMap
-    val outputs =
-      if (groups.isEmpty) parts(outDir) else outByGrp.values.flatten.toSeq
-    // exact reconciliation, O(#files) footer metadata + O(deleted)
-    // sidecar reads: output rows == input rows − dead positions; each
-    // output's one footer read also serves its key stats below
-    val conf = graft.sources.GraftFs.hadoopConf
-    val outFooters = outputs.map(f => f -> GraftParquet.footer(f, conf))
-    val inputRows = dvd.map(e =>
-      GraftParquet.rowCount(GraftParquet.footer(e.path, conf))).sum
-    val deadRows = dvd.map(e => GraftDv.read(e.dv.get).length.toLong).sum
-    val outRows = outFooters.map(o => GraftParquet.rowCount(o._2)).sum
-    if (outRows != inputRows - deadRows) {
-      Extras6.deleteRecursively(outDir)
-      throw new IllegalStateException(
-        s"purgeDv: rewrote $outRows rows from $inputRows-row inputs with " +
-          s"$deadRows deleted positions — the (file, pos) identity join " +
-          "missed (path normalization bug); aborted before commit")
-    }
-    val stats = statsColumn.toSeq.flatMap(c => outFooters.flatMap {
-      case (f, m) => Extras5.footerKeyStats(m, c).map(f -> _) }).toMap
-    val tupleOf: Map[String, Map[String, String]] =
-      groups.zipWithIndex.flatMap { case ((tuple, _), i) =>
-        outByGrp.getOrElse(i, Seq.empty).map(_ -> tuple)
-      }.toMap
-    val newEntries = outputs.map(f => GraftManifest.Entry(f, stats.get(f),
-      partValues = tupleOf.getOrElse(f, Map.empty)))
+    val newEntries = GraftRewrite.rewrite(spark, base, current,
+      GraftRewrite.sparkBins(spark, dvd), outDir, statsColumn)
     // a data writer that touched an input (rewrite or new DV) wins:
     // the purge yields exactly like a compaction
     Extras6.compactionCommitOcc(base, dvd, newEntries, outDir,
@@ -679,7 +620,6 @@ object Extras7 {
   }
 
   def q100(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     graft.sources.GraftCatalog.install(spark)
     val base = q100Build(spark, dir)
     val name = s"hist_${java.util.UUID.randomUUID().toString.take(8)}"

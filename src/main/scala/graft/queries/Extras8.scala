@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.sources.{GraftFs, GraftManifest}
+import graft.sources.{GraftFs, GraftManifest, GraftRewrite}
 
 /** Round-16 queries: the MAINTENANCE verbs surfaced at the SQL
   * boundary as DSv2 stored procedures (the r15 judge's item 4 — a user
@@ -27,14 +27,15 @@ import graft.sources.{GraftFs, GraftManifest}
   *    expired versions. Reference counting is across every RETAINED
   *    manifest, so a file carried forward (or re-listed by a RESTORE)
   *    survives. O(#versions × #files) driver metadata, no data I/O.
-  *  - `compactSmallFiles` — generic small-file bin-packing: first-fit
-  *    files under the target into bins, one rewrite job per multi-file
-  *    bin, commit via the yielding compactionCommitOcc (abandons on
+  *  - `compactSmallFiles` — generic small-file bin-packing: files
+  *    under the target packed into bins, every multi-file bin rewritten
+  *    into one file by one task of a single job (`GraftRewrite`),
+  *    committed via the yielding compactionCommitOcc (abandons on
   *    conflict with a data writer — maintenance never fights).
-  *    Carried AND compacted entries keep key stats (compacted bins
-  *    take the union of their inputs' committed ranges — sound without
-  *    a footer read). DV'd files are purge's domain and are skipped: a
-  *    naive rewrite of a DV'd file would resurrect its deleted rows.
+  *    Carried entries keep their stats; compacted outputs get fresh
+  *    stats from the writer. DV'd files are purge's domain and are
+  *    skipped: a naive rewrite of a DV'd file would resurrect its
+  *    deleted rows.
   *
   * q104 exercises all three procedures end-to-end through SQL CALL and
   * reads the resulting snapshots back through the catalog.
@@ -167,114 +168,32 @@ object Extras8 {
     vacuumRetain(base, floor)
   }
 
-  /** Bin-packs live files smaller than `targetBytes` (first-fit over
-    * the sorted listing, one output file per multi-file bin) and
-    * commits the layout swap through the yielding OCC (None =
-    * abandoned to a concurrent data writer; Some(v) = committed, or
-    * the current version when there was nothing to do). Stats are
-    * preserved: carried entries keep theirs, each compacted output
-    * takes the union of its inputs' committed ranges (legacy key
-    * stats AND the per-column map — a column survives when every
-    * input tracked it). Files carrying deletion vectors are excluded
-    * (purge, not compaction, is how DV'd files get rewritten).
-    *
-    * Execution is ONE Spark job regardless of bin count (r17 — the
-    * r16 judge's item 5; q89's shape): rows are tagged with their bin
-    * via a broadcast path→bin map on `_metadata.file_path`, shuffled
-    * by bin, written `partitionBy(bin)` — one output file per bin. A
-    * real small-file table has thousands of bins; the old
-    * one-`coalesce(1)`-job-per-bin loop serialized them. A row-count
-    * reconciliation (footer metadata) makes a silently-missed bin tag
-    * impossible to commit. */
+  /** Bin-packs live files smaller than `targetBytes` (files in path
+    * order, a new bin whenever the next file would overflow the open
+    * one; bins never span partition tuples) and commits the layout swap
+    * through the yielding OCC (None = abandoned to a concurrent data
+    * writer; Some(v) = committed, or the current version when there was
+    * nothing to do). Every multi-file bin becomes one output carrying
+    * its tuple and fresh stats for the table's stats columns. Files
+    * carrying deletion vectors are excluded (purge, not compaction, is
+    * how DV'd files get rewritten). Execution is ONE Spark job, one task
+    * per bin, whatever the bin count: `GraftRewrite` reads each bin's
+    * files through the table scan's reader and checks every output's
+    * row count before anything is committed. */
   private[graft] def compactSmallFiles(spark: SparkSession, base: String,
       targetBytes: Long): Option[Int] = {
-    import spark.implicits._
     val current = GraftManifest.resolve(base)
-    val entries = current.entries
-    val lens = GraftFs.lengths(entries.map(_.path))
-    val candidates = entries.filter(e =>
-      e.dv.isEmpty && lens(e.path) < targetBytes).sortBy(_.path)
-    // bins NEVER span partition tuples (r17 ADVICE: a compacted file
-    // must stay attributable to its partition, or a later partition
-    // overwrite would silently leave its old rows behind) — group by
-    // tuple (unpartitioned tables are one all-of-it group), first-fit
-    // within each group, and each output carries its group's tuple
-    val groups = candidates.groupBy(_.partValues).toSeq
-      .sortBy(_._1.toSeq.sorted.mkString("\u0000"))
-    val bins = scala.collection.mutable.ArrayBuffer[
-      (Map[String, String],
-        scala.collection.mutable.ArrayBuffer[GraftManifest.Entry])]()
-    groups.foreach { case (tuple, es) =>
-      var binBytes = 0L
-      var open = false
-      es.foreach { e =>
-        val len = lens(e.path)
-        if (!open || binBytes + len > targetBytes) {
-          bins += ((tuple, scala.collection.mutable.ArrayBuffer(e)))
-          binBytes = len
-          open = true
-        } else { bins.last._2 += e; binBytes += len }
-      }
-    }
-    val multi = bins.filter(_._2.size > 1)
-      .map { case (t, es) => (t, es.toSeq) }.toSeq
+    val lens = GraftFs.lengths(current.entries.map(_.path))
+    val candidates = current.entries.filter(e =>
+      e.dv.isEmpty && lens(e.path) < targetBytes)
+    val multi = GraftRewrite.targetBins(candidates, lens, targetBytes)
+      .filter(_.inputs.size > 1)
     if (multi.isEmpty) return Some(current.version)
     val outDir = s"$base/compact-${java.util.UUID.randomUUID().toString.take(8)}"
-    // ONE job: broadcast (metadata-form path → bin id), tag, shuffle by
-    // bin, one file per bin directory
-    val pathToBin = multi.zipWithIndex.flatMap { case ((_, bin), i) =>
-      bin.map(e => (Extras7.metadataPathOf(e.path), i))
-    }.toDF("p", "bin")
-    spark.read.parquet(multi.flatMap(_._2).map(_.path): _*)
-      .withColumn("p", col("_metadata.file_path"))
-      .join(broadcast(pathToBin), Seq("p"))
-      .drop("p")
-      .repartition(multi.size, $"bin")
-      .write.partitionBy("bin").parquet(outDir)
-    val outByBin: Map[Int, String] = GraftFs.list(outDir)
-      .collect { case (n, p, true) if n.startsWith("bin=") =>
-        n.stripPrefix("bin=").toInt -> p }
-      .toMap.view.mapValues { d =>
-        val out = parts(d)
-        require(out.size == 1, s"$d produced ${out.size} files")
-        out.head
-      }.toMap
-    require(outByBin.keySet == multi.indices.toSet,
-      s"compaction wrote bins ${outByBin.keySet.toSeq.sorted}, planned " +
-        s"${multi.indices} — the bin-tag join missed (path prediction bug)")
-    // exact reconciliation: output rows == input rows (footer metadata)
-    val inRows = multi.flatMap(_._2)
-      .map(e => graft.sources.GraftDv.rowGroups(e.path).map(_._3).sum).sum
-    val outRows = outByBin.values
-      .map(f => graft.sources.GraftDv.rowGroups(f).map(_._3).sum).sum
-    if (inRows != outRows) {
-      Extras6.deleteRecursively(outDir)
-      throw new IllegalStateException(
-        s"compactSmallFiles: $outRows output rows from $inRows input " +
-          "rows — aborted before commit")
-    }
-    val outputs = multi.zipWithIndex.map { case ((tuple, bin), i) =>
-      // union of the inputs' committed ranges — stats survive the
-      // compaction without any footer read
-      val stats = bin.flatMap(_.stats) match {
-        case ss if ss.size == bin.size =>
-          Some((ss.map(_._1).min, ss.map(_._2).max))
-        case _ => None
-      }
-      // per-column stats survive for every column ALL inputs tracked
-      val colKeys = bin.map(_.colStats.keySet).reduce(_ intersect _)
-      val colStats = colKeys.map { c =>
-        val vs = bin.map(_.colStats(c))
-        c -> (vs.map(_._1).min, vs.map(_._2).max)
-      }.toMap
-      // the bin's tuple rides onto the output: compaction never breaks
-      // partition attribution
-      GraftManifest.Entry(outByBin(i), stats, colStats = colStats,
-        partValues = tuple)
-    }
+    val outputs = GraftRewrite.rewrite(spark, base, current, multi, outDir)
     // an input rewritten away or DV'd since planning makes the
     // compacted output stale — the commit yields to the data writer
-    Extras6.compactionCommitOcc(base, multi.flatMap(_._2), outputs, outDir)
+    Extras6.compactionCommitOcc(base, multi.flatMap(_.inputs), outputs, outDir)
   }
 
   /** OPTIMIZE ZORDER (r18 — the r17 judge's item 8): rewrites the live
@@ -829,7 +748,6 @@ object Extras8 {
   }
 
   def q109(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val name = q109Build(spark, dir)
     spark.sql(
       s"""SELECT partition, COUNT(*) AS n_files,
@@ -866,7 +784,6 @@ object Extras8 {
 
   private[queries] def q110Build(spark: SparkSession,
       dir: String): (String, String) = {
-    import spark.implicits._
     graft.sources.GraftCatalog.install(spark)
     val name = s"ct_${java.util.UUID.randomUUID().toString.take(8)}"
     Tables.load(spark, dir, "orders")
@@ -1043,7 +960,6 @@ object Extras8 {
 
   private[queries] def q112Build(spark: SparkSession,
       dir: String): (String, Long, Long, Long) = {
-    import spark.implicits._
     graft.sources.GraftCatalog.install(spark)
     val base = graft.Scratch.dir("q112_table")
     val name = s"pe_${java.util.UUID.randomUUID().toString.take(8)}"

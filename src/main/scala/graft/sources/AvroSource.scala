@@ -4,7 +4,7 @@ import java.util.OptionalLong
 
 import scala.collection.JavaConverters._
 
-import org.apache.avro.{LogicalTypes, Schema => ASchema, SchemaBuilder}
+import org.apache.avro.{LogicalTypes, Schema => ASchema}
 import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.mapred.FsInput
@@ -573,9 +573,6 @@ private[sources] object AvroToRow {
 private[sources] class RowToAvro(schema: StructType, avro: ASchema) {
   private val setters: Array[(InternalRow, Int) => Any] =
     schema.fields.map(f => RowToAvro.accessor(f.dataType))
-  private val elemSchemas: Array[ASchema] = schema.fields.map { f =>
-    avro.getField(f.name).schema()
-  }
 
   def convert(row: InternalRow): GenericRecord = {
     val rec = new GenericData.Record(avro)

@@ -2130,7 +2130,7 @@ private[sources] class GraftDataWriter(schema: StructType, dir: String,
 
   private lazy val writer = {
     GraftFs.mkdirs(dir)
-    val conf = new Configuration(GraftFs.hadoopConf)
+    val conf = GraftFs.newHadoopConf()
     ParquetWriteSupport.setSchema(schema, conf)
     // ParquetWriteSupport.init / SparkToParquetSchemaConverter read
     // these keys WITHOUT defaults — pin the session defaults
@@ -2215,10 +2215,6 @@ private[graft] object GraftParquet {
       HadoopReadOptions.builder(conf, p).build())
     try reader.getFooter finally reader.close()
   }
-
-  /** Rows in a file, from its footer's row groups. */
-  def rowCount(footer: ParquetMetadata): Long =
-    footer.getBlocks.asScala.map(_.getRowCount).sum
 
   /** StructType from a parquet footer — flat primitives only, which is
     * all the protocol family writes (Spark encodes DECIMAL(<=18,s) as

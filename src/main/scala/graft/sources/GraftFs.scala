@@ -85,6 +85,15 @@ private[graft] object GraftFs {
       }
   }
 
+  /** A conf the caller may mutate (a reader's filter predicate, a
+    * writer's schema): the session's own fresh copy, else a copy of the
+    * no-session fallback. One copy either way, and never the object
+    * `hadoopConf` keeps as that fallback. */
+  def newHadoopConf(): Configuration = session match {
+    case Some(s) => s.sessionState.newHadoopConf()
+    case None => new Configuration(hadoopConf)
+  }
+
   /** Scheme-less absolute path on a local default FS → nio fast path.
     * (When `fs.defaultFS` points at a cluster store, scheme-less paths
     * are cluster paths and take the Hadoop branch.) */

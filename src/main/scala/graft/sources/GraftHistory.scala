@@ -60,18 +60,51 @@ private[graft] object GraftHistory {
   }
 }
 
-/** Driver-materialized scan: the history rows ride inside the single
-  * input partition (#versions rows of metadata — trivially bounded). */
-private[sources] class GraftHistoryScan(base: String) extends Scan with Batch {
+/** A driver-materialized metadata scan: `rows` (plain values, one Seq
+  * per row in `schema` order) are built ONCE per scan — Spark plans a
+  * statement's input partitions more than once — and ride inside the
+  * single input partition. */
+private[sources] abstract class GraftMetadataScan(schema: StructType)
+    extends Scan with Batch {
 
-  override def readSchema(): StructType = GraftHistory.Schema
+  protected def rows(): Seq[Seq[Any]]
+
+  private lazy val partitions: Array[InputPartition] =
+    Array(HistoryPartition(rows()))
+
+  override def readSchema(): StructType = schema
 
   override def toBatch: Batch = this
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // serialize as plain values (InternalRow itself is not serializable
-    // across the task boundary in all cases; UTF8String is)
-    val vals = GraftHistory.rows(base).map(r =>
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftMetadataReaderFactory
+}
+
+/** Reads a HistoryPartition's rows back as InternalRows. */
+private[sources] object GraftMetadataReaderFactory extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val it = partition.asInstanceOf[HistoryPartition].rows.iterator
+    new PartitionReader[InternalRow] {
+      private var cur: InternalRow = _
+      override def next(): Boolean = {
+        if (!it.hasNext) false
+        else { cur = InternalRow.fromSeq(it.next()); true }
+      }
+      override def get(): InternalRow = cur
+      override def close(): Unit = ()
+    }
+  }
+}
+
+/** The history rows, as plain values (InternalRow itself is not
+  * serializable across the task boundary in all cases; UTF8String is). */
+private[sources] class GraftHistoryScan(base: String)
+    extends GraftMetadataScan(GraftHistory.Schema) {
+
+  override protected def rows(): Seq[Seq[Any]] =
+    GraftHistory.rows(base).map(r =>
       (0 until GraftHistory.Schema.length).map(i =>
         if (r.isNullAt(i)) null
         else GraftHistory.Schema(i).dataType match {
@@ -79,22 +112,6 @@ private[sources] class GraftHistoryScan(base: String) extends Scan with Batch {
           case StringType => r.getUTF8String(i)
           case other => throw new IllegalStateException(s"unexpected $other")
         }))
-    Array(HistoryPartition(vals))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) => {
-      val it = partition.asInstanceOf[HistoryPartition].rows.iterator
-      new PartitionReader[InternalRow] {
-        private var cur: InternalRow = _
-        override def next(): Boolean = {
-          if (!it.hasNext) false
-          else { cur = InternalRow.fromSeq(it.next()); true }
-        }
-        override def get(): InternalRow = cur
-        override def close(): Unit = ()
-      }
-    }
 
   override def description(): String = s"GraftHistoryScan($base)"
 }
@@ -131,32 +148,13 @@ private[graft] object GraftTagsTable {
 }
 
 /** Driver-materialized like the history scan: #tags rows of metadata. */
-private[sources] class GraftTagsScan(base: String) extends Scan with Batch {
+private[sources] class GraftTagsScan(base: String)
+    extends GraftMetadataScan(GraftTagsTable.Schema) {
 
-  override def readSchema(): StructType = GraftTagsTable.Schema
-
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val rows = graft.queries.Extras8.tags(base).toSeq.sortBy(_._1).map {
+  override protected def rows(): Seq[Seq[Any]] =
+    graft.queries.Extras8.tags(base).toSeq.sortBy(_._1).map {
       case (name, v) => Seq[Any](UTF8String.fromString(name), v.toLong,
         GraftManifest.commitTime(base, v))
-    }
-    Array(HistoryPartition(rows))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) => {
-      val it = partition.asInstanceOf[HistoryPartition].rows.iterator
-      new PartitionReader[InternalRow] {
-        private var cur: InternalRow = _
-        override def next(): Boolean = {
-          if (!it.hasNext) false
-          else { cur = InternalRow.fromSeq(it.next()); true }
-        }
-        override def get(): InternalRow = cur
-        override def close(): Unit = ()
-      }
     }
 
   override def description(): String = s"GraftTagsScan($base)"
@@ -196,17 +194,15 @@ private[graft] object GraftFilesTable {
     StructField("partition", StringType, nullable = true)))
 }
 
-/** Driver-materialized like the history scan: #files rows of metadata. */
-private[sources] class GraftFilesScan(base: String) extends Scan with Batch {
+/** Driver-materialized like the history scan: #files rows of metadata,
+  * all from the one version the scan resolves. */
+private[sources] class GraftFilesScan(base: String)
+    extends GraftMetadataScan(GraftFilesTable.Schema) {
 
-  override def readSchema(): StructType = GraftFilesTable.Schema
-
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
+  override protected def rows(): Seq[Seq[Any]] = {
     val entries = GraftManifest.resolve(base).entries
     val sizes = GraftFs.lengths(entries.map(_.path))
-    val rows = entries.sortBy(_.path).map { e =>
+    entries.sortBy(_.path).map { e =>
       val part =
         if (e.partValues.isEmpty) null
         else UTF8String.fromString(e.partValues.toSeq.sortBy(_._1)
@@ -220,22 +216,7 @@ private[sources] class GraftFilesScan(base: String) extends Scan with Batch {
         java.lang.Boolean.valueOf(e.dv.isDefined),
         part)
     }
-    Array(HistoryPartition(rows))
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) => {
-      val it = partition.asInstanceOf[HistoryPartition].rows.iterator
-      new PartitionReader[InternalRow] {
-        private var cur: InternalRow = _
-        override def next(): Boolean = {
-          if (!it.hasNext) false
-          else { cur = InternalRow.fromSeq(it.next()); true }
-        }
-        override def get(): InternalRow = cur
-        override def close(): Unit = ()
-      }
-    }
 
   override def description(): String = s"GraftFilesScan($base)"
 }

@@ -161,23 +161,33 @@ private[sources] class GraftVectorizedReaderFactory(required: StructType,
             posColumn, physicalOf),
           dvPath, split.requireFirstRow)
       case None =>
-        val inner = createColumnarReader(partition)
-        new PartitionReader[InternalRow] {
-          private var it: java.util.Iterator[InternalRow] =
-            java.util.Collections.emptyIterator()
-          private var cur: InternalRow = _
-          override def next(): Boolean = {
-            while (!it.hasNext) {
-              if (!inner.next()) return false
-              it = inner.get().rowIterator()
-            }
-            cur = it.next(); true
-          }
-          override def get(): InternalRow = cur
-          override def close(): Unit = inner.close()
-        }
+        new GraftBatchRowReader(createColumnarReader(partition))
     }
   }
+}
+
+/** A plain batch→row walk over a columnar reader. */
+private[sources] class GraftBatchRowReader(inner: PartitionReader[ColumnarBatch])
+    extends PartitionReader[InternalRow] {
+  private var it: java.util.Iterator[InternalRow] =
+    java.util.Collections.emptyIterator()
+  private var cur: InternalRow = _
+  override def next(): Boolean = {
+    while (!it.hasNext) {
+      if (!inner.next()) return false
+      it = inner.get().rowIterator()
+    }
+    cur = it.next(); true
+  }
+  override def get(): InternalRow = cur
+  override def close(): Unit = inner.close()
+}
+
+/** Spark's vectorized parquet reader, with the row count of the split's
+  * row groups (from the footer it opened) made visible. */
+private final class GraftParquetRecordReader extends VectorizedParquetRecordReader(
+    null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, GraftParquetIO.Capacity) {
+  def splitRows: Long = totalRowCount
 }
 
 /** One split's columnar reader: Spark's VectorizedParquetRecordReader
@@ -194,7 +204,7 @@ private[sources] class GraftColumnarReader(split: GraftParquetIO.GraftFileSplit,
   import GraftParquetIO.Capacity
 
   private val vectorized = {
-    val conf = new Configuration(GraftFs.hadoopConf)
+    val conf = GraftFs.newHadoopConf()
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, dataSchema.json)
@@ -238,9 +248,8 @@ private[sources] class GraftColumnarReader(split: GraftParquetIO.GraftFileSplit,
     }
     val fileSplit = new FileSplit(new HPath(split.path), split.start,
       split.length, Array.empty[String])
-    def open(c: Configuration): VectorizedParquetRecordReader = {
-      val r = new VectorizedParquetRecordReader(
-        null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, Capacity)
+    def open(c: Configuration): GraftParquetRecordReader = {
+      val r = new GraftParquetRecordReader
       r.initialize(fileSplit, new TaskAttemptContextImpl(c, new TaskAttemptID()))
       r
     }
@@ -310,6 +319,10 @@ private[sources] class GraftColumnarReader(split: GraftParquetIO.GraftFileSplit,
     wrapped.setNumRows(inner.numRows())
     wrapped
   }
+
+  /** Rows in the split's row groups, as the footer counts them: the
+    * whole file for a split that covers it. */
+  def splitRows: Long = vectorized.splitRows
 
   override def close(): Unit = vectorized.close()
 }

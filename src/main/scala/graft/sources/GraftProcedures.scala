@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
@@ -80,9 +79,13 @@ private[graft] object GraftProcedures {
 
   /** OPTIMIZE: mode 'purge' (default) folds deletion vectors into
     * rewritten files (restores the fully columnar read path); mode
-    * 'compact' bin-packs small DV-less files. Both yield to concurrent
-    * data writers (committed = NULL when abandoned — maintenance never
-    * fights, the Delta/Iceberg OPTIMIZE contract). */
+    * 'compact' bin-packs small DV-less files. Both run one Spark job,
+    * one task per output file, reading through the table's own scan
+    * reader and writing through its own writer (`GraftRewrite`), with
+    * fresh stats for the table's stats columns. 'zorder' sorts rows and
+    * keeps its DataFrame rewrite. All yield to concurrent data writers
+    * (committed = NULL when abandoned — maintenance never fights, the
+    * Delta/Iceberg OPTIMIZE contract). */
   private object OptimizeProc extends GraftProc("optimize",
     Array(
       ProcedureParameter.in("table", StringType).build(),
@@ -106,14 +109,7 @@ private[graft] object GraftProcedures {
       val mode = input.getUTF8String(1).toString
       val spark = SparkSession.active
       val committed = mode match {
-        case "purge" =>
-          // stats survive under the TABLE's configured stats column
-          // (graft.stats.column, physical form), and only when the
-          // current manifest actually carries stats to preserve
-          val table = GraftTable.load(s"graft.$tableName", base, None)
-          val statsCol = Some(table.physicalStatsColumn)
-            .filter(_ => table.manifest.exists(_.stats.isDefined))
-          Extras7.purgeDv(spark, base, statsColumn = statsCol)
+        case "purge" => Extras7.purgeDv(spark, base)
         case "compact" =>
           Extras8.compactSmallFiles(spark, base, input.getLong(2))
         case "zorder" =>

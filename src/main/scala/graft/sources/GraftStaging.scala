@@ -3,7 +3,7 @@ package graft.sources
 import java.util.UUID
 
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 

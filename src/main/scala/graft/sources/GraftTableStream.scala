@@ -4,8 +4,6 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
 
-import graft.queries.Extras5
-
 /** Offset of a streaming table read: manifest version `v`, plus —
   * under `maxFilesPerTrigger` admission control — how many of commit
   * `v`'s ADDED files (path-sorted, deterministic against the immutable

@@ -56,7 +56,7 @@ object EventsStream {
     * and every emission here is a per-key aggregate or key projection)
     * — the oracle gates pin that. */
   private def drain(df: DataFrame, mode: String,
-      adaptiveBytes: Long = -1L): DataFrame = {
+      adaptiveBytes: Long): DataFrame = {
     val spark = df.sparkSession
     val name = s"st_out_${counter.incrementAndGet()}"
     def run(): Unit = {

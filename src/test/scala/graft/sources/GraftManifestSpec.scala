@@ -108,6 +108,26 @@ class GraftManifestSpec extends SparkSpec {
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.$name").head().getLong(0) == 3L)
   }
 
+  test("SELECT * FROM t.history opens each manifest once") {
+    val c = spark.sparkContext.hadoopConfiguration
+    c.set("fs.graftcount.impl", classOf[GraftCountingFileSystem].getName)
+    c.set("fs.AbstractFileSystem.graftcount.impl",
+      classOf[GraftCountingAbstractFs].getName)
+    GraftCatalog.install(spark)
+    val local = graft.Scratch.dir("history_reads")
+    val name = s"hist_${java.util.UUID.randomUUID().toString.take(8)}"
+    spark.sql(s"CREATE TABLE graft.$name (k BIGINT) LOCATION 'graftcount:$local'")
+    spark.sql(s"INSERT INTO graft.$name VALUES (1)")
+    spark.sql(s"INSERT INTO graft.$name VALUES (2)")
+
+    GraftCountingFileSystem.opened.clear()
+    val versions = spark.sql(s"SELECT * FROM graft.$name.history")
+      .collect().map(_.getLong(0)).toSeq
+    assert(versions == Seq(1L, 2L, 3L))
+    assert(GraftCountingFileSystem.manifestOpens.sorted ==
+      (1 to 3).map(v => s"$local/_manifests/v$v.txt"))
+  }
+
   /** A 3-file table (keys 0-9, 10-19, 20-29 in key order, key stats on
     * every file) and its v1 entries: the first file carries a DV
     * deleting its first two rows (keys 0 and 1). */
